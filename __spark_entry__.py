@@ -1012,7 +1012,7 @@ def phrase_slop_topk_documents(spark, sf_dir):
     """Sloppy-phrase (proximity) top-10 through the REAL positional
     engine: same corpus and 2-term phrase as ``phrase_topk_documents``
     but ``slop=1`` — the terms may be separated by one intervening
-    post-stopword token (query/phrase.py::_match_bucket_slop backward
+    post-stopword token (query/phrase.py::_match_bucket backward
     reachability; ptf = distinct chain-start positions).  The oracle
     joins positions with ``p1.pos BETWEEN p0.pos+1 AND p0.pos+2`` and
     counts DISTINCT start positions — window semantics AND the

@@ -296,9 +296,8 @@ def recode_index(spark: SparkSession, index_dir: str, codec: str,
     re-staged under the new bucket ids too (a pure copy, no decode).
     Returns {buckets_recoded, codec}.
     """
-    import pandas as pd
-
     from anisearch_model_spark.index.build import POSTINGS_SCHEMA
+    from anisearch_model_spark.index.codec import recode_posting_group
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
     from anisearch_model_spark.index.store import finalize_metadata
 
@@ -314,39 +313,12 @@ def recode_index(spark: SparkSession, index_dir: str, codec: str,
     next_id = max(old_ids) + 1
     id_map = {old: next_id + i for i, old in enumerate(old_ids)}
 
-    def recode(pdf: pd.DataFrame) -> pd.DataFrame:
-        from anisearch_model_spark.config import POSTING_BLOCK_SIZE
-        from anisearch_model_spark.index.codec import (
-            decode_posting_block, encode_bucket_frame)
-
-        cols = ["term", "bucket", "field", "block_id", "n", "cf",
-                "first_doc_id", "last_doc_id", "max_tf", "min_dl",
-                "doc_deltas", "tfs", "dls"]
-        if pdf.empty:
-            return pd.DataFrame(columns=cols)
-        bucket = id_map[int(pdf["bucket"].iloc[0])]
-        fld = pdf["field"].iloc[0]
-        frames = []
-        for row in pdf.itertuples(index=False):
-            d, t, dl = decode_posting_block(
-                {"first_doc_id": row.first_doc_id,
-                 "doc_deltas": row.doc_deltas, "tfs": row.tfs,
-                 "dls": row.dls})
-            frames.append(pd.DataFrame({
-                "term": row.term, "doc_id": d, "tf": t, "doc_len": dl,
-                "bucket": bucket,
-            }))
-        enc = encode_bucket_frame(
-            pd.concat(frames, ignore_index=True), POSTING_BLOCK_SIZE,
-            codec=codec)
-        enc["field"] = fld
-        return enc[cols]
-
     postings = (
         spark.read.schema(POSTINGS_SCHEMA)
         .parquet(os.path.join(index_dir, "postings"))
         .groupBy("bucket", "field")
-        .applyInPandas(recode, schema=POSTINGS_SCHEMA)
+        .applyInPandas(lambda pdf: recode_posting_group(pdf, id_map, codec),
+                       schema=POSTINGS_SCHEMA)
     )
     remap = F.col("bucket")
     for old, new in id_map.items():

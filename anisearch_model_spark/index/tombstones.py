@@ -36,7 +36,6 @@ import shutil
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 
 TOMBSTONE_SCHEMA = "doc_id long"
@@ -122,6 +121,7 @@ def purge_deleted(spark: SparkSession, index_dir: str,
 
     from anisearch_model_spark.config import BM25Params
     from anisearch_model_spark.index.build import POSTINGS_SCHEMA
+    from anisearch_model_spark.index.codec import recode_posting_group
     from anisearch_model_spark.index.compact import (
         _adopt_staged, _drop_buckets, _stage_partitions, _write_manifest,
         recover_compaction)
@@ -157,50 +157,16 @@ def purge_deleted(spark: SparkSession, index_dir: str,
     next_id = max(int(b) for b in manifest["buckets"]) + 1
     id_map = {old: next_id + i for i, old in enumerate(affected)}
 
-    def rewrite(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One (bucket, field) partition: decode → drop dead → re-encode.
-        Reconstructs the tf frame and reuses the build's own block
-        encoder, so surviving postings are byte-identical to a fresh
-        encode of the surviving rows (block boundaries re-derived)."""
-        from anisearch_model_spark.config import POSTING_BLOCK_SIZE
-        from anisearch_model_spark.index.codec import (
-            decode_posting_block, encode_bucket_frame)
-
-        cols = ["term", "bucket", "field", "block_id", "n", "cf",
-                "first_doc_id", "last_doc_id", "max_tf", "min_dl",
-                "doc_deltas", "tfs", "dls"]
-        if pdf.empty:
-            return pd.DataFrame(columns=cols)
-        dead_arr = bdead.value
-        bucket = id_map[int(pdf["bucket"].iloc[0])]
-        fld = pdf["field"].iloc[0]
-        frames = []
-        for row in pdf.itertuples(index=False):
-            d, t, dl = decode_posting_block(
-                {"first_doc_id": row.first_doc_id,
-                 "doc_deltas": row.doc_deltas, "tfs": row.tfs,
-                 "dls": row.dls})
-            alive = ~np.isin(d, dead_arr, assume_unique=False)
-            if not alive.any():
-                continue
-            frames.append(pd.DataFrame({
-                "term": row.term, "doc_id": d[alive], "tf": t[alive],
-                "doc_len": dl[alive], "bucket": bucket,
-            }))
-        if not frames:
-            return pd.DataFrame(columns=cols)
-        enc = encode_bucket_frame(
-            pd.concat(frames, ignore_index=True), POSTING_BLOCK_SIZE,
-            codec=codec)
-        enc["field"] = fld
-        return enc[cols]
-
     postings = (
         spark.read.schema(POSTINGS_SCHEMA)
         .parquet(os.path.join(index_dir, "postings"))
         .filter(F.col("bucket").isin(affected))
         .groupBy("bucket", "field")
-        .applyInPandas(rewrite, schema=POSTINGS_SCHEMA)
+        # per (bucket, field): decode → drop dead → re-encode
+        .applyInPandas(
+            lambda pdf: recode_posting_group(pdf, id_map, codec,
+                                             dead=bdead.value),
+            schema=POSTINGS_SCHEMA)
     )
     dead_df = spark.createDataFrame([(int(i),) for i in dead],
                                     TOMBSTONE_SCHEMA)

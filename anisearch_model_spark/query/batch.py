@@ -5,16 +5,14 @@ The reference serves one query per request (rate-limited to 1 req/s,
 offline evaluation over a query-set table this is re-expressed as a single
 plan over ONE postings read, regardless of query count.
 
-Round-6 shape (was: decode → broadcast-join (query, term) → shuffle every
-(query, doc) partial to a collect_list/array_sort fold → second Python
-pass for local top-k): buckets are disjoint doc ranges, so a doc's ENTIRE
-score for every query is computable inside its bucket — one
-``applyInPandas`` kernel per bucket decodes the term-pruned blocks once,
-folds per (query, doc) in ascending term order (the engine's fixed float64
-summation), masks tombstones, and emits only the per-bucket per-query
-top-k.  The only shuffle moves compressed blocks to their bucket group;
-the rank window then orders ≤ |buckets|·|queries|·k rows.  Per-query
-results are bit-identical to the single-query engine (tests assert it).
+Buckets are disjoint doc ranges, so a doc's ENTIRE score for every query
+is computable inside its bucket: one ``applyInPandas`` kernel per bucket
+decodes the term-pruned blocks once (query/bucket.py), folds per (query,
+doc) in ascending term order (the engine's fixed float64 summation), masks
+tombstones, and emits only the per-bucket per-query top-k.  The only
+shuffle moves compressed blocks to their bucket group; the rank window
+then orders ≤ |buckets|·|queries|·k rows.  Per-query results are
+bit-identical to the single-query engine (tests assert it).
 """
 
 from __future__ import annotations
@@ -26,7 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from anisearch_model_spark.config import BM25Params
-from anisearch_model_spark.functions.normalize import bm25_idf, bm25_term_score, tokenize_series
+from anisearch_model_spark.functions.normalize import bm25_idf, tokenize_series
+from anisearch_model_spark.query.bucket import BucketPostings, term_blocks, top_k
 from anisearch_model_spark.query.engine import IndexStore
 
 
@@ -66,75 +65,23 @@ def batch_topk(index: IndexStore, queries: pd.DataFrame, k: int = 10,
     tomb = index.tombstones
     btomb = spark.sparkContext.broadcast(tomb) if len(tomb) else None
 
-    blocks = index.postings.filter(F.col("term").isin(sorted(idf.keys()))).select(
-        "bucket", "term", "first_doc_id", "doc_deltas", "tfs", "dls"
-    )
-
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        from anisearch_model_spark.index.codec import decode_posting_block
-
-        out_empty = pd.DataFrame({
-            "query_id": pd.Series(dtype="int64"),
-            "doc_id": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float64"),
-        })
-        if pdf.empty:
-            return out_empty
-        idf_local = bidf.value
-        # per term: concatenated (doc_ids, pscore) across its blocks —
-        # disjoint doc sets (fields partition docs), order irrelevant
-        # because each doc takes exactly ONE add per term
-        per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for row in pdf.itertuples(index=False):
-            d, t, dl = decode_posting_block(
-                {"first_doc_id": row.first_doc_id,
-                 "doc_deltas": row.doc_deltas, "tfs": row.tfs, "dls": row.dls})
-            ps = bm25_term_score(
-                t, dl, np.full(len(t), idf_local[row.term]), avgdl, k1, b)
-            ent = per_term.get(row.term)
-            per_term[row.term] = (
-                (d, ps) if ent is None
-                else (np.concatenate([ent[0], d]), np.concatenate([ent[1], ps]))
-            )
-        universe = np.unique(np.concatenate([v[0] for v in per_term.values()]))
-        codes = {t: np.searchsorted(universe, v[0])
-                 for t, v in per_term.items()}
-        dead = None
-        if btomb is not None:
-            td = btomb.value
-            pos = np.searchsorted(td, universe)
-            pos = np.minimum(pos, len(td) - 1)
-            dead = td[pos] == universe
+        bp = BucketPostings(pdf)
+        live = bp.live(btomb.value if btomb is not None else None)
         outs = []
         for qid, terms in bq.value.items():
-            acc = np.zeros(len(universe), dtype="float64")
-            hit = np.zeros(len(universe), dtype=bool)
-            for t in terms:  # ascending — the engine's fixed fold order
-                ent = per_term.get(t)
-                if ent is None:
-                    continue
-                c = codes[t]
-                acc[c] += ent[1]
-                hit[c] = True
-            if dead is not None:
-                hit &= ~dead
-            idxs = np.nonzero(hit)[0]
-            if len(idxs) == 0:
-                continue
-            if len(idxs) > k:
-                order = np.lexsort((universe[idxs], -acc[idxs]))[:k]
-                idxs = idxs[order]
+            acc = bp.fold(terms, bidf.value, avgdl, k1, b)
+            idxs = np.nonzero(bp.hits(terms) & live)[0]
+            idxs = idxs[top_k(bp.universe[idxs], acc[idxs], k)]
             outs.append(pd.DataFrame({
                 "query_id": np.full(len(idxs), qid, dtype="int64"),
-                "doc_id": universe[idxs],
+                "doc_id": bp.universe[idxs],
                 "score": acc[idxs],
             }))
-        return pd.concat(outs, ignore_index=True) if outs else out_empty
+        return pd.concat(outs, ignore_index=True)
 
-    local_tops = blocks.groupBy("bucket").applyInPandas(
-        lambda pdf: score_bucket(pdf),
-        schema="query_id long, doc_id long, score double",
-    )
+    local_tops = term_blocks(index, idf).groupBy("bucket").applyInPandas(
+        score_bucket, schema="query_id long, doc_id long, score double")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         local_tops.withColumn("rank", F.row_number().over(w).cast("long"))

@@ -36,51 +36,12 @@ page (``rank_and_paginate`` → TakeOrderedAndProject).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from anisearch_model_spark.config import BM25Params
-
-
-def _raw_term_postings(index, terms: list[str],
-                       fields: list[str]) -> DataFrame:
-    """Decode (field, doc_id, term, tf, dl) for the query terms across
-    the given fields — the un-scored twin of ``engine._partials`` (which
-    bakes the per-field BM25 partial score in; BM25F must see raw tf/dl
-    because saturation happens AFTER cross-field combination)."""
-    blocks = index.postings.filter(
-        F.col("term").isin(list(terms)) & F.col("field").isin(list(fields))
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from anisearch_model_spark.index.codec import decode_posting_block
-
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                doc_ids, tfs, dls = decode_posting_block(
-                    {"first_doc_id": row.first_doc_id,
-                     "doc_deltas": row.doc_deltas,
-                     "tfs": row.tfs, "dls": row.dls}
-                )
-                outs.append(pd.DataFrame(
-                    {"field": row.field, "doc_id": doc_ids,
-                     "term": row.term,
-                     "tf": tfs.astype(np.int64),
-                     "dl": dls.astype(np.int64)}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return blocks.select(
-        "field", "term", "first_doc_id", "doc_deltas", "tfs", "dls"
-    ).mapInPandas(
-        decode, schema="field string, doc_id long, term string, "
-                       "tf long, dl long")
+from anisearch_model_spark.query.bucket import raw_postings
 
 
 def search_bm25f(index, query_text: str, weights: dict[str, float],
@@ -109,7 +70,7 @@ def search_bm25f(index, query_text: str, weights: dict[str, float],
     avgdl = {f: index.field_stats(f)[1] for f in fields}
     n_entities = index.n_entities()
 
-    raw = _raw_term_postings(index, terms, fields)
+    raw = raw_postings(index, terms, fields)
     # tombstones as a LIVENESS FLAG, not a pre-filter: a dead turn's tf
     # must not contribute to its conversation's score (results are live
     # immediately), but the entity df below deliberately keeps counting

@@ -17,21 +17,22 @@ what a ``-`` prefix means to Lucene's classic parser.  Markers bind to
 the whitespace token they prefix; the stem then runs through the shared
 tokenizer (a multi-token stem contributes ALL its tokens to the clause).
 
-Scale shape: positive terms need ONE postings scan (term-IN pushdown,
-field partition pruning) — the required-count filter is a conditional
-aggregate over the same partials relation, not a second scan.
-Prohibited terms need one more doc-id-only scan, excluded with a
-LEFT ANTI join keyed on doc_id — never a broadcast of a posting list (a
-hot ``-term`` can own a large share of a 100 TB corpus).  Driver traffic
-stays ≤ k result rows + |query terms| dictionary rows.
+Scale shape: ONE postings scan covers scoring and prohibited terms
+(term-IN pushdown, field partition pruning), then one ``applyInPandas``
+kernel per doc-range bucket (query/bucket.py) does all the per-doc work
+as numpy masks over the bucket's doc universe: the score fold, each
+required clause (OR of its members' hits, AND-ed across clauses), the
+prohibited mask (OR of the prohibited terms' hits) and the tombstone
+mask.  Buckets are disjoint doc ranges, so a doc's clause satisfaction
+is decided inside its bucket — no aggregate, no join, and only the
+compressed blocks cross an exchange.  Each bucket emits its local top-k;
+the global page is a TakeOrderedAndProject over ≤ |buckets|·k rows.
 
 The reference engine has no boolean operators at all (dense cosine over
 whole descriptions, ``src/api.py:270-313``).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -41,11 +42,8 @@ from pyspark.sql.window import Window
 
 from anisearch_model_spark.config import BM25Params, MAX_QUERY_CHARS
 from anisearch_model_spark.functions.windows import constant_partition
-from anisearch_model_spark.query.engine import (
-    IndexStore,
-    _idf_map,
-    _partials,
-)
+from anisearch_model_spark.query.bucket import BucketPostings, term_blocks, top_k
+from anisearch_model_spark.query.engine import IndexStore, _idf_map
 
 
 def parse_boolean(query_text: str) -> tuple[list[str], list[str], list[str]]:
@@ -95,34 +93,6 @@ def _expand_stem(index: IndexStore, stem: str,
     return lits, pattern_clauses
 
 
-def _doc_ids_for_terms(index: IndexStore, terms: list[str],
-                       field: str | None = None) -> DataFrame:
-    """Distinct doc_ids containing ANY of ``terms`` — doc-id-only block
-    decode (tf/dl buffers untouched), term-IN + field-partition pruned."""
-    blocks = index.postings.filter(F.col("term").isin(terms))
-    if field is not None:
-        blocks = blocks.filter(F.col("field") == field)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from anisearch_model_spark.index.codec import decode_values
-
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                deltas = decode_values(row.doc_deltas).astype(np.int64)
-                ids = np.empty(int(row.n), dtype=np.int64)
-                ids[0] = int(row.first_doc_id)
-                if len(ids) > 1:
-                    ids[1:] = ids[0] + np.cumsum(deltas)
-                outs.append(pd.DataFrame({"doc_id": ids}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return blocks.select("n", "first_doc_id", "doc_deltas").mapInPandas(
-        decode, schema="doc_id long"
-    ).dropDuplicates(["doc_id"])
-
-
 def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
                  params: BM25Params | None = None,
                  field: str | None = None) -> DataFrame:
@@ -130,11 +100,10 @@ def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
 
     Required clauses are satisfied per CLAUSE: a literal stem's tokens
     are each their own clause (all must appear), a pattern stem's
-    expansion is one OR-clause (some member must appear).  Satisfaction
-    is counted with a broadcast term→clause-ids map folded inside the
-    same per-doc aggregate as the score — no extra scan, no join
-    duplication (a term in two clauses contributes both ids from ONE
-    partial row)."""
+    expansion is one OR-clause (some member must appear).  Satisfaction,
+    prohibition and liveness are per-bucket doc masks inside the same
+    kernel as the score fold — a term in two clauses is read from ONE
+    decoded block."""
     params = params or BM25Params()
     spark = index.spark
     req_stems, opt_stems, pro_stems = parse_boolean(query_text)
@@ -169,46 +138,30 @@ def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
     if any(not c for c in clauses):
         return empty
 
-    partials = _partials(index, sorted(idf), idf, params, field=field)
-    n_clauses = len(clauses)
-    agg = [
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "pscore"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["pscore"],
-        ).alias("score")
-    ]
-    if n_clauses:
-        term_clauses: dict[str, list[int]] = {}
-        for ci, c in enumerate(clauses):
-            for t in c:
-                term_clauses.setdefault(t, []).append(ci)
-        # literal term→array<clause id> map; a term missing from the map
-        # yields NULL, which collect_list skips
-        cmap = F.map_from_arrays(
-            F.array(*[F.lit(t) for t in term_clauses]),
-            F.array(*[
-                F.array(*[F.lit(i) for i in ids])
-                for ids in term_clauses.values()
-            ]),
-        )
-        agg.append(
-            F.size(
-                F.array_distinct(
-                    F.flatten(F.collect_list(cmap[F.col("term")]))
-                )
-            ).alias("n_sat")
-        )
-    scored = partials.groupBy("doc_id").agg(*agg)
-    if n_clauses:
-        scored = scored.filter(F.col("n_sat") == n_clauses).drop("n_sat")
-    if prohibited:
-        bad = _doc_ids_for_terms(index, sorted(prohibited), field=field)
-        scored = scored.join(bad, "doc_id", "left_anti")
+    _, avgdl = index.field_stats(field)
+    k1, b = params.k1, params.b
+    bidf = spark.sparkContext.broadcast(idf)
     tomb = index.tombstones
-    if len(tomb):
-        tdf = spark.createDataFrame([(int(t),) for t in tomb], "doc_id long")
-        scored = scored.join(F.broadcast(tdf), "doc_id", "left_anti")
+    btomb = spark.sparkContext.broadcast(tomb) if len(tomb) else None
+    scoring = sorted(idf)  # corpus-present scoring terms
+    pro = sorted(prohibited)
+
+    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        bp = BucketPostings(pdf)
+        acc = bp.fold(scoring, bidf.value, avgdl, k1, b)
+        keep = bp.hits(scoring) & bp.live(
+            btomb.value if btomb is not None else None)
+        for c in clauses:
+            keep &= bp.hits(c)
+        if pro:
+            keep &= ~bp.hits(pro)
+        idxs = np.nonzero(keep)[0]
+        idxs = idxs[top_k(bp.universe[idxs], acc[idxs], k)]
+        return pd.DataFrame({"doc_id": bp.universe[idxs],
+                             "score": acc[idxs]})
+
+    scored = term_blocks(index, scoring + pro, field).groupBy(
+        "bucket").applyInPandas(score_bucket, schema="doc_id long, score double")
     top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     w = Window.partitionBy(constant_partition("doc_id")).orderBy(
         F.desc("score"), F.asc("doc_id")

@@ -7,10 +7,9 @@ column cosine → top-k merge → dedup → paginate) onto Spark:
   → dictionary lookup for idf (tiny collect, |query terms| rows)
   → postings scan FILTERED to query terms (Parquet predicate pushdown +
     bucket partition layout)
-  → block decode + per-(term, doc) partial BM25 inside a vectorized
-    pandas UDF
-  → per-doc fold in ASCENDING TERM ORDER (bit-identical float64 summation
-    vs the oracle) via ``aggregate(array_sort(collect_list(...)))``
+  → one kernel per doc-range bucket (query/bucket.py): block decode,
+    per-term partial BM25, per-doc fold in ASCENDING TERM ORDER
+    (bit-identical float64 summation vs the oracle), tombstone mask
   → global top-k: ``ORDER BY score DESC, doc_id ASC LIMIT k`` — Catalyst
     plans TakeOrderedAndProject (per-partition heap + driver merge, no
     full sort)
@@ -26,7 +25,6 @@ from __future__ import annotations
 import heapq
 import json
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -37,6 +35,7 @@ from pyspark.sql.window import Window
 from anisearch_model_spark.config import BM25Params, MAX_QUERY_CHARS
 from anisearch_model_spark.functions.normalize import bm25_idf, bm25_term_score, tokenize_series
 from anisearch_model_spark.functions.windows import constant_partition
+from anisearch_model_spark.query.bucket import BucketPostings, live_mask, term_blocks
 
 
 class IndexStore:
@@ -157,9 +156,9 @@ class IndexStore:
 
     def clear_caches(self) -> None:
         """Drop every driver-side cache (df LRU, manifest, snapshot path
-        lists, tombstones) — the engine analog of the reference service's
-        idle memory clear (``/root/reference/src/api.py:112-156``, which
-        unloads models and embedding matrices after 5 idle minutes).
+        lists, tombstones, dictionary file ranges) — the engine analog of
+        the reference service's idle memory clear (``src/api.py:112-156``,
+        which unloads models and embedding matrices after 5 idle minutes).
         Everything reloads lazily on the next query; results are
         unaffected (the caches are mtime-validated anyway)."""
         self._df_cache.clear()
@@ -168,6 +167,8 @@ class IndexStore:
         self._snapshot_paths.clear()
         self._tomb = None
         self._tomb_mtime = None
+        self._dict_ranges = None
+        self._dict_ranges_mtime = None
         self._n_entities = None
 
     def n_entities(self) -> int:
@@ -573,8 +574,8 @@ def match_count(index: IndexStore, query_text: str,
                 field: str | None = None) -> int:
     """Total-hit count: how many live docs match ≥1 query term — the
     Lucene TotalHitCountCollector surface.  One distributed count over
-    the term-pruned partial relation (no ranking, no top-k); tombstones
-    excluded by the same mask as the scorers."""
+    the per-bucket match set (no ranking, no top-k); tombstones excluded
+    by the same mask as the scorers."""
     return score_matches(index, query_text, field=field).count()
 
 
@@ -621,41 +622,6 @@ def _idf_map(index: IndexStore, terms: list[str],
     return {t: float(bm25_idf(np.array([df]), n)[0]) for t, df in dfs.items()}
 
 
-def _partials(index: IndexStore, terms: list[str], idf: dict[str, float],
-              params: BM25Params, field: str | None = None) -> DataFrame:
-    """Decode matching posting blocks → (doc_id, term, pscore) DataFrame."""
-    spark = index.spark
-    _, avgdl = index.field_stats(field)
-    k1, b = params.k1, params.b
-    bidf = spark.sparkContext.broadcast(idf)
-
-    blocks = index.postings.filter(F.col("term").isin(list(idf.keys())))
-    if field is not None:
-        # field is a partition column: directory-level pruning at the scan
-        blocks = blocks.filter(F.col("field") == field)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from anisearch_model_spark.index.codec import decode_posting_block
-
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                doc_ids, tfs, dls = decode_posting_block(
-                    {"first_doc_id": row.first_doc_id,
-                     "doc_deltas": row.doc_deltas, "tfs": row.tfs, "dls": row.dls}
-                )
-                t_idf = bidf.value[row.term]
-                ps = bm25_term_score(tfs, dls, np.full(len(tfs), t_idf), avgdl, k1, b)
-                outs.append(pd.DataFrame(
-                    {"doc_id": doc_ids, "term": row.term, "pscore": ps}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return blocks.select(
-        "term", "first_doc_id", "doc_deltas", "tfs", "dls"
-    ).mapInPandas(decode, schema="doc_id long, term string, pscore double")
-
-
 def score_matches(index: IndexStore, query_text: str,
                   params: BM25Params | None = None,
                   field: str | None = None,
@@ -676,14 +642,11 @@ def score_matches(index: IndexStore, query_text: str,
     exactly equivalent to ``boost · idf · tf-saturation`` and therefore
     zero extra plan cost; unlisted terms boost 1.0.
 
-    r6 shape: buckets are disjoint doc ranges, so a doc's whole score is
-    computable inside its bucket — one ``applyInPandas`` kernel per
-    bucket decodes the term-pruned blocks and folds per doc in ascending
-    term order with numpy (bit-identical left-assoc float64 to the old
-    ``aggregate(array_sort(collect_list(...)))`` fold, which shuffled
-    every (term, doc) partial row to do the same addition).  The only
-    shuffle now moves compressed blocks to bucket groups; tombstones
-    mask inside the kernel."""
+    Buckets are disjoint doc ranges, so a doc's whole score is computable
+    inside its bucket: one ``applyInPandas`` kernel per bucket folds the
+    term-pruned blocks in ascending term order and masks tombstones
+    (``query/bucket.py``).  The only shuffle moves compressed blocks to
+    their bucket group."""
     params = params or BM25Params()
     spark = index.spark
     idf = resolve_query_idf(index, query_text, field=field)
@@ -697,59 +660,14 @@ def score_matches(index: IndexStore, query_text: str,
     tomb = index.tombstones
     btomb = spark.sparkContext.broadcast(tomb) if len(tomb) else None
 
-    blocks = index.postings.filter(F.col("term").isin(list(idf.keys())))
-    if field is not None:
-        # field is a partition column: directory-level pruning at the scan
-        blocks = blocks.filter(F.col("field") == field)
-    blocks = blocks.select("bucket", "term", "first_doc_id",
-                           "doc_deltas", "tfs", "dls")
-
     def fold_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        universe, acc = _fold_bucket_scores(
-            pdf, bidf.value, avgdl, k1, b,
-            btomb.value if btomb is not None else None)
-        return pd.DataFrame({"doc_id": universe, "score": acc})
+        bp = BucketPostings(pdf)
+        acc = bp.fold(bp.terms, bidf.value, avgdl, k1, b)
+        live = bp.live(btomb.value if btomb is not None else None)
+        return pd.DataFrame({"doc_id": bp.universe[live], "score": acc[live]})
 
-    return blocks.groupBy("bucket").applyInPandas(
-        lambda pdf: fold_bucket(pdf), schema="doc_id long, score double"
-    )
-
-
-def _fold_bucket_scores(pdf: "pd.DataFrame", idf_local: dict,
-                        avgdl: float, k1: float, b: float,
-                        tomb: "np.ndarray | None"):
-    """One bucket's term-pruned posting blocks → (sorted live doc ids,
-    fold-exact scores).  Per term: concatenated (doc_ids, pscore) across
-    its blocks (disjoint doc sets per term, so each doc takes exactly one
-    add); the per-doc accumulation runs in ASCENDING TERM ORDER — the
-    engine's fixed left-assoc float64 summation, bit-identical to the
-    pre-r6 aggregate(array_sort(collect_list(...))) fold."""
-    from anisearch_model_spark.index.codec import decode_posting_block
-
-    if pdf.empty:
-        return (np.empty(0, dtype="int64"), np.empty(0, dtype="float64"))
-    per_term: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for row in pdf.itertuples(index=False):
-        d, t, dl = decode_posting_block(
-            {"first_doc_id": row.first_doc_id,
-             "doc_deltas": row.doc_deltas, "tfs": row.tfs, "dls": row.dls})
-        ps = bm25_term_score(
-            t, dl, np.full(len(t), idf_local[row.term]), avgdl, k1, b)
-        ent = per_term.get(row.term)
-        per_term[row.term] = (
-            (d, ps) if ent is None
-            else (np.concatenate([ent[0], d]), np.concatenate([ent[1], ps]))
-        )
-    universe = np.unique(np.concatenate([v[0] for v in per_term.values()]))
-    acc = np.zeros(len(universe), dtype="float64")
-    for t in sorted(per_term):  # ascending term — the fixed fold order
-        d, ps = per_term[t]
-        acc[np.searchsorted(universe, d)] += ps
-    if tomb is not None:
-        pos = np.minimum(np.searchsorted(tomb, universe), len(tomb) - 1)
-        live = tomb[pos] != universe
-        universe, acc = universe[live], acc[live]
-    return universe, acc
+    return term_blocks(index, idf, field).groupBy("bucket").applyInPandas(
+        fold_bucket, schema="doc_id long, score double")
 
 
 def topk_exhaustive(index: IndexStore, query_text: str, k: int = 10,
@@ -831,26 +749,22 @@ def topk_bmw(index: IndexStore, query_text: str, k: int = 10,
     # top-k slot would push a live doc out, not just vanish at the end)
     btomb = spark.sparkContext.broadcast(tomb) if len(tomb) else None
 
-    blocks = index.postings.filter(F.col("term").isin(list(idf.keys())))
-    if field is not None:
-        blocks = blocks.filter(F.col("field") == field)
-    blocks = blocks.select(
-        "bucket", "term", "first_doc_id", "last_doc_id", "max_tf", "min_dl",
-        "doc_deltas", "tfs", "dls",
-    )
+    blocks = term_blocks(
+        index, idf, field,
+        cols=("bucket", "term", "first_doc_id", "last_doc_id", "max_tf",
+              "min_dl", "doc_deltas", "tfs", "dls"))
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        from anisearch_model_spark.index.codec import decode_posting_block
-
         if pdf.empty:
             return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
                                  "score": pd.Series(dtype="float64")})
-        idf_local = bidf.value
-        # term-ascending block order = the fixed float64 summation order
-        # (within a term, blocks are disjoint sorted doc ranges)
-        pdf = pdf.sort_values(["term", "first_doc_id"],
-                              kind="mergesort").reset_index(drop=True)
-        idf_arr = pdf["term"].map(idf_local).to_numpy("float64")
+        # blocks in (term, first_doc_id) order: term-ascending block order
+        # is the fixed float64 summation order
+        bp = BucketPostings(pdf)
+        pdf = bp.blocks
+        tomb_v = btomb.value if btomb is not None else None
+        allow_v = ballow.value if ballow is not None else None
+        idf_arr = pdf["term"].map(bidf.value).to_numpy("float64")
         # per-block bound from metadata ONLY — nothing decoded yet
         bound_arr = bm25_term_score(
             pdf["max_tf"].to_numpy("int64"), pdf["min_dl"].to_numpy("int64"),
@@ -883,9 +797,6 @@ def topk_bmw(index: IndexStore, query_text: str, k: int = 10,
             for s in range(int(s0[bi]), int(s1[bi]) + 1):
                 seg_blocks[s].append(bi)
 
-        raw = pdf[["first_doc_id", "doc_deltas", "tfs", "dls"]].to_dict("records")
-        cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        n_decoded = 0
         heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
         # descending bound order → θ grows fast, later segments prune/break
         for si in np.argsort(-seg_bound, kind="stable"):
@@ -897,34 +808,13 @@ def topk_bmw(index: IndexStore, query_text: str, k: int = 10,
             local = np.zeros(seg, dtype="float64")
             hit = np.zeros(seg, dtype=bool)
             for bi in seg_blocks[si]:
-                ent = cache.get(bi)
-                if ent is None:
-                    d, t, dl = decode_posting_block(raw[bi])
-                    ps = bm25_term_score(
-                        t, dl, np.full(len(t), idf_arr[bi]), avgdl, k1, b)
-                    ent = cache[bi] = (d, ps)
-                    n_decoded += 1
-                d, ps = ent
+                d, ps = bp.block_scores(bi, idf_arr[bi], avgdl, k1, b)
                 a = int(np.searchsorted(d, s_lo))
                 z = int(np.searchsorted(d, s_hi))
                 if a < z:
                     off = d[a:z] - s_lo
                     local[off] += ps[a:z]
                     hit[off] = True
-            if btomb is not None:
-                td = btomb.value
-                a = int(np.searchsorted(td, s_lo))
-                z = int(np.searchsorted(td, s_hi))
-                if a < z:
-                    hit[td[a:z] - s_lo] = False  # tombstoned: never admit
-            if ballow is not None:
-                ad = ballow.value
-                a = int(np.searchsorted(ad, s_lo))
-                z = int(np.searchsorted(ad, s_hi))
-                keep = np.zeros(seg, dtype=bool)
-                if a < z:
-                    keep[ad[a:z] - s_lo] = True
-                hit &= keep  # outside the filter: never admit
             # vectorized admission: of the segment's hit docs only ≤k can
             # enter the heap, so select the k best BY SCORE first (keeping
             # every doc tied with the kth score — the (score, -doc_id)
@@ -933,6 +823,8 @@ def topk_bmw(index: IndexStore, query_text: str, k: int = 10,
             # all-hot-terms query this turns the per-posting Python loop
             # into two numpy selections + ≤k pushes per segment.
             idxs = np.nonzero(hit)[0]
+            # tombstoned or outside the filter: never admit
+            idxs = idxs[live_mask(s_lo + idxs, tomb_v, allow_v)]
             if len(heap) >= k and len(idxs):
                 idxs = idxs[local[idxs] >= heap[0][0]]
             if len(idxs) > k:
@@ -946,15 +838,14 @@ def topk_bmw(index: IndexStore, query_text: str, k: int = 10,
                 elif item > heap[0]:
                     heapq.heapreplace(heap, item)
         if decode_counter is not None:
-            decode_counter.add(n_decoded)
+            decode_counter.add(bp.n_decoded)
         out = pd.DataFrame(
             {"doc_id": [-d for _, d in heap], "score": [s for s, _ in heap]}
         )
         return out.astype({"doc_id": "int64", "score": "float64"})
 
     local_tops = blocks.groupBy("bucket").applyInPandas(
-        lambda pdf: score_bucket(pdf), schema="doc_id long, score double"
-    )
+        score_bucket, schema="doc_id long, score double")
     top = local_tops.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     w = Window.partitionBy(constant_partition("doc_id")).orderBy(
         F.desc("score"), F.asc("doc_id")
@@ -971,14 +862,19 @@ _LOCAL_FETCH_MAX_BUCKETS = 64
 
 
 def fetch_doc_rows(index: IndexStore, ids: list[int],
-                   meta_cols: list[str]) -> "pd.DataFrame":
+                   meta_cols: list[str]) -> "pd.DataFrame | None":
     """Bounded driver-side stored-fields fetch (Lucene's stored-fields
     read): resolve ``ids`` to their bucket directories via the manifest
     and read ONLY those parquet files with pyarrow, pruning row groups by
     the doc_id statistics (the doc_map is written doc_id-sorted within
     each bucket) and projecting only ``meta_cols``.  No Spark job: for a
     ≤ pages·k probe the cluster round-trip WAS the latency — the read
-    itself touches the same row groups a pruned scan task would."""
+    itself touches the same row groups a pruned scan task would.
+
+    Returns None — the caller falls back to the pruned cluster scan —
+    when a candidate bucket's directory cannot be listed: a silently
+    skipped bucket would drop its rows' metadata (same "don't know"
+    contract as ``IndexStore._term_dfs_local``)."""
     import pyarrow.dataset as pads
 
     root = os.path.join(index.index_dir, "doc_map")
@@ -987,7 +883,7 @@ def fetch_doc_rows(index: IndexStore, ids: list[int],
     for b in index.buckets_for(idset):
         p = os.path.join(root, f"bucket={b}")
         if not os.path.isdir(p):
-            continue
+            return None
         tbl = pads.dataset(p, format="parquet").to_table(
             columns=[c for c in meta_cols if c != "bucket"],
             filter=pads.field("doc_id").isin(idset),
@@ -1025,8 +921,10 @@ def probe_doc_map(index: IndexStore, top: DataFrame, meta_cols: list[str],
             len(index.buckets_for(ids)) <= _LOCAL_FETCH_MAX_BUCKETS:
         pdf = (fetch_doc_rows(index, ids, meta_cols) if ids
                else pd.DataFrame({c: [] for c in meta_cols}))
-        meta = spark.createDataFrame(pdf[list(meta_cols)], schema=sel_schema)
-        return top_local, meta
+        if pdf is not None:
+            meta = spark.createDataFrame(pdf[list(meta_cols)],
+                                         schema=sel_schema)
+            return top_local, meta
     meta = index.doc_map
     if meta_filter is not None:
         meta = meta.filter(meta_filter)
@@ -1075,24 +973,24 @@ def search(index: IndexStore, query_text: str, k: int = 10,
     rows = top.collect()
     ids = [int(r["doc_id"]) for r in rows]
     spark = index.spark
+    if not rows:
+        return spark.createDataFrame([], out_schema)
+    meta_cols = ["doc_id", "conv_id", "turn_idx", "role"]
     if len(ids) <= _LOCAL_FETCH_MAX_IDS and \
             len(index.buckets_for(ids)) <= _LOCAL_FETCH_MAX_BUCKETS:
-        # r6 fast path: the ranked side is already collected (≤ pages·k
+        # fast path: the ranked side is already collected (≤ pages·k
         # rows) and the metadata side is a bounded driver-side
         # stored-fields read — the attach is a pandas merge, zero extra
         # Spark jobs (the tiny local-vs-local broadcast join cost ~0.4 s
         # of pure scheduling per query)
-        if not rows:
-            return spark.createDataFrame([], out_schema)
-        tp = pd.DataFrame([r.asDict() for r in rows])
-        meta_pdf = fetch_doc_rows(
-            index, ids, ["doc_id", "conv_id", "turn_idx", "role"])
-        merged = tp.merge(meta_pdf, on="doc_id", how="inner").sort_values(
-            "rank", kind="mergesort")
-        return spark.createDataFrame(merged[out_cols], schema=out_schema)
-    top_local, meta = probe_doc_map(
-        index, top, ["doc_id", "conv_id", "turn_idx", "role"]
-    )
+        meta_pdf = fetch_doc_rows(index, ids, meta_cols)
+        if meta_pdf is not None:
+            tp = pd.DataFrame([r.asDict() for r in rows])
+            merged = tp.merge(meta_pdf, on="doc_id", how="inner").sort_values(
+                "rank", kind="mergesort")
+            return spark.createDataFrame(merged[out_cols], schema=out_schema)
+    top_local = spark.createDataFrame(rows, top.schema)
+    _, meta = probe_doc_map(index, top_local, meta_cols)
     return (
         meta.join(F.broadcast(top_local), "doc_id", "inner")
         .select(*out_cols)

@@ -37,7 +37,8 @@ def explain_score(index, query_text: str, doc_id: int,
     import numpy as np
 
     from anisearch_model_spark.functions.normalize import bm25_term_score
-    from anisearch_model_spark.index.codec import decode_posting_block
+    from anisearch_model_spark.query.bucket import (
+        BLOCK_COLS, BucketPostings, term_blocks)
     from anisearch_model_spark.query.engine import (
         IndexStore, resolve_query_idf)
 
@@ -57,26 +58,20 @@ def explain_score(index, query_text: str, doc_id: int,
     terms: list[dict] = []
     total = 0.0
     if idf:
-        blocks = index.postings.filter(
-            F.col("term").isin(sorted(idf))
-            & F.col("bucket").isin(buckets)
+        blocks = term_blocks(
+            index, idf, field,
+            cols=("bucket", "last_doc_id") + BLOCK_COLS).filter(
+            F.col("bucket").isin(buckets)
             & (F.col("first_doc_id") <= doc_id)
             & (F.col("last_doc_id") >= doc_id)
         )
-        if field is not None:
-            blocks = blocks.filter(F.col("field") == field)
-        rows = blocks.select(
-            "term", "first_doc_id", "doc_deltas", "tfs", "dls"
-        ).collect()
+        bp = BucketPostings(blocks.toPandas())
         hits: dict[str, tuple[int, int]] = {}
-        for r in rows:
-            doc_ids, tfs, dls = decode_posting_block(
-                {"first_doc_id": r["first_doc_id"],
-                 "doc_deltas": r["doc_deltas"],
-                 "tfs": r["tfs"], "dls": r["dls"]})
-            pos = np.searchsorted(doc_ids, doc_id)
-            if pos < len(doc_ids) and doc_ids[pos] == doc_id:
-                hits[r["term"]] = (int(tfs[pos]), int(dls[pos]))
+        for t in bp.terms:
+            d, tfs, dls = bp.term(t)
+            at = np.flatnonzero(d == doc_id)
+            if len(at):
+                hits[t] = (int(tfs[at[0]]), int(dls[at[0]]))
         # ascending-term fold — the scorers' float64 summation order
         for t in sorted(hits):
             tf, dl = hits[t]

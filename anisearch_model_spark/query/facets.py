@@ -11,14 +11,14 @@ top-k pool; real facets must count the whole match set, which a
 single-node engine cannot afford and a distributed one can.
 
 Scale shape: the match set is query-term posting volume (never corpus
-size — the postings scan term-IN-prunes), the facet join is an equi-join
-on doc_id against the doc_map, and the output is |distinct facet
-values| rows.  Both sides of the join are bucketed by the SAME doc-range
-scheme (index/build.py assigns bucket = doc_id range for postings and
-doc_map alike), so on a real cluster a storage-bucketed join co-locates
-them without a shuffle; in local mode AQE picks a plain sort-merge or
-broadcast by size.  The groupBy is a map-side-combinable count over a
-handful of facet values.
+size — the postings scan term-IN-prunes) and the output is |distinct
+facet values| rows.  Postings and doc_map share the SAME doc-range
+bucketing (index/build.py), and buckets are disjoint doc ranges, so
+scoring AND facet attribution both happen inside one COGROUPED kernel per
+bucket: the bucket's score fold and tombstone mask (query/bucket.py),
+then an inner match against the bucket's doc_map rows.  The match set
+itself never crosses an exchange; counts sum and maxes max exactly across
+disjoint buckets.
 """
 
 from __future__ import annotations
@@ -37,21 +37,17 @@ def facet_counts(index, query_text: str, facet_col: str = "role",
     Returns one row per facet value: ``(facet, n_docs, top_score)``
     ordered (n_docs DESC, facet ASC) — the count of matching live docs
     carrying that value and the best score among them.  Deletes are
-    honored (``score_matches`` applies the tombstone mask), so facet
-    counts never resurrect a taken-down doc.
+    honored (the kernel applies the tombstone mask), so facet counts
+    never resurrect a taken-down doc.
     """
     import numpy as np
     import pandas as pd
 
-    from anisearch_model_spark.config import BM25Params as _BM25Params
-    from anisearch_model_spark.query.engine import (
-        IndexStore,
-        _fold_bucket_scores,
-        resolve_query_idf,
-    )
+    from anisearch_model_spark.query.bucket import BucketPostings, term_blocks
+    from anisearch_model_spark.query.engine import IndexStore, resolve_query_idf
 
     assert isinstance(index, IndexStore)
-    params = params or _BM25Params()
+    params = params or BM25Params()
     spark = index.spark
     facet_type = index.doc_map.schema[facet_col].dataType.simpleString()
     out_schema = f"facet {facet_type}, n_docs long, top_score double"
@@ -63,30 +59,19 @@ def facet_counts(index, query_text: str, facet_col: str = "role",
     bidf = spark.sparkContext.broadcast(idf)
     tomb = index.tombstones
     btomb = spark.sparkContext.broadcast(tomb) if len(tomb) else None
-
-    blocks = index.postings.filter(F.col("term").isin(list(idf.keys())))
-    if field is not None:
-        blocks = blocks.filter(F.col("field") == field)
-    blocks = blocks.select("bucket", "term", "first_doc_id",
-                           "doc_deltas", "tfs", "dls")
+    blocks = term_blocks(index, idf, field)
     meta = index.doc_map.select("bucket", "doc_id",
                                 F.col(facet_col).alias("facet"))
 
-    # r6 shape: postings and doc_map share the SAME doc-range bucketing,
-    # so scoring AND facet attribution both happen inside one COGROUPED
-    # kernel per bucket — the match set itself never crosses an exchange
-    # (pre-r6: scored-output exchange + sort-merge join with the doc_map;
-    # now: one blocks exchange + one doc_map exchange, both keyed by
-    # bucket).  The kernel emits |facet values| partial rows per bucket;
-    # counts sum and maxes max exactly across disjoint buckets.
     def facet_bucket(blocks_pdf: pd.DataFrame,
                      meta_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"facet": pd.Series(dtype=object),
                               "n_docs": pd.Series(dtype="int64"),
                               "top_score": pd.Series(dtype="float64")})
-        universe, acc = _fold_bucket_scores(
-            blocks_pdf, bidf.value, avgdl, k1, b,
-            btomb.value if btomb is not None else None)
+        bp = BucketPostings(blocks_pdf)
+        live = bp.live(btomb.value if btomb is not None else None)
+        universe = bp.universe[live]
+        acc = bp.fold(bp.terms, bidf.value, avgdl, k1, b)[live]
         if len(universe) == 0 or meta_pdf.empty:
             return empty
         mids = meta_pdf["doc_id"].to_numpy("int64")

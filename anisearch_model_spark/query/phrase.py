@@ -20,7 +20,7 @@ its users gain.  Semantics:
 Scale shape: the positions scan is filtered to the phrase's terms
 (Parquet predicate pushdown) and prunes on the ``field`` partition; the
 match runs bucket-parallel (buckets are disjoint doc ranges) with numpy
-set intersections inside ``applyInPandas`` — the per-bucket candidate
+sorted-key searches inside ``applyInPandas`` — the per-bucket candidate
 volume is bounded by the rarest phrase term's posting volume, not the
 corpus.  Driver traffic is ≤ k result rows plus one matched-doc count.
 """
@@ -53,80 +53,16 @@ def parse_phrase(phrase_text: str) -> list[str]:
     return list(tokenize_series(pd.Series([phrase_text])).iloc[0])
 
 
-def _match_bucket(pdf: pd.DataFrame, terms: list[str]) -> pd.DataFrame:
+def _match_bucket(pdf: pd.DataFrame, terms: list[str],
+                  slop: int) -> pd.DataFrame:
     """One bucket's position blocks for the phrase's terms → matched
-    (doc_id, ptf, dl).  Pure numpy: per-term occurrence keys
-    ``code(doc) << 31 | (pos - j)`` intersected across the phrase's j
-    slots; surviving keys are phrase START positions."""
-    from anisearch_model_spark.index.positions import decode_positions_block
-
-    empty = pd.DataFrame({
-        "doc_id": pd.Series(dtype="int64"),
-        "ptf": pd.Series(dtype="int64"),
-        "dl": pd.Series(dtype="int64"),
-    })
-    by_term: dict[str, list[tuple[np.ndarray, np.ndarray, np.ndarray]]] = {}
-    for row in pdf.itertuples(index=False):
-        doc_ids, tfs, dls, flat_pos = decode_positions_block(row)
-        by_term.setdefault(row.term, []).append((doc_ids, tfs, dls, flat_pos))
-    need = set(terms)
-    if not need.issubset(by_term):
-        return empty
-    # flatten each needed term across its blocks (disjoint doc ranges)
-    occ: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    docs: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    for t in need:
-        parts = by_term[t]
-        d = np.concatenate([p[0] for p in parts])
-        tf = np.concatenate([p[1] for p in parts])
-        dl = np.concatenate([p[2] for p in parts])
-        fp = np.concatenate([p[3] for p in parts])
-        occ[t] = (np.repeat(d, tf), fp)
-        docs[t] = (d, dl)
-    # candidate docs = the first term's docs (any match starts there);
-    # dense codes via searchsorted keep the packed key in 62 bits
-    cand = np.sort(docs[terms[0]][0])
-    inter: np.ndarray | None = None
-    for j, t in enumerate(terms):
-        d_rep, p = occ[t]
-        code = np.searchsorted(cand, d_rep)
-        ok = (code < len(cand)) & (cand[np.minimum(code, len(cand) - 1)] == d_rep)
-        adj = p - j
-        ok &= adj >= 0
-        keys = (code[ok].astype(np.int64) << _POS_BITS) | adj[ok]
-        # (doc, pos) pairs are unique, so keys are unique — but intersect1d
-        # with assume_unique needs SORTED input; occurrence order is
-        # doc-major pos-ascending per block, not globally sorted
-        keys = np.sort(keys)
-        inter = keys if inter is None else np.intersect1d(
-            inter, keys, assume_unique=True
-        )
-        if inter is None or len(inter) == 0:
-            return empty
-    codes = (inter >> _POS_BITS).astype(np.int64)
-    counts = np.bincount(codes, minlength=len(cand))
-    hit = counts > 0
-    d0, dl0 = docs[terms[0]]
-    order = np.argsort(d0, kind="stable")
-    dl_sorted = dl0[order]  # aligned with cand (= sorted d0)
-    return pd.DataFrame(
-        {
-            "doc_id": cand[hit],
-            "ptf": counts[hit].astype("int64"),
-            "dl": dl_sorted[hit],
-        }
-    )
-
-
-def _match_bucket_slop(pdf: pd.DataFrame, terms: list[str],
-                       slop: int) -> pd.DataFrame:
-    """Sloppy variant of ``_match_bucket``: terms must occur IN ORDER
-    with each consecutive gap in [1, 1 + slop] post-stopword positions;
-    ``ptf`` = distinct chain-START positions (reduces to the exact-phrase
-    count at slop = 0).  Backward reachability DP over sorted packed
-    (doc-code << 31 | pos) keys: a term-j occurrence survives iff some
-    surviving term-(j+1) occurrence lies in its forward window — two
-    ``searchsorted`` calls per term, no per-doc loop."""
+    (doc_id, ptf, dl).  Terms must occur IN ORDER with each consecutive
+    gap in [1, 1 + slop] post-stopword positions (slop = 0: adjacent —
+    the exact phrase); ``ptf`` = distinct chain-START positions.
+    Backward reachability DP over sorted packed (doc-code << 31 | pos)
+    keys: a term-j occurrence survives iff some surviving term-(j+1)
+    occurrence lies in its forward window — two ``searchsorted`` calls
+    per term, no per-doc loop."""
     from anisearch_model_spark.index.positions import decode_positions_block
 
     empty = pd.DataFrame({
@@ -205,12 +141,8 @@ def phrase_match(index: IndexStore, phrase_text: str,
     if field is not None:
         index.field_stats(field)  # validates the field exists
         blocks = blocks.filter(F.col("field") == field)
-    kernel = (
-        (lambda pdf: _match_bucket(pdf, terms)) if slop == 0
-        else (lambda pdf: _match_bucket_slop(pdf, terms, slop))
-    )
     matched = blocks.groupBy("bucket").applyInPandas(
-        kernel,
+        lambda pdf: _match_bucket(pdf, terms, slop),
         schema="doc_id long, ptf long, dl long",
     )
     tomb = index.tombstones

@@ -28,47 +28,12 @@ matched relation, TakeOrderedAndProject for the page.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from anisearch_model_spark.config import BM25Params
-
-
-def _member_postings(index, members: list[str],
-                     field: str | None = None) -> DataFrame:
-    """Decode (doc_id, term, tf, dl) for every member term — raw tf/dl
-    (blending happens before the BM25 kernel, so the per-term partial
-    score of engine._partials is the wrong intermediate here)."""
-    blocks = index.postings.filter(F.col("term").isin(list(members)))
-    if field is not None:
-        blocks = blocks.filter(F.col("field") == field)
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from anisearch_model_spark.index.codec import decode_posting_block
-
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                doc_ids, tfs, dls = decode_posting_block(
-                    {"first_doc_id": row.first_doc_id,
-                     "doc_deltas": row.doc_deltas,
-                     "tfs": row.tfs, "dls": row.dls}
-                )
-                outs.append(pd.DataFrame(
-                    {"doc_id": doc_ids, "term": row.term,
-                     "tf": tfs.astype(np.int64),
-                     "dl": dls.astype(np.int64)}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return blocks.select(
-        "term", "first_doc_id", "doc_deltas", "tfs", "dls"
-    ).mapInPandas(decode, schema="doc_id long, term string, tf long, dl long")
+from anisearch_model_spark.query.bucket import raw_postings
 
 
 def search_synonyms(index, query_text: str,
@@ -102,7 +67,8 @@ def search_synonyms(index, query_text: str,
             member_of.setdefault(m, t)
     n_docs, avgdl = index.field_stats(field)
 
-    raw = _member_postings(index, sorted(member_of), field=field)
+    raw = raw_postings(index, member_of,
+                       None if field is None else [field])
     gmap = F.create_map(*[F.lit(x) for m, g in sorted(member_of.items())
                           for x in (m, g)])
     # blend per (doc, group): tf adds up, dl is the doc's length (every

@@ -106,13 +106,14 @@ def test_prohibited_absent_term_noop(mini):
 def test_boolean_search_metadata(spark, idx):
     rows = boolean_search(idx, "+hero battle -dragon", 5).collect()
     assert all(r["conv_id"] for r in rows)
-    # no returned doc may contain the prohibited term
-    from anisearch_model_spark.query.boolean import _doc_ids_for_terms
+    # no returned doc may contain the prohibited term (returned rows are
+    # live docs, so the live match sets are the complete doc-id sets)
+    from anisearch_model_spark.query.engine import score_matches
 
-    bad = {r["doc_id"] for r in _doc_ids_for_terms(idx, ["dragon"]).collect()}
+    bad = {r["doc_id"] for r in score_matches(idx, "dragon").collect()}
     assert all(r["doc_id"] not in bad for r in rows)
     # and every returned doc contains the required term
-    need = {r["doc_id"] for r in _doc_ids_for_terms(idx, ["hero"]).collect()}
+    need = {r["doc_id"] for r in score_matches(idx, "hero").collect()}
     assert all(r["doc_id"] in need for r in rows)
 
 

@@ -29,6 +29,11 @@ def test_local_lookup_matches_cluster_scan(spark, index_dir):
     got = idx.term_dfs(probe)
     assert got == local
     assert idx._df_cache[(None, "zz-absent-term")] is None
+    # clear_caches drops the footer-range term index too
+    assert idx._dict_ranges is not None
+    idx.clear_caches()
+    assert idx._dict_ranges is None and idx._dict_ranges_mtime is None
+    assert idx.term_dfs(probe) == local
 
 
 def test_local_lookup_field_scoped(spark, index_dir):

@@ -171,6 +171,34 @@ def test_metadata_probe_prunes_doc_map_partitions(spark, index_dir):
     assert has_pushed_filter(meta, "doc_id")
 
 
+def test_metadata_fetch_falls_back_when_bucket_unlisted(spark, index_dir,
+                                                       monkeypatch):
+    """A candidate bucket directory the driver cannot list makes the
+    local stored-fields fetch answer "don't know" (None) and search()
+    falls back to the pruned cluster scan — same rows, metadata intact,
+    never silently empty metadata."""
+    import os
+
+    from anisearch_model_spark.query.engine import (
+        IndexStore, fetch_doc_rows, search)
+
+    idx = IndexStore(spark, index_dir)
+    want = search(idx, "hero battle", k=10).toPandas()
+    assert len(want) and want["conv_id"].notna().all()
+    hidden = f"bucket={idx.buckets_for([int(want['doc_id'].iloc[0])])[0]}"
+    idx.doc_map  # the snapshot's path list is cached before the fault
+    real_isdir = os.path.isdir
+
+    def isdir(p):
+        return False if str(p).endswith(os.sep + hidden) else real_isdir(p)
+
+    monkeypatch.setattr(os.path, "isdir", isdir)
+    ids = [int(x) for x in want["doc_id"]]
+    assert fetch_doc_rows(idx, ids, ["doc_id", "conv_id"]) is None
+    got = search(idx, "hero battle", k=10).toPandas()
+    assert got.equals(want)
+
+
 def test_tombstone_mask_adds_no_join(spark, index_dir, tmp_path):
     """The live-docs filter is applied INSIDE the per-bucket fold kernel
     (broadcast numpy mask, r6 score_matches shape) — the exhaustive
@@ -192,6 +220,45 @@ def test_tombstone_mask_adds_no_join(spark, index_dir, tmp_path):
     assert not uses_sort_merge_join(q)
     got = {int(r["doc_id"]) for r in q.collect()}
     assert not got & {0, 1, 2}
+
+
+def test_boolean_plan_is_one_scan_one_kernel(spark, index_dir, tmp_path):
+    """boolean_topk with required, optional AND prohibited clauses on an
+    index with tombstones plans as ONE postings scan feeding one
+    per-bucket kernel: clause satisfaction, prohibition and the
+    tombstone mask are doc masks inside it — no Join (prohibited or
+    tombstone anti-join), no Aggregate (per-doc fold), no second scan —
+    and the results keep the boolean semantics exactly."""
+    import re
+    import shutil
+
+    from anisearch_model_spark.index.tombstones import delete_docs
+    from anisearch_model_spark.plans.inspect import formatted_plan
+    from anisearch_model_spark.query.boolean import boolean_topk
+    from anisearch_model_spark.query.engine import IndexStore, score_matches
+
+    d = str(tmp_path / "bool_plan_idx")
+    shutil.copytree(index_dir, d)
+    idx = IndexStore(spark, d)
+    hero = {int(r["doc_id"]) for r in score_matches(idx, "hero").collect()}
+    delete_docs(spark, d, sorted(hero)[:3])
+    q = boolean_topk(idx, "+hero battle -dragon", k=10)
+    plan = formatted_plan(q)
+    assert "Join" not in plan and "Aggregate" not in plan
+    scans = re.findall(r"^\(\d+\) Scan parquet.*\n.*\n.*\nLocation: .*",
+                       plan, re.M)
+    assert len(scans) == 1 and "/postings/" in scans[0]
+    # semantics: live docs with hero, without dragon, scored over
+    # (hero, battle) by the exhaustive scorer; score DESC, doc_id ASC
+    need = {int(r["doc_id"]) for r in score_matches(idx, "hero").collect()}
+    bad = {int(r["doc_id"]) for r in score_matches(idx, "dragon").collect()}
+    scored = [(float(r["score"]), int(r["doc_id"]))
+              for r in score_matches(idx, "hero battle").collect()
+              if int(r["doc_id"]) in need and int(r["doc_id"]) not in bad]
+    want = sorted(scored, key=lambda x: (-x[0], x[1]))[:10]
+    got = [(r["score"], r["doc_id"]) for r in q.orderBy("rank").collect()]
+    assert want and got == want
+    assert not {doc for _, doc in got} & set(sorted(hero)[:3])
 
 
 def test_facet_counts_plan_pushes_terms_and_prunes_columns(spark, index_dir):
@@ -247,15 +314,15 @@ def test_bm25f_plan_prunes_terms_fields_and_takes_ordered(spark):
     from anisearch_model_spark.plans.inspect import (
         formatted_plan, has_partition_filter, has_pushed_filter,
         takes_ordered_and_project)
-    from anisearch_model_spark.query.bm25f import (
-        _raw_term_postings, search_bm25f)
+    from anisearch_model_spark.query.bm25f import search_bm25f
+    from anisearch_model_spark.query.bucket import raw_postings
     from anisearch_model_spark.query.engine import IndexStore
 
     d = tempfile.mkdtemp(prefix="bm25fplan") + "/idx"
     tr = gen_transcripts(spark, 600, seed=11)
     build_index(spark, tr, d, num_buckets=2, field_col="role")
     idx = IndexStore(spark, d)
-    raw = _raw_term_postings(idx, ["hero", "battle"], ["user"])
+    raw = raw_postings(idx, ["hero", "battle"], ["user"])
     assert has_pushed_filter(raw, "term")
     assert has_partition_filter(raw, "field")
     out = search_bm25f(idx, "hero battle", {"user": 1.0}, k=5)
@@ -269,11 +336,11 @@ def test_synonym_search_plan_prunes_members_and_takes_ordered(spark, index_dir):
     from anisearch_model_spark.plans.inspect import (
         has_pushed_filter, takes_ordered_and_project)
     from anisearch_model_spark.query.engine import IndexStore
-    from anisearch_model_spark.query.synonyms import (
-        _member_postings, search_synonyms)
+    from anisearch_model_spark.query.bucket import raw_postings
+    from anisearch_model_spark.query.synonyms import search_synonyms
 
     idx = IndexStore(spark, index_dir)
-    raw = _member_postings(idx, ["hero", "battle", "magic"])
+    raw = raw_postings(idx, ["hero", "battle", "magic"])
     assert has_pushed_filter(raw, "term")
     out = search_synonyms(idx, "hero", {"hero": ["battle"]}, k=5)
     assert takes_ordered_and_project(out)

@@ -10,14 +10,18 @@ retries until the deadline.  The 2-vs-8 scaling pair (north rule) runs
 the same way, accepted only when both per-level probe stamps are clean.
 
 Usage:
-    nohup python tools/clean_bench.py > /tmp/clean_bench.log 2>&1 &
+    nohup python tools/clean_bench.py [--prefix NAME] > clean_bench.log 2>&1 &
 
-Outputs (only on acceptance):
-    BENCH/clean_r5.json          accepted suite JSON + scaling summary
+Outputs under BENCH/, named by ``--prefix`` (default ``clean_r5``):
+    NAME.json                    accepted suite JSON + scaling summary
+    NAME.md                      the same, as markdown (upper-cased name)
+    NAME_attempts.jsonl          every suite attempt
+    NAME_scaling_attempts.jsonl  every scaling attempt
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -39,6 +43,12 @@ POLL_SEC = float(os.environ.get("CLEAN_BENCH_POLL_SEC", "60"))
 # IO-bound phases (bucket_assign / doc_map_write) and measures ~0.72
 # even on a quiet host — the size, not the engine (r4 12M: 0.939)
 SCALING_TURNS = int(os.environ.get("CLEAN_SCALING_TURNS", "12000000"))
+PREFIX = "clean_r5"  # artifact name stem, set from --prefix
+
+
+def artifact(suffix: str) -> str:
+    """BENCH/<prefix><suffix> — every file this runner reads or writes."""
+    return os.path.join(REPO, "BENCH", PREFIX + suffix)
 
 
 def probe() -> float:
@@ -63,7 +73,7 @@ def run_suite() -> dict | None:
     d = json.loads(lines[-1])
     # every attempt is kept: if no fully-clean window ever opens, the
     # least-contaminated attempt is the round's best-available evidence
-    with open(os.path.join(REPO, "BENCH", "clean_r5_attempts.jsonl"), "a") as f:
+    with open(artifact("_attempts.jsonl"), "a") as f:
         f.write(json.dumps(d) + "\n")
     stamps = [d["host_probe_sec_start"], d["host_probe_sec_mid"],
               d["host_probe_sec_end"]]
@@ -92,8 +102,7 @@ def run_scaling() -> dict | None:
     d = json.loads(lines[-1])
     # every attempt is kept — the engine-vs-control efficiency pair under
     # whatever window each attempt caught is evidence in itself
-    with open(os.path.join(REPO, "BENCH",
-                           "clean_r5_scaling_attempts.jsonl"), "a") as f:
+    with open(artifact("_scaling_attempts.jsonl"), "a") as f:
         f.write(json.dumps(d) + "\n")
     stamps = list(d.get("host_probe_per_level", {}).values())
     for pair in d.get("child_probes", {}).values():
@@ -119,11 +128,16 @@ def run_scaling() -> dict | None:
 
 
 def main() -> None:
+    global PREFIX
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--prefix", default=PREFIX,
+                    help="artifact name stem under BENCH/ (default %(default)s)")
+    PREFIX = ap.parse_args().prefix
     t_end = time.time() + DEADLINE_SEC
     suite = scaling = None
     # resume: keep an already-accepted suite; re-chase scaling unless the
     # prior acceptance actually met the (current) gate
-    prior_path = os.path.join(REPO, "BENCH", "clean_r5.json")
+    prior_path = artifact(".json")
     fallback_suite = None
     if os.path.exists(prior_path):
         with open(prior_path, encoding="utf-8") as f:
@@ -171,7 +185,7 @@ def main() -> None:
     result = {"accepted_suite": suite, "accepted_scaling": scaling,
               "threshold": THRESHOLD, "ts": time.strftime("%Y-%m-%d %H:%M:%S")}
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "clean_r5.json"), "w") as f:
+    with open(artifact(".json"), "w") as f:
         json.dump(result, f, indent=2)
     _write_md(suite, scaling)
     log(f"done: suite={'OK' if suite else 'NONE'} "
@@ -185,7 +199,7 @@ def _best_attempt() -> dict | None:
     residual handicap stays visible).  Selecting by probe stamps
     instead can surface a stale pre-fix run whose window happened to be
     quiet."""
-    path = os.path.join(REPO, "BENCH", "clean_r5_attempts.jsonl")
+    path = artifact("_attempts.jsonl")
     if not os.path.exists(path):
         return None
     best = None
@@ -202,7 +216,7 @@ def _best_attempt() -> dict | None:
 
 def _per_query_floor() -> dict[str, float]:
     """Per-query minimum over every recorded attempt."""
-    path = os.path.join(REPO, "BENCH", "clean_r5_attempts.jsonl")
+    path = artifact("_attempts.jsonl")
     floors: dict[str, float] = {}
     if not os.path.exists(path):
         return floors
@@ -222,11 +236,11 @@ def _write_md(suite: dict | None, scaling: dict | None) -> None:
     """Self-documenting acceptance record: the accepted numbers as
     markdown, written even if the session that launched this loop has
     ended (the driver commits whatever is on disk)."""
-    lines = ["# BENCH/CLEAN_R5 — probe-gated clean-host acceptance",
+    lines = [f"# BENCH/{PREFIX.upper()} — probe-gated clean-host acceptance",
              "",
              f"Acceptance rule: every probe stamp < {THRESHOLD}s "
              "(healthy ≈ 0.5s); rejected attempts retry until the "
-             "deadline and are kept in clean_r5_attempts.jsonl.", ""]
+             f"deadline and are kept in {PREFIX}_attempts.jsonl.", ""]
     if suite:
         q = suite["queries"]
         lines += [
@@ -248,7 +262,7 @@ def _write_md(suite: dict | None, scaling: dict | None) -> None:
         lines.append("")
     else:
         lines += ["## Suite: no clean window opened before the deadline",
-                  "(see clean_r5_attempts.jsonl for best-available "
+                  f"(see {PREFIX}_attempts.jsonl for best-available "
                   "attempts)", ""]
         best = _best_attempt()
         if best:
@@ -309,7 +323,7 @@ def _write_md(suite: dict | None, scaling: dict | None) -> None:
     else:
         lines += ["## Scaling: no clean window opened before the deadline",
                   ""]
-    with open(os.path.join(REPO, "BENCH", "CLEAN_R5.md"), "w") as f:
+    with open(os.path.join(REPO, "BENCH", PREFIX.upper() + ".md"), "w") as f:
         f.write("\n".join(lines))
 
 
