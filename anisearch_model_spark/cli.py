@@ -128,6 +128,13 @@ def index_info(index_dir: str) -> dict:
     return out
 
 
+def _scorer_name(routes: list[tuple[str, object]], pruned: bool) -> str:
+    """The query log's ``scorer`` value: the name of the first route in
+    ``routes`` that is on, else the plain search's scorer."""
+    return next((name for name, on in routes if on),
+                "bmw" if pruned else "exhaustive")
+
+
 def serve_loop(spark, index_dir: str, in_stream, out_stream,
                log: bool = True, idle_clear_sec: float = 300.0) -> int:
     """Line-oriented query service over ONE session and ONE IndexStore.
@@ -159,7 +166,9 @@ def serve_loop(spark, index_dir: str, in_stream, out_stream,
     (field, term)→df dictionary cache and the negative-term cache
     actually pay off (query/engine.py:48-59), and each request appends a
     query_log evaluation row (the reference's per-query eval record,
-    src/test.py:221-274).  Admission errors (>2000-char query, bad
+    src/test.py:221-274) as one driver-side Parquet file — no Spark job,
+    and a failed append only prints a warning to stderr, the response
+    line is still written.  Admission errors (>2000-char query, bad
     JSON) come back as ``{"error": ...}`` responses — the loop never
     dies mid-service.  Returns the number of requests served.
     """
@@ -439,33 +448,30 @@ def serve_loop(spark, index_dir: str, in_stream, out_stream,
             out_stream.flush()
             continue
         wall_ms = (time.time() - t0) * 1000.0
+        query_text = req.get(
+            "query",
+            f"suggest:{suggest}" if suggest is not None
+            else (f"spell:{spell}" if spell is not None else f"mlt:{mlt}"))
         if log:
             import datetime as dt
 
             try:
                 log_query(
                     spark, index_dir,
-                    ts=dt.datetime.now(),
-                    query_text=req.get(
-                        "query",
-                        f"suggest:{suggest}" if suggest is not None
-                        else (f"spell:{spell}" if spell is not None
-                              else f"mlt:{mlt}")), k=k,
+                    ts=dt.datetime.now(), query_text=query_text, k=k,
                     page=page, field=role,
-                    scorer="spell" if spell is not None else
-                           ("suggest" if suggest is not None else
-                            ("explain" if explain is not None else
-                            ("synonyms" if syns is not None else
-                             ("mlt" if mlt is not None else
-                              ("facets" if facets is not None else
-                               ("bm25f" if bm25f is not None else
-                                ("fused" if fused is not None else
-                                 ("phrase" if phrase else
-                                  ("boolean" if boolean else
-                                   ("hybrid" if hybrid is not None else
-                                    ("filtered" if where is not None else
-                                     ("bmw" if pruned else
-                                      "exhaustive")))))))))))),
+                    scorer=_scorer_name(
+                        [("spell", spell is not None),
+                         ("suggest", suggest is not None),
+                         ("explain", explain is not None),
+                         ("synonyms", syns is not None),
+                         ("mlt", mlt is not None),
+                         ("facets", facets is not None),
+                         ("bm25f", bm25f is not None),
+                         ("fused", fused is not None),
+                         ("phrase", phrase), ("boolean", boolean),
+                         ("hybrid", hybrid is not None),
+                         ("filtered", where is not None)], pruned),
                     n_results=len(rows),
                     res_hash=result_hash(
                         [(r["rank"], r["doc_id"], r["score"]) for r in rows]
@@ -478,11 +484,7 @@ def serve_loop(spark, index_dir: str, in_stream, out_stream,
                 print(f"warning: query_log append failed: {e}",
                       file=sys.stderr)
         out_stream.write(json.dumps(
-            {"query": req.get(
-                "query",
-                f"suggest:{suggest}" if suggest is not None
-                else (f"spell:{spell}" if spell is not None
-                      else f"mlt:{mlt}")),
+            {"query": query_text,
              "wall_ms": round(wall_ms, 3),
              "results": [r.asDict() if hasattr(r, "asDict") else r
                          for r in rows]}, default=str) + "\n")
@@ -844,16 +846,15 @@ def main(argv: list[str] | None = None) -> int:
                         spark, args.index,
                         ts=dt.datetime.now(), query_text=args.query, k=args.k,
                         page=args.page, field=args.role,
-                        scorer="facets" if args.facets else
-                               ("synonyms" if args.synonyms else
-                                ("bm25f" if args.bm25f_fields else
-                                 ("fused" if args.fused_fields else
-                                  ("phrase" if args.phrase else
-                                   ("boolean" if args.boolean else
-                                    ("hybrid" if args.hybrid_embeddings else
-                                     ("filtered" if args.where else
-                                      ("bmw" if pruned else
-                                       "exhaustive")))))))),
+                        scorer=_scorer_name(
+                            [("facets", args.facets),
+                             ("synonyms", args.synonyms),
+                             ("bm25f", args.bm25f_fields),
+                             ("fused", args.fused_fields),
+                             ("phrase", args.phrase),
+                             ("boolean", args.boolean),
+                             ("hybrid", args.hybrid_embeddings),
+                             ("filtered", args.where)], pruned),
                         n_results=len(rows),
                         res_hash=result_hash(
                             [(r["rank"], r["doc_id"], r["score"]) for r in rows]

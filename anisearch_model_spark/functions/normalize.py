@@ -29,6 +29,7 @@ loops, per the input_hint mandate.
 from __future__ import annotations
 
 import re
+import sys
 
 import numpy as np
 import pandas as pd
@@ -93,6 +94,7 @@ def normalize_series(s: pd.Series) -> pd.Series:
 
 
 _STOPWORDS_ARR = None  # lazily-built pyarrow value set for is_in
+_ARROW_FALLBACK_WARNED = False  # the pandas fallback warns once per process
 
 
 def _kept_token_stream(norm: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -111,12 +113,12 @@ def _kept_token_stream(norm: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     can keep working in Arrow (dictionary_encode instead of factorize)
     without materializing millions of Python strings.  Any failure
     falls back to the pandas path, which returns an object ndarray —
-    consumers accept either."""
+    consumers accept either — and prints a one-time stderr warning."""
+    global _STOPWORDS_ARR, _ARROW_FALLBACK_WARNED
     try:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        global _STOPWORDS_ARR
         if _STOPWORDS_ARR is None:
             _STOPWORDS_ARR = pa.array(sorted(STOPWORDS))
         arr = pa.Array.from_pandas(norm)
@@ -131,7 +133,11 @@ def _kept_token_stream(norm: pd.Series) -> tuple[np.ndarray, np.ndarray]:
                            np.diff(offs))
         mask = np.asarray(keep.fill_null(False))
         return row_of[mask], pc.filter(flat, keep)
-    except Exception:
+    except Exception as e:  # noqa: BLE001 — any Arrow failure falls back
+        if not _ARROW_FALLBACK_WARNED:
+            _ARROW_FALLBACK_WARNED = True
+            print(f"warning: Arrow tokenizer failed ({e!r}); falling back "
+                  "to the pandas tokenizer", file=sys.stderr)
         toks = norm.str.findall(_TOKEN_RE)
         exploded = toks.explode()
         kept = exploded[exploded.notna() & ~exploded.isin(STOPWORDS)]

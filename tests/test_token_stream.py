@@ -73,3 +73,26 @@ def test_stream_agrees_with_tokenize_series():
     for r, v in zip(rp, np.asarray(kv)):
         regrouped[int(r)].append(v)
     assert regrouped == list(nz.tokenize_series(texts))
+
+
+def test_arrow_failure_falls_back_with_one_warning(monkeypatch, capsys):
+    """A failing Arrow split falls back to the pandas tokenizer with the
+    same tokens, and says so on stderr once per process, not per call."""
+    import pyarrow.compute as pc
+
+    norm = nz.normalize_series(pd.Series(CASES * 3))
+    rp_a, kv_a = nz._kept_token_stream(norm)
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("split unavailable")
+
+    monkeypatch.setattr(pc, "split_pattern_regex", broken)
+    monkeypatch.setattr(nz, "_ARROW_FALLBACK_WARNED", False)
+    capsys.readouterr()
+    for _ in range(2):
+        rp, kv = nz._kept_token_stream(norm)
+        assert np.array_equal(rp, rp_a)
+        assert list(np.asarray(kv)) == list(np.asarray(kv_a))
+    err = capsys.readouterr().err
+    assert err.count("warning: Arrow tokenizer failed") == 1
+    assert "split unavailable" in err
