@@ -738,7 +738,7 @@ def main(argv: list[str] | None = None) -> int:
 
             idx = IndexStore(spark, args.index)
             pruned = not args.exhaustive
-            # timer starts BEFORE the search call: probe_doc_map executes
+            # timer starts BEFORE the search call: attach_metadata executes
             # the expensive top-k eagerly at DataFrame-construction time,
             # so timing only the final collect() logs a meaningless
             # near-zero latency (same policy as timed_logged_search)

@@ -43,7 +43,8 @@ from pyspark.sql.window import Window
 from anisearch_model_spark.config import BM25Params, MAX_QUERY_CHARS
 from anisearch_model_spark.functions.windows import constant_partition
 from anisearch_model_spark.query.bucket import BucketPostings, term_blocks, top_k
-from anisearch_model_spark.query.engine import IndexStore, _idf_map
+from anisearch_model_spark.query.engine import (
+    IndexStore, _idf_map, attach_metadata)
 
 
 def parse_boolean(query_text: str) -> tuple[list[str], list[str], list[str]]:
@@ -93,6 +94,11 @@ def _expand_stem(index: IndexStore, stem: str,
     return lits, pattern_clauses
 
 
+def _empty(spark) -> DataFrame:
+    """The ranked frame of a query that can match nothing."""
+    return spark.createDataFrame([], "rank long, doc_id long, score double")
+
+
 def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
                  params: BM25Params | None = None,
                  field: str | None = None) -> DataFrame:
@@ -107,7 +113,6 @@ def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
     params = params or BM25Params()
     spark = index.spark
     req_stems, opt_stems, pro_stems = parse_boolean(query_text)
-    empty = spark.createDataFrame([], "rank long, doc_id long, score double")
 
     clauses: list[list[str]] = []
     optional: set[str] = set()
@@ -129,14 +134,14 @@ def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
 
     scoring = sorted({t for c in clauses for t in c} | optional)
     if not scoring:
-        return empty  # pure-negative (or empty) query matches nothing
+        return _empty(spark)  # pure-negative (or empty) query matches nothing
     idf = _idf_map(index, scoring, field=field)
     if not idf:
-        return empty
+        return _empty(spark)
     # a clause with no corpus-present member can never be satisfied
     clauses = [[t for t in c if t in idf] for c in clauses]
     if any(not c for c in clauses):
-        return empty
+        return _empty(spark)
 
     _, avgdl = index.field_stats(field)
     k1, b = params.k1, params.b
@@ -174,20 +179,11 @@ def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
 def boolean_search(index: IndexStore, query_text: str, k: int = 10,
                    params: BM25Params | None = None, field: str | None = None,
                    page: int = 1, with_metadata: bool = True) -> DataFrame:
-    """Boolean top-k + doc metadata (engine.search's probe contract)."""
-    from anisearch_model_spark.query.engine import probe_doc_map
-
+    """Boolean top-k + doc metadata (``engine.attach_metadata``)."""
     top = boolean_topk(index, query_text, k * page, params=params, field=field)
     if page > 1:
         lo, hi = (page - 1) * k, page * k
         top = top.filter((F.col("rank") > lo) & (F.col("rank") <= hi))
     if not with_metadata:
         return top
-    top_local, meta = probe_doc_map(
-        index, top, ["doc_id", "conv_id", "turn_idx", "role"]
-    )
-    return (
-        meta.join(F.broadcast(top_local), "doc_id", "inner")
-        .select("rank", "doc_id", "conv_id", "turn_idx", "role", "score")
-        .orderBy("rank")
-    )
+    return attach_metadata(index, top)

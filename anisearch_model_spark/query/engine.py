@@ -729,9 +729,8 @@ def topk_bmw(index: IndexStore, query_text: str, k: int = 10,
     params = params or BM25Params()
     spark = index.spark
     idf = resolve_query_idf(index, query_text, field=field)
-    empty = spark.createDataFrame([], "rank long, doc_id long, score double")
     if not idf:
-        return empty
+        return spark.createDataFrame([], "rank long, doc_id long, score double")
     ballow = (
         spark.sparkContext.broadcast(np.unique(np.asarray(allow, "int64")))
         if allow is not None else None
@@ -967,6 +966,21 @@ def search(index: IndexStore, query_text: str, k: int = 10,
         top = top.filter((F.col("rank") > lo) & (F.col("rank") <= hi))
     if not with_metadata:
         return top
+    return attach_metadata(index, top)
+
+
+def attach_metadata(index: IndexStore, top: DataFrame) -> DataFrame:
+    """A ranked ``(rank, doc_id, score)`` frame (≤ pages·k rows) → the
+    search result ``(rank, doc_id, conv_id, turn_idx, role, score)`` in
+    rank order; the tail every term/phrase/boolean search shares.
+
+    Fast path: the ranked side is collected and the metadata side is a
+    bounded driver-side stored-fields read (``fetch_doc_rows``) — the
+    attach is a pandas merge, zero extra Spark jobs (the tiny
+    local-vs-local broadcast join cost ~0.4 s of pure scheduling per
+    query).  Past the local-fetch bounds, or when a candidate bucket
+    cannot be listed, it is the pruned doc_map probe (``probe_doc_map``)
+    joined to the broadcast ranked side."""
     out_schema = ("rank long, doc_id long, conv_id string, turn_idx int, "
                   "role string, score double")
     out_cols = ["rank", "doc_id", "conv_id", "turn_idx", "role", "score"]
@@ -978,11 +992,6 @@ def search(index: IndexStore, query_text: str, k: int = 10,
     meta_cols = ["doc_id", "conv_id", "turn_idx", "role"]
     if len(ids) <= _LOCAL_FETCH_MAX_IDS and \
             len(index.buckets_for(ids)) <= _LOCAL_FETCH_MAX_BUCKETS:
-        # fast path: the ranked side is already collected (≤ pages·k
-        # rows) and the metadata side is a bounded driver-side
-        # stored-fields read — the attach is a pandas merge, zero extra
-        # Spark jobs (the tiny local-vs-local broadcast join cost ~0.4 s
-        # of pure scheduling per query)
         meta_pdf = fetch_doc_rows(index, ids, meta_cols)
         if meta_pdf is not None:
             tp = pd.DataFrame([r.asDict() for r in rows])

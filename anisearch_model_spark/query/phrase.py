@@ -22,7 +22,10 @@ Scale shape: the positions scan is filtered to the phrase's terms
 match runs bucket-parallel (buckets are disjoint doc ranges) with numpy
 sorted-key searches inside ``applyInPandas`` — the per-bucket candidate
 volume is bounded by the rarest phrase term's posting volume, not the
-corpus.  Driver traffic is ≤ k result rows plus one matched-doc count.
+corpus.  Tombstoned docs are masked inside the kernel.  ``phrase_topk``
+is one pass: each bucket emits its match count and its local top-k
+candidates, so driver traffic is ≤ |buckets|·k rows (plus exact ties)
+and the phrase df, idf and final ranking are computed on the driver.
 """
 
 from __future__ import annotations
@@ -31,12 +34,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from anisearch_model_spark.config import BM25Params, MAX_QUERY_CHARS
-from anisearch_model_spark.functions.normalize import bm25_idf, tokenize_series
-from anisearch_model_spark.functions.windows import constant_partition
-from anisearch_model_spark.query.engine import IndexStore
+from anisearch_model_spark.functions.normalize import (
+    bm25_idf, bm25_term_score, tokenize_series)
+from anisearch_model_spark.query.bucket import live_mask
+from anisearch_model_spark.query.engine import IndexStore, attach_metadata
 
 # positions fit in 31 bits (a doc's post-stopword token count); codes are
 # indices into the per-bucket candidate doc array — the (code, pos) pair
@@ -53,10 +56,11 @@ def parse_phrase(phrase_text: str) -> list[str]:
     return list(tokenize_series(pd.Series([phrase_text])).iloc[0])
 
 
-def _match_bucket(pdf: pd.DataFrame, terms: list[str],
-                  slop: int) -> pd.DataFrame:
+def _match_bucket(pdf: pd.DataFrame, terms: list[str], slop: int,
+                  tomb: np.ndarray | None = None) -> pd.DataFrame:
     """One bucket's position blocks for the phrase's terms → matched
-    (doc_id, ptf, dl).  Terms must occur IN ORDER with each consecutive
+    live (doc_id, ptf, dl); ``tomb`` is the sorted tombstone array.
+    Terms must occur IN ORDER with each consecutive
     gap in [1, 1 + slop] post-stopword positions (slop = 0: adjacent —
     the exact phrase); ``ptf`` = distinct chain-START positions.
     Backward reachability DP over sorted packed (doc-code << 31 | pos)
@@ -102,7 +106,7 @@ def _match_bucket(pdf: pd.DataFrame, terms: list[str],
         return empty
     codes = (ok_keys >> _POS_BITS).astype(np.int64)
     counts = np.bincount(codes, minlength=len(cand))
-    hit = counts > 0
+    hit = (counts > 0) & live_mask(cand, tomb)
     order = np.argsort(d0, kind="stable")
     dl_sorted = dl0[order]  # aligned with cand (= sorted d0)
     return pd.DataFrame(
@@ -114,9 +118,34 @@ def _match_bucket(pdf: pd.DataFrame, terms: list[str],
     )
 
 
-def phrase_match(index: IndexStore, phrase_text: str,
-                 field: str | None = None, slop: int = 0) -> DataFrame:
-    """Matched docs for a phrase: (doc_id, ptf, dl), live docs only."""
+def _top_candidates(m: pd.DataFrame, k: int, avgdl: float, k1: float,
+                    b: float) -> pd.DataFrame:
+    """One bucket's matches → its candidates for the global top-k, and
+    its match count in ``n`` (on the first row, 0 on the rest, so the
+    column sums to the phrase df).
+
+    The phrase idf needs the global df, so the kernel ranks by the idf-1
+    score ``g``: every doc's exact score is idf·g to a few ulps, and a
+    doc more than a 1e-9 relative margin below the bucket's k-th best
+    ``g`` scores strictly below k of the bucket's docs — it can never
+    reach the top-k, on any tie-break.  Everything else is kept."""
+    if len(m) > k:
+        g = bm25_term_score(m["ptf"].to_numpy(), m["dl"].to_numpy(), 1.0,
+                            avgdl, k1, b)
+        kth = np.partition(g, len(g) - k)[len(g) - k]
+        cand = m[g >= kth * (1 - 1e-9)]
+    else:
+        cand = m
+    n = np.zeros(len(cand), dtype="int64")
+    n[:1] = len(m)
+    return cand.assign(n=n)
+
+
+def _phrase_blocks(index: IndexStore, phrase_text: str, field: str | None,
+                   slop: int) -> tuple[list[str], DataFrame | None]:
+    """(phrase terms, their position blocks) — the scan both phrase
+    scorers group by bucket: term-IN pushdown, field partition pruning.
+    The blocks are None when the phrase has no terms."""
     from anisearch_model_spark.index.positions import (
         POSITIONS_SCHEMA,
         positions_ready,
@@ -130,26 +159,37 @@ def phrase_match(index: IndexStore, phrase_text: str,
         )
     if slop < 0:
         raise ValueError("slop must be >= 0")
-    spark = index.spark
     terms = parse_phrase(phrase_text)
-    empty = spark.createDataFrame([], "doc_id long, ptf long, dl long")
     if not terms:
-        return empty
+        return terms, None
     blocks = index._snapshot_read(POSITIONS_SCHEMA, "positions").filter(
         F.col("term").isin(sorted(set(terms)))
     )
     if field is not None:
         index.field_stats(field)  # validates the field exists
         blocks = blocks.filter(F.col("field") == field)
-    matched = blocks.groupBy("bucket").applyInPandas(
-        lambda pdf: _match_bucket(pdf, terms, slop),
-        schema="doc_id long, ptf long, dl long",
-    )
+    return terms, blocks
+
+
+def _tombstones(index: IndexStore):
+    """The index's tombstones as a broadcast (None when there are none)."""
     tomb = index.tombstones
-    if len(tomb):
-        tdf = spark.createDataFrame([(int(t),) for t in tomb], "doc_id long")
-        matched = matched.join(F.broadcast(tdf), "doc_id", "left_anti")
-    return matched
+    return index.spark.sparkContext.broadcast(tomb) if len(tomb) else None
+
+
+def phrase_match(index: IndexStore, phrase_text: str,
+                 field: str | None = None, slop: int = 0) -> DataFrame:
+    """Matched docs for a phrase: (doc_id, ptf, dl), live docs only."""
+    schema = "doc_id long, ptf long, dl long"
+    terms, blocks = _phrase_blocks(index, phrase_text, field, slop)
+    if blocks is None:
+        return index.spark.createDataFrame([], schema)
+    btomb = _tombstones(index)
+    return blocks.groupBy("bucket").applyInPandas(
+        lambda pdf: _match_bucket(
+            pdf, terms, slop, btomb.value if btomb is not None else None),
+        schema=schema,
+    )
 
 
 def phrase_topk(index: IndexStore, phrase_text: str, k: int = 10,
@@ -160,56 +200,49 @@ def phrase_topk(index: IndexStore, phrase_text: str, k: int = 10,
     proximity, ordered variant); scoring is unchanged — the sloppy
     phrase is still ONE virtual term whose df/tf come from its matches.
 
-    One bounded extra action (the matched-doc count → phrase df); the
-    matched frame is cached across the two passes and released before
-    returning — the result ships back as a ≤k-row local frame."""
+    One Spark pass: each bucket kernel matches, masks tombstones and
+    emits its match count plus its top-k candidates
+    (``_top_candidates``); the driver sums the counts into the phrase
+    df, scores the candidates with ``bm25_term_score`` (the same float64
+    expression as every BM25 scorer) and ranks them.  The result ships
+    back as a ≤k-row local frame."""
     params = params or BM25Params()
     spark = index.spark
     schema = "rank long, doc_id long, score double"
-    matched = phrase_match(index, phrase_text, field=field, slop=slop)
-    matched = matched.persist()
-    try:
-        df_phrase = matched.count()
-        if df_phrase == 0:
-            return spark.createDataFrame([], schema)
-        n, avgdl = index.field_stats(field)
-        idf = float(bm25_idf(np.array([df_phrase]), n)[0])
-        k1, b = params.k1, params.b
-        ptf = F.col("ptf").cast("double")
-        dl = F.col("dl").cast("double")
-        # EXACTLY the bm25_term_score expression shape (left-assoc order
-        # preserved → bit-identical float64 vs the numpy oracle kernel)
-        denom = ptf + F.lit(k1) * (F.lit(1.0) - F.lit(b) + F.lit(b) * dl / F.lit(avgdl))
-        score = F.lit(idf) * ptf * F.lit(k1 + 1.0) / denom
-        top = (
-            matched.select("doc_id", score.alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-        w = Window.partitionBy(constant_partition("doc_id")).orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        rows = (
-            top.withColumn("rank", F.row_number().over(w).cast("long"))
-            .select("rank", "doc_id", "score")
-            .collect()
-        )
-        return spark.createDataFrame(rows, schema) if rows else \
-            spark.createDataFrame([], schema)
-    finally:
-        matched.unpersist()
+    terms, blocks = _phrase_blocks(index, phrase_text, field, slop)
+    if blocks is None:
+        return spark.createDataFrame([], schema)
+    n_docs, avgdl = index.field_stats(field)
+    k1, b = params.k1, params.b
+    btomb = _tombstones(index)
+    cands = blocks.groupBy("bucket").applyInPandas(
+        lambda pdf: _top_candidates(
+            _match_bucket(pdf, terms, slop,
+                          btomb.value if btomb is not None else None),
+            k, avgdl, k1, b),
+        schema="doc_id long, ptf long, dl long, n long",
+    ).toPandas()
+    df_phrase = int(cands["n"].sum())
+    if df_phrase == 0:
+        return spark.createDataFrame([], schema)
+    idf = float(bm25_idf(np.array([df_phrase]), n_docs)[0])
+    cands["score"] = bm25_term_score(cands["ptf"].to_numpy(),
+                                     cands["dl"].to_numpy(), idf, avgdl, k1, b)
+    top = cands.sort_values(["score", "doc_id"], ascending=[False, True],
+                            kind="mergesort").head(k)
+    return spark.createDataFrame(
+        pd.DataFrame({"rank": np.arange(1, len(top) + 1, dtype="int64"),
+                      "doc_id": top["doc_id"].to_numpy("int64"),
+                      "score": top["score"].to_numpy("float64")}),
+        schema)
 
 
 def phrase_search(index: IndexStore, phrase_text: str, k: int = 10,
                   params: BM25Params | None = None, field: str | None = None,
                   page: int = 1, slop: int = 0,
                   with_metadata: bool = True) -> DataFrame:
-    """Phrase top-k + doc metadata, mirroring engine.search's contract:
-    candidate pool scales with the page, the doc_map probe is pruned to
-    the hit buckets with a pushed doc_id IN filter, and the tiny ranked
-    side broadcasts onto it."""
-    from anisearch_model_spark.query.engine import probe_doc_map
-
+    """Phrase top-k + doc metadata (``engine.attach_metadata``): the
+    candidate pool scales with the page, as in ``engine.search``."""
     top = phrase_topk(index, phrase_text, k * page, params=params, field=field,
                       slop=slop)
     if page > 1:
@@ -217,11 +250,4 @@ def phrase_search(index: IndexStore, phrase_text: str, k: int = 10,
         top = top.filter((F.col("rank") > lo) & (F.col("rank") <= hi))
     if not with_metadata:
         return top
-    top_local, meta = probe_doc_map(
-        index, top, ["doc_id", "conv_id", "turn_idx", "role"]
-    )
-    return (
-        meta.join(F.broadcast(top_local), "doc_id", "inner")
-        .select("rank", "doc_id", "conv_id", "turn_idx", "role", "score")
-        .orderBy("rank")
-    )
+    return attach_metadata(index, top)

@@ -409,3 +409,54 @@ def test_purge_invalidates_positions_and_resync_drops_purged_doc(
     # survivors keep their relative order from the tombstone-filtered run
     assert post["doc_id"].tolist()[:len(mid)] == mid["doc_id"].tolist()[
         :len(post)]
+
+
+def test_phrase_topk_ties_across_buckets(spark, tmp_path):
+    """Equal-score matches in every bucket and k below their count: each
+    bucket's candidate cut keeps every doc tied at its kth score, so the
+    (score DESC, doc_id ASC) page equals the oracle's bit for bit; a
+    tombstoned top doc gives its slot to the next doc in that order."""
+    from anisearch_model_spark.datagen import TRANSCRIPT_SCHEMA
+    from anisearch_model_spark.index.store import build_index
+    from anisearch_model_spark.index.tombstones import delete_docs
+
+    rows = [("c%02d" % i, 0, "user",
+             "alpha beta gamma" + (" alpha beta" if i % 7 == 3 else ""),
+             None, None) for i in range(30)]
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), d,
+                num_buckets=3)
+    build_positions(spark, d)
+    idx = IndexStore(spark, d)
+    docs = (idx.doc_map.select("doc_id", "text").toPandas()
+            .sort_values("doc_id").reset_index(drop=True))
+    want = OracleIndex(docs).phrase_topk("alpha beta", k=8)
+    got = phrase_topk(idx, "alpha beta", k=8).toPandas()
+    assert got["rank"].tolist() == want["rank"].tolist()
+    assert got["doc_id"].tolist() == want["doc_id"].tolist()
+    assert np.array_equal(got["score"].to_numpy(), want["score"].to_numpy())
+    # 4 double-phrase docs lead, then the tied single-phrase docs by id
+    assert got["score"].nunique() == 2
+    order = OracleIndex(docs).phrase_topk("alpha beta", k=9)["doc_id"]
+    dead = int(got["doc_id"].iloc[5])
+    delete_docs(spark, d, [dead])
+    post = phrase_topk(idx, "alpha beta", k=8).toPandas()
+    assert post["doc_id"].tolist() == [i for i in order if i != dead]
+
+
+def test_phrase_search_is_one_spark_pass(spark, pos_index, oracle):
+    """phrase_search runs ONE Spark pass: the kernel's candidates and
+    match counts come back in one collect (a shuffle stage and a result
+    stage), the df and ranking are computed on the driver and the
+    metadata attach is local — no cached frame, no second action."""
+    from anisearch_model_spark.query.phrase import phrase_search
+
+    ph = _corpus_phrases(oracle, 1)[0]
+    phrase_search(pos_index, ph, k=5).collect()  # plan/worker warm-up
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    cached = sc._jsc.getPersistentRDDs().size()
+    rows = phrase_search(pos_index, ph, k=5).collect()
+    after = set(sc.statusTracker().getJobIdsForGroup(None))
+    assert rows and len(after - before) <= 2
+    assert sc._jsc.getPersistentRDDs().size() == cached

@@ -145,6 +145,25 @@ def test_metadata_attach_is_local(spark, index_dir):
     assert "doc_map" not in plan
 
 
+def test_phrase_and_boolean_metadata_attach_is_local(spark, index_dir):
+    """phrase_search and boolean_search share search()'s metadata attach
+    (engine.attach_metadata): the returned frame is a LOCAL relation —
+    no join, no exchange, no doc_map scan in its plan."""
+    from anisearch_model_spark.index.positions import build_positions
+    from anisearch_model_spark.plans.inspect import formatted_plan
+    from anisearch_model_spark.query.boolean import boolean_search
+    from anisearch_model_spark.query.engine import IndexStore
+    from anisearch_model_spark.query.phrase import phrase_search
+
+    build_positions(spark, index_dir)
+    idx = IndexStore(spark, index_dir)
+    for q in (phrase_search(idx, "hero battle", k=5),
+              boolean_search(idx, "+hero battle -dragon", k=5)):
+        plan = formatted_plan(q)
+        assert "Join" not in plan and "Exchange" not in plan
+        assert "doc_map" not in plan
+
+
 def test_metadata_probe_prunes_doc_map_partitions(spark, index_dir):
     """search()'s metadata probe must never scan the whole doc_map for a
     k-row probe.  r6: the unfiltered probe is a bounded DRIVER-side
