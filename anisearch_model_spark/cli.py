@@ -502,16 +502,11 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--num-buckets", type=int, default=64)
     b.add_argument("--field-col", default=None,
                    help="build field-qualified postings (e.g. role)")
-    b.add_argument("--positions", action="store_true",
-                   help="also build the positional side table (enables "
-                        "exact-phrase search; ~the position volume extra)")
 
-    o = sub.add_parser("positions", help="build or re-sync the positional "
-                                         "side table over an existing index "
-                                         "(required after compact/purge/"
-                                         "append before phrase search)")
+    o = sub.add_parser("positions", help="repair stale or missing "
+                                         "positions (e.g. after recode), "
+                                         "in the index's own codec")
     o.add_argument("--index", required=True)
-    o.add_argument("--codec", default="varint", choices=["varint", "pfor"])
 
     s = sub.add_parser("search", help="BM25 top-k query")
     s.add_argument("--index", required=True)
@@ -722,16 +717,11 @@ def main(argv: list[str] | None = None) -> int:
             tr = spark.read.parquet(args.input)
             metrics = build_index(spark, tr, args.index, num_buckets=args.num_buckets,
                                   field_col=args.field_col)
-            if args.positions:
-                from anisearch_model_spark.index.positions import build_positions
-
-                metrics["positions"] = build_positions(spark, args.index)
             print(json.dumps(metrics))
         elif args.cmd == "positions":
             from anisearch_model_spark.index.positions import build_positions
 
-            print(json.dumps(build_positions(spark, args.index,
-                                             codec=args.codec)))
+            print(json.dumps(build_positions(spark, args.index)))
         elif args.cmd == "search":
             from anisearch_model_spark.query.engine import IndexStore, search
             from anisearch_model_spark.query.multifield import search_conversations

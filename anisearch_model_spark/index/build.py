@@ -1,16 +1,24 @@
-"""Inverted-index build: tokenize → per-doc tf → bucketed posting blocks.
+"""Inverted-index build kernel: one tokenize pass → position blocks →
+postings by columnar copy.
 
 Reference analog: the index-build stage ``src/sbert.py:154-388`` (per-column
 batched SBERT encode → ``np.save``).  Our build replaces dense embeddings
 with compressed posting lists and is designed for 10^12 turns:
 
-  * ONE fused pass (``fused_tokenize_encode``): the corpus arrives
+  * ONE tokenize pass (``write_buckets``): the corpus arrives
     pre-bucketed into disjoint sorted doc-id ranges (docmap.py), so one
-    ``mapInPandas`` pass tokenizes AND encodes each bucket — no shuffle
-    of posting data at all, and only ~3-bytes-per-posting compressed
-    blocks cross the Python/JVM Arrow boundary (the uncompressed
-    (doc,term,tf) relation is 20-40× the corpus row count; shipping or
-    shuffling it dominated build time);
+    ``mapInPandas`` pass (positions.fused_tokenize_positions) tokenizes
+    AND encodes each bucket — no shuffle of posting data at all, and only
+    compressed blocks cross the Python/JVM Arrow boundary (the
+    uncompressed occurrence relation is 20-40× the corpus row count;
+    shipping or shuffling it dominated build time);
+  * each position block also carries its posting block's buffers and
+    metadata, so the postings table is a COLUMNAR COPY of the positions
+    table minus ``pos_deltas`` (zero Python; the columnar inverted-index
+    layout of "Columnar Formatted Inverted Index for Highly-Paralleled,
+    Vectorized Query Processing", ICDE 2025).  Build, append and purge
+    all create a bucket's postings this way, so a bucket's postings and
+    positions always come from the same kernel and codec;
   * **skew defusal**: a hot term (Zipf head) would make a naive
     ``groupBy(term)`` one-reducer-hot.  Doc-range bucketing IS the salt:
     every term's postings split uniformly across buckets, and because
@@ -26,7 +34,7 @@ with compressed posting lists and is designed for 10^12 turns:
   * dictionary df/cf per (term, field) and corpus stats derive from block
     metadata (``dictionary_from_postings``) — the corpus is tokenized
     exactly once;
-  * the postings table is written ``partitionBy(bucket, field)`` so a
+  * both tables are written ``partitionBy(bucket, field)`` so a
     resumable re-run plans only missing buckets, the query engine scores
     bucket-parallel, and a field filter is directory-level pruning.
 
@@ -38,14 +46,10 @@ and makes resumes byte-stable.
 
 from __future__ import annotations
 
-from typing import Iterator
+import time
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from anisearch_model_spark.config import POSTING_BLOCK_SIZE
-from anisearch_model_spark.functions.normalize import term_frequency_frame
 
 UNSCOPED_FIELD = "*"  # field value when the index is built without field_col
 
@@ -63,67 +67,58 @@ _POSTING_COLS = [
 DICTIONARY_SCHEMA = "term string, field string, df long, cf long"
 
 
-def _build_bucket(pdf: pd.DataFrame, codec: str = "varint") -> pd.DataFrame:
-    """One (bucket, field) group of tf rows → encoded posting-block rows
-    (vectorized whole-bucket encode; see codec.encode_bucket_frame)."""
-    from anisearch_model_spark.index.codec import encode_bucket_frame
+def write_bucket_partitions(df: DataFrame, root: str) -> None:
+    """Write ``df`` under ``root`` partitioned by (bucket, field),
+    replacing exactly the partitions it produces (dynamic overwrite)."""
+    (
+        df.write.mode("overwrite")
+        .partitionBy("bucket", "field")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(root)
+    )
 
-    return encode_bucket_frame(pdf, POSTING_BLOCK_SIZE, codec=codec)
 
+def write_buckets(spark: SparkSession, doc_map_root: str, buckets: list[int],
+                  positions_root: str, postings_root: str,
+                  field_col: str | None = None,
+                  codec: str = "varint") -> tuple[float, float]:
+    """Tokenize doc_map ``buckets`` once: position blocks go under
+    ``positions_root``, then the same buckets' postings go under
+    ``postings_root`` as a columnar copy of those blocks (``pos_deltas``
+    is never read).  Returns (positions seconds, postings seconds).
 
-def fused_tokenize_encode(docs_bucketed: DataFrame, bucket_offset: int = 0,
-                          field_col: str | None = None,
-                          codec: str = "varint") -> DataFrame:
-    """THE scale path: tokenize + encode each doc-range partition in ONE
-    ``mapInPandas`` pass over the bucketed corpus (buckets are whole
-    within a partition; + offset for appends).
+    Each bucket's doc_map directory must hold ONE file no larger than
+    ``spark.sql.files.maxPartitionBytes`` (every doc_map writer writes
+    from a bucket-clustered frame): with small-file packing off, such a
+    file is a partition, so the kernel sees whole buckets and no posting
+    data is shuffled.  The JVM side of the pass
+    is a light parquet decode, which keeps the cores free for the Python
+    tokenize+encode workers."""
+    from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
+    from anisearch_model_spark.index.positions import (
+        POSITIONS_FULL_SCHEMA,
+        fused_tokenize_positions,
+    )
 
-    Why fused: the intermediate (doc_id, term, tf) relation is ~20-40× the
-    row count of the corpus.  Shipping it across the Arrow boundary and
-    shuffling it to buckets dominated build time and anti-scaled with
-    cores (measured: plain multiprocessing tokenize scales 12.8× at 32
-    procs, but the tf-shuffle build got SLOWER from local[8]→local[32]).
-    Fused, only compressed posting blocks leave Python — ~3 bytes/posting
-    instead of ~40 — and the postings build has ZERO shuffle: partitions
-    are already disjoint sorted doc ranges, so per-partition mini-indexes
-    concatenate into the global index for free (the salted two-level
-    aggregation of SURVEY.md §4.2 with salt ≡ doc-range partition).
-
-    ``field_col``: when set (e.g. "role"), blocks are built per
-    (bucket, field) — each doc belongs to exactly one field, so this only
-    PARTITIONS the posting data; tf/dl values are untouched.
-    """
-    sel = ["bucket", "doc_id", "text"] + ([field_col] if field_col else [])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            tf = term_frequency_frame(pdf["doc_id"], pdf["text"])
-            # doc→(bucket, field) is order-preserving within the batch
-            # (docs arrive bucket-sorted from bucketed_corpus); map via merge
-            meta_cols = ["doc_id", "bucket"] + ([field_col] if field_col else [])
-            tf = tf.merge(
-                pdf[meta_cols].drop_duplicates("doc_id"), on="doc_id", how="left",
-            )
-            tf["field"] = tf[field_col] if field_col else UNSCOPED_FIELD
-            frames.append(tf)
-        if not frames:
-            yield pd.DataFrame(columns=_POSTING_COLS)
-            return
-        all_tf = pd.concat(frames, ignore_index=True)
-        all_tf["bucket"] = all_tf["bucket"].astype("int64") + bucket_offset
-        outs = []
-        for (_b, fld), grp in all_tf.groupby(["bucket", "field"], sort=True):
-            enc = _build_bucket(grp, codec=codec)
-            enc["field"] = fld
-            outs.append(enc[_POSTING_COLS])
-        yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-            columns=_POSTING_COLS
-        )
-
-    return docs_bucketed.select(*sel).mapInPandas(run, schema=POSTINGS_SCHEMA)
+    in_buckets = F.col("bucket").isin(buckets)
+    old_cost = spark.conf.get("spark.sql.files.openCostInBytes", None)
+    spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 30))
+    try:
+        t0 = time.time()
+        docs = spark.read.schema(BUCKETED_SCHEMA).parquet(doc_map_root)
+        write_bucket_partitions(
+            fused_tokenize_positions(docs.filter(in_buckets),
+                                     field_col=field_col, codec=codec),
+            positions_root)
+        t1 = time.time()
+        blocks = spark.read.schema(POSITIONS_FULL_SCHEMA).parquet(
+            positions_root)
+        write_bucket_partitions(
+            blocks.filter(in_buckets).select(*_POSTING_COLS), postings_root)
+    finally:
+        if old_cost is not None:
+            spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
+    return t1 - t0, time.time() - t1
 
 
 def dictionary_from_postings(postings: DataFrame) -> DataFrame:

@@ -355,15 +355,13 @@ def decode_posting_block(block: dict) -> tuple[np.ndarray, np.ndarray, np.ndarra
     return doc_ids, tfs, dls
 
 
-def recode_posting_group(pdf, id_map: dict[int, int], codec: str,
-                         dead: np.ndarray | None = None):
+def recode_posting_group(pdf, id_map: dict[int, int], codec: str):
     """Re-encode one (bucket, field) group of posting-block rows under
-    its new bucket id ``id_map[bucket]``: decode every block back to tf
-    rows, drop the doc ids in ``dead`` (when given), and re-run the
-    build's own ``encode_bucket_frame`` — block boundaries are
-    re-derived, so the output is byte-identical to a fresh encode of the
-    surviving rows.  Rows come back in posting-table column order; an
-    empty frame if nothing survives."""
+    its new bucket id ``id_map[bucket]`` (compact.recode_index): decode
+    every block back to tf rows and re-run the build's own
+    ``encode_bucket_frame`` — block boundaries are re-derived, so the
+    output is byte-identical to a fresh encode of the same rows.  Rows
+    come back in posting-table column order."""
     import pandas as pd
 
     cols = ["term", "bucket", "field", "block_id", "n", "cf",
@@ -377,17 +375,10 @@ def recode_posting_group(pdf, id_map: dict[int, int], codec: str,
         d, t, dl = decode_posting_block(
             {"first_doc_id": row.first_doc_id,
              "doc_deltas": row.doc_deltas, "tfs": row.tfs, "dls": row.dls})
-        if dead is not None:
-            alive = ~np.isin(d, dead)
-            if not alive.any():
-                continue
-            d, t, dl = d[alive], t[alive], dl[alive]
         frames.append(pd.DataFrame({
             "term": row.term, "doc_id": d, "tf": t, "doc_len": dl,
             "bucket": bucket,
         }))
-    if not frames:
-        return pd.DataFrame(columns=cols)
     enc = encode_bucket_frame(pd.concat(frames, ignore_index=True),
                               POSTING_BLOCK_SIZE, codec=codec)
     enc["field"] = pdf["field"].iloc[0]

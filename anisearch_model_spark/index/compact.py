@@ -17,7 +17,11 @@ the ``bucket`` label and the per-(term, field) ``block_id`` numbering
 change; queries return byte-identical results because neither scorer
 depends on bucket boundaries (exhaustive ignores them; block-max does a
 per-bucket top-k then a global merge, which is bucket-partition-
-independent for a total order).
+independent for a total order).  Position blocks mirror posting blocks
+(same docs, same split), so when positions are ready they are carried
+the same way, under the same staging, commit and cleanup, and the
+positions stamp is renewed right after each manifest commit: phrase
+search keeps working across a compaction.
 
 SNAPSHOT ISOLATION (the Iceberg ``rewrite_data_files`` pattern on plain
 Parquet): each merged group is written under a FRESH bucket id that no
@@ -47,11 +51,19 @@ import os
 import shutil
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from anisearch_model_spark.config import BM25Params
+
+# each bucket-partitioned table → the staging dir a snapshot swap writes
+# it to; no manifest ever lists a bucket there, so recovery clears them
+_STAGING = {
+    "postings": "_compact_tmp_postings",
+    "doc_map": "_compact_tmp_docmap",
+    "positions": "_compact_tmp_positions",
+}
 
 
 def plan_groups(buckets: dict[str, list[int]], target_docs: int) -> list[list[int]]:
@@ -76,17 +88,22 @@ def plan_groups(buckets: dict[str, list[int]], target_docs: int) -> list[list[in
     return groups
 
 
-def _stage_partitions(spark, df, partition_by: list[str], tmp_dir: str) -> None:
-    """Phase 1 of a snapshot swap: write ``df`` partitioned into
-    ``tmp_dir``.  Nothing live is touched — a crash here loses nothing."""
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp_dir)
+def _stage(index_dir: str, frames: dict[str, DataFrame]) -> None:
+    """Phase 1 of a snapshot swap: write each table's rows (under fresh
+    bucket ids) partitioned into its staging dir.  Nothing live is
+    touched — a crash here loses nothing."""
+    for table, df in frames.items():
+        tmp_dir = os.path.join(index_dir, _STAGING[table])
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+        parts = ["bucket"] if table == "doc_map" else ["bucket", "field"]
+        df.write.mode("overwrite").partitionBy(*parts).parquet(tmp_dir)
 
 
 def _adopt_staged(table_dir: str, tmp_dir: str) -> None:
     """Phase 2: move the staged ``bucket=<fresh id>`` dirs into the live
     table dir.  The fresh ids are in NO manifest yet, so manifest-driven
     readers cannot see them — adoption is invisible until the commit."""
+    os.makedirs(table_dir, exist_ok=True)
     for entry in os.listdir(tmp_dir):
         if entry.startswith("bucket="):
             dst = os.path.join(table_dir, entry)
@@ -113,6 +130,38 @@ def _write_manifest(index_dir: str, manifest: dict) -> None:
     os.replace(tmp, path)
 
 
+def _commit_swap(index_dir: str, manifest: dict, old_ids: list[int],
+                 stats: dict, positions_were_ready: bool) -> None:
+    """Phases 2-4 of a snapshot swap: adopt every staged table, commit
+    ``manifest``, re-stamp positions when they were ready before the
+    swap (the staged positions cover the fresh ids), then drop
+    ``old_ids`` from every table."""
+    from anisearch_model_spark.index.positions import stamp_positions_meta
+
+    for table, tmp in _STAGING.items():
+        if os.path.isdir(os.path.join(index_dir, tmp)):
+            _adopt_staged(os.path.join(index_dir, table),
+                          os.path.join(index_dir, tmp))
+    _write_manifest(index_dir, manifest)
+    if positions_were_ready:
+        stamp_positions_meta(index_dir, stats.get("codec", "varint"),
+                             manifest["buckets"], stats.get("field_col"))
+    for table in _STAGING:
+        _drop_buckets(os.path.join(index_dir, table), old_ids)
+
+
+def _concat_blocks(df: DataFrame, new_id: int) -> DataFrame:
+    """Posting or position blocks of adjacent buckets → one bucket: the
+    blocks are disjoint sorted doc ranges, so concatenation in doc order
+    only renumbers ``block_id`` per (term, field) by ``first_doc_id`` —
+    no decode."""
+    w = Window.partitionBy("term", "field").orderBy("first_doc_id")
+    return (
+        df.withColumn("block_id", (F.row_number().over(w) - 1).cast("int"))
+        .withColumn("bucket", F.lit(int(new_id)).cast("int"))
+    )
+
+
 def recover_compaction(index_dir: str) -> str | None:
     """Heal an interrupted compaction/purge.  Returns "healed" or None.
 
@@ -136,7 +185,7 @@ def recover_compaction(index_dir: str) -> str | None:
         manifest = json.load(f)
     live = set(manifest.get("buckets", {}))
     healed = None
-    for table in ("postings", "doc_map"):
+    for table in _STAGING:
         table_dir = os.path.join(index_dir, table)
         if not os.path.isdir(table_dir):
             continue
@@ -157,7 +206,7 @@ def recover_compaction(index_dir: str) -> str | None:
                 shutil.rmtree(path, ignore_errors=True)
                 healed = "healed"
     # tmp dirs are never referenced — safe to clear once the above ran
-    for t in ("_compact_tmp_postings", "_compact_tmp_docmap"):
+    for t in _STAGING.values():
         shutil.rmtree(os.path.join(index_dir, t), ignore_errors=True)
     return healed
 
@@ -174,6 +223,8 @@ def compact_index(spark: SparkSession, index_dir: str,
     """
     from anisearch_model_spark.index.build import POSTINGS_SCHEMA
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
+    from anisearch_model_spark.index.positions import (
+        POSITIONS_FULL_SCHEMA, positions_ready)
     from anisearch_model_spark.index.store import finalize_metadata
 
     params = params or BM25Params()
@@ -183,6 +234,7 @@ def compact_index(spark: SparkSession, index_dir: str,
     from anisearch_model_spark.index.tombstones import purge_deleted
 
     purge = purge_deleted(spark, index_dir, params=params)
+    ready, _reason = positions_ready(index_dir)
     with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
         manifest = json.load(f)
     with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
@@ -206,52 +258,39 @@ def compact_index(spark: SparkSession, index_dir: str,
     next_id = max((int(b) for b in buckets), default=-1) + 1
     merged_ids: list[int] = []
 
+    def rows_of(table: str, schema: str, group: list[int]) -> DataFrame:
+        return (
+            spark.read.schema(schema).parquet(os.path.join(index_dir, table))
+            .filter(F.col("bucket").isin(group))
+        )
+
     for group in rewrite:
         new_id = next_id
         next_id += 1
         merged_ids.append(new_id)
         span_lo = min(int(buckets[str(b)][0]) for b in group)
         span_n = sum(int(buckets[str(b)][1]) for b in group)
-
-        postings = (
-            spark.read.schema(POSTINGS_SCHEMA)
-            .parquet(os.path.join(index_dir, "postings"))
-            .filter(F.col("bucket").isin(group))
-        )
-        # concatenation in doc order: renumber block_id per (term, field)
-        # by first_doc_id (blocks are disjoint sorted ranges — no decode)
-        w = Window.partitionBy("term", "field").orderBy("first_doc_id")
-        merged = (
-            postings.withColumn("block_id",
-                                (F.row_number().over(w) - 1).cast("int"))
-            .withColumn("bucket", F.lit(int(new_id)).cast("int"))
-        )
-        doc_map = (
-            spark.read.schema(BUCKETED_SCHEMA)
-            .parquet(os.path.join(index_dir, "doc_map"))
-            .filter(F.col("bucket").isin(group))
-            .withColumn("bucket", F.lit(int(new_id)).cast("int"))
-        )
-        tmp_p = os.path.join(index_dir, "_compact_tmp_postings")
-        tmp_d = os.path.join(index_dir, "_compact_tmp_docmap")
-        # phase 1: stage BOTH tables under the fresh id — sources stay live
-        _stage_partitions(spark, merged, ["bucket", "field"], tmp_p)
-        _stage_partitions(spark, doc_map, ["bucket"], tmp_d)
-        # phase 2: adopt the staged dirs (unlisted id → invisible)
-        _adopt_staged(os.path.join(index_dir, "postings"), tmp_p)
-        _adopt_staged(os.path.join(index_dir, "doc_map"), tmp_d)
-        # phase 3: COMMIT — one atomic manifest replace unlists the group
-        # and lists the merged bucket; crash before this line rolls back
-        # (recover deletes the unlisted merged dirs), crash after rolls
-        # forward (recover deletes the unlisted group dirs)
+        frames = {
+            "postings": _concat_blocks(
+                rows_of("postings", POSTINGS_SCHEMA, group), new_id),
+            "doc_map": rows_of("doc_map", BUCKETED_SCHEMA, group).withColumn(
+                "bucket", F.lit(int(new_id)).cast("int")),
+        }
+        if ready:
+            frames["positions"] = _concat_blocks(
+                rows_of("positions", POSITIONS_FULL_SCHEMA, group), new_id)
+        # phase 1: stage every table under the fresh id — sources live
+        _stage(index_dir, frames)
+        # phases 2-4: adopt (unlisted id → invisible), COMMIT — one atomic
+        # manifest replace unlists the group and lists the merged bucket;
+        # crash before it rolls back (recover deletes the unlisted merged
+        # dirs), crash after rolls forward (recover deletes the unlisted
+        # group dirs) — then drop the superseded source directories
         for b in group:
             del buckets[str(b)]
         buckets[str(new_id)] = [span_lo, span_n]
         manifest["buckets"] = buckets
-        _write_manifest(index_dir, manifest)
-        # phase 4: drop the superseded source directories
-        _drop_buckets(os.path.join(index_dir, "postings"), group)
-        _drop_buckets(os.path.join(index_dir, "doc_map"), group)
+        _commit_swap(index_dir, manifest, group, stats, ready)
 
     if rewrite:
         # mark merged buckets done so a later resumable build skips them
@@ -294,7 +333,9 @@ def recode_index(spark: SparkSession, index_dir: str, codec: str,
     for the same integers) and is asserted by tests.  The doc_map content
     is unchanged, but both tables share ONE manifest, so its rows are
     re-staged under the new bucket ids too (a pure copy, no decode).
-    Returns {buckets_recoded, codec}.
+    Position blocks are NOT re-encoded: every bucket id changes, so
+    positions stay stale until ``build_positions`` re-tokenizes them in
+    the new codec.  Returns {buckets_recoded, codec}.
     """
     from anisearch_model_spark.index.build import POSTINGS_SCHEMA
     from anisearch_model_spark.index.codec import recode_posting_group
@@ -328,17 +369,10 @@ def recode_index(spark: SparkSession, index_dir: str, codec: str,
         .parquet(os.path.join(index_dir, "doc_map"))
         .withColumn("bucket", remap.cast("int"))
     )
-    tmp_p = os.path.join(index_dir, "_compact_tmp_postings")
-    tmp_d = os.path.join(index_dir, "_compact_tmp_docmap")
-    _stage_partitions(spark, postings, ["bucket", "field"], tmp_p)
-    _stage_partitions(spark, doc_map, ["bucket"], tmp_d)
-    _adopt_staged(os.path.join(index_dir, "postings"), tmp_p)
-    _adopt_staged(os.path.join(index_dir, "doc_map"), tmp_d)
+    _stage(index_dir, {"postings": postings, "doc_map": doc_map})
     for old, new in id_map.items():
         manifest["buckets"][str(new)] = manifest["buckets"].pop(str(old))
-    _write_manifest(index_dir, manifest)
-    _drop_buckets(os.path.join(index_dir, "postings"), old_ids)
-    _drop_buckets(os.path.join(index_dir, "doc_map"), old_ids)
+    _commit_swap(index_dir, manifest, old_ids, stats, False)
     finalize_metadata(
         spark, index_dir, int(stats["n_docs"]), params,
         num_buckets=len(manifest["buckets"]),

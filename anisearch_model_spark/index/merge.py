@@ -9,6 +9,10 @@ merging re-bases metadata instead:
     DELTAS — shifting a whole index's doc-id space is adding one offset
     to two int64 columns per block; the compressed delta buffers pass
     through BYTE-IDENTICAL, never decoded;
+  * position blocks have the same doc-id columns and are carried the
+    same way when every source's positions are ready; the merged index
+    is then stamped right after its manifest write, so phrase search
+    works on it with no extra pass;
   * the doc_map shifts its ``doc_id`` column by the same offset;
   * buckets renumber sequentially and the manifest's doc ranges shift,
     so bucket-range pruning (``IndexStore.buckets_for``) keeps working;
@@ -20,9 +24,9 @@ merging re-bases metadata instead:
 
 The result is contract-identical to a fresh build over the concatenated
 corpus whenever source doc ordering is compatible (tested via the
-disjoint-conv-prefix corpus in tests/test_merge.py).  Positional side
-tables are NOT merged — they re-derive with ``build_positions`` (same
-rule as after compaction; the meta stamp refuses stale positions).
+disjoint-conv-prefix corpus in tests/test_merge.py).  If any source's
+positions are stale, none are carried and the merged index is left
+unstamped; ``build_positions`` then tokenizes its buckets.
 
 Reference anchor: the reference rebuilds its matrices from scratch on
 every corpus change (``/root/reference/src/sbert.py:336-356``); merging
@@ -49,6 +53,8 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
     self-describing).  Returns merge metrics."""
     from anisearch_model_spark.index.build import POSTINGS_SCHEMA
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
+    from anisearch_model_spark.index.positions import (
+        POSITIONS_FULL_SCHEMA, positions_ready, stamp_positions_meta)
     from anisearch_model_spark.index.store import finalize_metadata
     from anisearch_model_spark.index.tombstones import (
         delete_docs, load_tombstones)
@@ -70,7 +76,12 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
             raise ValueError(f"sources disagree on {key}: {sorted(vals)} — "
                              f"merging would corrupt the contract")
     field_col = stats_all[0].get("field_col")
+    codec = stats_all[0].get("codec", "varint")
     params = params or BM25Params()
+    carry_positions = all(positions_ready(d)[0] for d in src_dirs)
+    block_tables = {"postings": POSTINGS_SCHEMA}
+    if carry_positions:
+        block_tables["positions"] = POSITIONS_FULL_SCHEMA
 
     # doc-id offsets: source i shifts by the ID SPAN of everything before
     # it, NOT the live doc count — after a purge stats.n_docs shrinks but
@@ -119,14 +130,15 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
         )
         doc_map.write.mode("append").partitionBy("bucket").parquet(
             os.path.join(out_dir, "doc_map"))
-        postings = (
-            _snapshot("postings", POSTINGS_SCHEMA)
-            .withColumn("first_doc_id", F.col("first_doc_id") + base)
-            .withColumn("last_doc_id", F.col("last_doc_id") + base)
-            .withColumn("bucket", bmap[F.col("bucket")])
-        )
-        postings.write.mode("append").partitionBy("bucket", "field").parquet(
-            os.path.join(out_dir, "postings"))
+        for table, schema in block_tables.items():
+            blocks = (
+                _snapshot(table, schema)
+                .withColumn("first_doc_id", F.col("first_doc_id") + base)
+                .withColumn("last_doc_id", F.col("last_doc_id") + base)
+                .withColumn("bucket", bmap[F.col("bucket")])
+            )
+            blocks.write.mode("append").partitionBy("bucket", "field").parquet(
+                os.path.join(out_dir, table))
 
     manifest = {
         "buckets": merged_buckets,
@@ -137,13 +149,14 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
     with open(mpath + ".tmp", "w", encoding="utf-8") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     os.replace(mpath + ".tmp", mpath)
+    if carry_positions:
+        stamp_positions_meta(out_dir, codec, merged_buckets, field_col)
 
     # dictionary + stats re-derive (df/cf re-aggregate across sources);
     # writes stats.json LAST — the commit point an IndexStore opens on
     finalize_metadata(spark, out_dir, total, params,
                       num_buckets=len(merged_buckets),
-                      field_col=field_col,
-                      codec=stats_all[0].get("codec", "varint"))
+                      field_col=field_col, codec=codec)
     carried = 0
     for d, base in zip(src_dirs, bases):
         tomb = load_tombstones(d)

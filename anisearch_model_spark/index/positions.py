@@ -19,9 +19,10 @@ absolute, subsequent ones delta-encoded).  Duplicating the ~3 B/posting
 doc/tf/dl buffers costs a few percent of the position volume and lets a
 phrase query read ONE table instead of aligning two scans.
 
-Scale shape (identical to the main build, index/build.py):
+Scale shape (this IS the main build's kernel, index/build.py):
   * ONE fused ``mapInPandas`` pass over the bucketed doc_map — tokenize +
-    position-encode per bucket, ZERO shuffle of position data;
+    position-encode per bucket, ZERO shuffle of position data; the
+    postings table is a columnar copy of its output;
   * written ``partitionBy(bucket, field)`` → phrase scans prune on the
     term IN pushdown + field directory pruning, score bucket-parallel;
   * resumable per bucket (directory-existence check; the meta stamp is
@@ -31,13 +32,18 @@ Scale shape (identical to the main build, index/build.py):
     semantics a stopword-eliding index can promise (and what Lucene with
     a stop filter gives).
 
-Maintenance interplay: compaction / purge / incremental append rewrite or
-add bucket ids in the MAIN index; the positions table does not follow
-automatically.  ``positions_meta.json`` records the exact bucket-id set it
-was built over, and the phrase engine refuses to run when that set drifts
-from the committed manifest — re-run ``build_positions`` (idempotent,
-per-bucket incremental) to re-sync.  Stale-but-unreferenced position
-directories are cleaned up by the next build.
+Maintenance interplay: every write path keeps positions in step.
+Build, incremental append and purge write a bucket's position blocks and
+postings with the same kernel (index/build.write_buckets); compaction and
+merge carry position blocks exactly as they carry posting blocks.  Each
+re-stamps ``positions_meta.json`` right after its manifest commit when
+positions were ready before it, so phrase search works after any write.
+The stamp records the exact bucket-id set it covers, and the phrase
+engine refuses to run when that set drifts from the committed manifest:
+after ``recode_index`` (which renames every bucket and re-encodes only
+postings), or after a crash between a manifest commit and its stamp.
+``build_positions`` repairs both: it tokenizes only buckets with no
+position directory, then stamps.
 """
 
 from __future__ import annotations
@@ -61,19 +67,16 @@ POSITIONS_SCHEMA = (
     "doc_deltas binary, tfs binary, dls binary, pos_deltas binary"
 )
 
-_POSITION_COLS = [
-    "term", "bucket", "field", "block_id", "n", "first_doc_id", "last_doc_id",
-    "doc_deltas", "tfs", "dls", "pos_deltas",
-]
-
-# the FUSED build (index/store.py with_positions=True) writes position
-# blocks carrying the three posting-only metadata columns too, so the
-# postings table derives from the positions table by a pure columnar
-# copy — one tokenize pass for both tables instead of two full corpus
-# reads.  Readers of POSITIONS_SCHEMA simply never project the extras.
+# written position blocks carry the three posting-only metadata columns
+# too, so the postings table derives from the positions table by a pure
+# columnar copy (index/build.write_buckets) — one tokenize pass for both
+# tables.  Phrase readers of POSITIONS_SCHEMA never project the extras.
 POSITIONS_FULL_SCHEMA = POSITIONS_SCHEMA + ", cf long, max_tf int, min_dl int"
 
-_POSITION_FULL_COLS = _POSITION_COLS + ["cf", "max_tf", "min_dl"]
+_POSITION_COLS = [
+    "term", "bucket", "field", "block_id", "n", "first_doc_id", "last_doc_id",
+    "doc_deltas", "tfs", "dls", "pos_deltas", "cf", "max_tf", "min_dl",
+]
 
 
 def _encode_ranges(values: np.ndarray, starts: np.ndarray, ends: np.ndarray,
@@ -104,7 +107,7 @@ def encode_positions_bucket(pdf: pd.DataFrame,
     term — the same split rule as the posting blocks — via numpy segment
     arithmetic over the whole bucket (no per-term Python loop)."""
     if len(pdf) == 0:
-        return pd.DataFrame(columns=_POSITION_FULL_COLS)
+        return pd.DataFrame(columns=_POSITION_COLS)
     bucket = int(pdf["bucket"].iloc[0])
     doc = pdf["doc_id"].to_numpy(np.int64)
     pos = pdf["pos"].to_numpy(np.int64)
@@ -186,7 +189,7 @@ def encode_positions_bucket(pdf: pd.DataFrame,
             "max_tf": np.maximum.reduceat(tf_per_group, bstart).astype(np.int32),
             "min_dl": np.minimum.reduceat(g_dl, bstart).astype(np.int32),
         }
-    )[_POSITION_FULL_COLS]
+    )[_POSITION_COLS]
 
 
 def decode_positions_block(
@@ -217,20 +220,14 @@ def decode_positions_block(
 
 def fused_tokenize_positions(docs_bucketed: DataFrame,
                              field_col: str | None = None,
-                             codec: str = "varint",
-                             full: bool = False) -> DataFrame:
+                             codec: str = "varint") -> DataFrame:
     """Tokenize + position-encode each doc-range partition in ONE
-    ``mapInPandas`` pass (the build.fused_tokenize_encode shape: bucket ≡
-    partition, zero shuffle, only compressed blocks cross Arrow).
-
-    ``full=True`` additionally emits the posting-only block metadata
-    (cf, max_tf, min_dl) so the FUSED index build (store.build_index
-    ``with_positions=True``) can derive the postings table from this one
-    pass by a columnar copy — the corpus is tokenized exactly once for
-    both tables."""
+    ``mapInPandas`` pass (every bucket whole within one partition, zero
+    shuffle, only compressed blocks cross Arrow).  The blocks carry the
+    posting-only metadata (cf, max_tf, min_dl) too, so the postings table
+    derives from this one pass by a columnar copy
+    (index/build.write_buckets)."""
     sel = ["bucket", "doc_id", "text"] + ([field_col] if field_col else [])
-    cols = _POSITION_FULL_COLS if full else _POSITION_COLS
-    schema = POSITIONS_FULL_SCHEMA if full else POSITIONS_SCHEMA
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         frames: list[pd.DataFrame] = []
@@ -245,19 +242,20 @@ def fused_tokenize_positions(docs_bucketed: DataFrame,
             occ["field"] = occ[field_col] if field_col else UNSCOPED_FIELD
             frames.append(occ)
         if not frames:
-            yield pd.DataFrame(columns=cols)
+            yield pd.DataFrame(columns=_POSITION_COLS)
             return
         all_occ = pd.concat(frames, ignore_index=True)
         outs = []
         for (_b, fld), grp in all_occ.groupby(["bucket", "field"], sort=True):
             enc = encode_positions_bucket(grp, codec=codec)
             enc["field"] = fld
-            outs.append(enc[cols])
+            outs.append(enc[_POSITION_COLS])
         yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-            columns=cols
+            columns=_POSITION_COLS
         )
 
-    return docs_bucketed.select(*sel).mapInPandas(run, schema=schema)
+    return docs_bucketed.select(*sel).mapInPandas(
+        run, schema=POSITIONS_FULL_SCHEMA)
 
 
 def _meta_path(index_dir: str) -> str:
@@ -275,8 +273,9 @@ def positions_meta(index_dir: str) -> dict | None:
 def positions_ready(index_dir: str) -> tuple[bool, str]:
     """(ready, reason) — positions are usable iff the meta stamp exists
     and covers EXACTLY the committed manifest's bucket-id set with the
-    current tokenizer.  Compaction / purge / append change the manifest's
-    bucket ids, so any drift means the positions snapshot is stale."""
+    current tokenizer.  Every write path re-stamps after its manifest
+    commit, so drift means a write that skipped the stamp (recode_index,
+    or a crash between the commit and the stamp)."""
     meta = positions_meta(index_dir)
     if meta is None:
         return False, "no positions built (run build_positions)"
@@ -291,21 +290,23 @@ def positions_ready(index_dir: str) -> tuple[bool, str]:
             "positions are stale: built over buckets "
             f"{have[:5]}{'...' if len(have) > 5 else ''} but the manifest "
             f"now lists {want[:5]}{'...' if len(want) > 5 else ''} — "
-            "re-run build_positions after compaction/purge/append"
+            "run build_positions to repair them"
         )
     return True, ""
 
 
-def build_positions(spark: SparkSession, index_dir: str,
-                    codec: str = "varint") -> dict:
-    """Build (or incrementally extend) the positions table over the
-    index's committed doc_map snapshot.  Idempotent and resumable: only
-    manifest buckets whose ``positions/bucket=N`` directory is missing
-    are tokenized; the meta stamp (commit point) is written LAST, and
-    directories for bucket ids the manifest no longer lists (superseded
-    by compaction/purge) are removed before it."""
-    import shutil
-
+def build_positions(spark: SparkSession, index_dir: str) -> dict:
+    """Repair the positions table of the committed snapshot: tokenize
+    only manifest buckets that have doc_map rows but no
+    ``positions/bucket=N`` directory (every bucket after
+    ``recode_index``), with the build's kernel and the index's own codec
+    (stats.json — a bucket's positions and postings share one), then
+    stamp.  Every write path keeps positions in step itself, so on a
+    ready or merely unstamped index this is a re-stamp that builds 0
+    buckets.  Idempotent and resumable: the stamp (commit point) is
+    written LAST, after directories of bucket ids the manifest no longer
+    lists are removed."""
+    from anisearch_model_spark.index.build import write_bucket_partitions
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
 
     with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
@@ -313,52 +314,38 @@ def build_positions(spark: SparkSession, index_dir: str,
     with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
         stats = json.load(f)
     field_col = stats.get("field_col")
+    codec = stats.get("codec", "varint")
     buckets = sorted(int(b) for b in manifest.get("buckets", {}))
     pos_root = os.path.join(index_dir, "positions")
+    doc_map_root = os.path.join(index_dir, "doc_map")
     todo = [
         b for b in buckets
-        if not os.path.isdir(os.path.join(pos_root, f"bucket={b}"))
+        if os.path.isdir(os.path.join(doc_map_root, f"bucket={b}"))
+        and not os.path.isdir(os.path.join(pos_root, f"bucket={b}"))
     ]
     if todo:
-        doc_map_root = os.path.join(index_dir, "doc_map")
-        paths = [
-            os.path.join(doc_map_root, f"bucket={b}") for b in todo
-            if os.path.isdir(os.path.join(doc_map_root, f"bucket={b}"))
-        ]
-        if paths:
-            # bucket-whole partitions for the fused pass (same trick as
-            # build_index: suppress small-file packing)
-            old_cost = spark.conf.get("spark.sql.files.openCostInBytes", None)
-            spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 30))
-            try:
-                docs = (
-                    spark.read.schema(BUCKETED_SCHEMA)
-                    .option("basePath", doc_map_root)
-                    .parquet(*paths)
-                )
-                (
-                    fused_tokenize_positions(docs, field_col=field_col,
-                                             codec=codec)
-                    .write.mode("overwrite")
-                    .partitionBy("bucket", "field")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(pos_root)
-                )
-            finally:
-                if old_cost is not None:
-                    spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
+        # a compacted bucket's doc_map dir can hold several files: cluster
+        # by bucket so the kernel sees every bucket whole
+        docs = (
+            spark.read.schema(BUCKETED_SCHEMA).parquet(doc_map_root)
+            .filter(F.col("bucket").isin(todo)).repartition("bucket")
+        )
+        write_bucket_partitions(
+            fused_tokenize_positions(docs, field_col=field_col, codec=codec),
+            pos_root)
     stamp_positions_meta(index_dir, codec, buckets, field_col)
     return {"buckets_built": len(todo), "buckets_total": len(buckets)}
 
 
-def stamp_positions_meta(index_dir: str, codec: str, buckets: list[int],
+def stamp_positions_meta(index_dir: str, codec: str, buckets,
                          field_col: str | None) -> None:
-    """Commit point of a positions build: drop superseded bucket dirs
-    (ids the manifest no longer lists) and atomically write the meta
-    stamp covering exactly ``buckets``.  Shared by ``build_positions``
-    and the fused index build (store.build_index ``with_positions``)."""
+    """Commit point of positions: drop superseded bucket dirs (ids not in
+    ``buckets``, the manifest's bucket ids) and atomically write the meta
+    stamp covering exactly ``buckets``.  Every write path calls it right
+    after its manifest commit; ``build_positions`` after its repair."""
     import shutil
 
+    buckets = sorted(int(b) for b in buckets)
     pos_root = os.path.join(index_dir, "positions")
     keep = {f"bucket={b}" for b in buckets}
     if os.path.isdir(pos_root):

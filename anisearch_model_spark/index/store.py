@@ -7,6 +7,8 @@ structured so ``writeTo(...).append()`` is a config-only swap):
     <index_dir>/doc_map/            doc_id, conv_id, turn_idx, role, text, tool, ts
     <index_dir>/postings/bucket=N/field=F/  posting blocks for doc-range
                                     bucket N, field F ('*' when unqualified)
+    <index_dir>/positions/bucket=N/field=F/ position blocks (phrase search;
+                                    index/positions.py)
     <index_dir>/dictionary/         term, field, df, cf  (from block metadata)
     <index_dir>/stats.json          n_docs, avgdl, tokenizer_version, k1, b,
                                     field_col + per-field {n_docs, avgdl}
@@ -18,8 +20,9 @@ Build shape (the scale story):
        num_buckets doc-range buckets, doc_ids by bucket offsets
        (zipWithIndex semantics — no global sort; deterministic across
        cluster sizes AND runs, see docmap.py);
-    2. ONE fused mapInPandas pass per partition: tokenize + encode posting
-       blocks; bucket ≡ partition; ZERO shuffle of posting data, only
+    2. ONE fused mapInPandas pass per partition (build.write_buckets):
+       tokenize + encode position blocks, then postings as their columnar
+       copy; bucket ≡ partition; ZERO shuffle of posting data, only
        compressed blocks cross the Python/JVM boundary;
     3. dictionary + corpus stats derived from block metadata (df = Σ n,
        cf = Σ tf per term; avgdl = Σ cf / N) — the corpus is tokenized
@@ -49,7 +52,7 @@ from anisearch_model_spark.index.build import (
     DICTIONARY_SCHEMA,
     POSTINGS_SCHEMA,
     dictionary_from_postings,
-    fused_tokenize_encode,
+    write_buckets,
 )
 from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA, bucketed_corpus
 
@@ -219,7 +222,6 @@ def build_index(
     fail_after_buckets: int | None = None,
     field_col: str | None = None,
     codec: str = "varint",
-    with_positions: bool = True,
 ) -> dict:
     """Full (or resumed) index build.  Returns build metrics dict.
 
@@ -230,18 +232,15 @@ def build_index(
     the scan; unscoped results are unchanged.
     ``codec``: posting-buffer value codec ("varint" | "pfor"); buffers are
     flag-prefixed, so mixed-codec indexes decode fine.
-    ``with_positions`` (default): the FUSED build — one tokenize pass
-    emits position blocks carrying the posting metadata too
-    (positions.fused_tokenize_positions ``full=True``); the postings
-    table then derives from the positions table by a pure columnar copy
-    (pos_deltas never read — Parquet column pruning gives the Lucene
-    .doc/.pos file split for free).  Tokenizing the corpus once instead
-    of twice halves the dominant build cost of a phrase-enabled index;
-    at 100 TB it removes a second full corpus read.  Value-identical
-    posting blocks by construction (same group arrays, same reduceat —
-    tests assert byte equality); ``build_positions`` afterwards is a
-    no-op re-stamp.  ``with_positions=False`` restores the postings-only
-    pass (maintenance paths that never serve phrases).
+
+    One tokenize pass (build.write_buckets) emits position blocks that
+    carry the posting metadata too; the postings table is their columnar
+    copy (pos_deltas never read — Parquet column pruning gives the
+    Lucene .doc/.pos file split for free).  Posting blocks are
+    byte-identical to ``codec.encode_bucket_frame`` over each (bucket,
+    field)'s tf rows (same group arrays, same reduceat — tests assert
+    it).  The run that completes the last bucket stamps the positions
+    commit point, so phrase search works as soon as the build returns.
     """
     params = params or BM25Params()
     os.makedirs(index_dir, exist_ok=True)
@@ -294,69 +293,22 @@ def build_index(
         sort_keys=True,
     )
     if todo:
-        # one partition per doc_map file (= per bucket): disable small-file
-        # packing so the fused pass gets bucket-whole partitions and full
-        # parallelism — JVM side of this stage is a light parquet decode,
-        # which keeps the cores free for the Python tokenize+encode workers
+        pos_s, post_s = write_buckets(
+            spark, doc_map_path, todo, os.path.join(index_dir, "positions"),
+            os.path.join(index_dir, "postings"), field_col=field_col,
+            codec=codec)
+        phases["positions_build"] = round(pos_s, 2)
+        phases["postings_build"] = round(post_s, 2)
         tp = time.time()
-        old_cost = spark.conf.get("spark.sql.files.openCostInBytes", None)
-        spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 30))
-        try:
-            docs = spark.read.schema(BUCKETED_SCHEMA).parquet(doc_map_path)
-            if len(todo) != len(all_buckets):
-                docs = docs.filter(F.col("bucket").isin(todo))
-            if with_positions:
-                from anisearch_model_spark.index.positions import (
-                    POSITIONS_FULL_SCHEMA,
-                    fused_tokenize_positions,
-                )
-
-                combined = fused_tokenize_positions(
-                    docs, field_col=field_col, codec=codec, full=True)
-                pos_root = os.path.join(index_dir, "positions")
-                (
-                    combined.write.mode("overwrite")
-                    .partitionBy("bucket", "field")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(pos_root)
-                )
-                tp = _mark("positions_build", tp)
-                # postings = columnar copy of the combined blocks minus
-                # pos_deltas (never read — column pruning); zero Python
-                pos_blocks = (
-                    spark.read.schema(POSITIONS_FULL_SCHEMA)
-                    .option("basePath", pos_root).parquet(pos_root)
-                )
-                if len(todo) != len(all_buckets):
-                    pos_blocks = pos_blocks.filter(F.col("bucket").isin(todo))
-                postings = pos_blocks.select(
-                    "term", "bucket", "field", "block_id", "n", "cf",
-                    "first_doc_id", "last_doc_id", "max_tf", "min_dl",
-                    "doc_deltas", "tfs", "dls",
-                )
-            else:
-                postings = fused_tokenize_encode(docs, field_col=field_col,
-                                                 codec=codec)
-            (
-                postings.write.mode("overwrite")
-                .partitionBy("bucket", "field")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(os.path.join(index_dir, "postings"))
-            )
-        finally:
-            if old_cost is not None:
-                spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
-        tp = _mark("postings_build", tp)
         _write_checkpoints(spark, index_dir, todo, lineage)
         tp = _mark("checkpoints", tp)
         stats = finalize_metadata(spark, index_dir, n_docs, params, num_buckets,
                                   field_col=field_col, codec=codec)
         _mark("finalize", tp)
-        if with_positions and len(todo) == len(remaining):
+        if len(todo) == len(remaining):
             # positions commit point — only when this run covered every
             # remaining bucket (a fail_after_buckets partial build leaves
-            # the stamp off, exactly like an interrupted build_positions;
-            # the resumed build stamps at ITS end)
+            # the stamp off; the resumed build stamps at ITS end)
             from anisearch_model_spark.index.positions import (
                 stamp_positions_meta,
             )

@@ -11,14 +11,16 @@ This is the Lucene live-docs model re-expressed for the bucketed layout:
   against a broadcast sorted array; corpus stats stay as-built until a
   purge, exactly like Lucene's deleted-docs-still-in-df behavior);
 * ``purge_deleted`` (run standalone or by ``compact_index``) physically
-  rewrites only the buckets whose doc-range contains a tombstone:
-  decode → drop dead postings → re-encode with the build's own
-  vectorized ``encode_bucket_frame`` (so surviving blocks are
-  byte-identical to a fresh encode of the surviving tf rows), re-derives
+  rewrites only the buckets whose doc-range contains a tombstone: their
+  surviving doc_map rows go through the build's own kernel
+  (index/build.write_buckets), so the rewritten postings AND positions
+  are byte-identical to a fresh build of those rows; it re-derives
   dictionary/stats, then clears the tombstone table.  The rewrite lands
   under fresh bucket ids committed by one atomic manifest replace
   (snapshot swap, index/compact.py) — concurrent readers see the
-  pre-purge or post-purge snapshot, never a half-rewritten bucket.
+  pre-purge or post-purge snapshot, never a half-rewritten bucket — and
+  the positions stamp is renewed right after that commit when positions
+  were ready before, so phrase search keeps working.
 
 Scale shape: the tombstone set is bounded by deletes SINCE THE LAST
 PURGE (it is cleared on purge), so the broadcast array and the
@@ -102,7 +104,8 @@ def clear_tombstones(index_dir: str) -> None:
 
 def purge_deleted(spark: SparkSession, index_dir: str,
                   params=None) -> dict:
-    """Physically remove tombstoned docs from postings + doc_map.
+    """Physically remove tombstoned docs from doc_map, postings and
+    positions.
 
     Rewrites ONLY affected buckets, via the SNAPSHOT swap
     (index/compact.py): each affected bucket's surviving content is
@@ -119,13 +122,14 @@ def purge_deleted(spark: SparkSession, index_dir: str,
     """
     import json
 
+    from pyspark.sql import functions as F
+
     from anisearch_model_spark.config import BM25Params
-    from anisearch_model_spark.index.build import POSTINGS_SCHEMA
-    from anisearch_model_spark.index.codec import recode_posting_group
+    from anisearch_model_spark.index.build import write_buckets
     from anisearch_model_spark.index.compact import (
-        _adopt_staged, _drop_buckets, _stage_partitions, _write_manifest,
-        recover_compaction)
+        _STAGING, _commit_swap, _stage, recover_compaction)
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
+    from anisearch_model_spark.index.positions import positions_ready
     from anisearch_model_spark.index.store import finalize_metadata
 
     params = params or BM25Params()
@@ -148,26 +152,13 @@ def purge_deleted(spark: SparkSession, index_dir: str,
         clear_tombstones(index_dir)  # ids outside every bucket: no-ops
         return {"purged_docs": 0, "buckets_rewritten": 0}
 
-    from pyspark.sql import functions as F
-
-    bdead = spark.sparkContext.broadcast(dead)
+    ready, _reason = positions_ready(index_dir)
     codec = stats.get("codec", "varint")
     # fresh snapshot ids for the rewritten buckets: unlisted → invisible
     # to concurrent readers until the single manifest commit below
     next_id = max(int(b) for b in manifest["buckets"]) + 1
     id_map = {old: next_id + i for i, old in enumerate(affected)}
 
-    postings = (
-        spark.read.schema(POSTINGS_SCHEMA)
-        .parquet(os.path.join(index_dir, "postings"))
-        .filter(F.col("bucket").isin(affected))
-        .groupBy("bucket", "field")
-        # per (bucket, field): decode → drop dead → re-encode
-        .applyInPandas(
-            lambda pdf: recode_posting_group(pdf, id_map, codec,
-                                             dead=bdead.value),
-            schema=POSTINGS_SCHEMA)
-    )
     dead_df = spark.createDataFrame([(int(i),) for i in dead],
                                     TOMBSTONE_SCHEMA)
     # id remap as a literal CASE chain (|affected| is small by purge's
@@ -181,25 +172,23 @@ def purge_deleted(spark: SparkSession, index_dir: str,
         .filter(F.col("bucket").isin(affected))
         .join(F.broadcast(dead_df), "doc_id", "left_anti")
         .withColumn("bucket", remap.cast("int"))
+        # one file per rewritten bucket, as write_buckets reads them
+        .repartition("bucket")
     )
-
-    tmp_p = os.path.join(index_dir, "_compact_tmp_postings")
-    tmp_d = os.path.join(index_dir, "_compact_tmp_docmap")
-    # phase 1: stage rewritten buckets under the fresh ids — sources live
-    _stage_partitions(spark, postings, ["bucket", "field"], tmp_p)
-    _stage_partitions(spark, doc_map, ["bucket"], tmp_d)
-    # phase 2: adopt (unlisted ids → invisible to readers)
-    _adopt_staged(os.path.join(index_dir, "postings"), tmp_p)
-    _adopt_staged(os.path.join(index_dir, "doc_map"), tmp_d)
-    # phase 3: COMMIT — one atomic manifest replace remaps every affected
-    # id to its rewritten successor; spans are unchanged (doc ids are
-    # never renumbered, so bucket-range pruning stays valid)
+    # phase 1: stage the surviving doc_map rows under the fresh ids, then
+    # tokenize them into staged positions + postings — sources live
+    _stage(index_dir, {"doc_map": doc_map})
+    staged = {t: os.path.join(index_dir, tmp) for t, tmp in _STAGING.items()}
+    write_buckets(spark, staged["doc_map"], sorted(id_map.values()),
+                  staged["positions"], staged["postings"],
+                  field_col=stats.get("field_col"), codec=codec)
+    # phases 2-4: adopt, COMMIT — one atomic manifest replace remaps
+    # every affected id to its rewritten successor; spans are unchanged
+    # (doc ids are never renumbered, so bucket-range pruning stays
+    # valid) — then drop the superseded source directories
     for old, new in id_map.items():
         manifest["buckets"][str(new)] = manifest["buckets"].pop(str(old))
-    _write_manifest(index_dir, manifest)
-    # phase 4: drop the superseded source directories
-    _drop_buckets(os.path.join(index_dir, "postings"), affected)
-    _drop_buckets(os.path.join(index_dir, "doc_map"), affected)
+    _commit_swap(index_dir, manifest, affected, stats, ready)
 
     # true live-doc count (manifest ranges are id SPANS and stay as-is)
     n_docs = (

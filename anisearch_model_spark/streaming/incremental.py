@@ -9,17 +9,21 @@ without touching completed buckets:
        ordering within the batch, offset = n_docs so far — existing
        doc_ids never change, so already-built posting blocks stay valid);
     2. new docs land in NEW buckets (ids continue after the existing
-       manifest), encoded by the same fused tokenize+encode pass as the
-       batch build — appended buckets never overlap existing partitions;
+       manifest): their doc_map rows are written first, then the build's
+       own kernel (index/build.write_buckets) tokenizes them once into
+       position blocks and copies postings out of those — appended
+       buckets never overlap existing partitions, and positions are
+       re-stamped right after the manifest commit when they were ready
+       before, so phrase search sees the new docs with no extra pass;
     3. dictionary + stats are re-derived from block metadata
        (finalize_metadata), so they equal a from-scratch build exactly.
 
 The streaming checkpointLocation makes completed batches replay-safe;
 within a batch every write is idempotent under replay:
 
-  * postings: dynamic partition overwrite of that batch's bucket ids —
-    replay recomputes the SAME ids (the manifest, the commit point, only
-    advances after success) and overwrites in place;
+  * postings + positions: dynamic partition overwrite of that batch's
+    bucket ids — replay recomputes the SAME ids (the manifest, the commit
+    point, only advances after success) and overwrites in place;
   * doc_map: a REPAIR pass at batch start deletes bucket directories
     beyond the manifest's max bucket — exactly the orphans a mid-batch
     crash leaves (append mode alone would duplicate them on replay).
@@ -39,8 +43,12 @@ from pyspark.sql import functions as F
 
 from anisearch_model_spark.config import BM25Params
 from anisearch_model_spark.datagen import TRANSCRIPT_SCHEMA
-from anisearch_model_spark.index.build import fused_tokenize_encode
+from anisearch_model_spark.index.build import write_buckets
 from anisearch_model_spark.index.docmap import bucketed_corpus
+from anisearch_model_spark.index.positions import (
+    positions_ready,
+    stamp_positions_meta,
+)
 from anisearch_model_spark.index.store import finalize_metadata
 
 
@@ -82,29 +90,23 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
     n_parts = max(1, math.ceil(n_new / avg_span))
 
     ranged, offsets, counts = bucketed_corpus(batch_df, n_parts)
-    # consumed twice below (doc_map write + posting build) — persist so
-    # the bucket/shuffle/window work runs once per batch
-    ranged = ranged.withColumn(
-        "doc_id", F.col("doc_id") + F.lit(n_existing)).persist()
+    base = max_bucket + 1
     # doc_map is bucket-partitioned: appended rows MUST land in new
     # bucket=N/ directories (offset ids), not as root-level files that
-    # partition discovery would drop
-    ranged.withColumn(
-        "bucket", F.col("bucket") + F.lit(max_bucket + 1)
-    ).write.mode("append").partitionBy("bucket").parquet(
-        os.path.join(index_dir, "doc_map")
-    )
+    # partition discovery would drop; one file per bucket (ranged is
+    # bucket-clustered), which write_buckets tokenizes
+    doc_map_root = os.path.join(index_dir, "doc_map")
+    ranged.withColumn("doc_id", F.col("doc_id") + F.lit(n_existing)).withColumn(
+        "bucket", F.col("bucket") + F.lit(base)
+    ).write.mode("append").partitionBy("bucket").parquet(doc_map_root)
 
     field_col = stats.get("field_col")
     codec = stats.get("codec", "varint")
-    postings = fused_tokenize_encode(ranged, bucket_offset=max_bucket + 1,
-                                     field_col=field_col, codec=codec)
-    (
-        postings.write.mode("overwrite")
-        .partitionBy("bucket", "field")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(index_dir, "postings"))
-    )
+    ready, _reason = positions_ready(index_dir)
+    write_buckets(spark, doc_map_root, [base + p for p in sorted(counts)],
+                  os.path.join(index_dir, "positions"),
+                  os.path.join(index_dir, "postings"),
+                  field_col=field_col, codec=codec)
 
     # commit: extend manifest (ATOMIC replace — concurrent readers scan
     # exactly the manifest-listed buckets, so the new docs become visible
@@ -112,14 +114,15 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
     from anisearch_model_spark.index.compact import _write_manifest
 
     for pid in sorted(counts):
-        buckets[str(max_bucket + 1 + pid)] = [n_existing + offsets[pid], counts[pid]]
+        buckets[str(base + pid)] = [n_existing + offsets[pid], counts[pid]]
     manifest["buckets"] = buckets
     _write_manifest(index_dir, manifest)
+    if ready:
+        stamp_positions_meta(index_dir, codec, buckets, field_col)
     finalize_metadata(
         spark, index_dir, n_existing + n_new, params,
         num_buckets=len(buckets), field_col=field_col, codec=codec,
     )
-    ranged.unpersist()
 
 
 def incremental_append(spark: SparkSession, stream_dir: str, index_dir: str,

@@ -180,12 +180,13 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
     batch = spark.createDataFrame(full_pdf[full_pdf["conv_id"] >= cut], schema)
 
     # snapshot the commit point, run the batch, then roll the commit back
-    # — exactly the state a crash after doc_map/postings writes leaves
-    manifest0 = open(os.path.join(d, "manifest.json")).read()
-    stats0 = open(os.path.join(d, "stats.json")).read()
+    # — exactly the state a crash after doc_map/positions/postings writes
+    # leaves (the positions stamp follows the manifest commit)
+    commit_files = ["manifest.json", "stats.json", "positions_meta.json"]
+    saved = {n: open(os.path.join(d, n)).read() for n in commit_files}
     _append_batch(spark, batch, d, BM25Params())
-    open(os.path.join(d, "manifest.json"), "w").write(manifest0)
-    open(os.path.join(d, "stats.json"), "w").write(stats0)
+    for n, text in saved.items():
+        open(os.path.join(d, n), "w").write(text)
 
     # replay (what foreachBatch does after restart)
     _append_batch(spark, batch, d, BM25Params())
@@ -204,6 +205,26 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
         b = topk_exhaustive(idx, q, 10).toPandas()
         assert a["doc_id"].tolist() == b["doc_id"].tolist(), q
         np.testing.assert_allclose(a["score"], b["score"], atol=1e-9)
+
+    # positions: the replay re-stamped them, no orphan position blocks
+    # survived, and phrases match the from-scratch build bit for bit
+    from anisearch_model_spark.functions.normalize import tokenize_series
+    from anisearch_model_spark.index.positions import (
+        build_positions, positions_ready)
+    from anisearch_model_spark.query.phrase import phrase_topk
+
+    ok, reason = positions_ready(d)
+    assert ok, reason
+    appended = full_pdf[full_pdf["conv_id"] >= cut]["text"]
+    toks = [t for t in tokenize_series(appended.reset_index(drop=True))
+            if len(t) >= 2]
+    for ph in sorted({" ".join(t[:2]) for t in toks[::len(toks) // 4]}):
+        a = phrase_topk(full, ph, 10).toPandas()
+        b = phrase_topk(idx, ph, 10).toPandas()
+        assert len(b) and a["doc_id"].tolist() == b["doc_id"].tolist(), ph
+        np.testing.assert_array_equal(a["score"].to_numpy(),
+                                      b["score"].to_numpy())
+    assert build_positions(spark, d)["buckets_built"] == 0
 
 
 def test_windowed_stream_agg_with_watermark(spark, tmp_path):

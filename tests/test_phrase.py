@@ -191,10 +191,12 @@ def test_phrase_respects_tombstones(spark, tmp_path):
 
 
 def test_positions_staleness_gate(spark, tmp_path):
-    """Compaction rewrites manifest bucket ids → phrase search REFUSES to
-    run on the stale positions snapshot; build_positions re-syncs it."""
+    """Compaction carries position blocks and re-stamps: positions stay
+    ready and phrase results are unchanged.  recode_index renames every
+    bucket without re-encoding positions → phrase search REFUSES to run
+    on the stale positions snapshot; build_positions re-syncs it."""
     from anisearch_model_spark.datagen import gen_transcripts
-    from anisearch_model_spark.index.compact import compact_index
+    from anisearch_model_spark.index.compact import compact_index, recode_index
     from anisearch_model_spark.index.store import build_index
 
     d = str(tmp_path / "idx")
@@ -208,10 +210,17 @@ def test_positions_staleness_gate(spark, tmp_path):
     res = compact_index(spark, d, target_docs=400)
     assert res["groups_rewritten"] >= 1
     ok, reason = positions_ready(d)
+    assert ok, reason
+    after = phrase_topk(idx, _first_bigram(idx), k=5).toPandas()
+    assert after["doc_id"].tolist() == baseline["doc_id"].tolist()
+    assert after["score"].tolist() == baseline["score"].tolist()
+
+    recode_index(spark, d, "pfor")
+    ok, reason = positions_ready(d)
     assert not ok and "stale" in reason
     with pytest.raises(ValueError, match="stale"):
         phrase_match(idx, "anything here")
-    build_positions(spark, d)
+    assert build_positions(spark, d)["buckets_built"] >= 1
     ok, _ = positions_ready(d)
     assert ok
     after = phrase_topk(idx, _first_bigram(idx), k=5).toPandas()
@@ -235,6 +244,7 @@ def test_serve_loop_phrase_requests(spark, tmp_path):
     per-request error (the loop survives), and results carry metadata."""
     import io
     import json as _json
+    import os
 
     from anisearch_model_spark.cli import serve_loop
     from anisearch_model_spark.datagen import TRANSCRIPT_SCHEMA
@@ -247,9 +257,10 @@ def test_serve_loop_phrase_requests(spark, tmp_path):
     ]
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     d = str(tmp_path / "idx")
-    # positions-less index (the fused r6 build stamps positions by
-    # default, so the no-positions error path needs the explicit opt-out)
-    build_index(spark, tr, d, num_buckets=1, with_positions=False)
+    # positions-less index: every build stamps positions, so the
+    # no-positions error path removes the stamp
+    build_index(spark, tr, d, num_buckets=1)
+    os.remove(os.path.join(d, "positions_meta.json"))
 
     reqs = [
         _json.dumps({"query": "alpha beta", "phrase": True, "k": 5}),
@@ -371,11 +382,15 @@ def test_slop_negative_rejected(pos_index):
 def test_purge_invalidates_positions_and_resync_drops_purged_doc(
         spark, tmp_path):
     """The full delete lifecycle through PHRASE search: tombstoned docs
-    are filtered immediately; a physical purge remaps the affected
-    bucket ids, so the positions snapshot goes stale and phrase search
-    REFUSES to run (a purged doc must never resurface once the
-    tombstones are cleared); build_positions re-syncs and the purged doc
-    is gone from the phrase results."""
+    are filtered immediately; a physical purge rewrites the affected
+    buckets' positions with their postings and re-stamps, so phrase
+    search keeps running and the purged doc is gone.  A stamp left over
+    from before the purge (its bucket set no longer matches the
+    manifest) makes phrase search REFUSE to run — a purged doc must
+    never resurface once the tombstones are cleared — and
+    build_positions re-syncs it without tokenizing anything."""
+    import shutil
+
     from anisearch_model_spark.datagen import gen_transcripts
     from anisearch_model_spark.index.store import build_index
     from anisearch_model_spark.index.tombstones import (
@@ -396,19 +411,27 @@ def test_purge_invalidates_positions_and_resync_drops_purged_doc(
     # tombstone filter: excluded immediately, positions still valid
     mid = phrase_topk(idx, phrase, k=5).toPandas()
     assert dead not in set(mid["doc_id"])
+    meta = f"{d}/positions_meta.json"
+    shutil.copy(meta, f"{d}/pre_purge_meta.json")
     res = purge_deleted(spark, d)
     assert res["purged_docs"] == 1 and res["buckets_rewritten"] >= 1
     ok, reason = positions_ready(d)
-    assert not ok and "stale" in reason
-    with pytest.raises(ValueError, match="stale"):
-        phrase_match(idx, phrase)
-    build_positions(spark, d)
+    assert ok, reason
     idx2 = IndexStore(spark, d)
     post = phrase_topk(idx2, phrase, k=5).toPandas()
     assert dead not in set(post["doc_id"])
     # survivors keep their relative order from the tombstone-filtered run
     assert post["doc_id"].tolist()[:len(mid)] == mid["doc_id"].tolist()[
         :len(post)]
+
+    shutil.copy(f"{d}/pre_purge_meta.json", meta)
+    ok, reason = positions_ready(d)
+    assert not ok and "stale" in reason
+    with pytest.raises(ValueError, match="stale"):
+        phrase_match(idx2, phrase)
+    assert build_positions(spark, d)["buckets_built"] == 0
+    again = phrase_topk(IndexStore(spark, d), phrase, k=5).toPandas()
+    pd.testing.assert_frame_equal(again, post)
 
 
 def test_phrase_topk_ties_across_buckets(spark, tmp_path):

@@ -167,6 +167,25 @@ def test_lifecycle_field_qualified_append_delete_purge_compact(spark, tmp_path):
     assert idx3.stats["n_docs"] == 1199
     assert topk_bmw(idx3, q, 5, field="user").count() == 5
 
+    # every write kept positions in step: field-scoped phrase search runs
+    # with no repair pass and sees only live docs of that field
+    from anisearch_model_spark.functions.normalize import tokenize_series
+    from anisearch_model_spark.index.positions import (
+        build_positions, positions_ready)
+    from anisearch_model_spark.query.phrase import phrase_topk
+
+    ok, reason = positions_ready(d)
+    assert ok, reason
+    dm = idx3.doc_map.select("doc_id", "role", "text").toPandas()
+    toks = tokenize_series(dm[dm["role"] == "user"]["text"].reset_index(
+        drop=True))
+    phrase = " ".join(next(t for t in toks if len(t) >= 2)[:2])
+    got = phrase_topk(idx3, phrase, 10, field="user").toPandas()
+    roles = dm.set_index("doc_id")["role"]
+    assert len(got) and victim not in set(got["doc_id"])
+    assert all(roles[i] == "user" for i in got["doc_id"])
+    assert build_positions(spark, d)["buckets_built"] == 0
+
 
 def test_purge_only_rewrites_affected_buckets(spark, tmp_path):
     """Purge is bounded I/O: buckets whose doc-range holds no tombstone
