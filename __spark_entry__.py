@@ -47,8 +47,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ALWAYS rebuilds from the parquet inputs — nothing persists across runs
 # (cross-run reuse would be result caching, not optimization).  The one
 # entry that MUTATES index state (bm25_topk_live_docs tombstones) works
-# on a file-copy of the base, never the shared directory.  The fused
-# build stamps positions too, so the phrase entries share the same dir.
+# on a file-copy of the base, never the shared directory.  The build's
+# blocks carry positions too, so the phrase entries share the same dir.
 # ---------------------------------------------------------------------------
 
 _DOC_INDEX_CACHE: dict[tuple[str, str], str] = {}
@@ -977,8 +977,8 @@ _PHRASE = ("table", "part")  # ~35 matching docs at sf0.01, ptf up to 2
 
 def phrase_topk_documents(spark, sf_dir):
     """Exact-phrase BM25 top-10 through the REAL positional engine
-    (index/positions.py side table + query/phrase.py): build an index +
-    positions over documents, match the 2-term phrase by consecutive
+    (the blocks' position column, index/positions.py + query/phrase.py):
+    build an index over documents, match the 2-term phrase by consecutive
     positions in the post-stopword stream, and score it as a single
     virtual BM25 term (df = matching docs, tf = occurrence count, corpus
     dl/avgdl/N).  The oracle recomputes positions in SQL

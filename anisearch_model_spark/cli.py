@@ -90,26 +90,19 @@ def _coerce_weight_map(val, key: str) -> dict[str, float]:
 
 
 def index_info(index_dir: str) -> dict:
-    """Driver-side index health snapshot — manifest/stats/tombstones/
-    positions, no SparkSession and no jobs (everything here is bounded
-    metadata: the manifest, two JSON files, and the tombstone table,
-    which is O(deletes since purge) by design)."""
+    """Driver-side index health snapshot — manifest/stats/tombstones,
+    no SparkSession and no jobs (everything here is bounded metadata:
+    the manifest, two JSON files, and the tombstone table, which is
+    O(deletes since purge) by design)."""
     import os
 
-    from anisearch_model_spark.index.positions import (
-        positions_meta,
-        positions_ready,
-    )
     from anisearch_model_spark.index.tombstones import load_tombstones
 
     with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
         stats = json.load(f)
     with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
         manifest = json.load(f)
-    buckets = manifest.get("buckets", {})
-    ready, reason = positions_ready(index_dir)
-    pmeta = positions_meta(index_dir)
-    out = {
+    return {
         "index_dir": index_dir,
         "n_docs": stats.get("n_docs"),
         "avgdl": stats.get("avgdl"),
@@ -117,15 +110,9 @@ def index_info(index_dir: str) -> dict:
         "field_col": stats.get("field_col"),
         "format_version": stats.get("index_format_version"),
         "tokenizer_version": stats.get("tokenizer_version"),
-        "n_buckets": len(buckets),
+        "n_buckets": len(manifest.get("buckets", {})),
         "tombstones": int(len(load_tombstones(index_dir))),
-        "positions": {
-            "ready": ready,
-            **({"reason": reason} if not ready else {}),
-            **({"codec": pmeta.get("codec")} if pmeta else {}),
-        },
     }
-    return out
 
 
 def _scorer_name(routes: list[tuple[str, object]], pruned: bool) -> str:
@@ -503,11 +490,6 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--field-col", default=None,
                    help="build field-qualified postings (e.g. role)")
 
-    o = sub.add_parser("positions", help="repair stale or missing "
-                                         "positions (e.g. after recode), "
-                                         "in the index's own codec")
-    o.add_argument("--index", required=True)
-
     s = sub.add_parser("search", help="BM25 top-k query")
     s.add_argument("--index", required=True)
     s.add_argument("--query", required=True)
@@ -526,7 +508,7 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--phrase", action="store_true",
                    help="treat the query as an EXACT PHRASE (stopwords "
                         "elided): consecutive-position match over the "
-                        "positional side table, scored as one virtual "
+                        "blocks' position column, scored as one virtual "
                         "BM25 term")
     s.add_argument("--slop", type=int, default=0,
                    help="with --phrase: allow in-order gaps up to 1+slop "
@@ -682,9 +664,8 @@ def main(argv: list[str] | None = None) -> int:
     g.add_argument("--seed", type=int, default=42)
 
     i = sub.add_parser("info", help="index health snapshot: corpus stats, "
-                                    "manifest buckets, codec, tombstones, "
-                                    "positions state — one JSON line, no "
-                                    "Spark jobs")
+                                    "manifest buckets, codec, tombstones "
+                                    "— one JSON line, no Spark jobs")
     i.add_argument("--index", required=True)
 
     r = sub.add_parser("recover", help="heal an interrupted compaction/"
@@ -718,10 +699,6 @@ def main(argv: list[str] | None = None) -> int:
             metrics = build_index(spark, tr, args.index, num_buckets=args.num_buckets,
                                   field_col=args.field_col)
             print(json.dumps(metrics))
-        elif args.cmd == "positions":
-            from anisearch_model_spark.index.positions import build_positions
-
-            print(json.dumps(build_positions(spark, args.index)))
         elif args.cmd == "search":
             from anisearch_model_spark.query.engine import IndexStore, search
             from anisearch_model_spark.query.multifield import search_conversations

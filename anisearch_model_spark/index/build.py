@@ -1,5 +1,4 @@
-"""Inverted-index build kernel: one tokenize pass → position blocks →
-postings by columnar copy.
+"""Inverted-index build kernel: one tokenize pass → one block table.
 
 Reference analog: the index-build stage ``src/sbert.py:154-388`` (per-column
 batched SBERT encode → ``np.save``).  Our build replaces dense embeddings
@@ -12,13 +11,14 @@ with compressed posting lists and is designed for 10^12 turns:
     compressed blocks cross the Python/JVM Arrow boundary (the
     uncompressed occurrence relation is 20-40× the corpus row count;
     shipping or shuffling it dominated build time);
-  * each position block also carries its posting block's buffers and
-    metadata, so the postings table is a COLUMNAR COPY of the positions
-    table minus ``pos_deltas`` (zero Python; the columnar inverted-index
+  * ONE block table: each posting block row carries its ``pos_deltas``
+    too (``BLOCK_SCHEMA``), written once under ``postings/``.  BM25
+    scorers read the ``POSTINGS_SCHEMA`` projection, so Parquet column
+    pruning never touches ``pos_deltas``; phrase search reads the
+    positions projection of the same files (the columnar inverted-index
     layout of "Columnar Formatted Inverted Index for Highly-Paralleled,
-    Vectorized Query Processing", ICDE 2025).  Build, append and purge
-    all create a bucket's postings this way, so a bucket's postings and
-    positions always come from the same kernel and codec;
+    Vectorized Query Processing", ICDE 2025).  Build, append, purge and
+    recode all write a bucket's blocks this way;
   * **skew defusal**: a hot term (Zipf head) would make a naive
     ``groupBy(term)`` one-reducer-hot.  Doc-range bucketing IS the salt:
     every term's postings split uniformly across buckets, and because
@@ -34,8 +34,8 @@ with compressed posting lists and is designed for 10^12 turns:
   * dictionary df/cf per (term, field) and corpus stats derive from block
     metadata (``dictionary_from_postings``) — the corpus is tokenized
     exactly once;
-  * both tables are written ``partitionBy(bucket, field)`` so a
-    resumable re-run plans only missing buckets, the query engine scores
+  * the table is written ``partitionBy(bucket, field)`` so a resumable
+    re-run plans only missing buckets, the query engine scores
     bucket-parallel, and a field filter is directory-level pruning.
 
 Index layout is a pure function of (corpus, num_buckets, field_col) —
@@ -59,33 +59,19 @@ POSTINGS_SCHEMA = (
     "doc_deltas binary, tfs binary, dls binary"
 )
 
-_POSTING_COLS = [
-    "term", "bucket", "field", "block_id", "n", "cf", "first_doc_id",
-    "last_doc_id", "max_tf", "min_dl", "doc_deltas", "tfs", "dls",
-]
+# the stored block row: the BM25 columns plus the block's position gaps
+BLOCK_SCHEMA = POSTINGS_SCHEMA + ", pos_deltas binary"
 
 DICTIONARY_SCHEMA = "term string, field string, df long, cf long"
 
 
-def write_bucket_partitions(df: DataFrame, root: str) -> None:
-    """Write ``df`` under ``root`` partitioned by (bucket, field),
-    replacing exactly the partitions it produces (dynamic overwrite)."""
-    (
-        df.write.mode("overwrite")
-        .partitionBy("bucket", "field")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(root)
-    )
-
-
 def write_buckets(spark: SparkSession, doc_map_root: str, buckets: list[int],
-                  positions_root: str, postings_root: str,
-                  field_col: str | None = None,
-                  codec: str = "varint") -> tuple[float, float]:
-    """Tokenize doc_map ``buckets`` once: position blocks go under
-    ``positions_root``, then the same buckets' postings go under
-    ``postings_root`` as a columnar copy of those blocks (``pos_deltas``
-    is never read).  Returns (positions seconds, postings seconds).
+                  postings_root: str, field_col: str | None = None,
+                  codec: str = "varint") -> float:
+    """Tokenize doc_map ``buckets`` once and write their blocks
+    (``BLOCK_SCHEMA`` rows) under ``postings_root``, partitioned by
+    (bucket, field) and replacing exactly the partitions it produces
+    (dynamic overwrite).  Returns seconds.
 
     Each bucket's doc_map directory must hold ONE file no larger than
     ``spark.sql.files.maxPartitionBytes`` (every doc_map writer writes
@@ -95,30 +81,25 @@ def write_buckets(spark: SparkSession, doc_map_root: str, buckets: list[int],
     is a light parquet decode, which keeps the cores free for the Python
     tokenize+encode workers."""
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
-    from anisearch_model_spark.index.positions import (
-        POSITIONS_FULL_SCHEMA,
-        fused_tokenize_positions,
-    )
+    from anisearch_model_spark.index.positions import fused_tokenize_positions
 
-    in_buckets = F.col("bucket").isin(buckets)
     old_cost = spark.conf.get("spark.sql.files.openCostInBytes", None)
     spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 30))
     try:
         t0 = time.time()
         docs = spark.read.schema(BUCKETED_SCHEMA).parquet(doc_map_root)
-        write_bucket_partitions(
-            fused_tokenize_positions(docs.filter(in_buckets),
-                                     field_col=field_col, codec=codec),
-            positions_root)
-        t1 = time.time()
-        blocks = spark.read.schema(POSITIONS_FULL_SCHEMA).parquet(
-            positions_root)
-        write_bucket_partitions(
-            blocks.filter(in_buckets).select(*_POSTING_COLS), postings_root)
+        (
+            fused_tokenize_positions(docs.filter(F.col("bucket").isin(buckets)),
+                                     field_col=field_col, codec=codec)
+            .write.mode("overwrite")
+            .partitionBy("bucket", "field")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(postings_root)
+        )
     finally:
         if old_cost is not None:
             spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
-    return t1 - t0, time.time() - t1
+    return time.time() - t0
 
 
 def dictionary_from_postings(postings: DataFrame) -> DataFrame:

@@ -354,32 +354,3 @@ def decode_posting_block(block: dict) -> tuple[np.ndarray, np.ndarray, np.ndarra
     dls = decode_values(block["dls"]).astype(np.int64)
     return doc_ids, tfs, dls
 
-
-def recode_posting_group(pdf, id_map: dict[int, int], codec: str):
-    """Re-encode one (bucket, field) group of posting-block rows under
-    its new bucket id ``id_map[bucket]`` (compact.recode_index): decode
-    every block back to tf rows and re-run the build's own
-    ``encode_bucket_frame`` — block boundaries are re-derived, so the
-    output is byte-identical to a fresh encode of the same rows.  Rows
-    come back in posting-table column order."""
-    import pandas as pd
-
-    cols = ["term", "bucket", "field", "block_id", "n", "cf",
-            "first_doc_id", "last_doc_id", "max_tf", "min_dl",
-            "doc_deltas", "tfs", "dls"]
-    if pdf.empty:
-        return pd.DataFrame(columns=cols)
-    bucket = id_map[int(pdf["bucket"].iloc[0])]
-    frames = []
-    for row in pdf.itertuples(index=False):
-        d, t, dl = decode_posting_block(
-            {"first_doc_id": row.first_doc_id,
-             "doc_deltas": row.doc_deltas, "tfs": row.tfs, "dls": row.dls})
-        frames.append(pd.DataFrame({
-            "term": row.term, "doc_id": d, "tf": t, "doc_len": dl,
-            "bucket": bucket,
-        }))
-    enc = encode_bucket_frame(pd.concat(frames, ignore_index=True),
-                              POSTING_BLOCK_SIZE, codec=codec)
-    enc["field"] = pdf["field"].iloc[0]
-    return enc[cols]

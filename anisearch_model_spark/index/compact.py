@@ -17,11 +17,8 @@ the ``bucket`` label and the per-(term, field) ``block_id`` numbering
 change; queries return byte-identical results because neither scorer
 depends on bucket boundaries (exhaustive ignores them; block-max does a
 per-bucket top-k then a global merge, which is bucket-partition-
-independent for a total order).  Position blocks mirror posting blocks
-(same docs, same split), so when positions are ready they are carried
-the same way, under the same staging, commit and cleanup, and the
-positions stamp is renewed right after each manifest commit: phrase
-search keeps working across a compaction.
+independent for a total order).  A block row carries its own position
+gaps (index/build.BLOCK_SCHEMA), so phrase search is carried along too.
 
 SNAPSHOT ISOLATION (the Iceberg ``rewrite_data_files`` pattern on plain
 Parquet): each merged group is written under a FRESH bucket id that no
@@ -62,7 +59,6 @@ from anisearch_model_spark.config import BM25Params
 _STAGING = {
     "postings": "_compact_tmp_postings",
     "doc_map": "_compact_tmp_docmap",
-    "positions": "_compact_tmp_positions",
 }
 
 
@@ -130,28 +126,58 @@ def _write_manifest(index_dir: str, manifest: dict) -> None:
     os.replace(tmp, path)
 
 
-def _commit_swap(index_dir: str, manifest: dict, old_ids: list[int],
-                 stats: dict, positions_were_ready: bool) -> None:
+def _commit_swap(index_dir: str, manifest: dict, old_ids: list[int]) -> None:
     """Phases 2-4 of a snapshot swap: adopt every staged table, commit
-    ``manifest``, re-stamp positions when they were ready before the
-    swap (the staged positions cover the fresh ids), then drop
-    ``old_ids`` from every table."""
-    from anisearch_model_spark.index.positions import stamp_positions_meta
-
+    ``manifest``, then drop ``old_ids`` from every table."""
     for table, tmp in _STAGING.items():
         if os.path.isdir(os.path.join(index_dir, tmp)):
             _adopt_staged(os.path.join(index_dir, table),
                           os.path.join(index_dir, tmp))
     _write_manifest(index_dir, manifest)
-    if positions_were_ready:
-        stamp_positions_meta(index_dir, stats.get("codec", "varint"),
-                             manifest["buckets"], stats.get("field_col"))
     for table in _STAGING:
         _drop_buckets(os.path.join(index_dir, table), old_ids)
 
 
+def rewrite_buckets(spark: SparkSession, index_dir: str, manifest: dict,
+                    affected: list[int], field_col: str | None, codec: str,
+                    dead: DataFrame | None = None) -> None:
+    """Snapshot-swap rewrite of the ``affected`` buckets through the
+    build's own kernel (purge and recode): stage their doc_map rows,
+    minus the ``dead`` doc ids, under fresh bucket ids, tokenize them
+    into staged blocks in ``codec`` (index/build.write_buckets), then
+    adopt, commit ``manifest`` with every affected id remapped to its
+    successor (same doc-id span — ids are never renumbered, so bucket
+    range pruning stays valid) and drop the superseded directories.
+    The rewritten blocks are byte-identical to a fresh build of the
+    surviving rows.  Sources stay live until the commit."""
+    from anisearch_model_spark.index.build import write_buckets
+    from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
+
+    next_id = max(int(b) for b in manifest["buckets"]) + 1
+    id_map = {old: next_id + i for i, old in enumerate(affected)}
+    bmap = F.create_map(*[F.lit(x) for o, n in id_map.items() for x in (o, n)])
+    doc_map = (
+        spark.read.schema(BUCKETED_SCHEMA)
+        .parquet(os.path.join(index_dir, "doc_map"))
+        .filter(F.col("bucket").isin(affected))
+    )
+    if dead is not None:
+        doc_map = doc_map.join(F.broadcast(dead), "doc_id", "left_anti")
+    # one file per rewritten bucket, as write_buckets reads them
+    doc_map = doc_map.withColumn(
+        "bucket", bmap[F.col("bucket")].cast("int")).repartition("bucket")
+    _stage(index_dir, {"doc_map": doc_map})
+    write_buckets(spark, os.path.join(index_dir, _STAGING["doc_map"]),
+                  sorted(id_map.values()),
+                  os.path.join(index_dir, _STAGING["postings"]),
+                  field_col=field_col, codec=codec)
+    for old, new in id_map.items():
+        manifest["buckets"][str(new)] = manifest["buckets"].pop(str(old))
+    _commit_swap(index_dir, manifest, affected)
+
+
 def _concat_blocks(df: DataFrame, new_id: int) -> DataFrame:
-    """Posting or position blocks of adjacent buckets → one bucket: the
+    """Blocks of adjacent buckets → one bucket: the
     blocks are disjoint sorted doc ranges, so concatenation in doc order
     only renumbers ``block_id`` per (term, field) by ``first_doc_id`` —
     no decode."""
@@ -221,10 +247,8 @@ def compact_index(spark: SparkSession, index_dir: str,
     n_docs / num_buckets of the base build, floored at 1).
     Returns {buckets_before, buckets_after, groups_rewritten}.
     """
-    from anisearch_model_spark.index.build import POSTINGS_SCHEMA
+    from anisearch_model_spark.index.build import BLOCK_SCHEMA
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
-    from anisearch_model_spark.index.positions import (
-        POSITIONS_FULL_SCHEMA, positions_ready)
     from anisearch_model_spark.index.store import finalize_metadata
 
     params = params or BM25Params()
@@ -234,7 +258,6 @@ def compact_index(spark: SparkSession, index_dir: str,
     from anisearch_model_spark.index.tombstones import purge_deleted
 
     purge = purge_deleted(spark, index_dir, params=params)
-    ready, _reason = positions_ready(index_dir)
     with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
         manifest = json.load(f)
     with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
@@ -272,13 +295,10 @@ def compact_index(spark: SparkSession, index_dir: str,
         span_n = sum(int(buckets[str(b)][1]) for b in group)
         frames = {
             "postings": _concat_blocks(
-                rows_of("postings", POSTINGS_SCHEMA, group), new_id),
+                rows_of("postings", BLOCK_SCHEMA, group), new_id),
             "doc_map": rows_of("doc_map", BUCKETED_SCHEMA, group).withColumn(
                 "bucket", F.lit(int(new_id)).cast("int")),
         }
-        if ready:
-            frames["positions"] = _concat_blocks(
-                rows_of("positions", POSITIONS_FULL_SCHEMA, group), new_id)
         # phase 1: stage every table under the fresh id — sources live
         _stage(index_dir, frames)
         # phases 2-4: adopt (unlisted id → invisible), COMMIT — one atomic
@@ -290,7 +310,7 @@ def compact_index(spark: SparkSession, index_dir: str,
             del buckets[str(b)]
         buckets[str(new_id)] = [span_lo, span_n]
         manifest["buckets"] = buckets
-        _commit_swap(index_dir, manifest, group, stats, ready)
+        _commit_swap(index_dir, manifest, group)
 
     if rewrite:
         # mark merged buckets done so a later resumable build skips them
@@ -321,25 +341,18 @@ def compact_index(spark: SparkSession, index_dir: str,
 
 def recode_index(spark: SparkSession, index_dir: str, codec: str,
                  params: BM25Params | None = None) -> dict:
-    """Re-encode every posting buffer to ``codec`` (e.g. a varint-built
-    index → PFor for serving: pfor decodes ~1.8× faster and decode
-    dominates the query hot loop — build encode-fast, serve decode-fast).
+    """Re-encode every block to ``codec`` (e.g. a varint-built index →
+    PFor for serving: pfor decodes ~1.8× faster and decode dominates the
+    query hot loop — build encode-fast, serve decode-fast).
 
-    Same snapshot swap as compaction: every bucket's blocks are decoded
-    and re-encoded under a FRESH bucket id (block boundaries re-derived,
-    so the result is byte-identical to a fresh ``build_index`` with that
-    codec), one atomic manifest replace commits, superseded dirs drop
-    after.  Rank identity is a theorem (the codec is a lossless container
-    for the same integers) and is asserted by tests.  The doc_map content
-    is unchanged, but both tables share ONE manifest, so its rows are
-    re-staged under the new bucket ids too (a pure copy, no decode).
-    Position blocks are NOT re-encoded: every bucket id changes, so
-    positions stay stale until ``build_positions`` re-tokenizes them in
-    the new codec.  Returns {buckets_recoded, codec}.
+    Purge's rewrite (``rewrite_buckets``) over every bucket, dropping no
+    docs (tombstones stay in force): the doc_map rows are re-tokenized
+    under fresh bucket ids, so the result is byte-identical to a fresh
+    ``build_index`` in that codec, positions included, and one atomic
+    manifest replace commits.  Rank identity is a theorem (the codec is a
+    lossless container for the same integers) and is asserted by tests.
+    Returns {buckets_recoded, codec}.
     """
-    from anisearch_model_spark.index.build import POSTINGS_SCHEMA
-    from anisearch_model_spark.index.codec import recode_posting_group
-    from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
     from anisearch_model_spark.index.store import finalize_metadata
 
     params = params or BM25Params()
@@ -351,28 +364,8 @@ def recode_index(spark: SparkSession, index_dir: str, codec: str,
     old_ids = sorted(int(b) for b in manifest["buckets"])
     if not old_ids:
         return {"buckets_recoded": 0, "codec": codec}
-    next_id = max(old_ids) + 1
-    id_map = {old: next_id + i for i, old in enumerate(old_ids)}
-
-    postings = (
-        spark.read.schema(POSTINGS_SCHEMA)
-        .parquet(os.path.join(index_dir, "postings"))
-        .groupBy("bucket", "field")
-        .applyInPandas(lambda pdf: recode_posting_group(pdf, id_map, codec),
-                       schema=POSTINGS_SCHEMA)
-    )
-    remap = F.col("bucket")
-    for old, new in id_map.items():
-        remap = F.when(F.col("bucket") == old, F.lit(new)).otherwise(remap)
-    doc_map = (
-        spark.read.schema(BUCKETED_SCHEMA)
-        .parquet(os.path.join(index_dir, "doc_map"))
-        .withColumn("bucket", remap.cast("int"))
-    )
-    _stage(index_dir, {"postings": postings, "doc_map": doc_map})
-    for old, new in id_map.items():
-        manifest["buckets"][str(new)] = manifest["buckets"].pop(str(old))
-    _commit_swap(index_dir, manifest, old_ids, stats, False)
+    rewrite_buckets(spark, index_dir, manifest, old_ids,
+                    stats.get("field_col"), codec)
     finalize_metadata(
         spark, index_dir, int(stats["n_docs"]), params,
         num_buckets=len(manifest["buckets"]),

@@ -5,14 +5,11 @@ Multi-source pipelines at 100 TB build per-source indexes in parallel
 the end.  Rebuilding from the union corpus re-tokenizes everything;
 merging re-bases metadata instead:
 
-  * posting blocks store doc ids as ``first_doc_id`` + varint/pfor
-    DELTAS — shifting a whole index's doc-id space is adding one offset
-    to two int64 columns per block; the compressed delta buffers pass
-    through BYTE-IDENTICAL, never decoded;
-  * position blocks have the same doc-id columns and are carried the
-    same way when every source's positions are ready; the merged index
-    is then stamped right after its manifest write, so phrase search
-    works on it with no extra pass;
+  * blocks store doc ids as ``first_doc_id`` + varint/pfor DELTAS —
+    shifting a whole index's doc-id space is adding one offset to two
+    int64 columns per block; the compressed delta and position buffers
+    pass through BYTE-IDENTICAL, never decoded, so phrase search works on
+    the merged index with no extra pass;
   * the doc_map shifts its ``doc_id`` column by the same offset;
   * buckets renumber sequentially and the manifest's doc ranges shift,
     so bucket-range pruning (``IndexStore.buckets_for``) keeps working;
@@ -24,9 +21,7 @@ merging re-bases metadata instead:
 
 The result is contract-identical to a fresh build over the concatenated
 corpus whenever source doc ordering is compatible (tested via the
-disjoint-conv-prefix corpus in tests/test_merge.py).  If any source's
-positions are stale, none are carried and the merged index is left
-unstamped; ``build_positions`` then tokenizes its buckets.
+disjoint-conv-prefix corpus in tests/test_merge.py).
 
 Reference anchor: the reference rebuilds its matrices from scratch on
 every corpus change (``/root/reference/src/sbert.py:336-356``); merging
@@ -51,10 +46,8 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
     ``out_dir``.  Sources must share tokenizer_version, format version,
     and field_col; codecs may differ (blocks are flag-prefixed and
     self-describing).  Returns merge metrics."""
-    from anisearch_model_spark.index.build import POSTINGS_SCHEMA
+    from anisearch_model_spark.index.build import BLOCK_SCHEMA
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
-    from anisearch_model_spark.index.positions import (
-        POSITIONS_FULL_SCHEMA, positions_ready, stamp_positions_meta)
     from anisearch_model_spark.index.store import finalize_metadata
     from anisearch_model_spark.index.tombstones import (
         delete_docs, load_tombstones)
@@ -78,10 +71,6 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
     field_col = stats_all[0].get("field_col")
     codec = stats_all[0].get("codec", "varint")
     params = params or BM25Params()
-    carry_positions = all(positions_ready(d)[0] for d in src_dirs)
-    block_tables = {"postings": POSTINGS_SCHEMA}
-    if carry_positions:
-        block_tables["positions"] = POSITIONS_FULL_SCHEMA
 
     # doc-id offsets: source i shifts by the ID SPAN of everything before
     # it, NOT the live doc count — after a purge stats.n_docs shrinks but
@@ -130,15 +119,14 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
         )
         doc_map.write.mode("append").partitionBy("bucket").parquet(
             os.path.join(out_dir, "doc_map"))
-        for table, schema in block_tables.items():
-            blocks = (
-                _snapshot(table, schema)
-                .withColumn("first_doc_id", F.col("first_doc_id") + base)
-                .withColumn("last_doc_id", F.col("last_doc_id") + base)
-                .withColumn("bucket", bmap[F.col("bucket")])
-            )
-            blocks.write.mode("append").partitionBy("bucket", "field").parquet(
-                os.path.join(out_dir, table))
+        blocks = (
+            _snapshot("postings", BLOCK_SCHEMA)
+            .withColumn("first_doc_id", F.col("first_doc_id") + base)
+            .withColumn("last_doc_id", F.col("last_doc_id") + base)
+            .withColumn("bucket", bmap[F.col("bucket")])
+        )
+        blocks.write.mode("append").partitionBy("bucket", "field").parquet(
+            os.path.join(out_dir, "postings"))
 
     manifest = {
         "buckets": merged_buckets,
@@ -149,8 +137,6 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
     with open(mpath + ".tmp", "w", encoding="utf-8") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
     os.replace(mpath + ".tmp", mpath)
-    if carry_positions:
-        stamp_positions_meta(out_dir, codec, merged_buckets, field_col)
 
     # dictionary + stats re-derive (df/cf re-aggregate across sources);
     # writes stats.json LAST — the commit point an IndexStore opens on

@@ -1,49 +1,36 @@
-"""Positional postings — a separate ``positions/`` side table enabling
-exact-phrase queries without touching the BM25 hot path.
+"""Positional postings: the ``pos_deltas`` column of the block table,
+enabling exact-phrase queries without touching the BM25 hot path.
 
 The reference engine has no phrase search at all (its retrieval is a
 dense-vector cosine over whole descriptions, ``src/api.py:270-313``); a
-lexical fulltext engine is expected to offer it, and the classic design —
-Lucene's ``.pos`` files next to ``.doc`` postings — keeps positions OUT of
-the scoring-hot postings so BM25 scans never pay for them.  We follow the
-same split:
+lexical fulltext engine is expected to offer it.  Lucene keeps positions
+in ``.pos`` files next to the ``.doc`` postings so BM25 scans never pay
+for them; a columnar table gets the same split from column pruning:
 
-    <index_dir>/positions/bucket=N/field=F/   position blocks
-    <index_dir>/positions_meta.json           commit point + validity stamp
+    <index_dir>/postings/bucket=N/field=F/   blocks (index/build.BLOCK_SCHEMA)
 
-Each position block mirrors its term's posting block (same doc order, same
-``block_size``-doc split) and is SELF-CONTAINED: it carries the block's
-``doc_deltas``/``tfs``/``dls`` buffers again plus ``pos_deltas`` — flat
+Every posting block row also carries ``pos_deltas`` — flat
 occurrence-level position gaps, doc-major (first position of a doc
-absolute, subsequent ones delta-encoded).  Duplicating the ~3 B/posting
-doc/tf/dl buffers costs a few percent of the position volume and lets a
-phrase query read ONE table instead of aligning two scans.
+absolute, subsequent ones delta-encoded), split at the same
+``block_size``-doc boundaries as the doc/tf/dl buffers.  BM25 readers
+project ``POSTINGS_SCHEMA`` and never read it; phrase readers project
+``POSITIONS_SCHEMA`` from the same files.
 
 Scale shape (this IS the main build's kernel, index/build.py):
   * ONE fused ``mapInPandas`` pass over the bucketed doc_map — tokenize +
-    position-encode per bucket, ZERO shuffle of position data; the
-    postings table is a columnar copy of its output;
+    encode per bucket, ZERO shuffle of posting data;
   * written ``partitionBy(bucket, field)`` → phrase scans prune on the
     term IN pushdown + field directory pruning, score bucket-parallel;
-  * resumable per bucket (directory-existence check; the meta stamp is
-    written LAST and is the commit point);
   * positions are indices into the POST-stopword token stream, so "exact
     phrase" means *phrase with stopwords elided* — the only phrase
     semantics a stopword-eliding index can promise (and what Lucene with
     a stop filter gives).
 
-Maintenance interplay: every write path keeps positions in step.
-Build, incremental append and purge write a bucket's position blocks and
-postings with the same kernel (index/build.write_buckets); compaction and
-merge carry position blocks exactly as they carry posting blocks.  Each
-re-stamps ``positions_meta.json`` right after its manifest commit when
-positions were ready before it, so phrase search works after any write.
-The stamp records the exact bucket-id set it covers, and the phrase
-engine refuses to run when that set drifts from the committed manifest:
-after ``recode_index`` (which renames every bucket and re-encodes only
-postings), or after a crash between a manifest commit and its stamp.
-``build_positions`` repairs both: it tokenizes only buckets with no
-position directory, then stamps.
+Maintenance interplay: there is nothing to keep in step.  A bucket's
+positions live in the same rows as its postings, so every write path
+(build, append, purge, recode, compaction, merge) that commits a
+bucket's postings commits its positions, and phrase search sees the
+same manifest snapshot as BM25.
 """
 
 from __future__ import annotations
@@ -55,28 +42,19 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from anisearch_model_spark.config import POSTING_BLOCK_SIZE, TOKENIZER_VERSION
+from anisearch_model_spark.config import POSTING_BLOCK_SIZE
 from anisearch_model_spark.functions.normalize import positions_frame
-from anisearch_model_spark.index.build import UNSCOPED_FIELD
+from anisearch_model_spark.index.build import BLOCK_SCHEMA, UNSCOPED_FIELD
 
+# the phrase scorer's projection of the block table
 POSITIONS_SCHEMA = (
     "term string, bucket int, field string, block_id int, n int, "
     "first_doc_id long, last_doc_id long, "
     "doc_deltas binary, tfs binary, dls binary, pos_deltas binary"
 )
 
-# written position blocks carry the three posting-only metadata columns
-# too, so the postings table derives from the positions table by a pure
-# columnar copy (index/build.write_buckets) — one tokenize pass for both
-# tables.  Phrase readers of POSITIONS_SCHEMA never project the extras.
-POSITIONS_FULL_SCHEMA = POSITIONS_SCHEMA + ", cf long, max_tf int, min_dl int"
-
-_POSITION_COLS = [
-    "term", "bucket", "field", "block_id", "n", "first_doc_id", "last_doc_id",
-    "doc_deltas", "tfs", "dls", "pos_deltas", "cf", "max_tf", "min_dl",
-]
+_BLOCK_COLS = [c.split()[0] for c in BLOCK_SCHEMA.split(", ")]
 
 
 def _encode_ranges(values: np.ndarray, starts: np.ndarray, ends: np.ndarray,
@@ -103,11 +81,11 @@ def encode_positions_bucket(pdf: pd.DataFrame,
                             block_size: int = POSTING_BLOCK_SIZE,
                             codec: str = "varint") -> pd.DataFrame:
     """One bucket's occurrence frame (doc_id, term, pos, doc_len, bucket)
-    → position-block rows.  Blocks split every ``block_size`` DOCS per
-    term — the same split rule as the posting blocks — via numpy segment
-    arithmetic over the whole bucket (no per-term Python loop)."""
+    → block rows (index/build.BLOCK_SCHEMA).  Blocks split every
+    ``block_size`` DOCS per term via numpy segment arithmetic over the
+    whole bucket (no per-term Python loop)."""
     if len(pdf) == 0:
-        return pd.DataFrame(columns=_POSITION_COLS)
+        return pd.DataFrame(columns=_BLOCK_COLS)
     bucket = int(pdf["bucket"].iloc[0])
     doc = pdf["doc_id"].to_numpy(np.int64)
     pos = pdf["pos"].to_numpy(np.int64)
@@ -167,9 +145,9 @@ def encode_positions_bucket(pdf: pd.DataFrame,
     occ_block_end = occ_bounds[bend]
 
     # posting-block metadata from the SAME group arrays the buffers encode
-    # (tf_per_group ≡ the tf column of the posting build, g_dl ≡ dl), so
-    # the fused build's derived postings are value-identical to a direct
-    # encode_bucket_frame pass — same reduceat over the same sequences
+    # (tf_per_group ≡ the tf column of a tf frame, g_dl ≡ dl), so the BM25
+    # columns are value-identical to a direct codec.encode_bucket_frame
+    # pass — same reduceat over the same sequences
     return pd.DataFrame(
         {
             "term": block_term,
@@ -189,13 +167,13 @@ def encode_positions_bucket(pdf: pd.DataFrame,
             "max_tf": np.maximum.reduceat(tf_per_group, bstart).astype(np.int32),
             "min_dl": np.minimum.reduceat(g_dl, bstart).astype(np.int32),
         }
-    )[_POSITION_COLS]
+    )[_BLOCK_COLS]
 
 
 def decode_positions_block(
     row,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """One position-block row → (doc_ids, tfs, dls, flat_positions).
+    """One block row → (doc_ids, tfs, dls, flat_positions).
 
     ``flat_positions`` is occurrence-level, doc-major; split boundaries
     are ``cumsum(tfs)``.  All segment arithmetic, no per-doc loop."""
@@ -221,12 +199,9 @@ def decode_positions_block(
 def fused_tokenize_positions(docs_bucketed: DataFrame,
                              field_col: str | None = None,
                              codec: str = "varint") -> DataFrame:
-    """Tokenize + position-encode each doc-range partition in ONE
-    ``mapInPandas`` pass (every bucket whole within one partition, zero
-    shuffle, only compressed blocks cross Arrow).  The blocks carry the
-    posting-only metadata (cf, max_tf, min_dl) too, so the postings table
-    derives from this one pass by a columnar copy
-    (index/build.write_buckets)."""
+    """Tokenize + encode each doc-range partition in ONE ``mapInPandas``
+    pass (every bucket whole within one partition, zero shuffle, only
+    compressed blocks cross Arrow) into ``BLOCK_SCHEMA`` rows."""
     sel = ["bucket", "doc_id", "text"] + ([field_col] if field_col else [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -242,123 +217,27 @@ def fused_tokenize_positions(docs_bucketed: DataFrame,
             occ["field"] = occ[field_col] if field_col else UNSCOPED_FIELD
             frames.append(occ)
         if not frames:
-            yield pd.DataFrame(columns=_POSITION_COLS)
+            yield pd.DataFrame(columns=_BLOCK_COLS)
             return
         all_occ = pd.concat(frames, ignore_index=True)
         outs = []
         for (_b, fld), grp in all_occ.groupby(["bucket", "field"], sort=True):
             enc = encode_positions_bucket(grp, codec=codec)
             enc["field"] = fld
-            outs.append(enc[_POSITION_COLS])
+            outs.append(enc[_BLOCK_COLS])
         yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-            columns=_POSITION_COLS
+            columns=_BLOCK_COLS
         )
 
     return docs_bucketed.select(*sel).mapInPandas(
-        run, schema=POSITIONS_FULL_SCHEMA)
-
-
-def _meta_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "positions_meta.json")
-
-
-def positions_meta(index_dir: str) -> dict | None:
-    path = _meta_path(index_dir)
-    if not os.path.exists(path):
-        return None
-    with open(path, encoding="utf-8") as f:
-        return json.load(f)
-
-
-def positions_ready(index_dir: str) -> tuple[bool, str]:
-    """(ready, reason) — positions are usable iff the meta stamp exists
-    and covers EXACTLY the committed manifest's bucket-id set with the
-    current tokenizer.  Every write path re-stamps after its manifest
-    commit, so drift means a write that skipped the stamp (recode_index,
-    or a crash between the commit and the stamp)."""
-    meta = positions_meta(index_dir)
-    if meta is None:
-        return False, "no positions built (run build_positions)"
-    if meta.get("tokenizer_version") != TOKENIZER_VERSION:
-        return False, "positions built with a different tokenizer version"
-    with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
-        manifest = json.load(f)
-    want = sorted(int(b) for b in manifest.get("buckets", {}))
-    have = sorted(int(b) for b in meta.get("buckets", []))
-    if want != have:
-        return False, (
-            "positions are stale: built over buckets "
-            f"{have[:5]}{'...' if len(have) > 5 else ''} but the manifest "
-            f"now lists {want[:5]}{'...' if len(want) > 5 else ''} — "
-            "run build_positions to repair them"
-        )
-    return True, ""
+        run, schema=BLOCK_SCHEMA)
 
 
 def build_positions(spark: SparkSession, index_dir: str) -> dict:
-    """Repair the positions table of the committed snapshot: tokenize
-    only manifest buckets that have doc_map rows but no
-    ``positions/bucket=N`` directory (every bucket after
-    ``recode_index``), with the build's kernel and the index's own codec
-    (stats.json — a bucket's positions and postings share one), then
-    stamp.  Every write path keeps positions in step itself, so on a
-    ready or merely unstamped index this is a re-stamp that builds 0
-    buckets.  Idempotent and resumable: the stamp (commit point) is
-    written LAST, after directories of bucket ids the manifest no longer
-    lists are removed."""
-    from anisearch_model_spark.index.build import write_bucket_partitions
-    from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
-
+    """No-op: every write path writes positions with the postings, so
+    there is never anything to build.  It stays because the benchmark
+    scripts still call it.  Returns ``{"buckets_built": 0,
+    "buckets_total": <manifest buckets>}``."""
     with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
-        manifest = json.load(f)
-    with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
-        stats = json.load(f)
-    field_col = stats.get("field_col")
-    codec = stats.get("codec", "varint")
-    buckets = sorted(int(b) for b in manifest.get("buckets", {}))
-    pos_root = os.path.join(index_dir, "positions")
-    doc_map_root = os.path.join(index_dir, "doc_map")
-    todo = [
-        b for b in buckets
-        if os.path.isdir(os.path.join(doc_map_root, f"bucket={b}"))
-        and not os.path.isdir(os.path.join(pos_root, f"bucket={b}"))
-    ]
-    if todo:
-        # a compacted bucket's doc_map dir can hold several files: cluster
-        # by bucket so the kernel sees every bucket whole
-        docs = (
-            spark.read.schema(BUCKETED_SCHEMA).parquet(doc_map_root)
-            .filter(F.col("bucket").isin(todo)).repartition("bucket")
-        )
-        write_bucket_partitions(
-            fused_tokenize_positions(docs, field_col=field_col, codec=codec),
-            pos_root)
-    stamp_positions_meta(index_dir, codec, buckets, field_col)
-    return {"buckets_built": len(todo), "buckets_total": len(buckets)}
-
-
-def stamp_positions_meta(index_dir: str, codec: str, buckets,
-                         field_col: str | None) -> None:
-    """Commit point of positions: drop superseded bucket dirs (ids not in
-    ``buckets``, the manifest's bucket ids) and atomically write the meta
-    stamp covering exactly ``buckets``.  Every write path calls it right
-    after its manifest commit; ``build_positions`` after its repair."""
-    import shutil
-
-    buckets = sorted(int(b) for b in buckets)
-    pos_root = os.path.join(index_dir, "positions")
-    keep = {f"bucket={b}" for b in buckets}
-    if os.path.isdir(pos_root):
-        for name in os.listdir(pos_root):
-            if name.startswith("bucket=") and name not in keep:
-                shutil.rmtree(os.path.join(pos_root, name), ignore_errors=True)
-    meta = {
-        "buckets": buckets,
-        "codec": codec,
-        "tokenizer_version": TOKENIZER_VERSION,
-        "field_col": field_col,
-    }
-    mpath = _meta_path(index_dir)
-    with open(mpath + ".tmp", "w", encoding="utf-8") as f:
-        json.dump(meta, f, indent=2, sort_keys=True)
-    os.replace(mpath + ".tmp", mpath)
+        n = len(json.load(f).get("buckets", {}))
+    return {"buckets_built": 0, "buckets_total": n}

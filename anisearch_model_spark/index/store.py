@@ -5,10 +5,10 @@ runtime jar is available offline in this sandbox; the write paths are
 structured so ``writeTo(...).append()`` is a config-only swap):
 
     <index_dir>/doc_map/            doc_id, conv_id, turn_idx, role, text, tool, ts
-    <index_dir>/postings/bucket=N/field=F/  posting blocks for doc-range
-                                    bucket N, field F ('*' when unqualified)
-    <index_dir>/positions/bucket=N/field=F/ position blocks (phrase search;
-                                    index/positions.py)
+    <index_dir>/postings/bucket=N/field=F/  blocks for doc-range bucket N,
+                                    field F ('*' when unqualified); each
+                                    row carries its position gaps too
+                                    (build.BLOCK_SCHEMA, index/positions.py)
     <index_dir>/dictionary/         term, field, df, cf  (from block metadata)
     <index_dir>/stats.json          n_docs, avgdl, tokenizer_version, k1, b,
                                     field_col + per-field {n_docs, avgdl}
@@ -21,9 +21,9 @@ Build shape (the scale story):
        (zipWithIndex semantics — no global sort; deterministic across
        cluster sizes AND runs, see docmap.py);
     2. ONE fused mapInPandas pass per partition (build.write_buckets):
-       tokenize + encode position blocks, then postings as their columnar
-       copy; bucket ≡ partition; ZERO shuffle of posting data, only
-       compressed blocks cross the Python/JVM boundary;
+       tokenize + encode blocks with their positions; bucket ≡ partition;
+       ZERO shuffle of posting data, only compressed blocks cross the
+       Python/JVM boundary;
     3. dictionary + corpus stats derived from block metadata (df = Σ n,
        cf = Σ tf per term; avgdl = Σ cf / N) — the corpus is tokenized
        exactly once per build.
@@ -56,8 +56,8 @@ from anisearch_model_spark.index.build import (
 )
 from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA, bucketed_corpus
 
-# bump when the on-disk posting-buffer layout changes incompatibly
-INDEX_FORMAT_VERSION = 2
+# bump when the on-disk block layout changes incompatibly
+INDEX_FORMAT_VERSION = 3
 
 CHECKPOINT_SCHEMA = (
     "bucket int, status string, postings_emitted long, bytes_compressed long, "
@@ -198,11 +198,10 @@ def finalize_metadata(spark: SparkSession, index_dir: str, n_docs: int,
         "field_col": field_col,
         "fields": fields,
         "codec": codec,
-        # format 2 = flag-prefixed posting buffers (b'V' varint / b'P'
-        # pfor).  IndexStore gates on this, so a legacy (unflagged) index
-        # fails loudly at OPEN time — never by probabilistically sniffing
-        # the first payload byte, whose value 0x56/0x50 a legacy varint
-        # buffer can legitimately start with
+        # format 3 = one block table: flag-prefixed buffers (b'V' varint
+        # / b'P' pfor) with pos_deltas in every postings row.  IndexStore
+        # refuses any other version at OPEN time, so an older index fails
+        # loudly instead of reading blocks that lack positions
         "index_format_version": INDEX_FORMAT_VERSION,
     }
     # atomic replace: a concurrent IndexStore open never sees a torn file
@@ -233,14 +232,14 @@ def build_index(
     ``codec``: posting-buffer value codec ("varint" | "pfor"); buffers are
     flag-prefixed, so mixed-codec indexes decode fine.
 
-    One tokenize pass (build.write_buckets) emits position blocks that
-    carry the posting metadata too; the postings table is their columnar
-    copy (pos_deltas never read — Parquet column pruning gives the
-    Lucene .doc/.pos file split for free).  Posting blocks are
-    byte-identical to ``codec.encode_bucket_frame`` over each (bucket,
-    field)'s tf rows (same group arrays, same reduceat — tests assert
-    it).  The run that completes the last bucket stamps the positions
-    commit point, so phrase search works as soon as the build returns.
+    One tokenize pass (build.write_buckets) writes each bucket's blocks
+    once, positions included; BM25 readers never read ``pos_deltas``
+    (Parquet column pruning gives the Lucene .doc/.pos file split for
+    free), so phrase search works as soon as the build returns.  Blocks
+    are byte-identical to ``positions.encode_positions_bucket`` over each
+    (bucket, field)'s occurrence rows (tests assert it).  The tokenize
+    and write time is reported as ``phases["positions_build"]``;
+    ``phases["postings_build"]`` stays 0.0 for reports that still read it.
     """
     params = params or BM25Params()
     os.makedirs(index_dir, exist_ok=True)
@@ -275,10 +274,8 @@ def build_index(
     counts = {int(b): c for b, (_o, c) in manifest["buckets"].items()}
     n_docs = sum(counts.values())
 
-    all_buckets = sorted(counts)
     done = completed_buckets(spark, index_dir)
-    remaining = [b for b in all_buckets if b not in done]
-    todo = remaining
+    todo = [b for b in sorted(counts) if b not in done]
     if fail_after_buckets is not None:
         todo = todo[:fail_after_buckets]
 
@@ -293,27 +290,16 @@ def build_index(
         sort_keys=True,
     )
     if todo:
-        pos_s, post_s = write_buckets(
-            spark, doc_map_path, todo, os.path.join(index_dir, "positions"),
-            os.path.join(index_dir, "postings"), field_col=field_col,
-            codec=codec)
-        phases["positions_build"] = round(pos_s, 2)
-        phases["postings_build"] = round(post_s, 2)
+        phases["positions_build"] = round(write_buckets(
+            spark, doc_map_path, todo, os.path.join(index_dir, "postings"),
+            field_col=field_col, codec=codec), 2)
+        phases["postings_build"] = 0.0
         tp = time.time()
         _write_checkpoints(spark, index_dir, todo, lineage)
         tp = _mark("checkpoints", tp)
         stats = finalize_metadata(spark, index_dir, n_docs, params, num_buckets,
                                   field_col=field_col, codec=codec)
         _mark("finalize", tp)
-        if len(todo) == len(remaining):
-            # positions commit point — only when this run covered every
-            # remaining bucket (a fail_after_buckets partial build leaves
-            # the stamp off; the resumed build stamps at ITS end)
-            from anisearch_model_spark.index.positions import (
-                stamp_positions_meta,
-            )
-
-            stamp_positions_meta(index_dir, codec, all_buckets, field_col)
     else:
         with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
             stats = json.load(f)

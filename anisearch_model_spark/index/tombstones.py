@@ -13,14 +13,13 @@ This is the Lucene live-docs model re-expressed for the bucketed layout:
 * ``purge_deleted`` (run standalone or by ``compact_index``) physically
   rewrites only the buckets whose doc-range contains a tombstone: their
   surviving doc_map rows go through the build's own kernel
-  (index/build.write_buckets), so the rewritten postings AND positions
-  are byte-identical to a fresh build of those rows; it re-derives
-  dictionary/stats, then clears the tombstone table.  The rewrite lands
-  under fresh bucket ids committed by one atomic manifest replace
-  (snapshot swap, index/compact.py) — concurrent readers see the
-  pre-purge or post-purge snapshot, never a half-rewritten bucket — and
-  the positions stamp is renewed right after that commit when positions
-  were ready before, so phrase search keeps working.
+  (index/compact.rewrite_buckets → index/build.write_buckets), so the
+  rewritten blocks, positions included, are byte-identical to a fresh
+  build of those rows; it re-derives dictionary/stats, then clears the
+  tombstone table.  The rewrite lands under fresh bucket ids committed
+  by one atomic manifest replace (snapshot swap, index/compact.py) —
+  concurrent readers see the pre-purge or post-purge snapshot, never a
+  half-rewritten bucket.
 
 Scale shape: the tombstone set is bounded by deletes SINCE THE LAST
 PURGE (it is cleared on purge), so the broadcast array and the
@@ -104,8 +103,7 @@ def clear_tombstones(index_dir: str) -> None:
 
 def purge_deleted(spark: SparkSession, index_dir: str,
                   params=None) -> dict:
-    """Physically remove tombstoned docs from doc_map, postings and
-    positions.
+    """Physically remove tombstoned docs from doc_map and postings.
 
     Rewrites ONLY affected buckets, via the SNAPSHOT swap
     (index/compact.py): each affected bucket's surviving content is
@@ -122,14 +120,10 @@ def purge_deleted(spark: SparkSession, index_dir: str,
     """
     import json
 
-    from pyspark.sql import functions as F
-
     from anisearch_model_spark.config import BM25Params
-    from anisearch_model_spark.index.build import write_buckets
     from anisearch_model_spark.index.compact import (
-        _STAGING, _commit_swap, _stage, recover_compaction)
+        recover_compaction, rewrite_buckets)
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
-    from anisearch_model_spark.index.positions import positions_ready
     from anisearch_model_spark.index.store import finalize_metadata
 
     params = params or BM25Params()
@@ -152,43 +146,11 @@ def purge_deleted(spark: SparkSession, index_dir: str,
         clear_tombstones(index_dir)  # ids outside every bucket: no-ops
         return {"purged_docs": 0, "buckets_rewritten": 0}
 
-    ready, _reason = positions_ready(index_dir)
     codec = stats.get("codec", "varint")
-    # fresh snapshot ids for the rewritten buckets: unlisted → invisible
-    # to concurrent readers until the single manifest commit below
-    next_id = max(int(b) for b in manifest["buckets"]) + 1
-    id_map = {old: next_id + i for i, old in enumerate(affected)}
-
     dead_df = spark.createDataFrame([(int(i),) for i in dead],
                                     TOMBSTONE_SCHEMA)
-    # id remap as a literal CASE chain (|affected| is small by purge's
-    # bounded-tombstones construction)
-    remap = F.col("bucket")
-    for old, new in id_map.items():
-        remap = F.when(F.col("bucket") == old, F.lit(new)).otherwise(remap)
-    doc_map = (
-        spark.read.schema(BUCKETED_SCHEMA)
-        .parquet(os.path.join(index_dir, "doc_map"))
-        .filter(F.col("bucket").isin(affected))
-        .join(F.broadcast(dead_df), "doc_id", "left_anti")
-        .withColumn("bucket", remap.cast("int"))
-        # one file per rewritten bucket, as write_buckets reads them
-        .repartition("bucket")
-    )
-    # phase 1: stage the surviving doc_map rows under the fresh ids, then
-    # tokenize them into staged positions + postings — sources live
-    _stage(index_dir, {"doc_map": doc_map})
-    staged = {t: os.path.join(index_dir, tmp) for t, tmp in _STAGING.items()}
-    write_buckets(spark, staged["doc_map"], sorted(id_map.values()),
-                  staged["positions"], staged["postings"],
-                  field_col=stats.get("field_col"), codec=codec)
-    # phases 2-4: adopt, COMMIT — one atomic manifest replace remaps
-    # every affected id to its rewritten successor; spans are unchanged
-    # (doc ids are never renumbered, so bucket-range pruning stays
-    # valid) — then drop the superseded source directories
-    for old, new in id_map.items():
-        manifest["buckets"][str(new)] = manifest["buckets"].pop(str(old))
-    _commit_swap(index_dir, manifest, affected, stats, ready)
+    rewrite_buckets(spark, index_dir, manifest, affected,
+                    stats.get("field_col"), codec, dead=dead_df)
 
     # true live-doc count (manifest ranges are id SPANS and stay as-is)
     n_docs = (

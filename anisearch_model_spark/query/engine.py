@@ -73,22 +73,13 @@ class IndexStore:
 
         got = self.stats.get("index_format_version")
         if got != INDEX_FORMAT_VERSION:
-            # version gate at OPEN time: a legacy varint buffer can start
-            # with 0x56/0x50 by chance, so the decoder's flag sniff alone
-            # cannot reliably reject pre-flag indexes — the stats marker
-            # can.  But a MISSING marker only means the index predates the
-            # stats stamp, and the flag-prefixed buffer layout predates it
-            # too: for those, sniff one posting buffer and accept if it
-            # carries a valid codec flag instead of forcing a rebuild of a
-            # byte-compatible index.
-            if got is None and self._sniff_flag_prefixed():
-                self.stats["index_format_version"] = INDEX_FORMAT_VERSION
-            else:
-                raise ValueError(
-                    f"index at {index_dir} has format version {got!r}, "
-                    f"engine requires {INDEX_FORMAT_VERSION} — rebuild the "
-                    f"index"
-                )
+            # version gate at OPEN time: a missing, older or unknown
+            # version never reads blocks that lack pos_deltas or flags
+            raise ValueError(
+                f"index at {index_dir} has format version {got!r}, "
+                f"engine requires {INDEX_FORMAT_VERSION} — rebuild the "
+                f"index"
+            )
         # snapshot integrity at OPEN time: every manifest-listed bucket
         # with docs must have its doc_map directory.  A missing one means
         # an interrupted maintenance run left the index mid-heal (e.g. a
@@ -110,49 +101,6 @@ class IndexStore:
                 f"index.compact.recover_compaction({index_dir!r}) (or any "
                 f"compact) from the maintenance process, then reopen"
             )
-
-    # sniff breadth: how many parquet files and how many blocks per file
-    # the missing-version fallback inspects before accepting an index
-    SNIFF_FILES = 4
-    SNIFF_BLOCKS = 16
-
-    def _sniff_flag_prefixed(self) -> bool:
-        """True iff EVERY sampled posting buffer — all three of
-        (doc_deltas, tfs, dls), across up to SNIFF_BLOCKS blocks in each
-        of up to SNIFF_FILES files — starts with a known codec flag byte.
-
-        This is the missing-version compatibility check (driver-side
-        pyarrow reads, no Spark job).  A single buffer's first byte is a
-        weak signal: a pre-flag legacy varint payload whose first delta
-        byte happens to be 0x56/0x50 would be silently mis-decoded.
-        Requiring a valid flag on 3 buffers × many blocks drives the
-        false-accept probability to ~(2/256)^(3·blocks) — effectively
-        zero — while still letting byte-compatible flag-era indexes that
-        merely predate the stats stamp open without a rebuild.  An empty
-        index (no blocks anywhere) is rejected: there is nothing to
-        verify, and forcing a rebuild of an empty index is free.
-        """
-        import glob
-
-        import pyarrow.parquet as pq
-
-        from anisearch_model_spark.index.codec import FLAG_PFOR, FLAG_VARINT
-
-        files = sorted(glob.glob(
-            os.path.join(self.index_dir, "postings", "**", "*.parquet"),
-            recursive=True,
-        ))
-        checked = 0
-        for path in files[: self.SNIFF_FILES]:
-            t = pq.read_table(path, columns=["doc_deltas", "tfs", "dls"])
-            n = min(len(t), self.SNIFF_BLOCKS)
-            for i in range(n):
-                for col in ("doc_deltas", "tfs", "dls"):
-                    buf = t.column(col)[i].as_py()
-                    if not buf or buf[:1] not in (FLAG_VARINT, FLAG_PFOR):
-                        return False
-                checked += 1
-        return checked > 0
 
     def clear_caches(self) -> None:
         """Drop every driver-side cache (df LRU, manifest, snapshot path

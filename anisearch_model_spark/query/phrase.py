@@ -1,4 +1,4 @@
-"""Exact-phrase top-k over the positional side table (index/positions.py).
+"""Exact-phrase top-k over the blocks' position column (index/positions.py).
 
 The reference cannot express phrases at all (dense cosine over whole
 descriptions, ``src/api.py:270-313``); this is the lexical-engine feature
@@ -17,7 +17,7 @@ its users gain.  Semantics:
   * ordering contract identical to the BM25 scorers: score DESC, doc_id
     ASC, dense 1-based rank.
 
-Scale shape: the positions scan is filtered to the phrase's terms
+Scale shape: the block scan is filtered to the phrase's terms
 (Parquet predicate pushdown) and prunes on the ``field`` partition; the
 match runs bucket-parallel (buckets are disjoint doc ranges) with numpy
 sorted-key searches inside ``applyInPandas`` — the per-bucket candidate
@@ -146,23 +146,14 @@ def _phrase_blocks(index: IndexStore, phrase_text: str, field: str | None,
     """(phrase terms, their position blocks) — the scan both phrase
     scorers group by bucket: term-IN pushdown, field partition pruning.
     The blocks are None when the phrase has no terms."""
-    from anisearch_model_spark.index.positions import (
-        POSITIONS_SCHEMA,
-        positions_ready,
-    )
+    from anisearch_model_spark.index.positions import POSITIONS_SCHEMA
 
-    ready, reason = positions_ready(index.index_dir)
-    if not ready:
-        raise ValueError(
-            f"phrase search unavailable for index at {index.index_dir}: "
-            f"{reason}"
-        )
     if slop < 0:
         raise ValueError("slop must be >= 0")
     terms = parse_phrase(phrase_text)
     if not terms:
         return terms, None
-    blocks = index._snapshot_read(POSITIONS_SCHEMA, "positions").filter(
+    blocks = index._snapshot_read(POSITIONS_SCHEMA, "postings").filter(
         F.col("term").isin(sorted(set(terms)))
     )
     if field is not None:

@@ -11,17 +11,16 @@ without touching completed buckets:
     2. new docs land in NEW buckets (ids continue after the existing
        manifest): their doc_map rows are written first, then the build's
        own kernel (index/build.write_buckets) tokenizes them once into
-       position blocks and copies postings out of those — appended
-       buckets never overlap existing partitions, and positions are
-       re-stamped right after the manifest commit when they were ready
-       before, so phrase search sees the new docs with no extra pass;
+       blocks that carry their positions — appended buckets never
+       overlap existing partitions, and phrase search sees the new docs
+       at the same manifest commit as BM25;
     3. dictionary + stats are re-derived from block metadata
        (finalize_metadata), so they equal a from-scratch build exactly.
 
 The streaming checkpointLocation makes completed batches replay-safe;
 within a batch every write is idempotent under replay:
 
-  * postings + positions: dynamic partition overwrite of that batch's
+  * postings: dynamic partition overwrite of that batch's
     bucket ids — replay recomputes the SAME ids (the manifest, the commit
     point, only advances after success) and overwrites in place;
   * doc_map: a REPAIR pass at batch start deletes bucket directories
@@ -45,10 +44,6 @@ from anisearch_model_spark.config import BM25Params
 from anisearch_model_spark.datagen import TRANSCRIPT_SCHEMA
 from anisearch_model_spark.index.build import write_buckets
 from anisearch_model_spark.index.docmap import bucketed_corpus
-from anisearch_model_spark.index.positions import (
-    positions_ready,
-    stamp_positions_meta,
-)
 from anisearch_model_spark.index.store import finalize_metadata
 
 
@@ -102,9 +97,7 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
 
     field_col = stats.get("field_col")
     codec = stats.get("codec", "varint")
-    ready, _reason = positions_ready(index_dir)
     write_buckets(spark, doc_map_root, [base + p for p in sorted(counts)],
-                  os.path.join(index_dir, "positions"),
                   os.path.join(index_dir, "postings"),
                   field_col=field_col, codec=codec)
 
@@ -117,8 +110,6 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
         buckets[str(base + pid)] = [n_existing + offsets[pid], counts[pid]]
     manifest["buckets"] = buckets
     _write_manifest(index_dir, manifest)
-    if ready:
-        stamp_positions_meta(index_dir, codec, buckets, field_col)
     finalize_metadata(
         spark, index_dir, n_existing + n_new, params,
         num_buckets=len(buckets), field_col=field_col, codec=codec,

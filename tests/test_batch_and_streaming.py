@@ -180,9 +180,9 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
     batch = spark.createDataFrame(full_pdf[full_pdf["conv_id"] >= cut], schema)
 
     # snapshot the commit point, run the batch, then roll the commit back
-    # — exactly the state a crash after doc_map/positions/postings writes
-    # leaves (the positions stamp follows the manifest commit)
-    commit_files = ["manifest.json", "stats.json", "positions_meta.json"]
+    # — exactly the state a crash after the doc_map and postings writes
+    # leaves
+    commit_files = ["manifest.json", "stats.json"]
     saved = {n: open(os.path.join(d, n)).read() for n in commit_files}
     _append_batch(spark, batch, d, BM25Params())
     for n, text in saved.items():
@@ -206,15 +206,12 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
         assert a["doc_id"].tolist() == b["doc_id"].tolist(), q
         np.testing.assert_allclose(a["score"], b["score"], atol=1e-9)
 
-    # positions: the replay re-stamped them, no orphan position blocks
-    # survived, and phrases match the from-scratch build bit for bit
+    # positions: the replayed blocks carry them, no positions table was
+    # written, and phrases match the from-scratch build bit for bit
     from anisearch_model_spark.functions.normalize import tokenize_series
-    from anisearch_model_spark.index.positions import (
-        build_positions, positions_ready)
     from anisearch_model_spark.query.phrase import phrase_topk
 
-    ok, reason = positions_ready(d)
-    assert ok, reason
+    assert not os.path.exists(os.path.join(d, "positions"))
     appended = full_pdf[full_pdf["conv_id"] >= cut]["text"]
     toks = [t for t in tokenize_series(appended.reset_index(drop=True))
             if len(t) >= 2]
@@ -224,7 +221,6 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
         assert len(b) and a["doc_id"].tolist() == b["doc_id"].tolist(), ph
         np.testing.assert_array_equal(a["score"].to_numpy(),
                                       b["score"].to_numpy())
-    assert build_positions(spark, d)["buckets_built"] == 0
 
 
 def test_windowed_stream_agg_with_watermark(spark, tmp_path):

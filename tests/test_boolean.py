@@ -155,6 +155,7 @@ def test_boolean_respects_tombstones(spark, tmp_path):
 def test_cli_info_and_recover(spark, tmp_path, capsys):
     """`info` and `recover` are sparkless metadata commands."""
     import json
+    import os
 
     from anisearch_model_spark.cli import main
     from anisearch_model_spark.datagen import TRANSCRIPT_SCHEMA
@@ -166,8 +167,10 @@ def test_cli_info_and_recover(spark, tmp_path, capsys):
     assert main(["info", "--index", d]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["n_docs"] == 1 and out["n_buckets"] == 1
-    # r6 fused build: positions are built and stamped by build_index
-    assert out["tombstones"] == 0 and out["positions"]["ready"] is True
+    # one block table: positions ride in postings/, nothing to report
+    assert out["tombstones"] == 0 and "positions" not in out
+    assert out["format_version"] == 3
+    assert not os.path.exists(os.path.join(d, "positions"))
     assert main(["recover", "--index", d]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["recovered"] is None

@@ -93,46 +93,47 @@ def test_pfor_width64_values_roundtrip():
 
 
 def test_index_store_format_version_gate(spark, tmp_path):
-    """stats.json version gate: a PRESENT-but-different version always
-    rejects; a MISSING version (index predates the stats stamp) falls
-    back to sniffing EVERY posting buffer (doc_deltas, tfs, dls) of the
-    sampled blocks for a codec flag byte and accepts a byte-compatible
-    flag-prefixed index instead of forcing a rebuild — but a single
-    unflagged buffer (a legacy payload whose doc_deltas merely START
-    with 0x56/0x50 by chance) must still reject."""
-    import glob, json, os
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    """stats.json version gate: the engine opens only its own format.  A
+    MISSING version, an older one or an unknown one fails at open with
+    "rebuild" — no buffer sniff, since a flag-prefixed index from before
+    the one block table has no ``pos_deltas`` in its postings."""
+    import json, os
     from anisearch_model_spark.datagen import gen_transcripts
-    from anisearch_model_spark.index.store import build_index
+    from anisearch_model_spark.index.store import (
+        INDEX_FORMAT_VERSION, build_index)
     from anisearch_model_spark.query.engine import IndexStore
 
     d = str(tmp_path / "ver_idx")
     build_index(spark, gen_transcripts(spark, 50, seed=3), d, num_buckets=2)
     IndexStore(spark, d)  # fresh build opens fine
-    stats = json.load(open(os.path.join(d, "stats.json")))
-    del stats["index_format_version"]  # pre-stamp but flag-prefixed index
-    json.dump(stats, open(os.path.join(d, "stats.json"), "w"))
-    IndexStore(spark, d)  # accepted via the flag-byte sniff
+    path = os.path.join(d, "stats.json")
+    stats = json.load(open(path))
+    assert stats["index_format_version"] == INDEX_FORMAT_VERSION
+    del stats["index_format_version"]  # pre-stamp index
+    json.dump(stats, open(path, "w"))
+    with pytest.raises(ValueError, match="format version None.*rebuild"):
+        IndexStore(spark, d)
     stats["index_format_version"] = "bogus-v0"  # genuinely incompatible
-    json.dump(stats, open(os.path.join(d, "stats.json"), "w"))
-    with pytest.raises(ValueError, match="format version"):
+    json.dump(stats, open(path, "w"))
+    with pytest.raises(ValueError, match="format version.*rebuild"):
         IndexStore(spark, d)
 
-    # strict sniff: strip the flag byte from ONE tfs buffer in the first
-    # sampled file — the legacy-false-accept shape (doc_deltas still
-    # flagged) — and the missing-version fallback must reject
-    del stats["index_format_version"]
-    json.dump(stats, open(os.path.join(d, "stats.json"), "w"))
-    path = sorted(glob.glob(
-        os.path.join(d, "postings", "**", "*.parquet"), recursive=True))[0]
-    t = pq.read_table(path)
-    tfs = t.column("tfs").to_pylist()
-    tfs[0] = b"\x01\x02\x03"  # raw legacy-style payload, no flag byte
-    cols = {name: (pa.array(tfs, type=pa.binary()) if name == "tfs"
-                   else t.column(name)) for name in t.column_names}
-    pq.write_table(pa.table(cols), path)
-    with pytest.raises(ValueError, match="format version"):
+
+def test_v2_index_refused_at_open(spark, tmp_path):
+    """A format-2 index (postings without ``pos_deltas``, positions in a
+    separate table) is refused at open with "rebuild"."""
+    import json, os
+    from anisearch_model_spark.datagen import gen_transcripts
+    from anisearch_model_spark.index.store import build_index
+    from anisearch_model_spark.query.engine import IndexStore
+
+    d = str(tmp_path / "v2_idx")
+    build_index(spark, gen_transcripts(spark, 50, seed=3), d, num_buckets=1)
+    path = os.path.join(d, "stats.json")
+    stats = json.load(open(path))
+    stats["index_format_version"] = 2
+    json.dump(stats, open(path, "w"))
+    with pytest.raises(ValueError, match="format version 2.*rebuild"):
         IndexStore(spark, d)
 
 

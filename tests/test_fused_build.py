@@ -1,12 +1,13 @@
-"""One build kernel (index/build.write_buckets): a single tokenize pass
-writes position blocks and copies postings out of them.  Every write path
-(build, append, purge) creates a bucket's postings this way and compaction
-and merge carry position blocks like posting blocks, so:
+"""One build kernel (index/build.write_buckets) and one block table: a
+single tokenize pass writes each bucket's blocks, positions included,
+under ``postings/``.  Every write path (build, append, purge, recode)
+creates a bucket's blocks this way and compaction and merge carry them,
+so:
 
-  * postings are byte-identical to ``encode_bucket_frame`` over each
-    (bucket, field)'s tf rows, and positions to ``encode_positions_bucket``
-    over its occurrence rows;
-  * positions stay ready after every write, with no ``build_positions``;
+  * block rows are byte-identical to ``encode_positions_bucket`` over
+    each (bucket, field)'s occurrence rows, and their BM25 projection to
+    ``encode_bucket_frame`` over its tf rows;
+  * no write path creates a ``positions/`` table or a positions stamp;
   * phrase results equal a fresh build of the same corpus, bit for bit.
 """
 
@@ -20,11 +21,10 @@ from pyspark.sql import functions as F
 
 from anisearch_model_spark.config import POSTING_BLOCK_SIZE
 from anisearch_model_spark.datagen import gen_transcripts
-from anisearch_model_spark.index.build import POSTINGS_SCHEMA, UNSCOPED_FIELD
-from anisearch_model_spark.index.positions import (
-    POSITIONS_SCHEMA,
-    build_positions,
-    positions_ready,
+from anisearch_model_spark.index.build import (
+    BLOCK_SCHEMA,
+    POSTINGS_SCHEMA,
+    UNSCOPED_FIELD,
 )
 from anisearch_model_spark.index.store import build_index
 
@@ -32,10 +32,7 @@ _POST_COLS = [
     "term", "bucket", "field", "block_id", "n", "cf", "first_doc_id",
     "last_doc_id", "max_tf", "min_dl", "doc_deltas", "tfs", "dls",
 ]
-_POS_COLS = [
-    "term", "bucket", "field", "block_id", "n", "first_doc_id",
-    "last_doc_id", "doc_deltas", "tfs", "dls", "pos_deltas",
-]
+_BLOCK_COLS = _POST_COLS + ["pos_deltas"]
 _SCHEMA = ("conv_id string, turn_idx int, role string, text string, "
            "tool string, ts timestamp")
 
@@ -67,8 +64,8 @@ def _table(spark, d, table, schema):
 
 
 def _reference_tables(spark, d):
-    """(postings, positions) re-encoded driver-side from the index's own
-    doc_map: per (bucket, field), ``encode_bucket_frame`` over
+    """(posting projection, block rows) re-encoded driver-side from the
+    index's own doc_map: per (bucket, field), ``encode_bucket_frame`` over
     ``term_frequency_frame`` and ``encode_positions_bucket`` over
     ``positions_frame`` — the byte-identity reference for the kernel."""
     from anisearch_model_spark.functions.normalize import (
@@ -84,7 +81,7 @@ def _reference_tables(spark, d):
     field_col, codec = stats.get("field_col"), stats.get("codec", "varint")
     dm = _table(spark, d, "doc_map", BUCKETED_SCHEMA).toPandas()
     dm["field"] = dm[field_col] if field_col else UNSCOPED_FIELD
-    post, pos = [], []
+    post, blocks = [], []
     for (b, fld), g in dm.groupby(["bucket", "field"], sort=True):
         ids, texts = g["doc_id"].reset_index(drop=True), g["text"].reset_index(
             drop=True)
@@ -93,17 +90,25 @@ def _reference_tables(spark, d):
         post += _canon_pdf(enc.assign(field=fld), _POST_COLS)
         occ = positions_frame(ids, texts).assign(bucket=b)
         penc = encode_positions_bucket(occ, codec=codec)
-        pos += _canon_pdf(penc.assign(field=fld), _POS_COLS)
-    return sorted(post), sorted(pos)
+        blocks += _canon_pdf(penc.assign(field=fld), _BLOCK_COLS)
+    return sorted(post), sorted(blocks)
+
+
+def _assert_one_table(d):
+    """The index has one block table: no positions table or stamp."""
+    assert not os.path.exists(os.path.join(d, "positions"))
+    assert not os.path.exists(os.path.join(d, "positions_meta.json"))
 
 
 def _assert_kernel_identical(spark, d):
-    """Stored postings and positions == the driver-side reference."""
-    ref_post, ref_pos = _reference_tables(spark, d)
+    """Stored block rows (and their BM25 projection) == the driver-side
+    reference."""
+    ref_post, ref_blocks = _reference_tables(spark, d)
     assert _canon(_table(spark, d, "postings", POSTINGS_SCHEMA),
                   _POST_COLS) == ref_post and ref_post
-    assert _canon(_table(spark, d, "positions", POSITIONS_SCHEMA),
-                  _POS_COLS) == ref_pos and ref_pos
+    assert _canon(_table(spark, d, "postings", BLOCK_SCHEMA),
+                  _BLOCK_COLS) == ref_blocks and ref_blocks
+    _assert_one_table(d)
 
 
 def _doc_keys(spark, d):
@@ -159,11 +164,10 @@ def _phrase_pages(spark, d, phrases, by_key):
 
 
 def _assert_in_step(spark, d, fresh, by_key=False):
-    """Positions were kept ready by the write itself; phrase pages and
-    decoded postings equal a fresh build of the same corpus (doc ids
-    compared directly, or by (conv_id, turn_idx) after a purge)."""
-    ok, reason = positions_ready(d)
-    assert ok, reason
+    """Phrase pages and decoded postings equal a fresh build of the same
+    corpus (doc ids compared directly, or by (conv_id, turn_idx) after a
+    purge), with one block table."""
+    _assert_one_table(d)
     phrases = _corpus_bigrams(spark, fresh)
     got = _phrase_pages(spark, d, phrases, by_key)
     want = _phrase_pages(spark, fresh, phrases, by_key)
@@ -171,72 +175,69 @@ def _assert_in_step(spark, d, fresh, by_key=False):
         assert gr == wr and gi == wi and len(gi), ph
         assert np.array_equal(gs, ws), ph
     assert _decoded_postings(spark, d) == _decoded_postings(spark, fresh)
-    assert build_positions(spark, d)["buckets_built"] == 0
 
 
 def test_fused_build_byte_identical(spark, tmp_path):
     tr = gen_transcripts(spark, 4000, seed=7)
     d = str(tmp_path / "new")
     build_index(spark, tr, d, num_buckets=4)
+    _assert_kernel_identical(spark, d)
 
-    # the build stamps the positions commit point itself ...
-    ok, reason = positions_ready(d)
-    assert ok, reason
-    # ... and a subsequent build_positions is a pure re-stamp, no tokenize
-    assert build_positions(spark, d)["buckets_built"] == 0
+
+def test_postings_rows_equal_block_reference(spark, tmp_path):
+    """Every stored ``postings/`` row of a field-qualified pfor build —
+    positions included — equals ``encode_positions_bucket`` over the
+    (bucket, field)'s occurrence rows, byte for byte."""
+    from anisearch_model_spark.index.codec import FLAG_PFOR
+
+    tr = gen_transcripts(spark, 1200, seed=13)
+    d = str(tmp_path / "fq")
+    build_index(spark, tr, d, num_buckets=2, field_col="role", codec="pfor")
+    rows = _table(spark, d, "postings", BLOCK_SCHEMA)
+    assert rows.select("field").distinct().count() >= 2
+    assert bytes(rows.limit(1).collect()[0]["pos_deltas"])[:1] == FLAG_PFOR
     _assert_kernel_identical(spark, d)
 
 
 def test_fused_build_partial_then_resume(spark, tmp_path):
-    """A fail_after_buckets crash leaves positions UNSTAMPED (phrase
-    search refuses); the resumed build completes the remaining buckets
-    and stamps — identical tables to a clean one-shot build."""
+    """A fail_after_buckets crash writes only the first buckets' blocks;
+    the resumed build completes the remaining buckets — block rows,
+    positions included, identical to a clean one-shot build."""
     tr = gen_transcripts(spark, 3000, seed=9)
     d = str(tmp_path / "crash")
     build_index(spark, tr, d, num_buckets=4, fail_after_buckets=2)
-    ok, _reason = positions_ready(d)
-    assert not ok
+    part = spark.read.schema(BLOCK_SCHEMA).parquet(f"{d}/postings")
+    assert sorted(r["bucket"] for r in
+                  part.select("bucket").distinct().collect()) == [0, 1]
     build_index(spark, tr, d, num_buckets=4)  # resume
-    ok, reason = positions_ready(d)
-    assert ok, reason
 
     ref = str(tmp_path / "ref")
     shutil.rmtree(ref, ignore_errors=True)
     build_index(spark, tr, ref, num_buckets=4)
-    a = _canon(spark.read.schema(POSTINGS_SCHEMA).parquet(
-        f"{d}/postings"), _POST_COLS)
-    b = _canon(spark.read.schema(POSTINGS_SCHEMA).parquet(
-        f"{ref}/postings"), _POST_COLS)
+    a = _canon(spark.read.schema(BLOCK_SCHEMA).parquet(
+        f"{d}/postings"), _BLOCK_COLS)
+    b = _canon(spark.read.schema(BLOCK_SCHEMA).parquet(
+        f"{ref}/postings"), _BLOCK_COLS)
     assert a == b and len(a) > 0
-    pa = _canon(spark.read.schema(POSITIONS_SCHEMA).parquet(
-        f"{d}/positions"), _POS_COLS)
-    pb = _canon(spark.read.schema(POSITIONS_SCHEMA).parquet(
-        f"{ref}/positions"), _POS_COLS)
-    assert pa == pb and len(pa) > 0
+    _assert_one_table(d)
 
 
 def test_fused_build_pfor_codec(spark, tmp_path):
-    """Codec parameter flows through the fused pass to BOTH tables, and
-    a positions repair re-encodes in the codec stats.json records."""
+    """The codec parameter flows through the fused pass to every buffer
+    of a block, positions included; ``build_positions`` is a no-op."""
     from anisearch_model_spark.index.codec import FLAG_PFOR
+    from anisearch_model_spark.index.positions import build_positions
 
     tr = gen_transcripts(spark, 1500, seed=11)
     d = str(tmp_path / "pfor")
     build_index(spark, tr, d, num_buckets=2, codec="pfor")
-    ok, reason = positions_ready(d)
-    assert ok, reason
-    post = spark.read.schema(POSTINGS_SCHEMA).parquet(f"{d}/postings")
-    row = post.limit(1).collect()[0]
-    assert bytes(row["doc_deltas"])[:1] == FLAG_PFOR
-    pos = spark.read.schema(POSITIONS_SCHEMA).parquet(f"{d}/positions")
-    prow = pos.limit(1).collect()[0]
-    assert bytes(prow["pos_deltas"])[:1] == FLAG_PFOR
-    want = _canon(pos, _POS_COLS)
-
-    shutil.rmtree(f"{d}/positions")
-    assert build_positions(spark, d)["buckets_built"] == 2
-    pos = spark.read.schema(POSITIONS_SCHEMA).parquet(f"{d}/positions")
-    assert _canon(pos, _POS_COLS) == want
+    blocks = spark.read.schema(BLOCK_SCHEMA).parquet(f"{d}/postings")
+    row = blocks.limit(1).collect()[0]
+    for col in ("doc_deltas", "tfs", "dls", "pos_deltas"):
+        assert bytes(row[col])[:1] == FLAG_PFOR, col
+    assert build_positions(spark, d) == {"buckets_built": 0,
+                                         "buckets_total": 2}
+    _assert_one_table(d)
 
 
 @pytest.fixture(scope="module")
@@ -313,16 +314,14 @@ def test_merge_keeps_positions_in_step(spark, tmp_path):
 
 
 def test_crash_between_commit_and_stamp_heals(spark, tmp_path, monkeypatch):
-    """A crash after a compaction's manifest commit but before its
-    positions stamp leaves phrase search refusing with "stale";
-    build_positions heals it as a re-stamp (every bucket's positions were
-    already adopted) and phrase results are a fresh build's."""
-    import anisearch_model_spark.index.positions as positions_mod
+    """A crash after a compaction's manifest commit but before its old
+    bucket ids are dropped leaves superseded directories behind;
+    ``recover_compaction`` deletes them, and phrase and BMW results then
+    equal a fresh build's — there is no positions stamp to lose."""
+    import anisearch_model_spark.index.compact as compact_mod
     from anisearch_model_spark.config import BM25Params
     from anisearch_model_spark.datagen import gen_transcripts_pandas
-    from anisearch_model_spark.index.compact import compact_index
-    from anisearch_model_spark.query.engine import IndexStore
-    from anisearch_model_spark.query.phrase import phrase_match
+    from anisearch_model_spark.query.engine import IndexStore, topk_bmw
     from anisearch_model_spark.streaming.incremental import _append_batch
 
     full = gen_transcripts_pandas(900, seed=71)
@@ -335,20 +334,90 @@ def test_crash_between_commit_and_stamp_heals(spark, tmp_path, monkeypatch):
         part = full[(full["conv_id"] >= lo) & (full["conv_id"] < hi)]
         _append_batch(spark, spark.createDataFrame(part, _SCHEMA), d,
                       BM25Params())
+    before = set(os.listdir(f"{d}/postings"))
 
     def boom(*a, **k):
-        raise RuntimeError("simulated crash before the positions stamp")
+        raise RuntimeError("simulated crash after the manifest commit")
 
-    monkeypatch.setattr(positions_mod, "stamp_positions_meta", boom)
-    with pytest.raises(RuntimeError, match="positions stamp"):
-        compact_index(spark, d)
+    monkeypatch.setattr(compact_mod, "_drop_buckets", boom)
+    with pytest.raises(RuntimeError, match="manifest commit"):
+        compact_mod.compact_index(spark, d)
     monkeypatch.undo()
-    ok, reason = positions_ready(d)
-    assert not ok and "stale" in reason
-    with pytest.raises(ValueError, match="stale"):
-        phrase_match(IndexStore(spark, d), "hero battle")
+    live = {f"bucket={b}" for b in _live_buckets(d)}
+    assert live != before and before <= set(os.listdir(f"{d}/postings"))
 
-    assert build_positions(spark, d)["buckets_built"] == 0
+    assert compact_mod.recover_compaction(d) == "healed"
+    assert set(os.listdir(f"{d}/postings")) == live
     build_index(spark, spark.createDataFrame(full, _SCHEMA), fresh,
                 num_buckets=2)
     _assert_in_step(spark, d, fresh)
+    idx, ref = IndexStore(spark, d), IndexStore(spark, fresh)
+    for q in ("hero battle magic", "robot space"):
+        got = topk_bmw(idx, q, 10).toPandas()
+        want = topk_bmw(ref, q, 10).toPandas()
+        assert got["doc_id"].tolist() == want["doc_id"].tolist(), q
+        assert np.array_equal(got["score"].to_numpy(),
+                              want["score"].to_numpy()), q
+
+
+def test_recode_matches_fresh_build_in_codec(spark, tmp_path):
+    """recode_index goes through purge's rewrite: a varint index recoded
+    to pfor stores block rows byte-identical to a fresh pfor build, and
+    phrase results equal their pre-recode values with no repair."""
+    from anisearch_model_spark.index.compact import recode_index
+
+    tr = gen_transcripts(spark, 1200, seed=17)
+    d, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    build_index(spark, tr, d, num_buckets=3, field_col="role")
+    phrases = _corpus_bigrams(spark, d)
+    before = _phrase_pages(spark, d, phrases, by_key=False)
+    assert recode_index(spark, d, "pfor")["buckets_recoded"] == 3
+    after = _phrase_pages(spark, d, phrases, by_key=False)
+    for ph, (br, bi, bs), (ar, ai, as_) in zip(phrases, before, after):
+        assert br == ar and bi == ai and len(ai), ph
+        assert np.array_equal(bs, as_), ph
+    build_index(spark, tr, ref, num_buckets=3, field_col="role",
+                codec="pfor")
+    # bucket ids differ (recode writes under fresh ids): compare the rest
+    cols = [c for c in _BLOCK_COLS if c != "bucket"]
+    assert (_canon(_table(spark, d, "postings", BLOCK_SCHEMA), cols)
+            == _canon(_table(spark, ref, "postings", BLOCK_SCHEMA), cols))
+    _assert_one_table(d)
+
+
+def test_no_positions_table_after_any_write(spark, tmp_path):
+    """Build, append, purge, compact, recode and merge each leave one
+    block table: no ``positions/`` directory, no ``positions_meta.json``."""
+    from anisearch_model_spark.config import BM25Params
+    from anisearch_model_spark.datagen import gen_transcripts_pandas
+    from anisearch_model_spark.index.compact import compact_index, recode_index
+    from anisearch_model_spark.index.merge import merge_indexes
+    from anisearch_model_spark.index.tombstones import (
+        delete_conversations,
+        purge_deleted,
+    )
+    from anisearch_model_spark.streaming.incremental import _append_batch
+
+    full = gen_transcripts_pandas(600, seed=83)
+    convs = sorted(full["conv_id"].unique())
+    cut = convs[len(convs) // 2]
+    d, other = str(tmp_path / "idx"), str(tmp_path / "other")
+    build_index(spark, spark.createDataFrame(full[full["conv_id"] < cut],
+                                             _SCHEMA), d, num_buckets=2)
+    _assert_one_table(d)
+    _append_batch(spark, spark.createDataFrame(full[full["conv_id"] >= cut],
+                                               _SCHEMA), d, BM25Params())
+    _assert_one_table(d)
+    delete_conversations(spark, d, [convs[1]])
+    assert purge_deleted(spark, d)["buckets_rewritten"] >= 1
+    _assert_one_table(d)
+    assert compact_index(spark, d)["groups_rewritten"] >= 1
+    _assert_one_table(d)
+    recode_index(spark, d, "pfor")
+    _assert_one_table(d)
+    build_index(spark, gen_transcripts(spark, 200, seed=5).withColumn(
+        "conv_id", F.concat(F.lit("z-"), F.col("conv_id"))), other,
+        num_buckets=1)
+    merged = str(tmp_path / "merged")
+    merge_indexes(spark, [d, other], merged)
+    _assert_one_table(merged)

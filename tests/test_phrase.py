@@ -1,4 +1,4 @@
-"""Phrase search: positional side table + virtual-term BM25 scoring.
+"""Phrase search: the blocks' position column + virtual-term BM25 scoring.
 
 Contract (query/phrase.py): phrase terms adjacent in the POST-stopword
 token stream, ptf = occurrence count, score = BM25 of the phrase as one
@@ -12,10 +12,8 @@ from pyspark.sql import functions as F
 
 from anisearch_model_spark.config import BM25Params
 from anisearch_model_spark.index.positions import (
-    build_positions,
     decode_positions_block,
     encode_positions_bucket,
-    positions_ready,
 )
 from anisearch_model_spark.query.engine import IndexStore
 from anisearch_model_spark.query.oracle import OracleIndex
@@ -24,8 +22,7 @@ from anisearch_model_spark.query.phrase import parse_phrase, phrase_match, phras
 
 @pytest.fixture(scope="module")
 def pos_index(spark, index_dir):
-    """The shared test index with its positions table built."""
-    build_positions(spark, index_dir)
+    """The shared test index (its blocks carry positions)."""
     return IndexStore(spark, index_dir)
 
 
@@ -123,7 +120,6 @@ def test_phrase_stopword_elision(spark, tmp_path):
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     d = str(tmp_path / "idx")
     build_index(spark, tr, d, num_buckets=2)
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
     m = phrase_match(idx, "state of the art").toPandas().sort_values("doc_id")
     metas = (
@@ -148,7 +144,6 @@ def test_phrase_duplicate_terms(spark, tmp_path):
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     d = str(tmp_path / "idx")
     build_index(spark, tr, d, num_buckets=1)
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
     m = phrase_match(idx, "data big data").toPandas().sort_values("doc_id")
     docs = (
@@ -177,7 +172,6 @@ def test_phrase_respects_tombstones(spark, tmp_path):
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     d = str(tmp_path / "idx")
     build_index(spark, tr, d, num_buckets=1)
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
     pre = phrase_topk(idx, "alpha beta", k=10).toPandas()
     assert len(pre) == 4
@@ -191,10 +185,9 @@ def test_phrase_respects_tombstones(spark, tmp_path):
 
 
 def test_positions_staleness_gate(spark, tmp_path):
-    """Compaction carries position blocks and re-stamps: positions stay
-    ready and phrase results are unchanged.  recode_index renames every
-    bucket without re-encoding positions → phrase search REFUSES to run
-    on the stale positions snapshot; build_positions re-syncs it."""
+    """Compaction carries the blocks and recode_index re-tokenizes them:
+    phrase results are unchanged after each, with no repair step, because
+    a bucket's positions live in the same rows as its postings."""
     from anisearch_model_spark.datagen import gen_transcripts
     from anisearch_model_spark.index.compact import compact_index, recode_index
     from anisearch_model_spark.index.store import build_index
@@ -202,28 +195,18 @@ def test_positions_staleness_gate(spark, tmp_path):
     d = str(tmp_path / "idx")
     tr = gen_transcripts(spark, 400, seed=11)
     build_index(spark, tr, d, num_buckets=8)
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
-    ok, _ = positions_ready(d)
-    assert ok
     baseline = phrase_topk(idx, _first_bigram(idx), k=5).toPandas()
+    assert len(baseline)
     res = compact_index(spark, d, target_docs=400)
     assert res["groups_rewritten"] >= 1
-    ok, reason = positions_ready(d)
-    assert ok, reason
     after = phrase_topk(idx, _first_bigram(idx), k=5).toPandas()
     assert after["doc_id"].tolist() == baseline["doc_id"].tolist()
     assert after["score"].tolist() == baseline["score"].tolist()
 
     recode_index(spark, d, "pfor")
-    ok, reason = positions_ready(d)
-    assert not ok and "stale" in reason
-    with pytest.raises(ValueError, match="stale"):
-        phrase_match(idx, "anything here")
-    assert build_positions(spark, d)["buckets_built"] >= 1
-    ok, _ = positions_ready(d)
-    assert ok
-    after = phrase_topk(idx, _first_bigram(idx), k=5).toPandas()
+    after = phrase_topk(IndexStore(spark, d), _first_bigram(idx),
+                        k=5).toPandas()
     assert after["doc_id"].tolist() == baseline["doc_id"].tolist()
     assert after["score"].tolist() == baseline["score"].tolist()
 
@@ -239,12 +222,11 @@ def _first_bigram(idx) -> str:
 
 
 def test_serve_loop_phrase_requests(spark, tmp_path):
-    """serve mode routes {"phrase": true} to the positional scorer; a
-    phrase request against an index WITHOUT positions is a clean
-    per-request error (the loop survives), and results carry metadata."""
+    """serve mode routes {"phrase": true} to the positional scorer; an
+    invalid phrase request (negative slop) is a clean per-request error
+    (the loop survives), and results carry metadata."""
     import io
     import json as _json
-    import os
 
     from anisearch_model_spark.cli import serve_loop
     from anisearch_model_spark.datagen import TRANSCRIPT_SCHEMA
@@ -257,26 +239,19 @@ def test_serve_loop_phrase_requests(spark, tmp_path):
     ]
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     d = str(tmp_path / "idx")
-    # positions-less index: every build stamps positions, so the
-    # no-positions error path removes the stamp
     build_index(spark, tr, d, num_buckets=1)
-    os.remove(os.path.join(d, "positions_meta.json"))
 
     reqs = [
+        _json.dumps({"query": "alpha beta", "phrase": True, "slop": -1}),
         _json.dumps({"query": "alpha beta", "phrase": True, "k": 5}),
         "quit",
     ]
     out = io.StringIO()
-    serve_loop(spark, d, io.StringIO("\n".join(reqs)), out, log=False)
-    lines = [_json.loads(x) for x in out.getvalue().strip().splitlines()]
-    assert "error" in lines[0] and "positions" in lines[0]["error"]
-
-    build_positions(spark, d)
-    out = io.StringIO()
     served = serve_loop(spark, d, io.StringIO("\n".join(reqs)), out, log=False)
-    assert served == 1
+    assert served == 2
     lines = [_json.loads(x) for x in out.getvalue().strip().splitlines()]
-    res = lines[0]["results"]
+    assert "error" in lines[0] and "slop" in lines[0]["error"]
+    res = lines[1]["results"]
     assert {r["conv_id"] for r in res} == {"c0", "c2"}
     assert all("score" in r and "turn_idx" in r for r in res)
 
@@ -295,7 +270,6 @@ def test_phrase_field_scoped(spark, tmp_path):
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     d = str(tmp_path / "idx")
     build_index(spark, tr, d, num_buckets=1, field_col="role")
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
     roles = idx.doc_map.toPandas().set_index("doc_id")["role"]
     got = phrase_topk(idx, "alpha beta", k=10, field="assistant").toPandas()
@@ -319,7 +293,6 @@ def test_slop_hand_corpus(spark, tmp_path):
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     d = str(tmp_path / "idx")
     build_index(spark, tr, d, num_buckets=1)
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
     convs = idx.doc_map.toPandas().set_index("doc_id")["conv_id"]
 
@@ -344,7 +317,6 @@ def test_slop_ptf_counts_distinct_starts(spark, tmp_path):
     tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
     d = str(tmp_path / "idx")
     build_index(spark, tr, d, num_buckets=1)
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
     from anisearch_model_spark.query.phrase import phrase_match
 
@@ -383,55 +355,39 @@ def test_purge_invalidates_positions_and_resync_drops_purged_doc(
         spark, tmp_path):
     """The full delete lifecycle through PHRASE search: tombstoned docs
     are filtered immediately; a physical purge rewrites the affected
-    buckets' positions with their postings and re-stamps, so phrase
-    search keeps running and the purged doc is gone.  A stamp left over
-    from before the purge (its bucket set no longer matches the
-    manifest) makes phrase search REFUSE to run — a purged doc must
-    never resurface once the tombstones are cleared — and
-    build_positions re-syncs it without tokenizing anything."""
-    import shutil
-
+    buckets' blocks, positions included, so phrase search keeps running
+    and the purged doc never resurfaces once the tombstones are
+    cleared."""
     from anisearch_model_spark.datagen import gen_transcripts
     from anisearch_model_spark.index.store import build_index
     from anisearch_model_spark.index.tombstones import (
         delete_docs,
+        load_tombstones,
         purge_deleted,
     )
 
     d = str(tmp_path / "idx")
     tr = gen_transcripts(spark, 400, seed=11)
     build_index(spark, tr, d, num_buckets=8)
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
     phrase = _first_bigram(idx)
     pre = phrase_topk(idx, phrase, k=5).toPandas()
     assert len(pre)
     dead = int(pre["doc_id"].iloc[0])
     delete_docs(spark, d, [dead])
-    # tombstone filter: excluded immediately, positions still valid
+    # tombstone filter: excluded immediately
     mid = phrase_topk(idx, phrase, k=5).toPandas()
     assert dead not in set(mid["doc_id"])
-    meta = f"{d}/positions_meta.json"
-    shutil.copy(meta, f"{d}/pre_purge_meta.json")
     res = purge_deleted(spark, d)
     assert res["purged_docs"] == 1 and res["buckets_rewritten"] >= 1
-    ok, reason = positions_ready(d)
-    assert ok, reason
+    assert len(load_tombstones(d)) == 0
     idx2 = IndexStore(spark, d)
     post = phrase_topk(idx2, phrase, k=5).toPandas()
     assert dead not in set(post["doc_id"])
+    assert dead not in set(phrase_match(idx2, phrase).toPandas()["doc_id"])
     # survivors keep their relative order from the tombstone-filtered run
     assert post["doc_id"].tolist()[:len(mid)] == mid["doc_id"].tolist()[
         :len(post)]
-
-    shutil.copy(f"{d}/pre_purge_meta.json", meta)
-    ok, reason = positions_ready(d)
-    assert not ok and "stale" in reason
-    with pytest.raises(ValueError, match="stale"):
-        phrase_match(idx2, phrase)
-    assert build_positions(spark, d)["buckets_built"] == 0
-    again = phrase_topk(IndexStore(spark, d), phrase, k=5).toPandas()
-    pd.testing.assert_frame_equal(again, post)
 
 
 def test_phrase_topk_ties_across_buckets(spark, tmp_path):
@@ -449,7 +405,6 @@ def test_phrase_topk_ties_across_buckets(spark, tmp_path):
     d = str(tmp_path / "idx")
     build_index(spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA), d,
                 num_buckets=3)
-    build_positions(spark, d)
     idx = IndexStore(spark, d)
     docs = (idx.doc_map.select("doc_id", "text").toPandas()
             .sort_values("doc_id").reset_index(drop=True))

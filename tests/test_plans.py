@@ -149,13 +149,11 @@ def test_phrase_and_boolean_metadata_attach_is_local(spark, index_dir):
     """phrase_search and boolean_search share search()'s metadata attach
     (engine.attach_metadata): the returned frame is a LOCAL relation —
     no join, no exchange, no doc_map scan in its plan."""
-    from anisearch_model_spark.index.positions import build_positions
     from anisearch_model_spark.plans.inspect import formatted_plan
     from anisearch_model_spark.query.boolean import boolean_search
     from anisearch_model_spark.query.engine import IndexStore
     from anisearch_model_spark.query.phrase import phrase_search
 
-    build_positions(spark, index_dir)
     idx = IndexStore(spark, index_dir)
     for q in (phrase_search(idx, "hero battle", k=5),
               boolean_search(idx, "+hero battle -dragon", k=5)):

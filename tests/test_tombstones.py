@@ -167,15 +167,13 @@ def test_lifecycle_field_qualified_append_delete_purge_compact(spark, tmp_path):
     assert idx3.stats["n_docs"] == 1199
     assert topk_bmw(idx3, q, 5, field="user").count() == 5
 
-    # every write kept positions in step: field-scoped phrase search runs
-    # with no repair pass and sees only live docs of that field
+    # every write carried positions in its blocks: field-scoped phrase
+    # search runs with no repair pass and sees only live docs of that
+    # field, and no positions table was ever written
     from anisearch_model_spark.functions.normalize import tokenize_series
-    from anisearch_model_spark.index.positions import (
-        build_positions, positions_ready)
     from anisearch_model_spark.query.phrase import phrase_topk
 
-    ok, reason = positions_ready(d)
-    assert ok, reason
+    assert not os.path.exists(os.path.join(d, "positions"))
     dm = idx3.doc_map.select("doc_id", "role", "text").toPandas()
     toks = tokenize_series(dm[dm["role"] == "user"]["text"].reset_index(
         drop=True))
@@ -184,7 +182,6 @@ def test_lifecycle_field_qualified_append_delete_purge_compact(spark, tmp_path):
     roles = dm.set_index("doc_id")["role"]
     assert len(got) and victim not in set(got["doc_id"])
     assert all(roles[i] == "user" for i in got["doc_id"])
-    assert build_positions(spark, d)["buckets_built"] == 0
 
 
 def test_purge_only_rewrites_affected_buckets(spark, tmp_path):
