@@ -96,6 +96,7 @@ def index_info(index_dir: str) -> dict:
     O(deletes since purge) by design)."""
     import os
 
+    from anisearch_model_spark.index.store import dictionary_deltas
     from anisearch_model_spark.index.tombstones import load_tombstones
 
     with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
@@ -112,6 +113,8 @@ def index_info(index_dir: str) -> dict:
         "tokenizer_version": stats.get("tokenizer_version"),
         "n_buckets": len(manifest.get("buckets", {})),
         "tombstones": int(len(load_tombstones(index_dir))),
+        # append delta files in dictionary/ since the last full re-derive
+        "dictionary_deltas": len(dictionary_deltas(index_dir)),
     }
 
 

@@ -148,6 +148,9 @@ def rewrite_buckets(spark: SparkSession, index_dir: str, manifest: dict,
     adopt, commit ``manifest`` with every affected id remapped to its
     successor (same doc-id span — ids are never renumbered, so bucket
     range pruning stays valid) and drop the superseded directories.
+    An affected bucket with no surviving rows leaves the manifest: it
+    has no doc_map dir, which ``IndexStore`` refuses for a listed
+    bucket with a non-zero span.
     The rewritten blocks are byte-identical to a fresh build of the
     surviving rows.  Sources stay live until the commit."""
     from anisearch_model_spark.index.build import write_buckets
@@ -171,8 +174,11 @@ def rewrite_buckets(spark: SparkSession, index_dir: str, manifest: dict,
                   sorted(id_map.values()),
                   os.path.join(index_dir, _STAGING["postings"]),
                   field_col=field_col, codec=codec)
+    staged = os.path.join(index_dir, _STAGING["doc_map"])
     for old, new in id_map.items():
-        manifest["buckets"][str(new)] = manifest["buckets"].pop(str(old))
+        span = manifest["buckets"].pop(str(old))
+        if os.path.isdir(os.path.join(staged, f"bucket={new}")):
+            manifest["buckets"][str(new)] = span
     _commit_swap(index_dir, manifest, affected)
 
 
@@ -249,7 +255,8 @@ def compact_index(spark: SparkSession, index_dir: str,
     """
     from anisearch_model_spark.index.build import BLOCK_SCHEMA
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
-    from anisearch_model_spark.index.store import finalize_metadata
+    from anisearch_model_spark.index.store import (
+        dictionary_deltas, finalize_metadata)
 
     params = params or BM25Params()
     healed = recover_compaction(index_dir)  # heal an interrupted prior run
@@ -320,16 +327,19 @@ def compact_index(spark: SparkSession, index_dir: str,
                 for b in merged_ids]
         spark.createDataFrame(rows, CHECKPOINT_SCHEMA).write.mode(
             "append").parquet(os.path.join(index_dir, "checkpoints"))
-    if rewrite or healed:
+    deltas = dictionary_deltas(index_dir)
+    if rewrite or healed or deltas:
         # merges are pure concatenation — the dictionary provably cannot
         # change, so skip its rewrite (no postings pass, and concurrent
         # readers keep an untouched dictionary dir).  After a HEAL the
         # interrupted run may have been a purge, whose dictionary/stats
-        # refresh might not have landed — re-derive fully then.
+        # refresh might not have landed — re-derive fully then; and
+        # re-derive when appends left delta files, so a compacted index
+        # has none.
         finalize_metadata(
             spark, index_dir, n_docs, params, num_buckets=len(buckets),
             field_col=stats.get("field_col"), codec=stats.get("codec", "varint"),
-            rewrite_dictionary=bool(healed),
+            rewrite_dictionary=bool(healed or deltas),
         )
     return {
         "buckets_before": before,

@@ -66,11 +66,14 @@ _MAX_EXPR_BOUNDS = 512
 _INPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
-def _boundaries(transcripts: DataFrame, num_buckets: int) -> list[tuple[str, int]]:
-    """num_buckets-1 deterministic split keys (ascending)."""
+def _boundaries(transcripts: DataFrame, num_buckets: int,
+                total: int | None = None) -> list[tuple[str, int]]:
+    """num_buckets-1 deterministic split keys (ascending); ``total`` is
+    the row count when the caller already has it."""
     if num_buckets <= 1:
         return []
-    total = transcripts.count()
+    if total is None:
+        total = transcripts.count()
     target_sample = _SAMPLE_PER_BUCKET * num_buckets
     k = max(1, total // max(target_sample, 1))
     sampled = (
@@ -165,7 +168,7 @@ def _with_bucket(df: DataFrame, bounds: list[tuple[str, int]],
 
 
 def bucketed_corpus(
-    transcripts: DataFrame, num_buckets: int
+    transcripts: DataFrame, num_buckets: int, total: int | None = None
 ) -> tuple[DataFrame, dict[int, int], dict[int, int]]:
     """→ (bucketed+doc_id'd DataFrame, offsets, counts).
 
@@ -174,16 +177,23 @@ def bucketed_corpus(
     with doc_id = global rank.  NOT persisted — the plan is one
     column-pruned scan + one shuffle; callers that consume it more than
     once persist it themselves (``_cached_parent`` is set to None for
-    caller compatibility)."""
-    bounds = _boundaries(transcripts, num_buckets)
+    caller compatibility).
+
+    ``total``: the input's row count when the caller already has it —
+    the boundary sample then skips its count, and an input that lands in
+    one bucket (no boundaries) needs no counting pass at all."""
+    bounds = _boundaries(transcripts, num_buckets, total)
 
     # per-bucket counts: map-side partial aggregate over the two key
     # columns only — the corpus text never moves for the counting pass
-    counts = {
-        int(r["bucket"]): r["cnt"]
-        for r in _with_bucket(transcripts, bounds, ["conv_id", "turn_idx"])
-        .groupBy("bucket").agg(F.count("*").alias("cnt")).collect()
-    }
+    if not bounds and total is not None:
+        counts = {0: int(total)}
+    else:
+        counts = {
+            int(r["bucket"]): r["cnt"]
+            for r in _with_bucket(transcripts, bounds, ["conv_id", "turn_idx"])
+            .groupBy("bucket").agg(F.count("*").alias("cnt")).collect()
+        }
     for b in range(num_buckets):
         counts.setdefault(b, 0)
     offsets, acc = {}, 0

@@ -9,7 +9,12 @@ structured so ``writeTo(...).append()`` is a config-only swap):
                                     field F ('*' when unqualified); each
                                     row carries its position gaps too
                                     (build.BLOCK_SCHEMA, index/positions.py)
-    <index_dir>/dictionary/         term, field, df, cf  (from block metadata)
+    <index_dir>/dictionary/         term, field, df, cf  (from block metadata):
+                                    the base files of the last full
+                                    re-derive plus one delta-b<N>.parquet
+                                    per append since (N = the append's
+                                    first bucket); a (term, field)'s
+                                    df/cf is the SUM over every row here
     <index_dir>/stats.json          n_docs, avgdl, tokenizer_version, k1, b,
                                     field_col + per-field {n_docs, avgdl}
     <index_dir>/manifest.json       bucket → [first_doc_id, count) ranges
@@ -26,7 +31,10 @@ Build shape (the scale story):
        Python/JVM boundary;
     3. dictionary + corpus stats derived from block metadata (df = Σ n,
        cf = Σ tf per term; avgdl = Σ cf / N) — the corpus is tokenized
-       exactly once per build.
+       exactly once per build.  An append commits a dictionary delta
+       instead (streaming/incremental.py); every full re-derive
+       (build, purge, merge, and compact when deltas exist) overwrites
+       dictionary/ and so folds the deltas back in.
 
 Resumability (north rule): each doc-range bucket is the unit of restart.
 ``build_index`` consults the checkpoint table, plans ONLY missing buckets
@@ -122,12 +130,78 @@ def _write_checkpoints(spark: SparkSession, index_dir: str, buckets: list[int],
     )
 
 
+DELTA_PREFIX = "delta-b"  # dictionary/delta-b<first bucket>.parquet
+
+
+def dictionary_deltas(index_dir: str) -> list[str]:
+    """Names of the append delta files in ``dictionary/`` (sorted)."""
+    droot = os.path.join(index_dir, "dictionary")
+    if not os.path.isdir(droot):
+        return []
+    return sorted(fn for fn in os.listdir(droot)
+                  if fn.startswith(DELTA_PREFIX) and fn.endswith(".parquet"))
+
+
+def write_stats(index_dir: str, n_docs: int, n_convs: int,
+                total_tokens: int, field_docs: dict, field_tokens: dict,
+                params: BM25Params, num_buckets: int,
+                field_col: str | None, codec: str) -> dict:
+    """Write stats.json (atomic replace) from exact integer totals and
+    return it.  ``field_docs``/``field_tokens``: field value → doc count
+    / token count; a field gets an entry when it has docs.  The one
+    stats writer — the full re-derive (``finalize_metadata``) and the
+    append commit produce the same file from the same totals."""
+    fields = {
+        str(f): {
+            "n_docs": int(nd),
+            "avgdl": (float(field_tokens.get(f, 0)) / nd) if nd else 0.0,
+        }
+        for f, nd in field_docs.items() if f is not None
+    }
+    stats = {
+        "n_docs": int(n_docs),
+        "n_convs": int(n_convs),
+        "avgdl": (float(total_tokens) / n_docs) if n_docs else 0.0,
+        "tokenizer_version": TOKENIZER_VERSION,
+        "k1": params.k1,
+        "b": params.b,
+        "num_buckets": num_buckets,
+        "field_col": field_col,
+        "fields": fields,
+        "codec": codec,
+        # format 3 = one block table: flag-prefixed buffers (b'V' varint
+        # / b'P' pfor) with pos_deltas in every postings row.  IndexStore
+        # refuses any other version at OPEN time, so an older index fails
+        # loudly instead of reading blocks that lack positions
+        "index_format_version": INDEX_FORMAT_VERSION,
+    }
+    # atomic replace: a concurrent IndexStore open never sees a torn file
+    spath = os.path.join(index_dir, "stats.json")
+    with open(spath + ".tmp", "w", encoding="utf-8") as f:
+        json.dump(stats, f, indent=2, sort_keys=True)
+    os.replace(spath + ".tmp", spath)
+    return stats
+
+
+def token_total(avgdl: float, n_docs: int) -> int:
+    """The integer token total a stats.json ``avgdl`` was computed from
+    (``avgdl = total / n_docs``).  Exact below 2**51 tokens: the float
+    division and the product each round by at most half an ulp, so the
+    product lies within total × 2**-52 < 0.5 of the integer."""
+    return round(float(avgdl) * int(n_docs))
+
+
 def finalize_metadata(spark: SparkSession, index_dir: str, n_docs: int,
                       params: BM25Params, num_buckets: int,
                       field_col: str | None = None,
                       codec: str = "varint",
                       rewrite_dictionary: bool = True) -> dict:
-    """(Re)derive dictionary + stats from the postings store.
+    """(Re)derive dictionary + stats from the postings store — the FULL
+    re-derive (build, purge, merge; compact when append deltas exist).
+    Its overwrite of ``dictionary/`` folds every append delta file back
+    into the base files.  Appends do not call it: they commit a
+    dictionary delta and exact stats arithmetic over the batch alone
+    (streaming/incremental.py), which equal this re-derive.
 
     With ``field_col``, stats.json additionally records per-field
     {n_docs, avgdl} so field-scoped queries score against the field's own
@@ -139,7 +213,8 @@ def finalize_metadata(spark: SparkSession, index_dir: str, n_docs: int,
     merges buckets by pure concatenation and provably cannot change any
     term's df/cf: skipping saves a full postings pass AND keeps the
     dictionary directory untouched while concurrent readers query it
-    (the in-place overwrite is the one non-atomic step left)."""
+    (the in-place overwrite is the one non-atomic step left).  The
+    aggregates sum every row, so delta files count as they should."""
     dict_path = os.path.join(index_dir, "dictionary")
     if rewrite_dictionary:
         postings = spark.read.schema(POSTINGS_SCHEMA).parquet(
@@ -168,7 +243,8 @@ def finalize_metadata(spark: SparkSession, index_dir: str, n_docs: int,
     # stamping it here makes n_entities() O(1) at query time instead of a
     # per-store distinct-count over the doc_map
     n_convs = doc_map.select("conv_id").distinct().count()
-    fields: dict[str, dict] = {}
+    doc_counts: dict = {}
+    tok_counts: dict = {}
     if field_col:
         doc_counts = {
             r[field_col]: r["n"]
@@ -180,36 +256,8 @@ def finalize_metadata(spark: SparkSession, index_dir: str, n_docs: int,
             for r in spark.read.schema(DICTIONARY_SCHEMA).parquet(dict_path)
             .groupBy("field").agg(F.sum("cf").alias("s")).collect()
         }
-        fields = {
-            str(f): {
-                "n_docs": int(nd),
-                "avgdl": (float(tok_counts.get(f, 0)) / nd) if nd else 0.0,
-            }
-            for f, nd in doc_counts.items() if f is not None
-        }
-    stats = {
-        "n_docs": int(n_docs),
-        "n_convs": int(n_convs),
-        "avgdl": (float(total_tokens) / n_docs) if n_docs else 0.0,
-        "tokenizer_version": TOKENIZER_VERSION,
-        "k1": params.k1,
-        "b": params.b,
-        "num_buckets": num_buckets,
-        "field_col": field_col,
-        "fields": fields,
-        "codec": codec,
-        # format 3 = one block table: flag-prefixed buffers (b'V' varint
-        # / b'P' pfor) with pos_deltas in every postings row.  IndexStore
-        # refuses any other version at OPEN time, so an older index fails
-        # loudly instead of reading blocks that lack positions
-        "index_format_version": INDEX_FORMAT_VERSION,
-    }
-    # atomic replace: a concurrent IndexStore open never sees a torn file
-    spath = os.path.join(index_dir, "stats.json")
-    with open(spath + ".tmp", "w", encoding="utf-8") as f:
-        json.dump(stats, f, indent=2, sort_keys=True)
-    os.replace(spath + ".tmp", spath)
-    return stats
+    return write_stats(index_dir, n_docs, n_convs, total_tokens, doc_counts,
+                       tok_counts, params, num_buckets, field_col, codec)
 
 
 def build_index(

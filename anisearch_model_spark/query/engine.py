@@ -67,8 +67,10 @@ class IndexStore:
         self._dict_ranges: list[tuple[str | None, str | None, str]] | None = None
         self._dict_ranges_mtime: float | None = None
         self._n_entities: int | None = None  # conversation count (BM25F N)
-        with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
-            self.stats = json.load(f)
+        self._stats: dict | None = None
+        self._stats_mtime: float | None = None
+        # dictionary dir mtime the df LRU was filled under
+        self._df_mtime: float | None = None
         from anisearch_model_spark.index.store import INDEX_FORMAT_VERSION
 
         got = self.stats.get("index_format_version")
@@ -110,6 +112,7 @@ class IndexStore:
         Everything reloads lazily on the next query; results are
         unaffected (the caches are mtime-validated anyway)."""
         self._df_cache.clear()
+        self._df_mtime = None
         self._manifest_cache = None
         self._manifest_mtime = None
         self._snapshot_paths.clear()
@@ -119,17 +122,32 @@ class IndexStore:
         self._dict_ranges_mtime = None
         self._n_entities = None
 
+    @property
+    def stats(self) -> dict:
+        """stats.json (corpus N, avgdl, per-field stats), re-read when its
+        mtime changes: every commit (append, purge, compact) replaces it
+        atomically, and a long-lived reader must score with the N and
+        avgdl of the snapshot it scans, like the manifest below."""
+        spath = os.path.join(self.index_dir, "stats.json")
+        mtime = os.path.getmtime(spath)
+        if self._stats is None or mtime != self._stats_mtime:
+            with open(spath, encoding="utf-8") as f:
+                self._stats = json.load(f)
+            self._stats_mtime = mtime
+            self._n_entities = None
+        return self._stats
+
     def n_entities(self) -> int:
         """Number of conversations in the corpus (BM25F's entity-level N,
         query/bm25f.py).  Fast path: the build stamps ``n_convs`` into
         stats.json (finalize_metadata); indexes predating the stamp fall
         back to one column-pruned distinct-count over the doc_map, cached
-        for the life of the store (compaction/purge never change the
-        conversation set, and deletes intentionally don't shift corpus
-        stats until purge — the same contract as n_docs/avgdl)."""
-        cached = getattr(self, "_n_entities", None)
+        until stats.json changes (deletes intentionally don't shift
+        corpus stats until purge — the same contract as n_docs/avgdl)."""
+        stats = self.stats  # a changed stats.json resets the count
+        cached = self._n_entities
         if cached is None:
-            n = self.stats.get("n_convs")
+            n = stats.get("n_convs")
             if n is None:
                 n = self.doc_map.select("conv_id").distinct().count()
             self._n_entities = cached = int(n)
@@ -153,8 +171,24 @@ class IndexStore:
         OOM, while a per-query lookup reads ≤ |query terms| covering
         files/row groups on either path.  Hot terms stay cached across
         queries, and absent terms are negative-cached so repeated misses
-        cost nothing.
+        cost nothing.  The cache is dropped when ``dictionary/``'s mtime
+        changes (an append adds a delta file, a re-derive rewrites it).
+
+        Contract: a (term, field)'s df is the SUM over every dictionary
+        row for it — the base files of the last full re-derive plus one
+        delta file per append since (index/store.py layout).  Every
+        dictionary reader aggregates this way (both paths here,
+        ``expand_prefixes``, ``expand_fuzzy``, spell suggestions and
+        ``finalize_metadata``'s totals), so an append never rewrites the
+        base files.
         """
+        try:
+            mtime = os.path.getmtime(os.path.join(self.index_dir, "dictionary"))
+        except OSError:  # mid-overwrite: a full re-derive recreates it
+            mtime = None
+        if mtime is None or mtime != self._df_mtime:
+            self._df_cache.clear()
+            self._df_mtime = mtime
         missing = [t for t in terms if (field, t) not in self._df_cache]
         if missing:
             found = self._term_dfs_local(missing, field)

@@ -196,6 +196,14 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
     assert dm["doc_id"].is_unique, "orphan doc_map rows survived replay"
     assert len(dm) == len(full_pdf) == idx.stats["n_docs"]
 
+    # the replay overwrote its own dictionary delta: one file, and the
+    # summed dictionary and stats equal a full re-derive
+    from anisearch_model_spark.index.store import dictionary_deltas
+    from tests.test_append_commit import _assert_commit_equals_rederive
+
+    assert len(dictionary_deltas(d)) == 1
+    _assert_commit_equals_rederive(spark, d, str(tmp_path / "crash_ref"))
+
     # and the replayed index equals a from-scratch build
     d_full = str(tmp_path / "crash_full")
     build_index(spark, spark.createDataFrame(full_pdf, schema), d_full, num_buckets=3)

@@ -175,6 +175,24 @@ def test_cli_info_and_recover(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["recovered"] is None
 
+    # an append commits one dictionary delta file; compact folds it
+    from anisearch_model_spark.config import BM25Params
+    from anisearch_model_spark.index.compact import compact_index
+    from anisearch_model_spark.streaming.incremental import _append_batch
+
+    def deltas():
+        assert main(["info", "--index", d]) == 0
+        return json.loads(
+            capsys.readouterr().out.strip().splitlines()[-1])["dictionary_deltas"]
+
+    assert deltas() == 0
+    _append_batch(spark, spark.createDataFrame(
+        [("c1", 0, "user", "gamma beta", None, None)], TRANSCRIPT_SCHEMA),
+        d, BM25Params())
+    assert deltas() == 1
+    compact_index(spark, d)
+    assert deltas() == 0
+
 
 @pytest.fixture(scope="module")
 def pat(spark, tmp_path_factory):

@@ -146,6 +146,8 @@ def test_lifecycle_field_qualified_append_delete_purge_compact(spark, tmp_path):
     q = "hero battle magic"
     top_user = topk_bmw(idx, q, 5, field="user").toPandas()
     victim = int(top_user.loc[0, "doc_id"])
+    # read before the compact: a store's stats follow every commit
+    user_docs = idx.stats["fields"]["user"]["n_docs"]
     delete_docs(spark, d, [victim])
     out = compact_index(spark, d)  # purge + merge in one maintenance op
     assert out["purged_docs"] == 1
@@ -153,8 +155,7 @@ def test_lifecycle_field_qualified_append_delete_purge_compact(spark, tmp_path):
     idx2 = IndexStore(spark, d)
     assert idx2.stats["n_docs"] == 999
     # per-field stats re-derived: the victim was a user-field doc
-    assert idx2.stats["fields"]["user"]["n_docs"] == \
-        idx.stats["fields"]["user"]["n_docs"] - 1
+    assert idx2.stats["fields"]["user"]["n_docs"] == user_docs - 1
     for f in ("user", "assistant", None):
         got = topk_bmw(idx2, q, 5, field=f).toPandas()
         assert victim not in set(got["doc_id"]), f
