@@ -879,8 +879,8 @@ def main(argv: list[str] | None = None) -> int:
         elif args.cmd == "append":
             from anisearch_model_spark.streaming.incremental import incremental_append
 
-            incremental_append(spark, args.stream_dir, args.index)
-            print(json.dumps({"status": "appended"}))
+            print(json.dumps(incremental_append(spark, args.stream_dir,
+                                                args.index)))
         elif args.cmd == "merge":
             from anisearch_model_spark.index.merge import merge_indexes
 

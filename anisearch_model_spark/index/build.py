@@ -79,7 +79,9 @@ def write_buckets(spark: SparkSession, doc_map_root: str, buckets: list[int],
     file is a partition, so the kernel sees whole buckets and no posting
     data is shuffled.  The JVM side of the pass
     is a light parquet decode, which keeps the cores free for the Python
-    tokenize+encode workers."""
+    tokenize+encode workers.  Each partition runs
+    ``positions.tokenize_encode``, the kernel the append's driver path
+    (streaming/incremental.py) also calls on a one-bucket batch."""
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
     from anisearch_model_spark.index.positions import fused_tokenize_positions
 

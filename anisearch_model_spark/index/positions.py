@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -196,38 +196,55 @@ def decode_positions_block(
     return doc_ids, tfs, dls, cs - base
 
 
+def tokenize_encode(batches: Iterable[pd.DataFrame],
+                    field_col: str | None = None,
+                    codec: str = "varint") -> pd.DataFrame:
+    """The bucket kernel: doc_map frames (``bucket``, ``doc_id``,
+    ``text`` [+ ``field_col``]) → their ``BLOCK_SCHEMA`` rows, one
+    ``encode_positions_bucket`` pass per (bucket, field).
+
+    The one tokenize+encode function of every write path: executors run
+    it inside ``fused_tokenize_positions``' ``mapInPandas``, and the
+    append's driver path (streaming/incremental.py) runs it on its
+    collected micro-batch, so the two produce the same blocks by
+    construction.  Memory: the batches' rows plus their occurrence frame
+    (one row per kept token) and the encoded blocks."""
+    frames: list[pd.DataFrame] = []
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        occ = positions_frame(pdf["doc_id"], pdf["text"])
+        meta_cols = ["doc_id", "bucket"] + ([field_col] if field_col else [])
+        occ = occ.merge(
+            pdf[meta_cols].drop_duplicates("doc_id"), on="doc_id", how="left"
+        )
+        occ["field"] = occ[field_col] if field_col else UNSCOPED_FIELD
+        frames.append(occ)
+    if not frames:
+        return pd.DataFrame(columns=_BLOCK_COLS)
+    all_occ = pd.concat(frames, ignore_index=True)
+    outs = []
+    for (_b, fld), grp in all_occ.groupby(["bucket", "field"], sort=True):
+        enc = encode_positions_bucket(grp, codec=codec)
+        enc["field"] = fld
+        outs.append(enc[_BLOCK_COLS])
+    return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
+        columns=_BLOCK_COLS
+    )
+
+
 def fused_tokenize_positions(docs_bucketed: DataFrame,
                              field_col: str | None = None,
                              codec: str = "varint") -> DataFrame:
     """Tokenize + encode each doc-range partition in ONE ``mapInPandas``
     pass (every bucket whole within one partition, zero shuffle, only
-    compressed blocks cross Arrow) into ``BLOCK_SCHEMA`` rows."""
+    compressed blocks cross Arrow) into ``BLOCK_SCHEMA`` rows.  The
+    per-partition work is ``tokenize_encode``, the same function the
+    append's driver path calls."""
     sel = ["bucket", "doc_id", "text"] + ([field_col] if field_col else [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames: list[pd.DataFrame] = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            occ = positions_frame(pdf["doc_id"], pdf["text"])
-            meta_cols = ["doc_id", "bucket"] + ([field_col] if field_col else [])
-            occ = occ.merge(
-                pdf[meta_cols].drop_duplicates("doc_id"), on="doc_id", how="left"
-            )
-            occ["field"] = occ[field_col] if field_col else UNSCOPED_FIELD
-            frames.append(occ)
-        if not frames:
-            yield pd.DataFrame(columns=_BLOCK_COLS)
-            return
-        all_occ = pd.concat(frames, ignore_index=True)
-        outs = []
-        for (_b, fld), grp in all_occ.groupby(["bucket", "field"], sort=True):
-            enc = encode_positions_bucket(grp, codec=codec)
-            enc["field"] = fld
-            outs.append(enc[_BLOCK_COLS])
-        yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-            columns=_BLOCK_COLS
-        )
+        yield tokenize_encode(batches, field_col, codec)
 
     return docs_bucketed.select(*sel).mapInPandas(
         run, schema=BLOCK_SCHEMA)

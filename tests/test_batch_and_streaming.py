@@ -162,7 +162,17 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
     """A crash between the doc_map append and the manifest commit leaves
     orphan doc_map bucket dirs; the repair pass at batch start must delete
     them so the foreachBatch REPLAY converges to exactly the clean state
-    (no duplicate doc_ids fanning out in search()'s metadata join)."""
+    (no duplicate doc_ids fanning out in search()'s metadata join).  Runs
+    on both append paths: the second half of the conversations onto a
+    three-bucket base spans three buckets (the cluster path); the last
+    third onto a one-bucket base fits one bucket (the driver path)."""
+    for num_buckets, cut_at, path in ((3, 1 / 2, "cluster"),
+                                      (1, 2 / 3, "driver")):
+        _replay_after_midbatch_crash(spark, tmp_path / path, num_buckets,
+                                     cut_at, path)
+
+
+def _replay_after_midbatch_crash(spark, tmp_path, num_buckets, cut_at, path):
     import json, os
     from anisearch_model_spark.datagen import gen_transcripts_pandas
     from anisearch_model_spark.index.store import build_index
@@ -172,11 +182,11 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
 
     full_pdf = gen_transcripts_pandas(1200, seed=33)
     convs = sorted(full_pdf["conv_id"].unique())
-    cut = convs[len(convs) // 2]
+    cut = convs[int(len(convs) * cut_at)]
     schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     d = str(tmp_path / "crash_idx")
     build_index(spark, spark.createDataFrame(full_pdf[full_pdf["conv_id"] < cut], schema),
-                d, num_buckets=3)
+                d, num_buckets=num_buckets)
     batch = spark.createDataFrame(full_pdf[full_pdf["conv_id"] >= cut], schema)
 
     # snapshot the commit point, run the batch, then roll the commit back
@@ -184,12 +194,12 @@ def test_append_replay_after_midbatch_crash_is_idempotent(spark, tmp_path):
     # leaves
     commit_files = ["manifest.json", "stats.json"]
     saved = {n: open(os.path.join(d, n)).read() for n in commit_files}
-    _append_batch(spark, batch, d, BM25Params())
+    assert _append_batch(spark, batch, d, BM25Params())[0] == path
     for n, text in saved.items():
         open(os.path.join(d, n), "w").write(text)
 
     # replay (what foreachBatch does after restart)
-    _append_batch(spark, batch, d, BM25Params())
+    assert _append_batch(spark, batch, d, BM25Params())[0] == path
 
     idx = IndexStore(spark, d)
     dm = idx.doc_map.select("doc_id").toPandas()
