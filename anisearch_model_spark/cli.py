@@ -107,7 +107,9 @@ def index_info(index_dir: str) -> dict:
         "index_dir": index_dir,
         "n_docs": stats.get("n_docs"),
         "avgdl": stats.get("avgdl"),
-        "codec": stats.get("codec"),
+        # absent since varint became the only codec; an older index that
+        # recorded another one is refused at open, and info still says so
+        "codec": stats.get("codec", "varint"),
         "field_col": stats.get("field_col"),
         "format_version": stats.get("index_format_version"),
         "tokenizer_version": stats.get("tokenizer_version"),
@@ -644,11 +646,6 @@ def main(argv: list[str] | None = None) -> int:
                                        "purge tombstoned docs")
     c.add_argument("--index", required=True)
     c.add_argument("--target-docs", type=int, default=None)
-    c.add_argument("--codec", default=None, choices=["varint", "pfor"],
-                   help="also re-encode every posting buffer to this codec "
-                        "(build encode-fast with varint, serve decode-fast "
-                        "with pfor: ~1.8x faster decode in the query hot "
-                        "loop)")
 
     d = sub.add_parser("delete", help="tombstone docs (takedown/purge): "
                                       "queries exclude them immediately; "
@@ -667,7 +664,7 @@ def main(argv: list[str] | None = None) -> int:
     g.add_argument("--seed", type=int, default=42)
 
     i = sub.add_parser("info", help="index health snapshot: corpus stats, "
-                                    "manifest buckets, codec, tombstones "
+                                    "manifest buckets, tombstones "
                                     "— one JSON line, no Spark jobs")
     i.add_argument("--index", required=True)
 
@@ -886,14 +883,10 @@ def main(argv: list[str] | None = None) -> int:
 
             print(json.dumps(merge_indexes(spark, args.src, args.out)))
         elif args.cmd == "compact":
-            from anisearch_model_spark.index.compact import (
-                compact_index, recode_index)
+            from anisearch_model_spark.index.compact import compact_index
 
-            out = compact_index(spark, args.index,
-                                target_docs=args.target_docs)
-            if args.codec:
-                out.update(recode_index(spark, args.index, args.codec))
-            print(json.dumps(out))
+            print(json.dumps(compact_index(spark, args.index,
+                                           target_docs=args.target_docs)))
         elif args.cmd == "delete":
             from anisearch_model_spark.index.tombstones import (
                 delete_conversations, delete_docs, purge_deleted)

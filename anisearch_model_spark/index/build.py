@@ -17,8 +17,8 @@ with compressed posting lists and is designed for 10^12 turns:
     pruning never touches ``pos_deltas``; phrase search reads the
     positions projection of the same files (the columnar inverted-index
     layout of "Columnar Formatted Inverted Index for Highly-Paralleled,
-    Vectorized Query Processing", ICDE 2025).  Build, append, purge and
-    recode all write a bucket's blocks this way;
+    Vectorized Query Processing", ICDE 2025).  Build, append and purge
+    all write a bucket's blocks this way;
   * **skew defusal**: a hot term (Zipf head) would make a naive
     ``groupBy(term)`` one-reducer-hot.  Doc-range bucketing IS the salt:
     every term's postings split uniformly across buckets, and because
@@ -66,8 +66,8 @@ DICTIONARY_SCHEMA = "term string, field string, df long, cf long"
 
 
 def write_buckets(spark: SparkSession, doc_map_root: str, buckets: list[int],
-                  postings_root: str, field_col: str | None = None,
-                  codec: str = "varint") -> float:
+                  postings_root: str, field_col: str | None = None
+                  ) -> float:
     """Tokenize doc_map ``buckets`` once and write their blocks
     (``BLOCK_SCHEMA`` rows) under ``postings_root``, partitioned by
     (bucket, field) and replacing exactly the partitions it produces
@@ -92,7 +92,7 @@ def write_buckets(spark: SparkSession, doc_map_root: str, buckets: list[int],
         docs = spark.read.schema(BUCKETED_SCHEMA).parquet(doc_map_root)
         (
             fused_tokenize_positions(docs.filter(F.col("bucket").isin(buckets)),
-                                     field_col=field_col, codec=codec)
+                                     field_col=field_col)
             .write.mode("overwrite")
             .partitionBy("bucket", "field")
             .option("partitionOverwriteMode", "dynamic")

@@ -139,12 +139,12 @@ def _commit_swap(index_dir: str, manifest: dict, old_ids: list[int]) -> None:
 
 
 def rewrite_buckets(spark: SparkSession, index_dir: str, manifest: dict,
-                    affected: list[int], field_col: str | None, codec: str,
+                    affected: list[int], field_col: str | None,
                     dead: DataFrame | None = None) -> None:
     """Snapshot-swap rewrite of the ``affected`` buckets through the
-    build's own kernel (purge and recode): stage their doc_map rows,
-    minus the ``dead`` doc ids, under fresh bucket ids, tokenize them
-    into staged blocks in ``codec`` (index/build.write_buckets), then
+    build's own kernel (purge): stage their doc_map rows, minus the
+    ``dead`` doc ids, under fresh bucket ids, tokenize them into staged
+    blocks (index/build.write_buckets), then
     adopt, commit ``manifest`` with every affected id remapped to its
     successor (same doc-id span — ids are never renumbered, so bucket
     range pruning stays valid) and drop the superseded directories.
@@ -173,7 +173,7 @@ def rewrite_buckets(spark: SparkSession, index_dir: str, manifest: dict,
     write_buckets(spark, os.path.join(index_dir, _STAGING["doc_map"]),
                   sorted(id_map.values()),
                   os.path.join(index_dir, _STAGING["postings"]),
-                  field_col=field_col, codec=codec)
+                  field_col=field_col)
     staged = os.path.join(index_dir, _STAGING["doc_map"])
     for old, new in id_map.items():
         span = manifest["buckets"].pop(str(old))
@@ -256,9 +256,10 @@ def compact_index(spark: SparkSession, index_dir: str,
     from anisearch_model_spark.index.build import BLOCK_SCHEMA
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
     from anisearch_model_spark.index.store import (
-        dictionary_deltas, finalize_metadata)
+        dictionary_deltas, finalize_metadata, load_stats)
 
     params = params or BM25Params()
+    load_stats(index_dir)  # refuse an older format before any write
     healed = recover_compaction(index_dir)  # heal an interrupted prior run
     # physically drop tombstoned docs first: merged buckets then never
     # carry dead postings forward (tombstones.py owns the rewrite)
@@ -267,8 +268,7 @@ def compact_index(spark: SparkSession, index_dir: str,
     purge = purge_deleted(spark, index_dir, params=params)
     with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
         manifest = json.load(f)
-    with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
-        stats = json.load(f)
+    stats = load_stats(index_dir)
     buckets = manifest["buckets"]
     # manifest counts are doc-id SPAN widths (a purge removes docs without
     # renumbering ids) — live doc count comes from stats, which
@@ -338,7 +338,7 @@ def compact_index(spark: SparkSession, index_dir: str,
         # has none.
         finalize_metadata(
             spark, index_dir, n_docs, params, num_buckets=len(buckets),
-            field_col=stats.get("field_col"), codec=stats.get("codec", "varint"),
+            field_col=stats.get("field_col"),
             rewrite_dictionary=bool(healed or deltas),
         )
     return {
@@ -348,38 +348,3 @@ def compact_index(spark: SparkSession, index_dir: str,
         "purged_docs": purge["purged_docs"],
     }
 
-
-def recode_index(spark: SparkSession, index_dir: str, codec: str,
-                 params: BM25Params | None = None) -> dict:
-    """Re-encode every block to ``codec`` (e.g. a varint-built index →
-    PFor for serving: pfor decodes ~1.8× faster and decode dominates the
-    query hot loop — build encode-fast, serve decode-fast).
-
-    Purge's rewrite (``rewrite_buckets``) over every bucket, dropping no
-    docs (tombstones stay in force): the doc_map rows are re-tokenized
-    under fresh bucket ids, so the result is byte-identical to a fresh
-    ``build_index`` in that codec, positions included, and one atomic
-    manifest replace commits.  Rank identity is a theorem (the codec is a
-    lossless container for the same integers) and is asserted by tests.
-    Returns {buckets_recoded, codec}.
-    """
-    from anisearch_model_spark.index.store import finalize_metadata
-
-    params = params or BM25Params()
-    recover_compaction(index_dir)
-    with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
-        manifest = json.load(f)
-    with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
-        stats = json.load(f)
-    old_ids = sorted(int(b) for b in manifest["buckets"])
-    if not old_ids:
-        return {"buckets_recoded": 0, "codec": codec}
-    rewrite_buckets(spark, index_dir, manifest, old_ids,
-                    stats.get("field_col"), codec)
-    finalize_metadata(
-        spark, index_dir, int(stats["n_docs"]), params,
-        num_buckets=len(manifest["buckets"]),
-        field_col=stats.get("field_col"), codec=codec,
-        rewrite_dictionary=False,
-    )
-    return {"buckets_recoded": len(old_ids), "codec": codec}

@@ -5,7 +5,7 @@ Multi-source pipelines at 100 TB build per-source indexes in parallel
 the end.  Rebuilding from the union corpus re-tokenizes everything;
 merging re-bases metadata instead:
 
-  * blocks store doc ids as ``first_doc_id`` + varint/pfor DELTAS —
+  * blocks store doc ids as ``first_doc_id`` + varint DELTAS —
     shifting a whole index's doc-id space is adding one offset to two
     int64 columns per block; the compressed delta and position buffers
     pass through BYTE-IDENTICAL, never decoded, so phrase search works on
@@ -43,12 +43,13 @@ from anisearch_model_spark.config import BM25Params
 def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
                   params: BM25Params | None = None) -> dict:
     """Merge ``src_dirs`` (≥ 2 built indexes) into a new index at
-    ``out_dir``.  Sources must share tokenizer_version, format version,
-    and field_col; codecs may differ (blocks are flag-prefixed and
-    self-describing).  Returns merge metrics."""
+    ``out_dir``.  Every source must be in the current format
+    (``load_stats``) and share tokenizer_version and field_col.
+    Returns merge metrics."""
     from anisearch_model_spark.index.build import BLOCK_SCHEMA
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
-    from anisearch_model_spark.index.store import finalize_metadata
+    from anisearch_model_spark.index.store import (
+        finalize_metadata, load_stats)
     from anisearch_model_spark.index.tombstones import (
         delete_docs, load_tombstones)
 
@@ -59,17 +60,15 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
     t0 = time.time()
     stats_all, manifests = [], []
     for d in src_dirs:
-        with open(os.path.join(d, "stats.json"), encoding="utf-8") as f:
-            stats_all.append(json.load(f))
+        stats_all.append(load_stats(d))
         with open(os.path.join(d, "manifest.json"), encoding="utf-8") as f:
             manifests.append(json.load(f))
-    for key in ("tokenizer_version", "index_format_version", "field_col"):
+    for key in ("tokenizer_version", "field_col"):
         vals = {json.dumps(s.get(key)) for s in stats_all}
         if len(vals) > 1:
             raise ValueError(f"sources disagree on {key}: {sorted(vals)} — "
                              f"merging would corrupt the contract")
     field_col = stats_all[0].get("field_col")
-    codec = stats_all[0].get("codec", "varint")
     params = params or BM25Params()
 
     # doc-id offsets: source i shifts by the ID SPAN of everything before
@@ -142,7 +141,7 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], out_dir: str,
     # writes stats.json LAST — the commit point an IndexStore opens on
     finalize_metadata(spark, out_dir, total, params,
                       num_buckets=len(merged_buckets),
-                      field_col=field_col, codec=codec)
+                      field_col=field_col)
     carried = 0
     for d, base in zip(src_dirs, bases):
         tomb = load_tombstones(d)

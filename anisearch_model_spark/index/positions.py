@@ -28,7 +28,7 @@ Scale shape (this IS the main build's kernel, index/build.py):
 
 Maintenance interplay: there is nothing to keep in step.  A bucket's
 positions live in the same rows as its postings, so every write path
-(build, append, purge, recode, compaction, merge) that commits a
+(build, append, purge, compaction, merge) that commits a
 bucket's postings commits its positions, and phrase search sees the
 same manifest snapshot as BM25.
 """
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from anisearch_model_spark.config import POSTING_BLOCK_SIZE
 from anisearch_model_spark.functions.normalize import positions_frame
 from anisearch_model_spark.index.build import BLOCK_SCHEMA, UNSCOPED_FIELD
+from anisearch_model_spark.index.codec import decode_values, encode_ranges
 
 # the phrase scorer's projection of the block table
 POSITIONS_SCHEMA = (
@@ -57,29 +58,9 @@ POSITIONS_SCHEMA = (
 _BLOCK_COLS = [c.split()[0] for c in BLOCK_SCHEMA.split(", ")]
 
 
-def _encode_ranges(values: np.ndarray, starts: np.ndarray, ends: np.ndarray,
-                   codec: str) -> list[bytes]:
-    """Per-block buffers for ``values`` sliced at [starts, ends) — one
-    vectorized whole-bucket varint pass sliced by byte offsets (the same
-    trick as codec.encode_bucket_frame), or per-block pfor packs."""
-    from anisearch_model_spark.index.codec import (
-        FLAG_VARINT,
-        pfor_encode,
-        varint_encode_packed,
-    )
-
-    v = values.astype(np.uint64)
-    if codec == "pfor":
-        return [pfor_encode(v[a:b]) for a, b in zip(starts, ends)]
-    buf, lens = varint_encode_packed(v)
-    off = np.concatenate([[0], np.cumsum(lens)])
-    mv = memoryview(buf)
-    return [FLAG_VARINT + bytes(mv[off[a]: off[b]]) for a, b in zip(starts, ends)]
-
-
 def encode_positions_bucket(pdf: pd.DataFrame,
-                            block_size: int = POSTING_BLOCK_SIZE,
-                            codec: str = "varint") -> pd.DataFrame:
+                            block_size: int = POSTING_BLOCK_SIZE
+                            ) -> pd.DataFrame:
     """One bucket's occurrence frame (doc_id, term, pos, doc_len, bucket)
     → block rows (index/build.BLOCK_SCHEMA).  Blocks split every
     ``block_size`` DOCS per term via numpy segment arithmetic over the
@@ -157,12 +138,11 @@ def encode_positions_bucket(pdf: pd.DataFrame,
             "n": n_per_block,
             "first_doc_id": first_doc,
             "last_doc_id": last_doc,
-            "doc_deltas": _encode_ranges(doc_gaps, gap_starts, gap_ends, codec),
-            "tfs": _encode_ranges(tf_per_group, grp_starts, grp_ends, codec),
-            "dls": _encode_ranges(g_dl, grp_starts, grp_ends, codec),
-            "pos_deltas": _encode_ranges(
-                pos_delta, occ_block_start, occ_block_end, codec
-            ),
+            "doc_deltas": encode_ranges(doc_gaps, gap_starts, gap_ends),
+            "tfs": encode_ranges(tf_per_group, grp_starts, grp_ends),
+            "dls": encode_ranges(g_dl, grp_starts, grp_ends),
+            "pos_deltas": encode_ranges(
+                pos_delta, occ_block_start, occ_block_end),
             "cf": np.add.reduceat(tf_per_group, bstart).astype(np.int64),
             "max_tf": np.maximum.reduceat(tf_per_group, bstart).astype(np.int32),
             "min_dl": np.minimum.reduceat(g_dl, bstart).astype(np.int32),
@@ -177,8 +157,6 @@ def decode_positions_block(
 
     ``flat_positions`` is occurrence-level, doc-major; split boundaries
     are ``cumsum(tfs)``.  All segment arithmetic, no per-doc loop."""
-    from anisearch_model_spark.index.codec import decode_values
-
     n = int(row["n"] if isinstance(row, dict) else row.n)
     first = int(row["first_doc_id"] if isinstance(row, dict) else row.first_doc_id)
     get = (lambda k: row[k]) if isinstance(row, dict) else (lambda k: getattr(row, k))
@@ -197,8 +175,7 @@ def decode_positions_block(
 
 
 def tokenize_encode(batches: Iterable[pd.DataFrame],
-                    field_col: str | None = None,
-                    codec: str = "varint") -> pd.DataFrame:
+                    field_col: str | None = None) -> pd.DataFrame:
     """The bucket kernel: doc_map frames (``bucket``, ``doc_id``,
     ``text`` [+ ``field_col``]) → their ``BLOCK_SCHEMA`` rows, one
     ``encode_positions_bucket`` pass per (bucket, field).
@@ -224,9 +201,12 @@ def tokenize_encode(batches: Iterable[pd.DataFrame],
         return pd.DataFrame(columns=_BLOCK_COLS)
     all_occ = pd.concat(frames, ignore_index=True)
     outs = []
-    for (_b, fld), grp in all_occ.groupby(["bucket", "field"], sort=True):
-        enc = encode_positions_bucket(grp, codec=codec)
-        enc["field"] = fld
+    # dropna=False: a doc whose field value is null still gets postings,
+    # stored with a null field (Hive's default partition)
+    for (_b, fld), grp in all_occ.groupby(["bucket", "field"], sort=True,
+                                          dropna=False):
+        enc = encode_positions_bucket(grp)
+        enc["field"] = None if pd.isna(fld) else fld
         outs.append(enc[_BLOCK_COLS])
     return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
         columns=_BLOCK_COLS
@@ -234,8 +214,7 @@ def tokenize_encode(batches: Iterable[pd.DataFrame],
 
 
 def fused_tokenize_positions(docs_bucketed: DataFrame,
-                             field_col: str | None = None,
-                             codec: str = "varint") -> DataFrame:
+                             field_col: str | None = None) -> DataFrame:
     """Tokenize + encode each doc-range partition in ONE ``mapInPandas``
     pass (every bucket whole within one partition, zero shuffle, only
     compressed blocks cross Arrow) into ``BLOCK_SCHEMA`` rows.  The
@@ -244,7 +223,7 @@ def fused_tokenize_positions(docs_bucketed: DataFrame,
     sel = ["bucket", "doc_id", "text"] + ([field_col] if field_col else [])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield tokenize_encode(batches, field_col, codec)
+        yield tokenize_encode(batches, field_col)
 
     return docs_bucketed.select(*sel).mapInPandas(
         run, schema=BLOCK_SCHEMA)

@@ -142,10 +142,32 @@ def dictionary_deltas(index_dir: str) -> list[str]:
                   if fn.startswith(DELTA_PREFIX) and fn.endswith(".parquet"))
 
 
+def load_stats(index_dir: str) -> dict:
+    """stats.json of an index this engine can read and write: refuses,
+    with "rebuild", an ``index_format_version`` other than
+    ``INDEX_FORMAT_VERSION`` (missing, older or unknown) or a ``codec``
+    other than varint (the key is absent since varint became the only
+    codec).  The one stats reader of the query store and every writer,
+    so no write stamps the current version onto an older index."""
+    with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
+        stats = json.load(f)
+    got = stats.get("index_format_version")
+    if got != INDEX_FORMAT_VERSION:
+        raise ValueError(
+            f"index at {index_dir} has format version {got!r}, engine "
+            f"requires {INDEX_FORMAT_VERSION} — rebuild the index")
+    codec = stats.get("codec", "varint")
+    if codec != "varint":
+        raise ValueError(
+            f"index at {index_dir} stores {codec!r} posting buffers, the "
+            f"engine reads varint only — rebuild the index")
+    return stats
+
+
 def write_stats(index_dir: str, n_docs: int, n_convs: int,
                 total_tokens: int, field_docs: dict, field_tokens: dict,
                 params: BM25Params, num_buckets: int,
-                field_col: str | None, codec: str) -> dict:
+                field_col: str | None) -> dict:
     """Write stats.json (atomic replace) from exact integer totals and
     return it.  ``field_docs``/``field_tokens``: field value → doc count
     / token count; a field gets an entry when it has docs.  The one
@@ -168,11 +190,10 @@ def write_stats(index_dir: str, n_docs: int, n_convs: int,
         "num_buckets": num_buckets,
         "field_col": field_col,
         "fields": fields,
-        "codec": codec,
-        # format 3 = one block table: flag-prefixed buffers (b'V' varint
-        # / b'P' pfor) with pos_deltas in every postings row.  IndexStore
-        # refuses any other version at OPEN time, so an older index fails
-        # loudly instead of reading blocks that lack positions
+        # format 3 = one block table: flag-prefixed varint buffers with
+        # pos_deltas in every postings row.  load_stats refuses any other
+        # version, so an older index fails loudly at open (and at every
+        # write) instead of reading blocks that lack positions
         "index_format_version": INDEX_FORMAT_VERSION,
     }
     # atomic replace: a concurrent IndexStore open never sees a torn file
@@ -194,7 +215,6 @@ def token_total(avgdl: float, n_docs: int) -> int:
 def finalize_metadata(spark: SparkSession, index_dir: str, n_docs: int,
                       params: BM25Params, num_buckets: int,
                       field_col: str | None = None,
-                      codec: str = "varint",
                       rewrite_dictionary: bool = True) -> dict:
     """(Re)derive dictionary + stats from the postings store — the FULL
     re-derive (build, purge, merge; compact when append deltas exist).
@@ -257,7 +277,7 @@ def finalize_metadata(spark: SparkSession, index_dir: str, n_docs: int,
             .groupBy("field").agg(F.sum("cf").alias("s")).collect()
         }
     return write_stats(index_dir, n_docs, n_convs, total_tokens, doc_counts,
-                       tok_counts, params, num_buckets, field_col, codec)
+                       tok_counts, params, num_buckets, field_col)
 
 
 def build_index(
@@ -268,7 +288,6 @@ def build_index(
     params: BM25Params | None = None,
     fail_after_buckets: int | None = None,
     field_col: str | None = None,
-    codec: str = "varint",
 ) -> dict:
     """Full (or resumed) index build.  Returns build metrics dict.
 
@@ -276,9 +295,9 @@ def build_index(
     buckets (simulates a mid-build crash for the resume test).
     ``field_col`` (e.g. "role") builds field-qualified postings: blocks
     per (bucket, field), per-field stats — field-scoped queries prune at
-    the scan; unscoped results are unchanged.
-    ``codec``: posting-buffer value codec ("varint" | "pfor"); buffers are
-    flag-prefixed, so mixed-codec indexes decode fine.
+    the scan; unscoped results are unchanged.  A resume into a directory
+    that already holds a stats.json first checks it (``load_stats``), so
+    an older-format index is refused, not relabelled as current.
 
     One tokenize pass (build.write_buckets) writes each bucket's blocks
     once, positions included; BM25 readers never read ``pos_deltas``
@@ -290,6 +309,8 @@ def build_index(
     ``phases["postings_build"]`` stays 0.0 for reports that still read it.
     """
     params = params or BM25Params()
+    if os.path.exists(os.path.join(index_dir, "stats.json")):
+        load_stats(index_dir)
     os.makedirs(index_dir, exist_ok=True)
     t0 = time.time()
     phases: dict[str, float] = {}
@@ -340,17 +361,16 @@ def build_index(
     if todo:
         phases["positions_build"] = round(write_buckets(
             spark, doc_map_path, todo, os.path.join(index_dir, "postings"),
-            field_col=field_col, codec=codec), 2)
+            field_col=field_col), 2)
         phases["postings_build"] = 0.0
         tp = time.time()
         _write_checkpoints(spark, index_dir, todo, lineage)
         tp = _mark("checkpoints", tp)
         stats = finalize_metadata(spark, index_dir, n_docs, params, num_buckets,
-                                  field_col=field_col, codec=codec)
+                                  field_col=field_col)
         _mark("finalize", tp)
     else:
-        with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
-            stats = json.load(f)
+        stats = load_stats(index_dir)
 
     elapsed = time.time() - t0
     return {

@@ -124,17 +124,17 @@ def purge_deleted(spark: SparkSession, index_dir: str,
     from anisearch_model_spark.index.compact import (
         recover_compaction, rewrite_buckets)
     from anisearch_model_spark.index.docmap import BUCKETED_SCHEMA
-    from anisearch_model_spark.index.store import finalize_metadata
+    from anisearch_model_spark.index.store import (
+        finalize_metadata, load_stats)
 
     params = params or BM25Params()
+    stats = load_stats(index_dir)  # refuse an older format before any write
     recover_compaction(index_dir)
     dead = load_tombstones(index_dir)
     if len(dead) == 0:
         return {"purged_docs": 0, "buckets_rewritten": 0}
     with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
         manifest = json.load(f)
-    with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
-        stats = json.load(f)
     affected = sorted(
         int(b)
         for b, (lo, n) in manifest["buckets"].items()
@@ -146,11 +146,10 @@ def purge_deleted(spark: SparkSession, index_dir: str,
         clear_tombstones(index_dir)  # ids outside every bucket: no-ops
         return {"purged_docs": 0, "buckets_rewritten": 0}
 
-    codec = stats.get("codec", "varint")
     dead_df = spark.createDataFrame([(int(i),) for i in dead],
                                     TOMBSTONE_SCHEMA)
     rewrite_buckets(spark, index_dir, manifest, affected,
-                    stats.get("field_col"), codec, dead=dead_df)
+                    stats.get("field_col"), dead=dead_df)
 
     # true live-doc count (manifest ranges are id SPANS and stay as-is)
     n_docs = (
@@ -161,7 +160,7 @@ def purge_deleted(spark: SparkSession, index_dir: str,
     finalize_metadata(
         spark, index_dir, int(n_docs), params,
         num_buckets=len(manifest["buckets"]),
-        field_col=stats.get("field_col"), codec=codec,
+        field_col=stats.get("field_col"),
     )
     clear_tombstones(index_dir)  # LAST: the purge's commit point
     return {"purged_docs": purged, "buckets_rewritten": len(affected)}

@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 from anisearch_model_spark.config import BM25Params, MAX_QUERY_CHARS
 from anisearch_model_spark.functions.normalize import bm25_idf, bm25_term_score, tokenize_series
 from anisearch_model_spark.functions.windows import constant_partition
+from anisearch_model_spark.index.store import load_stats
 from anisearch_model_spark.query.bucket import BucketPostings, live_mask, term_blocks
 
 
@@ -66,22 +67,14 @@ class IndexStore:
         # the driver-side term index behind the local lookup fast path
         self._dict_ranges: list[tuple[str | None, str | None, str]] | None = None
         self._dict_ranges_mtime: float | None = None
-        self._n_entities: int | None = None  # conversation count (BM25F N)
         self._stats: dict | None = None
         self._stats_mtime: float | None = None
         # dictionary dir mtime the df LRU was filled under
         self._df_mtime: float | None = None
-        from anisearch_model_spark.index.store import INDEX_FORMAT_VERSION
-
-        got = self.stats.get("index_format_version")
-        if got != INDEX_FORMAT_VERSION:
-            # version gate at OPEN time: a missing, older or unknown
-            # version never reads blocks that lack pos_deltas or flags
-            raise ValueError(
-                f"index at {index_dir} has format version {got!r}, "
-                f"engine requires {INDEX_FORMAT_VERSION} — rebuild the "
-                f"index"
-            )
+        # format gate at OPEN time: the first stats read (load_stats)
+        # refuses a missing, older or unknown version, or a non-varint
+        # codec, before any block is read
+        self.stats
         # snapshot integrity at OPEN time: every manifest-listed bucket
         # with docs must have its doc_map directory.  A missing one means
         # an interrupted maintenance run left the index mid-heal (e.g. a
@@ -120,7 +113,6 @@ class IndexStore:
         self._tomb_mtime = None
         self._dict_ranges = None
         self._dict_ranges_mtime = None
-        self._n_entities = None
 
     @property
     def stats(self) -> dict:
@@ -128,30 +120,19 @@ class IndexStore:
         mtime changes: every commit (append, purge, compact) replaces it
         atomically, and a long-lived reader must score with the N and
         avgdl of the snapshot it scans, like the manifest below."""
-        spath = os.path.join(self.index_dir, "stats.json")
-        mtime = os.path.getmtime(spath)
+        mtime = os.path.getmtime(os.path.join(self.index_dir, "stats.json"))
         if self._stats is None or mtime != self._stats_mtime:
-            with open(spath, encoding="utf-8") as f:
-                self._stats = json.load(f)
+            self._stats = load_stats(self.index_dir)
             self._stats_mtime = mtime
-            self._n_entities = None
         return self._stats
 
     def n_entities(self) -> int:
         """Number of conversations in the corpus (BM25F's entity-level N,
-        query/bm25f.py).  Fast path: the build stamps ``n_convs`` into
-        stats.json (finalize_metadata); indexes predating the stamp fall
-        back to one column-pruned distinct-count over the doc_map, cached
-        until stats.json changes (deletes intentionally don't shift
-        corpus stats until purge — the same contract as n_docs/avgdl)."""
-        stats = self.stats  # a changed stats.json resets the count
-        cached = self._n_entities
-        if cached is None:
-            n = stats.get("n_convs")
-            if n is None:
-                n = self.doc_map.select("conv_id").distinct().count()
-            self._n_entities = cached = int(n)
-        return cached
+        query/bm25f.py): the ``n_convs`` every stats writer stamps into
+        stats.json, re-read when it changes (deletes intentionally don't
+        shift corpus stats until purge — the same contract as
+        n_docs/avgdl)."""
+        return int(self.stats["n_convs"])
 
     def term_dfs(self, terms: list[str],
                  field: str | None = None) -> dict[str, int]:

@@ -73,7 +73,7 @@ from anisearch_model_spark.index.build import write_buckets
 from anisearch_model_spark.index.docmap import (
     _INPUT_COLS, DOC_MAP_SCHEMA, bucketed_corpus)
 from anisearch_model_spark.index.store import (
-    DELTA_PREFIX, dictionary_deltas, token_total, write_stats)
+    DELTA_PREFIX, dictionary_deltas, load_stats, token_total, write_stats)
 
 
 def _repair_orphan_buckets(index_dir: str, max_bucket: int) -> int:
@@ -192,8 +192,7 @@ def _commit_append(index_dir: str, stats: dict, old: list[int],
         index_dir, n_docs + n_new,
         int(stats["n_convs"]) + len(convs) - n_seen,
         token_total(stats["avgdl"], n_docs) + sum(field_cf.values()),
-        field_docs, field_tokens, params, len(old) + len(new),
-        field_col, stats.get("codec", "varint"))
+        field_docs, field_tokens, params, len(old) + len(new), field_col)
 
 
 # Spark's partition-path escape set (ExternalCatalogUtils.escapePathName):
@@ -204,8 +203,9 @@ _PATH_ESCAPE = frozenset([chr(c) for c in range(1, 0x20)]
 
 def _field_dir(value: str) -> str:
     """The ``field=`` directory Spark's ``partitionBy`` gives a field
-    value (``*`` → ``%2A``; an empty value is Hive's default partition)."""
-    if not value:
+    value (``*`` → ``%2A``; a null or empty value is Hive's default
+    partition, read back as null)."""
+    if not isinstance(value, str) or not value:
         return "field=__HIVE_DEFAULT_PARTITION__"
     return "field=" + "".join(
         f"%{ord(c):02X}" if c in _PATH_ESCAPE else c for c in value)
@@ -234,7 +234,7 @@ def _write_file(table, directory: str, plain: tuple[str, ...]) -> None:
 
 
 def _write_bucket_local(batch, index_dir: str, bucket: int, id_base: int,
-                        field_col: str | None, codec: str) -> None:
+                        field_col: str | None) -> None:
     """Write one appended bucket from the collected micro-batch
     (``batch``: a pyarrow table of ``_INPUT_COLS``, no null key) with
     pyarrow: the doc_map file, then one blocks file per field from the
@@ -262,11 +262,11 @@ def _write_bucket_local(batch, index_dir: str, bucket: int, id_base: int,
     pdf = docs.select(["doc_id", "text"] + ([field_col] if field_col else [])
                       ).to_pandas()
     pdf["bucket"] = np.int32(bucket)
-    blocks = tokenize_encode([pdf], field_col, codec)
+    blocks = tokenize_encode([pdf], field_col)
     block_schema = to_arrow_schema(StructType.fromDDL(BLOCK_SCHEMA))
     cols = [f for f in block_schema if f.name not in ("bucket", "field")]
     pdir = os.path.join(index_dir, "postings", f"bucket={bucket}")
-    for fld, grp in blocks.groupby("field", sort=True):
+    for fld, grp in blocks.groupby("field", sort=True, dropna=False):
         _write_file(pa.Table.from_pandas(grp, schema=pa.schema(cols),
                                          preserve_index=False),
                     os.path.join(pdir, _field_dir(fld)),
@@ -296,8 +296,7 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
     "driver", "cluster", "replay" (a recorded batch: no data written) or
     "empty".  ``txn`` is the batch's (checkpoint path, epoch id), recorded
     in the manifest commit so a replay of it is recognised."""
-    with open(os.path.join(index_dir, "stats.json"), encoding="utf-8") as f:
-        stats = json.load(f)
+    stats = load_stats(index_dir)
     with open(os.path.join(index_dir, "manifest.json"), encoding="utf-8") as f:
         manifest = json.load(f)
     buckets = manifest["buckets"]
@@ -326,7 +325,6 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
     n_parts = max(1, math.ceil(n_new / avg_span))
     base = max_bucket + 1
     field_col = stats.get("field_col")
-    codec = stats.get("codec", "varint")
 
     path, fallbacks = "cluster", 0
     # Spark sorts null keys first and pyarrow last: those take the
@@ -336,8 +334,7 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
         import pyarrow as pa
 
         try:
-            _write_bucket_local(batch, index_dir, base, id_base, field_col,
-                                codec)
+            _write_bucket_local(batch, index_dir, base, id_base, field_col)
             path, offsets, counts = "driver", {0: 0}, {0: n_new}
         except (OSError, pa.ArrowException) as e:
             print(f"warning: driver-side append failed ({e!r}); falling "
@@ -347,7 +344,7 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
     if path == "cluster":
         offsets, counts = _write_buckets_cluster(
             spark, batch_df, index_dir, n_parts, n_new, id_base, base,
-            field_col, codec)
+            field_col)
 
     # commit: extend manifest (ATOMIC replace — concurrent readers scan
     # exactly the manifest-listed buckets, so the new docs become visible
@@ -369,7 +366,7 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
 
 def _write_buckets_cluster(spark: SparkSession, batch_df, index_dir: str,
                            n_parts: int, n_new: int, id_base: int, base: int,
-                           field_col: str | None, codec: str
+                           field_col: str | None
                            ) -> tuple[dict[int, int], dict[int, int]]:
     """The cluster path: bucket and number the batch with Spark, write
     its doc_map rows, then tokenize them with the build's own kernel
@@ -385,7 +382,7 @@ def _write_buckets_cluster(spark: SparkSession, batch_df, index_dir: str,
     ).write.mode("append").partitionBy("bucket").parquet(doc_map_root)
     write_buckets(spark, doc_map_root, [base + p for p in sorted(counts)],
                   os.path.join(index_dir, "postings"),
-                  field_col=field_col, codec=codec)
+                  field_col=field_col)
     return offsets, counts
 
 

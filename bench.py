@@ -216,28 +216,6 @@ def main() -> None:
     _noop_write(topk_exhaustive(bmw_idx, "w2 w3 hero", 10))
     hot_exh = round(time.time() - t0, 3)
 
-    # codec end-to-end: the same decode-dominated hot query on a PFor
-    # encode of the same corpus (pfor_decode is ~1.8× faster than varint
-    # per the codec micro-bench; this measures how much of that survives
-    # in a full serve-path query).  Rank identity asserted, not assumed.
-    pfor_dir = "/tmp/asms_bench_bmw_idx_pfor"
-    shutil.rmtree(pfor_dir, ignore_errors=True)
-    build_index(
-        spark,
-        spark.createDataFrame(pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-        ), schema=TRANSCRIPT_SCHEMA),
-        pfor_dir, num_buckets=1, codec="pfor",
-    )
-    pfor_idx = IndexStore(spark, pfor_dir)
-    t0 = time.time()
-    _noop_write(topk_bmw(pfor_idx, "w2 w3 hero", 10))
-    hot_bmw_pfor = round(time.time() - t0, 3)
-    a = topk_bmw(bmw_idx, "w2 w3 hero", 10).collect()
-    b = topk_bmw(pfor_idx, "w2 w3 hero", 10).collect()
-    assert [(r["doc_id"], r["score"]) for r in a] == \
-        [(r["doc_id"], r["score"]) for r in b], "codec changed results"
-
     total = round(sum(timings.values()), 3)
     print(
         json.dumps(
@@ -254,7 +232,6 @@ def main() -> None:
                 "bmw_blocks_decoded": bmw_decoded,
                 "bmw_blocks_total": bmw_total,
                 "bmw_hot_query_sec": hot_bmw,
-                "bmw_hot_query_sec_pfor": hot_bmw_pfor,
                 "exhaustive_hot_query_sec": hot_exh,
                 "host_probe_sec_start": probe_start,
                 "host_probe_sec_mid": probe_mid,

@@ -53,7 +53,7 @@ def _rederived_copy(spark, d, dst) -> str:
     st = _stats(d)
     finalize_metadata(spark, dst, st["n_docs"], BM25Params(),
                       num_buckets=st["num_buckets"],
-                      field_col=st["field_col"], codec=st["codec"])
+                      field_col=st["field_col"])
     return dst
 
 

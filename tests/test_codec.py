@@ -1,4 +1,5 @@
-"""Varint / posting-block codec round-trip properties (SURVEY.md §5)."""
+"""Varint / posting-block codec round-trip properties (SURVEY.md §5)
+and the format gate that refuses any other codec or format version."""
 
 import numpy as np
 import pytest
@@ -25,7 +26,7 @@ def test_varint_boundaries():
     assert np.array_equal(varint_decode(varint_encode(arr)), arr)
 
 
-@pytest.mark.parametrize("n", [1, 127, 128, 129, 1000])
+@pytest.mark.parametrize("n", [1, 127, 128, 129, 400, 1000])
 def test_posting_block_roundtrip(n):
     rng = np.random.default_rng(n)
     docs = np.sort(rng.choice(10 * n, size=n, replace=False)).astype(np.int64)
@@ -50,46 +51,6 @@ def test_unsorted_input_is_sorted():
     blocks = encode_posting_blocks(docs, [1, 2, 3], [10, 10, 10])
     d, t, _ = decode_posting_block(blocks[0])
     assert d.tolist() == [1, 5, 9] and t.tolist() == [2, 1, 3]
-
-
-# ------------------------------------------------------------------- pfor
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300))
-@settings(max_examples=100, deadline=None)
-def test_pfor_roundtrip(values):
-    from anisearch_model_spark.index.codec import pfor_decode, pfor_encode
-
-    arr = np.array(values, dtype=np.uint64)
-    assert np.array_equal(pfor_decode(pfor_encode(arr)), arr)
-
-
-def test_pfor_skewed_tail_uses_exceptions():
-    """Classic PFor shape: 90% small values pick a narrow width; the Zipf
-    tail rides the exception list instead of widening every value."""
-    from anisearch_model_spark.index.codec import pfor_decode, pfor_encode
-
-    rng = np.random.default_rng(0)
-    vals = rng.integers(1, 8, size=128).astype(np.uint64)   # 3-bit body
-    vals[::16] = rng.integers(2**20, 2**30, size=8)          # fat outliers
-    buf = pfor_encode(vals)
-    assert np.array_equal(pfor_decode(buf), vals)
-    # narrow width kept: body ≈ 128*3 bits ≈ 48B, so buffer ≪ 8B/value
-    assert len(buf) < 128 * 4
-
-
-def test_pfor_width64_values_roundtrip():
-    """Values ≥ 2^63 force width=64 — the shift-by-operand-width path that
-    is undefined in C and platform-dependent in numpy must be special-cased
-    (high = 0, no exceptions)."""
-    import warnings
-    from anisearch_model_spark.index.codec import pfor_decode, pfor_encode
-
-    vals = np.array([2**64 - 1, 2**63, 0, 12345], dtype=np.uint64)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any numpy shift warning → fail
-        buf = pfor_encode(vals)
-    assert np.array_equal(pfor_decode(buf), vals)
 
 
 def test_index_store_format_version_gate(spark, tmp_path):
@@ -137,34 +98,46 @@ def test_v2_index_refused_at_open(spark, tmp_path):
         IndexStore(spark, d)
 
 
-def test_flagged_codecs_mix_in_one_block_stream():
-    """Buffers are self-describing: a varint block and a pfor block decode
-    through the same decode_posting_block (mixed-codec index, e.g. an
-    incremental append with a different codec)."""
+def test_pfor_codec_index_refused_at_open(spark, tmp_path):
+    """A format-3 index whose stats.json records the retired ``pfor``
+    codec is refused at open with "rebuild" (varint is the only codec;
+    a missing codec key, as fresh builds write it, reads as varint)."""
+    import json, os
+    from anisearch_model_spark.datagen import gen_transcripts
+    from anisearch_model_spark.index.store import build_index
+    from anisearch_model_spark.query.engine import IndexStore
+
+    d = str(tmp_path / "pfor_idx")
+    build_index(spark, gen_transcripts(spark, 50, seed=3), d, num_buckets=1)
+    path = os.path.join(d, "stats.json")
+    stats = json.load(open(path))
+    assert "codec" not in stats
+    stats["codec"] = "varint"  # what builds before the change recorded
+    json.dump(stats, open(path, "w"))
+    IndexStore(spark, d)
+    stats["codec"] = "pfor"
+    json.dump(stats, open(path, "w"))
+    with pytest.raises(ValueError, match="'pfor'.*rebuild"):
+        IndexStore(spark, d)
+
+
+def test_pfor_flagged_buffer_refused():
+    """Every buffer is b'V'-flagged varint; a buffer with the retired
+    PFor flag b'P' (or no flag) is refused with "rebuild"."""
     from anisearch_model_spark.index.codec import decode_values, encode_values
 
     arr = np.array([1, 127, 128, 300000], dtype=np.uint64)
-    for codec in ("varint", "pfor"):
-        assert np.array_equal(decode_values(encode_values(arr, codec)), arr)
+    buf = encode_values(arr)
+    assert buf[:1] == b"V"
+    assert np.array_equal(decode_values(buf), arr)
+    for bad in (b"P" + buf[1:], buf[1:]):
+        with pytest.raises(ValueError, match="rebuild"):
+            decode_values(bad)
 
 
-@pytest.mark.parametrize("codec", ["varint", "pfor"])
-def test_posting_block_roundtrip_codecs(codec):
-    rng = np.random.default_rng(7)
-    n = 400
-    docs = np.sort(rng.choice(10 * n, size=n, replace=False)).astype(np.int64)
-    tfs = rng.integers(1, 40, n)
-    dls = rng.integers(1, 300, n)
-    blocks = encode_posting_blocks(docs, tfs, dls, block_size=128, codec=codec)
-    d2, t2, l2 = zip(*(decode_posting_block(b) for b in blocks))
-    assert np.array_equal(np.concatenate(d2), docs)
-    assert np.array_equal(np.concatenate(t2), tfs)
-    assert np.array_equal(np.concatenate(l2), dls)
-
-
-def test_bucket_frame_matches_per_term_blocks_pfor(spark):
-    """encode_bucket_frame(codec=pfor) stays byte-identical to the per-term
-    reference encoder (the same guarantee the varint path has)."""
+def test_bucket_frame_matches_per_term_blocks(spark):
+    """encode_bucket_frame stays byte-identical to the per-term reference
+    encoder, ``encode_posting_blocks``."""
     import pandas as pd
     from anisearch_model_spark.index.codec import encode_bucket_frame
 
@@ -176,11 +149,11 @@ def test_bucket_frame_matches_per_term_blocks_pfor(spark):
             rows.append((int(d), term, int(rng.integers(1, 30)),
                          int(rng.integers(5, 400)), 0))
     pdf = pd.DataFrame(rows, columns=["doc_id", "term", "tf", "doc_len", "bucket"])
-    out = encode_bucket_frame(pdf, block_size=128, codec="pfor")
+    out = encode_bucket_frame(pdf, block_size=128)
     for term, grp in pdf.groupby("term"):
         expect = encode_posting_blocks(
             grp["doc_id"].to_numpy(), grp["tf"].to_numpy(),
-            grp["doc_len"].to_numpy(), block_size=128, codec="pfor")
+            grp["doc_len"].to_numpy(), block_size=128)
         got = out[out["term"] == term].sort_values("block_id")
         assert len(got) == len(expect)
         for row, exp in zip(got.itertuples(index=False), expect):
@@ -188,28 +161,3 @@ def test_bucket_frame_matches_per_term_blocks_pfor(spark):
             assert row.tfs == exp["tfs"]
             assert row.dls == exp["dls"]
             assert row.max_tf == exp["max_tf"] and row.min_dl == exp["min_dl"]
-
-
-def test_pfor_index_rank_identical_to_varint(spark, index_dir, tmp_path):
-    """Codec choice is lossless: a pfor-coded index returns bit-identical
-    scores/ranks to the varint index over the same corpus, and stats.json
-    records the codec."""
-    import json, os
-    from anisearch_model_spark.datagen import gen_transcripts
-    from anisearch_model_spark.index.store import build_index
-    from anisearch_model_spark.query.engine import IndexStore, topk_bmw, topk_exhaustive
-
-    d = str(tmp_path / "pfor_idx")
-    tr = gen_transcripts(spark, 3000, seed=42)
-    build_index(spark, tr, d, num_buckets=6, codec="pfor")
-    with open(os.path.join(d, "stats.json")) as f:
-        assert json.load(f)["codec"] == "pfor"
-    a = IndexStore(spark, index_dir)   # varint
-    b = IndexStore(spark, d)           # pfor
-    for q in ["hero battle magic world", "story"]:
-        ra = topk_exhaustive(a, q, 10).toPandas()
-        rb = topk_exhaustive(b, q, 10).toPandas()
-        assert ra["doc_id"].tolist() == rb["doc_id"].tolist()
-        np.testing.assert_array_equal(ra["score"].to_numpy(), rb["score"].to_numpy())
-        rp = topk_bmw(b, q, 10).toPandas()
-        assert rp["doc_id"].tolist() == ra["doc_id"].tolist()

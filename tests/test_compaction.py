@@ -352,54 +352,6 @@ def test_concurrent_reader_during_compaction(spark, tmp_path, monkeypatch):
     check("after")
 
 
-def test_recode_index_to_pfor_rank_identical(spark, tmp_path):
-    """recode_index: a varint-built index re-encoded to PFor (the
-    serve-decode-fast codec) returns bit-identical ranks/scores for both
-    scorers, records the codec in stats.json, and goes through the same
-    snapshot swap (fresh bucket ids, spans preserved, no unlisted dirs
-    left behind)."""
-    from anisearch_model_spark.datagen import gen_transcripts_pandas
-    from anisearch_model_spark.index.compact import recode_index
-    from anisearch_model_spark.index.store import build_index
-    from anisearch_model_spark.query.engine import (
-        IndexStore, topk_bmw, topk_exhaustive)
-
-    pdf = gen_transcripts_pandas(900, seed=61)
-    schema = ("conv_id string, turn_idx int, role string, text string, "
-              "tool string, ts timestamp")
-    d = str(tmp_path / "rc_idx")
-    build_index(spark, spark.createDataFrame(pdf, schema), d, num_buckets=3)
-    idx = IndexStore(spark, d)
-    queries = ["hero battle magic", "robot space pirate"]
-    want = {q: topk_exhaustive(idx, q, 10).toPandas() for q in queries}
-    spans_before = sorted(
-        tuple(v) for v in json.load(
-            open(os.path.join(d, "manifest.json")))["buckets"].values())
-
-    out = recode_index(spark, d, "pfor")
-    assert out == {"buckets_recoded": 3, "codec": "pfor"}
-
-    after = IndexStore(spark, d)  # fresh open: version gate + stats
-    assert after.stats["codec"] == "pfor"
-    manifest = json.load(open(os.path.join(d, "manifest.json")))
-    assert sorted(tuple(v) for v in manifest["buckets"].values()) == spans_before
-    assert _dir_ids(os.path.join(d, "postings")) == set(manifest["buckets"])
-    assert _dir_ids(os.path.join(d, "doc_map")) == set(manifest["buckets"])
-    for q in queries:
-        for fn in (topk_exhaustive, topk_bmw):
-            got = fn(after, q, 10).toPandas()
-            assert got["doc_id"].tolist() == want[q]["doc_id"].tolist(), q
-            np.testing.assert_array_equal(
-                got["score"].to_numpy(), want[q]["score"].to_numpy())
-    # buffers really are pfor now (flag byte b'P')
-    import pyarrow.parquet as pq
-    import glob as _glob
-    f = sorted(_glob.glob(os.path.join(d, "postings", "**", "*.parquet"),
-                          recursive=True))[0]
-    buf = pq.read_table(f, columns=["doc_deltas"]).column("doc_deltas")[0].as_py()
-    assert buf[:1] == b"P"
-
-
 def test_index_open_detects_missing_listed_bucket(spark, tmp_path):
     """Opening an index whose manifest lists a doc_map bucket dir that is
     not on disk (a legacy rename-aside crash shape) must raise loudly —

@@ -1,6 +1,6 @@
 """One build kernel (index/build.write_buckets) and one block table: a
 single tokenize pass writes each bucket's blocks, positions included,
-under ``postings/``.  Every write path (build, append, purge, recode)
+under ``postings/``.  Every write path (build, append, purge)
 creates a bucket's blocks this way and compaction and merge carry them,
 so:
 
@@ -78,7 +78,7 @@ def _reference_tables(spark, d):
 
     with open(os.path.join(d, "stats.json"), encoding="utf-8") as f:
         stats = json.load(f)
-    field_col, codec = stats.get("field_col"), stats.get("codec", "varint")
+    field_col = stats.get("field_col")
     dm = _table(spark, d, "doc_map", BUCKETED_SCHEMA).toPandas()
     dm["field"] = dm[field_col] if field_col else UNSCOPED_FIELD
     post, blocks = [], []
@@ -86,10 +86,10 @@ def _reference_tables(spark, d):
         ids, texts = g["doc_id"].reset_index(drop=True), g["text"].reset_index(
             drop=True)
         tf = term_frequency_frame(ids, texts).assign(bucket=b)
-        enc = encode_bucket_frame(tf, POSTING_BLOCK_SIZE, codec=codec)
+        enc = encode_bucket_frame(tf, POSTING_BLOCK_SIZE)
         post += _canon_pdf(enc.assign(field=fld), _POST_COLS)
         occ = positions_frame(ids, texts).assign(bucket=b)
-        penc = encode_positions_bucket(occ, codec=codec)
+        penc = encode_positions_bucket(occ)
         blocks += _canon_pdf(penc.assign(field=fld), _BLOCK_COLS)
     return sorted(post), sorted(blocks)
 
@@ -185,17 +185,17 @@ def test_fused_build_byte_identical(spark, tmp_path):
 
 
 def test_postings_rows_equal_block_reference(spark, tmp_path):
-    """Every stored ``postings/`` row of a field-qualified pfor build —
+    """Every stored ``postings/`` row of a field-qualified build —
     positions included — equals ``encode_positions_bucket`` over the
     (bucket, field)'s occurrence rows, byte for byte."""
-    from anisearch_model_spark.index.codec import FLAG_PFOR
+    from anisearch_model_spark.index.codec import FLAG_VARINT
 
     tr = gen_transcripts(spark, 1200, seed=13)
     d = str(tmp_path / "fq")
-    build_index(spark, tr, d, num_buckets=2, field_col="role", codec="pfor")
+    build_index(spark, tr, d, num_buckets=2, field_col="role")
     rows = _table(spark, d, "postings", BLOCK_SCHEMA)
     assert rows.select("field").distinct().count() >= 2
-    assert bytes(rows.limit(1).collect()[0]["pos_deltas"])[:1] == FLAG_PFOR
+    assert bytes(rows.limit(1).collect()[0]["pos_deltas"])[:1] == FLAG_VARINT
     _assert_kernel_identical(spark, d)
 
 
@@ -222,19 +222,22 @@ def test_fused_build_partial_then_resume(spark, tmp_path):
     _assert_one_table(d)
 
 
-def test_fused_build_pfor_codec(spark, tmp_path):
-    """The codec parameter flows through the fused pass to every buffer
-    of a block, positions included; ``build_positions`` is a no-op."""
-    from anisearch_model_spark.index.codec import FLAG_PFOR
+def test_fused_build_varint_flags(spark, tmp_path):
+    """The fused pass writes every buffer of a block, positions included,
+    as b'V'-flagged varint, and stats.json records no codec; the
+    ``build_positions`` no-op reports every bucket."""
+    from anisearch_model_spark.index.codec import FLAG_VARINT
     from anisearch_model_spark.index.positions import build_positions
 
     tr = gen_transcripts(spark, 1500, seed=11)
-    d = str(tmp_path / "pfor")
-    build_index(spark, tr, d, num_buckets=2, codec="pfor")
+    d = str(tmp_path / "varint")
+    build_index(spark, tr, d, num_buckets=2)
     blocks = spark.read.schema(BLOCK_SCHEMA).parquet(f"{d}/postings")
-    row = blocks.limit(1).collect()[0]
-    for col in ("doc_deltas", "tfs", "dls", "pos_deltas"):
-        assert bytes(row[col])[:1] == FLAG_PFOR, col
+    for row in blocks.limit(20).collect():
+        for col in ("doc_deltas", "tfs", "dls", "pos_deltas"):
+            assert bytes(row[col])[:1] == FLAG_VARINT, col
+    with open(os.path.join(d, "stats.json"), encoding="utf-8") as f:
+        assert "codec" not in json.load(f)
     assert build_positions(spark, d) == {"buckets_built": 0,
                                          "buckets_total": 2}
     _assert_one_table(d)
@@ -360,37 +363,12 @@ def test_crash_between_commit_and_stamp_heals(spark, tmp_path, monkeypatch):
                               want["score"].to_numpy()), q
 
 
-def test_recode_matches_fresh_build_in_codec(spark, tmp_path):
-    """recode_index goes through purge's rewrite: a varint index recoded
-    to pfor stores block rows byte-identical to a fresh pfor build, and
-    phrase results equal their pre-recode values with no repair."""
-    from anisearch_model_spark.index.compact import recode_index
-
-    tr = gen_transcripts(spark, 1200, seed=17)
-    d, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
-    build_index(spark, tr, d, num_buckets=3, field_col="role")
-    phrases = _corpus_bigrams(spark, d)
-    before = _phrase_pages(spark, d, phrases, by_key=False)
-    assert recode_index(spark, d, "pfor")["buckets_recoded"] == 3
-    after = _phrase_pages(spark, d, phrases, by_key=False)
-    for ph, (br, bi, bs), (ar, ai, as_) in zip(phrases, before, after):
-        assert br == ar and bi == ai and len(ai), ph
-        assert np.array_equal(bs, as_), ph
-    build_index(spark, tr, ref, num_buckets=3, field_col="role",
-                codec="pfor")
-    # bucket ids differ (recode writes under fresh ids): compare the rest
-    cols = [c for c in _BLOCK_COLS if c != "bucket"]
-    assert (_canon(_table(spark, d, "postings", BLOCK_SCHEMA), cols)
-            == _canon(_table(spark, ref, "postings", BLOCK_SCHEMA), cols))
-    _assert_one_table(d)
-
-
 def test_no_positions_table_after_any_write(spark, tmp_path):
-    """Build, append, purge, compact, recode and merge each leave one
+    """Build, append, purge, compact and merge each leave one
     block table: no ``positions/`` directory, no ``positions_meta.json``."""
     from anisearch_model_spark.config import BM25Params
     from anisearch_model_spark.datagen import gen_transcripts_pandas
-    from anisearch_model_spark.index.compact import compact_index, recode_index
+    from anisearch_model_spark.index.compact import compact_index
     from anisearch_model_spark.index.merge import merge_indexes
     from anisearch_model_spark.index.tombstones import (
         delete_conversations,
@@ -412,8 +390,6 @@ def test_no_positions_table_after_any_write(spark, tmp_path):
     assert purge_deleted(spark, d)["buckets_rewritten"] >= 1
     _assert_one_table(d)
     assert compact_index(spark, d)["groups_rewritten"] >= 1
-    _assert_one_table(d)
-    recode_index(spark, d, "pfor")
     _assert_one_table(d)
     build_index(spark, gen_transcripts(spark, 200, seed=5).withColumn(
         "conv_id", F.concat(F.lit("z-"), F.col("conv_id"))), other,

@@ -1,0 +1,72 @@
+"""A doc whose ``field_col`` value is null still gets postings on a
+field-qualified index: the build, the append's driver path and its
+cluster path each store them with a null field (Hive's default
+partition), so an unscoped search finds the doc and ``avgdl`` counts its
+tokens, as on an unscoped build of the same corpus."""
+
+import pandas as pd
+import pytest
+
+from anisearch_model_spark.config import BM25Params
+from anisearch_model_spark.datagen import TRANSCRIPT_SCHEMA, gen_transcripts_pandas
+from anisearch_model_spark.index.store import build_index
+from anisearch_model_spark.query.engine import (
+    IndexStore, topk_bmw, topk_exhaustive)
+from anisearch_model_spark.streaming.incremental import _append_batch
+from tests.test_append_commit import _assert_commit_equals_rederive, _stats
+from tests.test_driver_append import _force_cluster
+
+_WORD = "uniquenullword"
+
+
+@pytest.fixture(scope="module")
+def corpus():
+    """200 datagen turns plus one ``role=None`` turn holding ``_WORD``,
+    in a conversation that sorts after every datagen one."""
+    pdf = gen_transcripts_pandas(200, seed=91)
+    extra = pdf.iloc[[0]].assign(conv_id="zzz-null", turn_idx=0, role=None,
+                                 text=f"{_WORD} appears")
+    return pd.concat([pdf, extra], ignore_index=True)
+
+
+@pytest.fixture(scope="module")
+def unscoped_avgdl(spark, corpus, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("nullf") / "unscoped")
+    build_index(spark, spark.createDataFrame(corpus, TRANSCRIPT_SCHEMA), d,
+                num_buckets=1)
+    return _stats(d)["avgdl"]
+
+
+def _assert_found(spark, d, corpus, unscoped_avgdl):
+    idx = IndexStore(spark, d)
+    assert idx.stats["avgdl"] == unscoped_avgdl
+    assert idx.stats["n_docs"] == len(corpus)
+    doc_map = idx.doc_map.filter("role IS NULL").toPandas()
+    assert doc_map["conv_id"].tolist() == ["zzz-null"]
+    for scorer in (topk_exhaustive, topk_bmw):
+        hits = scorer(idx, _WORD, 10).toPandas()
+        assert hits["doc_id"].tolist() == doc_map["doc_id"].tolist(), scorer
+
+
+def test_build_keeps_null_field_postings(spark, corpus, unscoped_avgdl,
+                                         tmp_path):
+    d = str(tmp_path / "role")
+    build_index(spark, spark.createDataFrame(corpus, TRANSCRIPT_SCHEMA), d,
+                num_buckets=1, field_col="role")
+    _assert_found(spark, d, corpus, unscoped_avgdl)
+
+
+@pytest.mark.parametrize("path", ["driver", "cluster"])
+def test_append_keeps_null_field_postings(spark, corpus, unscoped_avgdl,
+                                          tmp_path, monkeypatch, path):
+    if path == "cluster":
+        _force_cluster(monkeypatch)
+    cut = corpus["conv_id"] >= sorted(corpus["conv_id"].unique())[-4]
+    d = str(tmp_path / "role")
+    build_index(spark, spark.createDataFrame(corpus[~cut], TRANSCRIPT_SCHEMA),
+                d, num_buckets=1, field_col="role")
+    got = _append_batch(spark, spark.createDataFrame(
+        corpus[cut], TRANSCRIPT_SCHEMA), d, BM25Params())
+    assert got == (path, int(cut.sum()), 0)
+    _assert_found(spark, d, corpus, unscoped_avgdl)
+    _assert_commit_equals_rederive(spark, d, str(tmp_path / "ref"))

@@ -52,8 +52,8 @@ def _corpus_phrases(oracle, n=6):
 
 
 def test_positions_block_roundtrip():
-    """encode_positions_bucket → decode_positions_block is lossless for
-    both codecs, across multi-block terms and multi-occurrence docs."""
+    """encode_positions_bucket → decode_positions_block is lossless
+    across multi-block terms and multi-occurrence docs."""
     rng = np.random.default_rng(7)
     rows = []
     for doc in range(900):
@@ -65,26 +65,25 @@ def test_positions_block_roundtrip():
                     rows.append((doc, term, int(p), 500))
     pdf = pd.DataFrame(rows, columns=["doc_id", "term", "pos", "doc_len"])
     pdf["bucket"] = 0
-    for codec in ("varint", "pfor"):
-        enc = encode_positions_bucket(pdf, block_size=128, codec=codec)
-        got = {}
-        for row in enc.itertuples(index=False):
-            doc_ids, tfs, dls, flat = decode_positions_block(row)
-            assert len(flat) == int(tfs.sum())
-            bounds = np.concatenate([[0], np.cumsum(tfs)])
-            for i, d in enumerate(doc_ids):
-                got.setdefault((d, row.term), []).extend(
-                    flat[bounds[i]: bounds[i + 1]].tolist()
-                )
-                assert dls[i] == 500
-        want = {
-            (d, t): sorted(g["pos"].tolist())
-            for (d, t), g in pdf.groupby(["doc_id", "term"])
-        }
-        assert {k: sorted(v) for k, v in got.items()} == want
-        # block split: ≤128 docs per (term, block)
-        assert int(enc["n"].max()) <= 128
-        assert enc.groupby("term")["block_id"].nunique().max() > 1
+    enc = encode_positions_bucket(pdf, block_size=128)
+    got = {}
+    for row in enc.itertuples(index=False):
+        doc_ids, tfs, dls, flat = decode_positions_block(row)
+        assert len(flat) == int(tfs.sum())
+        bounds = np.concatenate([[0], np.cumsum(tfs)])
+        for i, d in enumerate(doc_ids):
+            got.setdefault((d, row.term), []).extend(
+                flat[bounds[i]: bounds[i + 1]].tolist()
+            )
+            assert dls[i] == 500
+    want = {
+        (d, t): sorted(g["pos"].tolist())
+        for (d, t), g in pdf.groupby(["doc_id", "term"])
+    }
+    assert {k: sorted(v) for k, v in got.items()} == want
+    # block split: ≤128 docs per (term, block)
+    assert int(enc["n"].max()) <= 128
+    assert enc.groupby("term")["block_id"].nunique().max() > 1
 
 
 def test_phrase_rank_identity(pos_index, oracle):
@@ -185,11 +184,11 @@ def test_phrase_respects_tombstones(spark, tmp_path):
 
 
 def test_positions_staleness_gate(spark, tmp_path):
-    """Compaction carries the blocks and recode_index re-tokenizes them:
-    phrase results are unchanged after each, with no repair step, because
-    a bucket's positions live in the same rows as its postings."""
+    """Compaction carries the blocks: phrase results are unchanged after
+    it, with no repair step, because a bucket's positions live in the
+    same rows as its postings."""
     from anisearch_model_spark.datagen import gen_transcripts
-    from anisearch_model_spark.index.compact import compact_index, recode_index
+    from anisearch_model_spark.index.compact import compact_index
     from anisearch_model_spark.index.store import build_index
 
     d = str(tmp_path / "idx")
@@ -201,12 +200,6 @@ def test_positions_staleness_gate(spark, tmp_path):
     res = compact_index(spark, d, target_docs=400)
     assert res["groups_rewritten"] >= 1
     after = phrase_topk(idx, _first_bigram(idx), k=5).toPandas()
-    assert after["doc_id"].tolist() == baseline["doc_id"].tolist()
-    assert after["score"].tolist() == baseline["score"].tolist()
-
-    recode_index(spark, d, "pfor")
-    after = phrase_topk(IndexStore(spark, d), _first_bigram(idx),
-                        k=5).toPandas()
     assert after["doc_id"].tolist() == baseline["doc_id"].tolist()
     assert after["score"].tolist() == baseline["score"].tolist()
 

@@ -252,8 +252,7 @@ def _write_md(suite: dict | None, scaling: dict | None) -> None:
             f"- index build: {suite['build_turns_per_sec']:,} turns/s "
             f"({suite['n_turns']:,} turns)",
             f"- BMW hot query {suite['bmw_hot_query_sec']}s vs exhaustive "
-            f"{suite['exhaustive_hot_query_sec']}s; pfor "
-            f"{suite.get('bmw_hot_query_sec_pfor')}s; blocks decoded "
+            f"{suite['exhaustive_hot_query_sec']}s; blocks decoded "
             f"{suite['bmw_blocks_decoded']}/{suite['bmw_blocks_total']}",
             "",
             "| query | sec |", "|---|---|",
