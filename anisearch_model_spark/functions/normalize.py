@@ -262,11 +262,6 @@ def positions_frame(doc_ids: pd.Series, texts: pd.Series) -> pd.DataFrame:
     )
 
 
-def doc_length_series(texts: pd.Series) -> pd.Series:
-    """Post-normalization token counts (BM25 ``dl``)."""
-    return tokenize_series(texts).str.len().astype("int64")
-
-
 def bm25_idf(df: np.ndarray, n_docs: int) -> np.ndarray:
     """Lucene-style non-negative BM25 idf: ln(1 + (N - df + .5)/(df + .5))."""
     df = np.asarray(df, dtype="float64")

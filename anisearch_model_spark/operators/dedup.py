@@ -307,17 +307,6 @@ def minhash_signature_arrays(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    num_hashes: int = 16, toks: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, i, minhash) — row form of ``minhash_signature_arrays``."""
-    arr = minhash_signature_arrays(df, id_col, text_col, num_hashes, toks)
-    return arr.select(
-        "doc_id", F.posexplode("sigs").alias("i", "minhash")
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -394,17 +383,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     for j in range(bits):
         sh = sh + F.when(F.col(f"_s{j}") > 0, F.lit(1 << j)).otherwise(0).cast("long")
     return agg.select("doc_id", sh.alias("simhash"))
-
-
-def simhash_duplicate_groups(df: DataFrame, id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
-    """Docs sharing an identical 16-bit simhash (hamming distance 0
-    buckets): (simhash, doc_id, keep=min doc_id of group)."""
-    sh = simhash(df, id_col, text_col)
-    w = Window.partitionBy("simhash").orderBy("doc_id")
-    return sh.withColumn("keep", F.row_number().over(w) == 1).select(
-        "simhash", "doc_id", "keep"
-    )
 
 
 def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",

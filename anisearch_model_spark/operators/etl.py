@@ -21,11 +21,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def filter_not_value(df: DataFrame, col: str, value) -> DataFrame:
-    """P3: drop rows where col == value (reference: type != 'music')."""
-    return df.filter((F.col(col) != value) | F.col(col).isNull())
-
-
 def filter_array_not_contains(df: DataFrame, array_col: str, banned: list[str]) -> DataFrame:
     """P4: drop rows whose array column contains any banned value —
     columnar version of the reference's per-row ast.literal_eval + any() loop."""

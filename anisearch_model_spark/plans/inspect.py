@@ -60,10 +60,6 @@ def uses_sort_merge_join(df: DataFrame) -> bool:
     return "SortMergeJoin" in formatted_plan(df)
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")
-
-
 def generate_count(df: DataFrame) -> int:
     """Number of Generate (explode) nodes — each one multiplies its input
     relation, so operators assert a budget on them.  Counts the plan-tree

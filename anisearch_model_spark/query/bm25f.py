@@ -54,7 +54,8 @@ def search_bm25f(index, query_text: str, weights: dict[str, float],
     match set is scored (no per-field truncation), so an entity weak in
     every single field but present in many can still win.
     """
-    from anisearch_model_spark.query.engine import IndexStore, parse_query
+    from anisearch_model_spark.query.engine import (
+        IndexStore, local_frame, parse_query)
     from anisearch_model_spark.query.multifield import rank_and_paginate
 
     assert isinstance(index, IndexStore) and weights
@@ -64,7 +65,7 @@ def search_bm25f(index, query_text: str, weights: dict[str, float],
     out_schema = "rank long, conv_id string, score double"
     terms = sorted(set(parse_query(query_text)))
     if not terms:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, None, out_schema)
     fields = sorted(weights)
     # validates field-qualification and pins avgdl_f at plan time
     avgdl = {f: index.field_stats(f)[1] for f in fields}

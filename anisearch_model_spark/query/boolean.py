@@ -17,16 +17,18 @@ what a ``-`` prefix means to Lucene's classic parser.  Markers bind to
 the whitespace token they prefix; the stem then runs through the shared
 tokenizer (a multi-token stem contributes ALL its tokens to the clause).
 
-Scale shape: ONE postings scan covers scoring and prohibited terms
-(term-IN pushdown, field partition pruning), then one ``applyInPandas``
-kernel per doc-range bucket (query/bucket.py) does all the per-doc work
+Scale shape: ONE block read covers scoring and prohibited terms
+(term-IN pushdown, field partition pruning), then one kernel per
+doc-range bucket (``bucket.boolean_bucket``) does all the per-doc work
 as numpy masks over the bucket's doc universe: the score fold, each
 required clause (OR of its members' hits, AND-ed across clauses), the
 prohibited mask (OR of the prohibited terms' hits) and the tombstone
 mask.  Buckets are disjoint doc ranges, so a doc's clause satisfaction
-is decided inside its bucket — no aggregate, no join, and only the
-compressed blocks cross an exchange.  Each bucket emits its local top-k;
-the global page is a TakeOrderedAndProject over ≤ |buckets|·k rows.
+is decided inside its bucket — no aggregate, no join.  Each bucket
+emits its local top-k, and the global page merges ≤ |buckets|·k rows:
+on the driver under the driver bound (query/engine.py), else as an
+``applyInPandas`` plan whose only exchange moves compressed blocks,
+topped by a TakeOrderedAndProject.
 
 The reference engine has no boolean operators at all (dense cosine over
 whole descriptions, ``src/api.py:270-313``).
@@ -34,17 +36,15 @@ whole descriptions, ``src/api.py:270-313``).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from anisearch_model_spark.config import BM25Params, MAX_QUERY_CHARS
-from anisearch_model_spark.functions.windows import constant_partition
-from anisearch_model_spark.query.bucket import BucketPostings, term_blocks, top_k
+from anisearch_model_spark.query.bucket import (
+    BLOCK_COLS, MATCH_SCHEMA, boolean_bucket, ranked, term_blocks)
 from anisearch_model_spark.query.engine import (
-    IndexStore, _idf_map, attach_metadata)
+    IndexStore, _broadcast, _tombstones, _value, as_frame, idf_of, page_of,
+    rank_top)
 
 
 def parse_boolean(query_text: str) -> tuple[list[str], list[str], list[str]]:
@@ -94,11 +94,6 @@ def _expand_stem(index: IndexStore, stem: str,
     return lits, pattern_clauses
 
 
-def _empty(spark) -> DataFrame:
-    """The ranked frame of a query that can match nothing."""
-    return spark.createDataFrame([], "rank long, doc_id long, score double")
-
-
 def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
                  params: BM25Params | None = None,
                  field: str | None = None) -> DataFrame:
@@ -108,8 +103,17 @@ def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
     are each their own clause (all must appear), a pattern stem's
     expansion is one OR-clause (some member must appear).  Satisfaction,
     prohibition and liveness are per-bucket doc masks inside the same
-    kernel as the score fold — a term in two clauses is read from ONE
-    decoded block."""
+    kernel as the score fold (``bucket.boolean_bucket``) — a term in two
+    clauses is read from ONE decoded block.  The kernels run on the
+    driver when the scoring and prohibited terms' summed df is within
+    the driver bound (query/engine.py), else in ``applyInPandas``."""
+    return as_frame(index.spark,
+                    _boolean_top(index, query_text, k, params, field))
+
+
+def _boolean_top(index: IndexStore, query_text: str, k: int,
+                 params: BM25Params | None,
+                 field: str | None) -> "pd.DataFrame | DataFrame":
     params = params or BM25Params()
     spark = index.spark
     req_stems, opt_stems, pro_stems = parse_boolean(query_text)
@@ -134,56 +138,41 @@ def boolean_topk(index: IndexStore, query_text: str, k: int = 10,
 
     scoring = sorted({t for c in clauses for t in c} | optional)
     if not scoring:
-        return _empty(spark)  # pure-negative (or empty) query matches nothing
-    idf = _idf_map(index, scoring, field=field)
+        return ranked([], k)  # pure-negative (or empty) query matches nothing
+    _, avgdl = index.field_stats(field)
+    dfs = index.term_dfs(scoring, field=field)
+    idf = idf_of(index, dfs, field)
     if not idf:
-        return _empty(spark)
+        return ranked([], k)
     # a clause with no corpus-present member can never be satisfied
     clauses = [[t for t in c if t in idf] for c in clauses]
     if any(not c for c in clauses):
-        return _empty(spark)
+        return ranked([], k)
 
-    _, avgdl = index.field_stats(field)
     k1, b = params.k1, params.b
-    bidf = spark.sparkContext.broadcast(idf)
-    tomb = index.tombstones
-    btomb = spark.sparkContext.broadcast(tomb) if len(tomb) else None
+    tomb = _tombstones(index)
     scoring = sorted(idf)  # corpus-present scoring terms
     pro = sorted(prohibited)
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        bp = BucketPostings(pdf)
-        acc = bp.fold(scoring, bidf.value, avgdl, k1, b)
-        keep = bp.hits(scoring) & bp.live(
-            btomb.value if btomb is not None else None)
-        for c in clauses:
-            keep &= bp.hits(c)
-        if pro:
-            keep &= ~bp.hits(pro)
-        idxs = np.nonzero(keep)[0]
-        idxs = idxs[top_k(bp.universe[idxs], acc[idxs], k)]
-        return pd.DataFrame({"doc_id": bp.universe[idxs],
-                             "score": acc[idxs]})
-
+    n_postings = sum(dfs.values()) + sum(
+        index.term_dfs(pro, field=field).values())
+    local = index.local_blocks(scoring + pro, n_postings, field, BLOCK_COLS)
+    if local is not None:
+        return ranked([boolean_bucket(pdf, scoring, clauses, pro, idf, avgdl,
+                                      k1, b, k, tomb)
+                       for pdf in local.values()], k)
+    bidf = _broadcast(spark, idf)
+    btomb = _broadcast(spark, tomb)
     scored = term_blocks(index, scoring + pro, field).groupBy(
-        "bucket").applyInPandas(score_bucket, schema="doc_id long, score double")
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.partitionBy(constant_partition("doc_id")).orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return top.withColumn("rank", F.row_number().over(w).cast("long")).select(
-        "rank", "doc_id", "score"
-    )
+        "bucket").applyInPandas(
+        lambda pdf: boolean_bucket(pdf, scoring, clauses, pro, bidf.value,
+                                   avgdl, k1, b, k, _value(btomb)),
+        schema=MATCH_SCHEMA)
+    return rank_top(scored, k)
 
 
 def boolean_search(index: IndexStore, query_text: str, k: int = 10,
                    params: BM25Params | None = None, field: str | None = None,
                    page: int = 1, with_metadata: bool = True) -> DataFrame:
-    """Boolean top-k + doc metadata (``engine.attach_metadata``)."""
-    top = boolean_topk(index, query_text, k * page, params=params, field=field)
-    if page > 1:
-        lo, hi = (page - 1) * k, page * k
-        top = top.filter((F.col("rank") > lo) & (F.col("rank") <= hi))
-    if not with_metadata:
-        return top
-    return attach_metadata(index, top)
+    """Boolean top-k + doc metadata (``engine.page_of``)."""
+    return page_of(index, _boolean_top(index, query_text, k * page, params,
+                                       field), k, page, with_metadata)

@@ -44,7 +44,8 @@ def facet_counts(index, query_text: str, facet_col: str = "role",
     import pandas as pd
 
     from anisearch_model_spark.query.bucket import BucketPostings, term_blocks
-    from anisearch_model_spark.query.engine import IndexStore, resolve_query_idf
+    from anisearch_model_spark.query.engine import (
+        IndexStore, local_frame, resolve_query_idf)
 
     assert isinstance(index, IndexStore)
     params = params or BM25Params()
@@ -53,7 +54,7 @@ def facet_counts(index, query_text: str, facet_col: str = "role",
     out_schema = f"facet {facet_type}, n_docs long, top_score double"
     idf = resolve_query_idf(index, query_text, field=field)
     if not idf:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, None, out_schema)
     _, avgdl = index.field_stats(field)
     k1, b = params.k1, params.b
     bidf = spark.sparkContext.broadcast(idf)

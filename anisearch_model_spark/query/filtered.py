@@ -37,13 +37,14 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from anisearch_model_spark.config import BM25Params, MAX_QUERY_CHARS
-from anisearch_model_spark.functions.windows import constant_partition
+from anisearch_model_spark.query.bucket import RANKED_SCHEMA
 from anisearch_model_spark.query.engine import (
     IndexStore,
+    local_frame,
     probe_doc_map,
+    rank_top,
     score_matches,
     topk_bmw,
 )
@@ -83,22 +84,14 @@ def search_filtered(index: IndexStore, query_text: str, where: str,
     # to the driver just to discard them
     n_matching = allowed.limit(max_mask_ids + 1).count()
     if n_matching == 0:
-        top = spark.createDataFrame(
-            [], "rank long, doc_id long, score double")
+        top = local_frame(spark, None, RANKED_SCHEMA)
     elif pruned and n_matching <= max_mask_ids:
         ids = [r[0] for r in allowed.collect()]
         top = topk_bmw(index, query_text, cand_k, params, field=field,
                        allow=np.asarray(ids, dtype="int64"))
     else:
         scored = score_matches(index, query_text, params, field=field)
-        scored = scored.join(allowed, "doc_id", "left_semi")
-        w = Window.partitionBy(constant_partition("doc_id")).orderBy(
-            F.desc("score"), F.asc("doc_id"))
-        top = (
-            scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(cand_k)
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .select("rank", "doc_id", "score")
-        )
+        top = rank_top(scored.join(allowed, "doc_id", "left_semi"), cand_k)
     if page > 1:
         lo, hi = (page - 1) * k, page * k
         top = top.filter((F.col("rank") > lo) & (F.col("rank") <= hi))

@@ -50,6 +50,10 @@ def mlt_terms(index, doc_id: int, m: int = 5,
     # bounded driver-side stored-fields fetch (r6): one doc's text from
     # its bucket's parquet file via pyarrow — no Spark job for the probe
     pdf = fetch_doc_rows(index, [int(doc_id)], ["doc_id", "text"])
+    if pdf is None:  # "don't know": the pruned cluster read
+        dm = index.doc_map
+        pdf = dm.filter(dm["doc_id"] == int(doc_id)).select(
+            "doc_id", "text").toPandas()
     if not len(pdf):
         raise ValueError(f"doc {doc_id} not found in doc_map")
     toks = tokenize_series(pd.Series([pdf["text"].iloc[0]])).iloc[0]
@@ -77,13 +81,13 @@ def more_like_this(index, doc_id: int, m: int = 5, k: int = 10,
     source itself is usually the top hit of its own terms).
     """
     from anisearch_model_spark.query.engine import (
-        IndexStore, topk_bmw, topk_exhaustive)
+        IndexStore, local_frame, topk_bmw, topk_exhaustive)
 
     assert isinstance(index, IndexStore)
     terms = mlt_terms(index, doc_id, m=m, field=field)
     spark = index.spark
     if not terms:
-        return spark.createDataFrame([], "rank long, doc_id long, score double")
+        return local_frame(spark, None, "rank long, doc_id long, score double")
     fn = topk_bmw if pruned else topk_exhaustive
     top = fn(index, " ".join(terms), k + 1, params, field=field)
     w = Window.partitionBy(constant_partition("doc_id")).orderBy(

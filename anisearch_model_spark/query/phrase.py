@@ -17,15 +17,17 @@ its users gain.  Semantics:
   * ordering contract identical to the BM25 scorers: score DESC, doc_id
     ASC, dense 1-based rank.
 
-Scale shape: the block scan is filtered to the phrase's terms
-(Parquet predicate pushdown) and prunes on the ``field`` partition; the
-match runs bucket-parallel (buckets are disjoint doc ranges) with numpy
-sorted-key searches inside ``applyInPandas`` — the per-bucket candidate
-volume is bounded by the rarest phrase term's posting volume, not the
-corpus.  Tombstoned docs are masked inside the kernel.  ``phrase_topk``
-is one pass: each bucket emits its match count and its local top-k
-candidates, so driver traffic is ≤ |buckets|·k rows (plus exact ties)
-and the phrase df, idf and final ranking are computed on the driver.
+Scale shape: the block read is filtered to the phrase's terms and
+prunes on the ``field`` partition; the match runs per bucket (buckets
+are disjoint doc ranges) with numpy sorted-key searches — the
+per-bucket candidate volume is bounded by the rarest phrase term's
+posting volume, not the corpus.  Tombstoned docs are masked inside the
+kernel.  ``phrase_topk`` is one pass: each bucket emits its match count
+and its local top-k candidates, so at most |buckets|·k rows (plus exact
+ties) reach the merge, and the phrase df, idf and final ranking are
+computed on the driver.  The kernels run on the driver when the phrase
+terms' summed df is within the driver bound (query/engine.py), else in
+``applyInPandas``.
 """
 
 from __future__ import annotations
@@ -38,8 +40,10 @@ from pyspark.sql import functions as F
 from anisearch_model_spark.config import BM25Params, MAX_QUERY_CHARS
 from anisearch_model_spark.functions.normalize import (
     bm25_idf, bm25_term_score, tokenize_series)
-from anisearch_model_spark.query.bucket import live_mask
-from anisearch_model_spark.query.engine import IndexStore, attach_metadata
+from anisearch_model_spark.query.bucket import (
+    RANKED_SCHEMA, live_mask, ranked)
+from anisearch_model_spark.query.engine import (
+    IndexStore, _broadcast, _tombstones, _value, local_frame, page_of)
 
 # positions fit in 31 bits (a doc's post-stopword token count); codes are
 # indices into the per-bucket candidate doc array — the (code, pos) pair
@@ -141,44 +145,48 @@ def _top_candidates(m: pd.DataFrame, k: int, avgdl: float, k1: float,
     return cand.assign(n=n)
 
 
-def _phrase_blocks(index: IndexStore, phrase_text: str, field: str | None,
-                   slop: int) -> tuple[list[str], DataFrame | None]:
-    """(phrase terms, their position blocks) — the scan both phrase
-    scorers group by bucket: term-IN pushdown, field partition pruning.
-    The blocks are None when the phrase has no terms."""
-    from anisearch_model_spark.index.positions import POSITIONS_SCHEMA
+# the block columns a phrase kernel reads (``decode_positions_block``)
+PHRASE_COLS = ("term", "n", "first_doc_id", "doc_deltas", "tfs", "dls",
+               "pos_deltas")
+_CAND_SCHEMA = "doc_id long, ptf long, dl long, n long"
 
+
+def _phrase_terms(index: IndexStore, phrase_text: str, field: str | None,
+                  slop: int) -> list[str]:
+    """The phrase's terms (empty when it has none); an unknown ``field``
+    or a negative ``slop`` raises."""
     if slop < 0:
         raise ValueError("slop must be >= 0")
     terms = parse_phrase(phrase_text)
-    if not terms:
-        return terms, None
+    if terms:
+        index.field_stats(field)  # validates the field exists
+    return terms
+
+
+def _phrase_blocks(index: IndexStore, terms: list[str],
+                   field: str | None) -> DataFrame:
+    """The phrase terms' position blocks on the cluster: term-IN
+    pushdown, field partition pruning."""
+    from anisearch_model_spark.index.positions import POSITIONS_SCHEMA
+
     blocks = index._snapshot_read(POSITIONS_SCHEMA, "postings").filter(
         F.col("term").isin(sorted(set(terms)))
     )
     if field is not None:
-        index.field_stats(field)  # validates the field exists
         blocks = blocks.filter(F.col("field") == field)
-    return terms, blocks
-
-
-def _tombstones(index: IndexStore):
-    """The index's tombstones as a broadcast (None when there are none)."""
-    tomb = index.tombstones
-    return index.spark.sparkContext.broadcast(tomb) if len(tomb) else None
+    return blocks
 
 
 def phrase_match(index: IndexStore, phrase_text: str,
                  field: str | None = None, slop: int = 0) -> DataFrame:
     """Matched docs for a phrase: (doc_id, ptf, dl), live docs only."""
     schema = "doc_id long, ptf long, dl long"
-    terms, blocks = _phrase_blocks(index, phrase_text, field, slop)
-    if blocks is None:
-        return index.spark.createDataFrame([], schema)
-    btomb = _tombstones(index)
-    return blocks.groupBy("bucket").applyInPandas(
-        lambda pdf: _match_bucket(
-            pdf, terms, slop, btomb.value if btomb is not None else None),
+    terms = _phrase_terms(index, phrase_text, field, slop)
+    if not terms:
+        return local_frame(index.spark, None, schema)
+    btomb = _broadcast(index.spark, _tombstones(index))
+    return _phrase_blocks(index, terms, field).groupBy("bucket").applyInPandas(
+        lambda pdf: _match_bucket(pdf, terms, slop, _value(btomb)),
         schema=schema,
     )
 
@@ -191,54 +199,60 @@ def phrase_topk(index: IndexStore, phrase_text: str, k: int = 10,
     proximity, ordered variant); scoring is unchanged — the sloppy
     phrase is still ONE virtual term whose df/tf come from its matches.
 
-    One Spark pass: each bucket kernel matches, masks tombstones and
-    emits its match count plus its top-k candidates
-    (``_top_candidates``); the driver sums the counts into the phrase
-    df, scores the candidates with ``bm25_term_score`` (the same float64
-    expression as every BM25 scorer) and ranks them.  The result ships
-    back as a ≤k-row local frame."""
+    Each bucket kernel matches, masks tombstones and emits its match
+    count plus its top-k candidates (``_top_candidates``) — on the
+    driver when the phrase terms' summed df is within the driver bound
+    (``IndexStore.local_blocks``, 0 Spark jobs), else in one Spark pass.
+    The driver sums the counts into the phrase df, scores the
+    candidates with ``bm25_term_score`` (the same float64 expression as
+    every BM25 scorer) and ranks them.  The result is a ≤k-row local
+    frame."""
+    return local_frame(index.spark, _phrase_top(
+        index, phrase_text, k, params, field, slop), RANKED_SCHEMA)
+
+
+def _phrase_top(index: IndexStore, phrase_text: str, k: int,
+                params: BM25Params | None, field: str | None,
+                slop: int) -> pd.DataFrame:
     params = params or BM25Params()
-    spark = index.spark
-    schema = "rank long, doc_id long, score double"
-    terms, blocks = _phrase_blocks(index, phrase_text, field, slop)
-    if blocks is None:
-        return spark.createDataFrame([], schema)
+    terms = _phrase_terms(index, phrase_text, field, slop)
+    if not terms:
+        return ranked([], k)
     n_docs, avgdl = index.field_stats(field)
     k1, b = params.k1, params.b
-    btomb = _tombstones(index)
-    cands = blocks.groupBy("bucket").applyInPandas(
-        lambda pdf: _top_candidates(
-            _match_bucket(pdf, terms, slop,
-                          btomb.value if btomb is not None else None),
-            k, avgdl, k1, b),
-        schema="doc_id long, ptf long, dl long, n long",
-    ).toPandas()
+    tomb = _tombstones(index)
+    dfs = index.term_dfs(sorted(set(terms)), field=field)
+    local = index.local_blocks(terms, sum(dfs.values()), field, PHRASE_COLS)
+    if local == {}:  # no bucket holds a phrase term
+        return ranked([], k)
+    if local is not None:
+        cands = pd.concat(
+            [_top_candidates(_match_bucket(pdf, terms, slop, tomb),
+                             k, avgdl, k1, b) for pdf in local.values()],
+            ignore_index=True)
+    else:
+        btomb = _broadcast(index.spark, tomb)
+        cands = _phrase_blocks(index, terms, field).groupBy(
+            "bucket").applyInPandas(
+            lambda pdf: _top_candidates(
+                _match_bucket(pdf, terms, slop, _value(btomb)),
+                k, avgdl, k1, b),
+            schema=_CAND_SCHEMA,
+        ).toPandas()
     df_phrase = int(cands["n"].sum())
     if df_phrase == 0:
-        return spark.createDataFrame([], schema)
+        return ranked([], k)
     idf = float(bm25_idf(np.array([df_phrase]), n_docs)[0])
     cands["score"] = bm25_term_score(cands["ptf"].to_numpy(),
                                      cands["dl"].to_numpy(), idf, avgdl, k1, b)
-    top = cands.sort_values(["score", "doc_id"], ascending=[False, True],
-                            kind="mergesort").head(k)
-    return spark.createDataFrame(
-        pd.DataFrame({"rank": np.arange(1, len(top) + 1, dtype="int64"),
-                      "doc_id": top["doc_id"].to_numpy("int64"),
-                      "score": top["score"].to_numpy("float64")}),
-        schema)
+    return ranked([cands[["doc_id", "score"]]], k)
 
 
 def phrase_search(index: IndexStore, phrase_text: str, k: int = 10,
                   params: BM25Params | None = None, field: str | None = None,
                   page: int = 1, slop: int = 0,
                   with_metadata: bool = True) -> DataFrame:
-    """Phrase top-k + doc metadata (``engine.attach_metadata``): the
+    """Phrase top-k + doc metadata (``engine.page_of``): the
     candidate pool scales with the page, as in ``engine.search``."""
-    top = phrase_topk(index, phrase_text, k * page, params=params, field=field,
-                      slop=slop)
-    if page > 1:
-        lo, hi = (page - 1) * k, page * k
-        top = top.filter((F.col("rank") > lo) & (F.col("rank") <= hi))
-    if not with_metadata:
-        return top
-    return attach_metadata(index, top)
+    return page_of(index, _phrase_top(index, phrase_text, k * page, params,
+                                      field, slop), k, page, with_metadata)

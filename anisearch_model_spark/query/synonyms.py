@@ -48,7 +48,8 @@ def search_synonyms(index, query_text: str,
     always an implicit member; unlisted terms form singleton groups —
     for those the blended model reduces to plain BM25 exactly).
     """
-    from anisearch_model_spark.query.engine import IndexStore, parse_query
+    from anisearch_model_spark.query.engine import (
+        IndexStore, local_frame, parse_query)
     from anisearch_model_spark.query.multifield import rank_and_paginate
 
     assert isinstance(index, IndexStore)
@@ -58,7 +59,7 @@ def search_synonyms(index, query_text: str,
     out_schema = "rank long, doc_id long, score double"
     qterms = sorted(set(parse_query(query_text)))
     if not qterms:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, None, out_schema)
     # group id = the query term; member → group map (first group wins if
     # a variant is shared — deterministic via sorted qterms)
     member_of: dict[str, str] = {}

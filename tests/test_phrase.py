@@ -415,12 +415,18 @@ def test_phrase_topk_ties_across_buckets(spark, tmp_path):
     assert post["doc_id"].tolist() == [i for i in order if i != dead]
 
 
-def test_phrase_search_is_one_spark_pass(spark, pos_index, oracle):
+def test_phrase_search_is_one_spark_pass(spark, pos_index, oracle,
+                                         monkeypatch):
     """phrase_search runs ONE Spark pass: the kernel's candidates and
     match counts come back in one collect (a shuffle stage and a result
     stage), the df and ranking are computed on the driver and the
-    metadata attach is local — no cached frame, no second action."""
+    metadata attach is local — no cached frame, no second action.
+    Pinned to the cluster path (bound 0); under the bound the request
+    runs no job at all (tests/test_driver_query.py)."""
+    from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.phrase import phrase_search
+
+    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
 
     ph = _corpus_phrases(oracle, 1)[0]
     phrase_search(pos_index, ph, k=5).collect()  # plan/worker warm-up

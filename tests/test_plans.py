@@ -129,15 +129,19 @@ def test_simhash_has_single_generate(spark):
     assert generate_count(simhash(d)) == 1
 
 
-def test_metadata_attach_is_local(spark, index_dir):
+def test_metadata_attach_is_local(spark, index_dir, monkeypatch):
     """r6: search()'s metadata attach happens driver-side (pandas merge
     over the collected ≤ pages·k rank rows + the pyarrow stored-fields
     fetch) — the returned frame is a LOCAL relation: no join, no
     exchange, no scan left in its plan (the pre-r6 shape was a broadcast
-    join; a sort-merge join here was the original scale bug)."""
+    join; a sort-merge join here was the original scale bug).  Pinned
+    to the cluster scoring path (bound 0), so the attach is local even
+    when scoring was not."""
     from anisearch_model_spark.plans.inspect import formatted_plan
+    from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.engine import IndexStore, search
 
+    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
     idx = IndexStore(spark, index_dir)
     q = search(idx, "hero battle", k=5)
     plan = formatted_plan(q)
@@ -145,15 +149,19 @@ def test_metadata_attach_is_local(spark, index_dir):
     assert "doc_map" not in plan
 
 
-def test_phrase_and_boolean_metadata_attach_is_local(spark, index_dir):
+def test_phrase_and_boolean_metadata_attach_is_local(spark, index_dir,
+                                                     monkeypatch):
     """phrase_search and boolean_search share search()'s metadata attach
     (engine.attach_metadata): the returned frame is a LOCAL relation —
-    no join, no exchange, no doc_map scan in its plan."""
+    no join, no exchange, no doc_map scan in its plan.  Pinned to the
+    cluster scoring path (bound 0)."""
     from anisearch_model_spark.plans.inspect import formatted_plan
+    from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.boolean import boolean_search
     from anisearch_model_spark.query.engine import IndexStore
     from anisearch_model_spark.query.phrase import phrase_search
 
+    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
     idx = IndexStore(spark, index_dir)
     for q in (phrase_search(idx, "hero battle", k=5),
               boolean_search(idx, "+hero battle -dragon", k=5)):
@@ -162,20 +170,24 @@ def test_phrase_and_boolean_metadata_attach_is_local(spark, index_dir):
         assert "doc_map" not in plan
 
 
-def test_metadata_probe_prunes_doc_map_partitions(spark, index_dir):
+def test_metadata_probe_prunes_doc_map_partitions(spark, index_dir,
+                                                  monkeypatch):
     """search()'s metadata probe must never scan the whole doc_map for a
     k-row probe.  r6: the unfiltered probe is a bounded DRIVER-side
     pyarrow read of the candidate buckets' files — the query plan
     carries NO doc_map scan at all; the filtered/oversized fallback is
     the pruned cluster scan (PartitionFilter on bucket + pushed doc_id
-    IN), asserted on the probe frame directly."""
+    IN), asserted on the probe frame directly.  Pinned to the cluster
+    scoring path (bound 0), whose ranked frame is a Spark plan."""
     from pyspark.sql import functions as F
 
     from anisearch_model_spark.plans.inspect import (
         formatted_plan, has_partition_filter)
+    from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.engine import (
         IndexStore, probe_doc_map, search, topk_bmw)
 
+    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
     idx = IndexStore(spark, index_dir)
     q = search(idx, "hero battle", k=5)
     assert "doc_map" not in formatted_plan(q)  # local fetch, no scan
@@ -216,18 +228,22 @@ def test_metadata_fetch_falls_back_when_bucket_unlisted(spark, index_dir,
     assert got.equals(want)
 
 
-def test_tombstone_mask_adds_no_join(spark, index_dir, tmp_path):
+def test_tombstone_mask_adds_no_join(spark, index_dir, tmp_path,
+                                    monkeypatch):
     """The live-docs filter is applied INSIDE the per-bucket fold kernel
     (broadcast numpy mask, r6 score_matches shape) — the exhaustive
     scorer's plan must carry NO join for tombstones (the pre-r6 shape
     was a broadcast LEFT ANTI; a SortMergeJoin would be the scale bug),
-    and the dead ids must still be gone from the results."""
+    and the dead ids must still be gone from the results.  Pinned to
+    the cluster scoring path (bound 0)."""
     import shutil
     from anisearch_model_spark.index.tombstones import delete_docs
     from anisearch_model_spark.plans.inspect import (
         formatted_plan, uses_sort_merge_join)
+    from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.engine import IndexStore, topk_exhaustive
 
+    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
     d = str(tmp_path / "tomb_plan_idx")
     shutil.copytree(index_dir, d)
     delete_docs(spark, d, [0, 1, 2])
@@ -239,20 +255,26 @@ def test_tombstone_mask_adds_no_join(spark, index_dir, tmp_path):
     assert not got & {0, 1, 2}
 
 
-def test_boolean_plan_is_one_scan_one_kernel(spark, index_dir, tmp_path):
+def test_boolean_plan_is_one_scan_one_kernel(spark, index_dir, tmp_path,
+                                             monkeypatch):
     """boolean_topk with required, optional AND prohibited clauses on an
     index with tombstones plans as ONE postings scan feeding one
     per-bucket kernel: clause satisfaction, prohibition and the
     tombstone mask are doc masks inside it — no Join (prohibited or
     tombstone anti-join), no Aggregate (per-doc fold), no second scan —
-    and the results keep the boolean semantics exactly."""
+    and the results keep the boolean semantics exactly.  Pinned to the
+    cluster scoring path (bound 0); the driver path runs the same
+    kernel (tests/test_driver_query.py)."""
     import re
     import shutil
 
     from anisearch_model_spark.index.tombstones import delete_docs
     from anisearch_model_spark.plans.inspect import formatted_plan
+    from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.boolean import boolean_topk
     from anisearch_model_spark.query.engine import IndexStore, score_matches
+
+    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
 
     d = str(tmp_path / "bool_plan_idx")
     shutil.copytree(index_dir, d)
