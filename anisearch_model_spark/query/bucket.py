@@ -12,8 +12,8 @@ have the same shape).  The same function runs in one of two places:
 
   * on the driver, over the frames ``IndexStore.local_blocks`` reads
     with pyarrow from the manifest-listed buckets — when the request's
-    summed dictionary df is at most the session's
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (0 Spark jobs);
+    summed dictionary df is at most ``engine.LOCAL_MAX_POSTINGS`` (0
+    Spark jobs);
   * on executors, inside ``groupBy("bucket").applyInPandas`` over
     ``term_blocks`` with the query state broadcast — over the bound, or
     when the driver-side read fails.  No (term, doc) partial row ever
@@ -22,9 +22,10 @@ have the same shape).  The same function runs in one of two places:
 
 Both paths therefore return bit-identical results by construction.
 Memory: a kernel holds one bucket's blocks for the query's terms, and
-on the driver at most ``bound`` postings over all buckets (≈ 40 bytes
-each decoded, ~3 MB at the 65,536 default of ``session.get_spark``;
-phrase kernels add each posting's positions).
+the driver at most ``LOCAL_MAX_POSTINGS`` postings' blocks over all
+buckets (measured near the bound: 6 MB of peak RSS growth for a plain
+request, 27 MB for a phrase request, whose kernels also decode each
+posting's positions).
 
 Invariants every consumer inherits:
 

@@ -15,18 +15,18 @@ for large requests, the cluster:
   → global top-k merge: score DESC, doc_id ASC, dense rank
   → metadata fetch (driver-side pyarrow read, ``fetch_doc_rows``).
 
-Local or cluster.  The bound is ``session.driver_bound``: the session's
-``spark.sql.execution.arrow.maxRecordsPerBatch`` (the append's bound
-too).  A request whose terms' summed dictionary df is at most the bound
-reads its blocks on the driver (``IndexStore.local_blocks``), runs the
-bucket kernels there and returns ``spark.createDataFrame`` of the
-pandas result — its ``collect`` runs 0 Spark jobs.  The driver then
-holds at most ``bound`` postings (a few MB at the 65,536 default of
-``session.get_spark``).  Over the bound the same kernels run in
-``applyInPandas`` per bucket and the merge is ``ORDER BY score DESC,
-doc_id ASC LIMIT k`` (TakeOrderedAndProject).  A driver-side read that
-fails with ``OSError`` or an Arrow error answers "don't know": the
-request takes the cluster path and the store counts the fallback
+Local or cluster.  A request whose terms' summed dictionary df is at
+most ``LOCAL_MAX_POSTINGS`` (500k, the measured crossover of the two
+paths rounded down) reads its blocks on the driver
+(``IndexStore.local_blocks``), runs the bucket kernels there and
+returns ``spark.createDataFrame`` of the pandas result — its
+``collect`` runs 0 Spark jobs.  The driver then holds at most that many
+postings' blocks (its peak RSS grew by 6-27 MB near the bound).  Over
+the bound the same kernels run in ``applyInPandas`` per bucket and the
+merge is ``ORDER BY score DESC, doc_id ASC LIMIT k``
+(TakeOrderedAndProject).  A driver-side read that fails with
+``OSError`` or an Arrow error answers "don't know": the request takes
+the cluster path and the store counts the fallback
 (``IndexStore.path_counts``).  The dictionary and metadata fast paths
 keep the same contract.  Prefix and fuzzy expansion still scan the
 dictionary on the cluster.
@@ -59,7 +59,16 @@ from anisearch_model_spark.index.store import load_stats
 from anisearch_model_spark.query.bucket import (
     BLOCK_COLS, MATCH_SCHEMA, RANKED_SCHEMA, bmw_bucket, fold_bucket,
     ranked, term_blocks)
-from anisearch_model_spark.session import driver_bound
+
+# Most postings (the query terms' summed dictionary df) a request scores
+# on the driver; larger requests score on the cluster.  It sits below the
+# lowest measured crossover of the two paths: each path forced in
+# interleaved pairs on a 500k-turn, 16-bucket index, local[4] (4-core
+# host), the driver was faster for every request kind up to ~590k
+# postings for phrase, ~950k for boolean and ~1M for plain requests.  At
+# ~480k postings the driver's peak RSS grew by 6 MB (plain) and 27 MB
+# (phrase).  More executor cores move the crossover down.
+LOCAL_MAX_POSTINGS = 500_000
 
 # the block columns BMW reads: BLOCK_COLS plus the metadata of its bounds
 BMW_COLS = BLOCK_COLS + ("last_doc_id", "max_tf", "min_dl")
@@ -350,10 +359,11 @@ class IndexStore:
         """The query terms' blocks as ``{bucket: frame}`` when the request
         scores on the driver, else None (the cluster path).  It does
         when ``n_postings`` — the terms' summed dictionary df — is at
-        most ``driver_bound`` and the read succeeds (``_driver_side``);
-        ``path_counts`` records which path the request took."""
+        most ``LOCAL_MAX_POSTINGS`` and the read succeeds
+        (``_driver_side``); ``path_counts`` records which path the
+        request took."""
         got = None
-        if n_postings <= driver_bound(self.spark):
+        if n_postings <= LOCAL_MAX_POSTINGS:
             got = self._driver_side(self._read_blocks, terms, field, columns)
         self.path_counts["cluster" if got is None else "local"] += 1
         return got

@@ -43,17 +43,6 @@ def package_zip(dest: str | None = None) -> str:
     return dest
 
 
-def driver_bound(spark: SparkSession) -> int:
-    """The one bound of the driver-side fast paths: the session's
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``, the unit one
-    executor kernel holds.  An append batch of at most this many rows
-    is written on the driver (streaming/incremental.py); a request whose
-    terms' summed df is at most this many postings is scored on the
-    driver (query/engine.py)."""
-    return max(int(spark.conf.get(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000")), 0)
-
-
 def get_spark(
     app_name: str = "anisearch_model_spark",
     cores: int | None = None,

@@ -74,7 +74,6 @@ from anisearch_model_spark.index.docmap import (
     _INPUT_COLS, DOC_MAP_SCHEMA, bucketed_corpus)
 from anisearch_model_spark.index.store import (
     DELTA_PREFIX, dictionary_deltas, load_stats, token_total, write_stats)
-from anisearch_model_spark.session import driver_bound
 
 
 def _repair_orphan_buckets(index_dir: str, max_bucket: int) -> int:
@@ -212,6 +211,13 @@ def _field_dir(value: str) -> str:
         f"%{ord(c):02X}" if c in _PATH_ESCAPE else c for c in value)
 
 
+def _driver_bound(spark: SparkSession) -> int:
+    """Most transcript rows the driver path takes: the session's Arrow
+    batch size, the unit one executor kernel holds."""
+    return max(int(spark.conf.get(
+        "spark.sql.execution.arrow.maxRecordsPerBatch", "10000")), 0)
+
+
 def _write_file(table, directory: str, plain: tuple[str, ...]) -> None:
     """One parquet file in a new partition directory, encoded as Spark
     encodes it: snappy, INT96 timestamps, no Arrow schema blob, and
@@ -304,7 +310,7 @@ def _append_batch(spark: SparkSession, batch_df, index_dir: str,
     max_bucket = max((int(b) for b in buckets), default=-1)
     _repair_orphan_buckets(index_dir, max_bucket)
 
-    bound = driver_bound(spark)
+    bound = _driver_bound(spark)
     batch = batch_df.select(*_INPUT_COLS).limit(bound + 1).toArrow()
     n_new = batch.num_rows if batch.num_rows <= bound else batch_df.count()
     if n_new == 0:

@@ -23,3 +23,21 @@ def index_dir(spark, tmp_path_factory):
     tr = gen_transcripts(spark, 3000, seed=42)
     build_index(spark, tr, d, num_buckets=6)
     return d
+
+
+@pytest.fixture
+def each_path(monkeypatch):
+    """``for path in each_path():`` runs the loop body twice: every
+    request pinned to the driver ("local"), then to the cluster
+    ("cluster"), by patching the driver-scoring bound of query/engine.py.
+    A check inside the loop then holds on both scoring paths."""
+    from anisearch_model_spark.query import engine
+
+    def paths():
+        for path in ("local", "cluster"):
+            with monkeypatch.context() as mp:
+                mp.setattr(engine, "LOCAL_MAX_POSTINGS",
+                           1 << 40 if path == "local" else 0)
+                yield path
+
+    return paths

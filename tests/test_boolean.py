@@ -36,10 +36,16 @@ def mini(spark, tmp_path_factory):
     return i, convs
 
 
-def _convs(mini, q, **kw):
+def _convs(mini, paths, q, **kw):
+    """The conv_ids a boolean request matches; both scoring paths
+    (``each_path``) must agree on them."""
     i, convs = mini
-    got = boolean_topk(i, q, k=10, **kw).toPandas()
-    return {convs[d] for d in got["doc_id"]}
+    got = []
+    for _path in paths():
+        got.append({convs[d] for d in
+                    boolean_topk(i, q, k=10, **kw).toPandas()["doc_id"]})
+    assert got[0] == got[1], q
+    return got[0]
 
 
 def test_parse_boolean_clauses():
@@ -60,17 +66,18 @@ def test_parse_boolean_returns_raw_stems():
     assert req == ["bat*"] and opt == ["alpha"]
 
 
-def test_no_markers_identical_to_exhaustive(spark, idx):
+def test_no_markers_identical_to_exhaustive(spark, idx, each_path):
     q = "hero battle dragon"
-    a = boolean_topk(idx, q, 10).collect()
-    b = topk_exhaustive(idx, q, 10).collect()
-    assert [(r["rank"], r["doc_id"], r["score"]) for r in a] == \
-        [(r["rank"], r["doc_id"], r["score"]) for r in b]
-    assert a
+    for path in each_path():
+        a = boolean_topk(idx, q, 10).collect()
+        b = topk_exhaustive(idx, q, 10).collect()
+        assert [(r["rank"], r["doc_id"], r["score"]) for r in a] == \
+            [(r["rank"], r["doc_id"], r["score"]) for r in b], path
+        assert a, path
 
 
-def test_required_filters(mini):
-    assert _convs(mini, "+beta alpha") == {"c0", "c1", "c3"}
+def test_required_filters(mini, each_path):
+    assert _convs(mini, each_path, "+beta alpha") == {"c0", "c1", "c3"}
 
 
 def test_required_scores_too(mini):
@@ -82,24 +89,24 @@ def test_required_scores_too(mini):
     assert convs[got["doc_id"].iloc[0]] == "c4"
 
 
-def test_prohibited_excludes(mini):
-    assert _convs(mini, "alpha -gamma") == {"c1", "c4"}
+def test_prohibited_excludes(mini, each_path):
+    assert _convs(mini, each_path, "alpha -gamma") == {"c1", "c4"}
 
 
-def test_combined_clauses(mini):
-    assert _convs(mini, "+alpha +beta -gamma") == {"c1"}
+def test_combined_clauses(mini, each_path):
+    assert _convs(mini, each_path, "+alpha +beta -gamma") == {"c1"}
 
 
-def test_pure_negative_matches_nothing(mini):
-    assert _convs(mini, "-alpha") == set()
+def test_pure_negative_matches_nothing(mini, each_path):
+    assert _convs(mini, each_path, "-alpha") == set()
 
 
-def test_required_absent_term_empty(mini):
-    assert _convs(mini, "+zzzunseen alpha") == set()
+def test_required_absent_term_empty(mini, each_path):
+    assert _convs(mini, each_path, "+zzzunseen alpha") == set()
 
 
-def test_prohibited_absent_term_noop(mini):
-    assert _convs(mini, "alpha -zzzunseen") == \
+def test_prohibited_absent_term_noop(mini, each_path):
+    assert _convs(mini, each_path, "alpha -zzzunseen") == \
         {"c0", "c1", "c2", "c4"}
 
 
@@ -117,7 +124,7 @@ def test_boolean_search_metadata(spark, idx):
     assert all(r["doc_id"] in need for r in rows)
 
 
-def test_boolean_field_scoped(spark, tmp_path):
+def test_boolean_field_scoped(spark, tmp_path, each_path):
     rows = [
         ("c0", 0, "user", "alpha beta", None, None),
         ("c0", 1, "assistant", "alpha beta", None, None),
@@ -128,12 +135,14 @@ def test_boolean_field_scoped(spark, tmp_path):
     build_index(spark, tr, d, num_buckets=1, field_col="role")
     i = IndexStore(spark, d)
     roles = i.doc_map.toPandas().set_index("doc_id")["role"]
-    got = boolean_topk(i, "+alpha -beta", k=10, field="assistant").toPandas()
-    assert len(got) == 1
-    assert all(roles[d] == "assistant" for d in got["doc_id"])
+    for path in each_path():
+        got = boolean_topk(i, "+alpha -beta", k=10,
+                           field="assistant").toPandas()
+        assert len(got) == 1, path
+        assert all(roles[d] == "assistant" for d in got["doc_id"]), path
 
 
-def test_boolean_respects_tombstones(spark, tmp_path):
+def test_boolean_respects_tombstones(spark, tmp_path, each_path):
     from anisearch_model_spark.index.tombstones import delete_docs
 
     rows = [
@@ -148,8 +157,10 @@ def test_boolean_respects_tombstones(spark, tmp_path):
     assert len(pre) == 2
     dead = int(pre["doc_id"].iloc[0])
     delete_docs(spark, d, [dead])
-    post = boolean_topk(i, "+alpha beta", k=10).toPandas()
-    assert post["doc_id"].tolist() == [x for x in pre["doc_id"] if x != dead]
+    for path in each_path():
+        post = boolean_topk(i, "+alpha beta", k=10).toPandas()
+        assert post["doc_id"].tolist() == \
+            [x for x in pre["doc_id"] if x != dead], path
 
 
 def test_cli_info_and_recover(spark, tmp_path, capsys):
@@ -211,33 +222,34 @@ def pat(spark, tmp_path_factory):
     return i, convs
 
 
-def test_required_prefix_clause_is_or_within(pat):
+def test_required_prefix_clause_is_or_within(pat, each_path):
     # +bat* = "must contain SOME bat-prefixed term"
-    assert _convs(pat, "+bat* alpha") == {"c0", "c1", "c2", "c4"}
+    assert _convs(pat, each_path, "+bat* alpha") == {"c0", "c1", "c2", "c4"}
 
 
-def test_two_required_prefix_clauses_and_between(pat):
+def test_two_required_prefix_clauses_and_between(pat, each_path):
     # +bat* +c* = some bat-term AND some c-term (cave / cry)
-    assert _convs(pat, "+bat* +c*") == {"c0", "c2"}
+    assert _convs(pat, each_path, "+bat* +c*") == {"c0", "c2"}
 
 
-def test_prohibited_prefix_excludes_any_expansion(pat):
-    assert _convs(pat, "alpha -bat*") == {"c3"}
+def test_prohibited_prefix_excludes_any_expansion(pat, each_path):
+    assert _convs(pat, each_path, "alpha -bat*") == {"c3"}
 
 
-def test_required_multi_token_stem_still_all_required(pat):
+def test_required_multi_token_stem_still_all_required(pat, each_path):
     # "+bat-cave": each literal token its own AND clause
-    assert _convs(pat, "+bat-cave alpha") == {"c0"}
+    assert _convs(pat, each_path, "+bat-cave alpha") == {"c0"}
 
 
-def test_required_unmatchable_pattern_empty(pat):
-    assert _convs(pat, "+zzz* alpha") == set()
+def test_required_unmatchable_pattern_empty(pat, each_path):
+    assert _convs(pat, each_path, "+zzz* alpha") == set()
 
 
-def test_required_fuzzy_clause(pat):
+def test_required_fuzzy_clause(pat, each_path):
     # batl~1 -> battle? lev(batl,battle)=2; batl~2 covers bat(1)/batch(2)/battle(2)
-    assert _convs(pat, "+batl~2") == {"c0", "c1", "c2", "c4"}
-    assert _convs(pat, "+batl~1") == {"c0", "c4"}  # only bat (distance 1)
+    assert _convs(pat, each_path, "+batl~2") == {"c0", "c1", "c2", "c4"}
+    # only bat (distance 1)
+    assert _convs(pat, each_path, "+batl~1") == {"c0", "c4"}
 
 
 def test_optional_pattern_scores_like_plain_prefix(pat):

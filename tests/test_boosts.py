@@ -12,23 +12,30 @@ def _rows(df):
     return [(r["rank"], r["doc_id"], r["score"]) for r in df.collect()]
 
 
-def test_unit_boosts_reduce_to_plain(spark, index_dir):
+def test_unit_boosts_reduce_to_plain(spark, index_dir, each_path):
     idx = IndexStore(spark, index_dir)
     q = "hero battle magic"
-    plain = _rows(topk_exhaustive(idx, q, k=15))
-    unit = _rows(topk_exhaustive(idx, q, k=15,
-                                 boosts={"hero": 1.0, "battle": 1.0}))
-    assert unit == plain
+    for path in each_path():
+        plain = _rows(topk_exhaustive(idx, q, k=15))
+        unit = _rows(topk_exhaustive(idx, q, k=15,
+                                     boosts={"hero": 1.0, "battle": 1.0}))
+        assert unit == plain, path
 
 
-def test_bmw_matches_exhaustive_under_boosts(spark, index_dir):
+def test_bmw_matches_exhaustive_under_boosts(spark, index_dir, each_path):
     """The block-max bounds derive from the boost-scaled idf map, so
-    pruning must stay exact — bit-identical output at any weights."""
+    pruning must stay exact — bit-identical output at any weights, on
+    both scoring paths."""
     idx = IndexStore(spark, index_dir)
     q = "hero battle magic"
     boosts = {"hero": 3.0, "battle": 0.25, "magic": 1.5}
-    assert _rows(topk_bmw(idx, q, k=20, boosts=boosts)) == \
-        _rows(topk_exhaustive(idx, q, k=20, boosts=boosts))
+    got = []
+    for path in each_path():
+        bmw = _rows(topk_bmw(idx, q, k=20, boosts=boosts))
+        assert bmw == _rows(topk_exhaustive(idx, q, k=20, boosts=boosts)), \
+            path
+        got.append(bmw)
+    assert got[0] == got[1]
 
 
 def test_boost_reorders_toward_boosted_term(spark, index_dir):

@@ -29,7 +29,7 @@ from tests.test_append_commit import (
 
 def _force_cluster(mp):
     """Every batch is over the bound: the cluster path writes it."""
-    mp.setattr(incremental, "driver_bound", lambda spark: 0)
+    mp.setattr(incremental, "_driver_bound", lambda spark: 0)
 
 
 def _table(d, table) -> pd.DataFrame:
@@ -135,7 +135,7 @@ def test_batches_the_driver_cannot_take_go_to_the_cluster(spark, tmp_path,
     cut = convs[len(convs) * 3 // 4]
     base, batch = pdf[pdf["conv_id"] < cut], pdf[pdf["conv_id"] >= cut].copy()
     if case == "over_bound":
-        monkeypatch.setattr(incremental, "driver_bound",
+        monkeypatch.setattr(incremental, "_driver_bound",
                             lambda spark: len(batch) - 1)
     elif case == "multi_bucket":
         base = base[base["conv_id"] < convs[len(convs) // 8]]

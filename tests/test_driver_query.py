@@ -30,9 +30,9 @@ ODD_ROLES = ["*", "a b", "x/y", "50%"]
 
 
 def _force(mp, path):
-    """Pin every request to one path through the bound helper."""
-    mp.setattr(engine, "driver_bound",
-               lambda spark: 0 if path == "cluster" else 1 << 40)
+    """Pin every request to one path through the driver-scoring bound."""
+    mp.setattr(engine, "LOCAL_MAX_POSTINGS",
+               0 if path == "cluster" else 1 << 40)
 
 
 def _jobs(spark, fn):
@@ -187,7 +187,7 @@ def test_over_the_bound_takes_the_cluster_path(spark, unscoped, monkeypatch):
     idx = IndexStore(spark, unscoped)
     n = sum(idx.term_dfs(["battle", "hero"]).values())
     for bound, path in ((n - 1, "cluster"), (n, "local")):
-        monkeypatch.setattr(engine, "driver_bound", lambda spark: bound)
+        monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", bound)
         before = dict(idx.path_counts)
         topk_bmw(idx, "hero battle", 5).collect()
         assert idx.path_counts[path] == before[path] + 1

@@ -45,26 +45,30 @@ def _role_oracle(index: IndexStore, role: str) -> OracleIndex:
 
 @pytest.mark.parametrize("role", ["user", "assistant"])
 @pytest.mark.parametrize("q", ["hero battle magic world", "story"])
-def test_role_scoped_rank_identity(field_index, role, q):
+def test_role_scoped_rank_identity(field_index, role, q, each_path):
     expect = _role_oracle(field_index, role).topk(q, 10)
-    got = topk_exhaustive(field_index, q, 10, field=role).toPandas()
-    assert got["doc_id"].tolist() == expect["doc_id"].tolist()
-    np.testing.assert_array_equal(
-        got["score"].to_numpy(), expect["score"].to_numpy()
-    )
-    # scoped results really differ from unscoped (the filter did something)
-    unscoped = topk_exhaustive(field_index, q, 10).toPandas()
-    assert got["score"].tolist() != unscoped["score"].tolist()
+    for path in each_path():
+        got = topk_exhaustive(field_index, q, 10, field=role).toPandas()
+        assert got["doc_id"].tolist() == expect["doc_id"].tolist(), path
+        np.testing.assert_array_equal(
+            got["score"].to_numpy(), expect["score"].to_numpy(), path
+        )
+        # scoped results really differ from unscoped (the filter did
+        # something)
+        unscoped = topk_exhaustive(field_index, q, 10).toPandas()
+        assert got["score"].tolist() != unscoped["score"].tolist(), path
 
 
-def test_role_scoped_bmw_matches_exhaustive(field_index):
+def test_role_scoped_bmw_matches_exhaustive(field_index, each_path):
     q = "hero battle magic world"
-    exact = topk_exhaustive(field_index, q, 10, field="assistant").toPandas()
-    pruned = topk_bmw(field_index, q, 10, field="assistant").toPandas()
-    assert pruned["doc_id"].tolist() == exact["doc_id"].tolist()
-    np.testing.assert_array_equal(
-        pruned["score"].to_numpy(), exact["score"].to_numpy()
-    )
+    for path in each_path():
+        exact = topk_exhaustive(field_index, q, 10,
+                                field="assistant").toPandas()
+        pruned = topk_bmw(field_index, q, 10, field="assistant").toPandas()
+        assert pruned["doc_id"].tolist() == exact["doc_id"].tolist(), path
+        np.testing.assert_array_equal(
+            pruned["score"].to_numpy(), exact["score"].to_numpy(), path
+        )
 
 
 def test_unscoped_results_unchanged_by_qualification(spark, field_index, index_dir):

@@ -37,20 +37,22 @@ def test_filter_never_rescales_scores(spark, index_dir):
         assert score == unfiltered[doc_id]
 
 
-def test_mask_and_join_strategies_identical(spark, index_dir):
+def test_mask_and_join_strategies_identical(spark, index_dir, each_path):
     """max_mask_ids=0 forces the broad semi-join strategy; pruned=False
     forces it through the exhaustive scorer; the default takes the
     broadcast-mask BMW branch — all three must agree bit-for-bit."""
     idx = IndexStore(spark, index_dir)
     q = "hero battle magic"
     where = "role = 'user' AND turn_idx >= 1"
-    mask = _rows(search_filtered(idx, q, where, k=20, with_metadata=False))
     join = _rows(search_filtered(idx, q, where, k=20, with_metadata=False,
                                  max_mask_ids=0))
-    exh = _rows(search_filtered(idx, q, where, k=20, with_metadata=False,
-                                pruned=False))
-    assert mask == join == exh
-    assert mask
+    assert join
+    for path in each_path():  # the mask (``allow``) branch on each path
+        mask = _rows(search_filtered(idx, q, where, k=20,
+                                     with_metadata=False))
+        exh = _rows(search_filtered(idx, q, where, k=20, with_metadata=False,
+                                    pruned=False))
+        assert mask == join == exh, path
 
 
 def test_no_matching_docs_returns_empty(spark, index_dir):
@@ -69,7 +71,8 @@ def test_filtered_pagination_slices_one_ranking(spark, index_dir):
     assert p2 == full[5:10]
 
 
-def test_filter_composes_with_tombstones(spark, index_dir, tmp_path):
+def test_filter_composes_with_tombstones(spark, index_dir, tmp_path,
+                                         each_path):
     """A tombstoned doc stays out even when the filter admits it — the
     two masks intersect.  Uses a scratch copy so the shared index keeps
     no tombstones."""
@@ -87,11 +90,13 @@ def test_filter_composes_with_tombstones(spark, index_dir, tmp_path):
     assert pre
     dead = pre[0][1]
     delete_docs(spark, scratch, [dead])
-    post = _rows(search_filtered(idx, q, where, k=10, with_metadata=False))
-    assert dead not in [d for _r, d, _s in post]
-    # survivors keep their exact scores, ranks close up by one
-    assert [(d, s) for _r, d, s in post[:5]] == \
-        [(d, s) for _r, d, s in pre[1:6]]
+    for path in each_path():
+        post = _rows(search_filtered(idx, q, where, k=10,
+                                     with_metadata=False))
+        assert dead not in [d for _r, d, _s in post], path
+        # survivors keep their exact scores, ranks close up by one
+        assert [(d, s) for _r, d, s in post[:5]] == \
+            [(d, s) for _r, d, s in pre[1:6]], path
 
 
 def test_bad_predicate_is_an_admission_error(spark, index_dir):

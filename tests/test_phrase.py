@@ -86,17 +86,21 @@ def test_positions_block_roundtrip():
     assert enc.groupby("term")["block_id"].nunique().max() > 1
 
 
-def test_phrase_rank_identity(pos_index, oracle):
-    """Distributed phrase top-k == oracle: same docs, same ranks,
-    bit-identical float64 scores (shared kernel + mirrored expression)."""
+def test_phrase_rank_identity(pos_index, oracle, each_path):
+    """Phrase top-k == oracle on both scoring paths: same docs, same
+    ranks, bit-identical float64 scores (shared kernel + mirrored
+    expression)."""
     phrases = _corpus_phrases(oracle) + ["the and of a"]
     assert phrases
     for ph in phrases:
-        got = phrase_topk(pos_index, ph, k=10).toPandas()
         want = oracle.phrase_topk(ph, k=10)
-        assert got["doc_id"].tolist() == want["doc_id"].tolist(), ph
-        assert got["rank"].tolist() == want["rank"].tolist(), ph
-        assert got["score"].tolist() == want["score"].tolist(), ph  # bitwise
+        for path in each_path():
+            got = phrase_topk(pos_index, ph, k=10).toPandas()
+            assert got["doc_id"].tolist() == want["doc_id"].tolist(), \
+                (ph, path)
+            assert got["rank"].tolist() == want["rank"].tolist(), (ph, path)
+            assert got["score"].tolist() == want["score"].tolist(), \
+                (ph, path)  # bitwise
 
 
 def test_phrase_unseen_term_empty(pos_index):
@@ -158,7 +162,7 @@ def test_phrase_duplicate_terms(spark, tmp_path):
     assert got_tk["score"].tolist() == want["score"].tolist()
 
 
-def test_phrase_respects_tombstones(spark, tmp_path):
+def test_phrase_respects_tombstones(spark, tmp_path, each_path):
     """A tombstoned doc disappears from phrase results AND from the
     phrase df (virtual-term idf recomputes over live matches)."""
     from anisearch_model_spark.datagen import TRANSCRIPT_SCHEMA
@@ -176,11 +180,12 @@ def test_phrase_respects_tombstones(spark, tmp_path):
     assert len(pre) == 4
     dead = int(pre["doc_id"].iloc[0])
     delete_docs(spark, d, [dead])
-    post = phrase_topk(idx, "alpha beta", k=10).toPandas()
-    assert dead not in post["doc_id"].tolist()
-    assert len(post) == 3
-    # df dropped 4 → 3: idf rose, so live scores strictly increased
-    assert post["score"].iloc[0] > pre["score"].iloc[0]
+    for path in each_path():
+        post = phrase_topk(idx, "alpha beta", k=10).toPandas()
+        assert dead not in post["doc_id"].tolist(), path
+        assert len(post) == 3, path
+        # df dropped 4 → 3: idf rose, so live scores strictly increased
+        assert post["score"].iloc[0] > pre["score"].iloc[0], path
 
 
 def test_positions_staleness_gate(spark, tmp_path):
@@ -319,16 +324,20 @@ def test_slop_ptf_counts_distinct_starts(spark, tmp_path):
     assert m1["ptf"].tolist() == [2]
 
 
-def test_slop_rank_identity_vs_oracle(pos_index, oracle):
-    """Distributed sloppy phrase == naive oracle chains, bit-identical
-    scores, across slops and real corpus phrases (incl. a trigram)."""
+def test_slop_rank_identity_vs_oracle(pos_index, oracle, each_path):
+    """Sloppy phrase == naive oracle chains on both scoring paths,
+    bit-identical scores, across slops and real corpus phrases (incl. a
+    trigram)."""
     phrases = _corpus_phrases(oracle, n=4)
     for slop in (1, 2):
         for ph in phrases:
-            got = phrase_topk(pos_index, ph, k=10, slop=slop).toPandas()
             want = oracle.phrase_topk(ph, k=10, slop=slop)
-            assert got["doc_id"].tolist() == want["doc_id"].tolist(), (ph, slop)
-            assert got["score"].tolist() == want["score"].tolist(), (ph, slop)
+            for path in each_path():
+                got = phrase_topk(pos_index, ph, k=10, slop=slop).toPandas()
+                assert got["doc_id"].tolist() == want["doc_id"].tolist(), \
+                    (ph, slop, path)
+                assert got["score"].tolist() == want["score"].tolist(), \
+                    (ph, slop, path)
 
 
 def test_slop_zero_same_as_exact(pos_index, oracle):
@@ -426,7 +435,7 @@ def test_phrase_search_is_one_spark_pass(spark, pos_index, oracle,
     from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.phrase import phrase_search
 
-    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
 
     ph = _corpus_phrases(oracle, 1)[0]
     phrase_search(pos_index, ph, k=5).collect()  # plan/worker warm-up

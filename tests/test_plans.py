@@ -141,7 +141,7 @@ def test_metadata_attach_is_local(spark, index_dir, monkeypatch):
     from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.engine import IndexStore, search
 
-    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
     idx = IndexStore(spark, index_dir)
     q = search(idx, "hero battle", k=5)
     plan = formatted_plan(q)
@@ -161,7 +161,7 @@ def test_phrase_and_boolean_metadata_attach_is_local(spark, index_dir,
     from anisearch_model_spark.query.engine import IndexStore
     from anisearch_model_spark.query.phrase import phrase_search
 
-    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
     idx = IndexStore(spark, index_dir)
     for q in (phrase_search(idx, "hero battle", k=5),
               boolean_search(idx, "+hero battle -dragon", k=5)):
@@ -187,7 +187,7 @@ def test_metadata_probe_prunes_doc_map_partitions(spark, index_dir,
     from anisearch_model_spark.query.engine import (
         IndexStore, probe_doc_map, search, topk_bmw)
 
-    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
     idx = IndexStore(spark, index_dir)
     q = search(idx, "hero battle", k=5)
     assert "doc_map" not in formatted_plan(q)  # local fetch, no scan
@@ -243,7 +243,7 @@ def test_tombstone_mask_adds_no_join(spark, index_dir, tmp_path,
     from anisearch_model_spark.query import engine
     from anisearch_model_spark.query.engine import IndexStore, topk_exhaustive
 
-    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
     d = str(tmp_path / "tomb_plan_idx")
     shutil.copytree(index_dir, d)
     delete_docs(spark, d, [0, 1, 2])
@@ -274,7 +274,7 @@ def test_boolean_plan_is_one_scan_one_kernel(spark, index_dir, tmp_path,
     from anisearch_model_spark.query.boolean import boolean_topk
     from anisearch_model_spark.query.engine import IndexStore, score_matches
 
-    monkeypatch.setattr(engine, "driver_bound", lambda spark: 0)
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
 
     d = str(tmp_path / "bool_plan_idx")
     shutil.copytree(index_dir, d)

@@ -45,24 +45,27 @@ def index(spark, index_dir):
 
 
 @pytest.mark.parametrize("q", REFERENCE_QUERIES)
-def test_exhaustive_rank_identity(index, oracle, q):
+def test_exhaustive_rank_identity(index, oracle, q, each_path):
     expect = oracle.topk(q, 10)
-    got = topk_exhaustive(index, q, 10).toPandas()
-    assert got["doc_id"].tolist() == expect["doc_id"].tolist()
-    assert got["rank"].tolist() == expect["rank"].tolist()
-    if len(expect):
-        np.testing.assert_array_equal(  # BIT-identical, not approx
-            got["score"].to_numpy(), expect["score"].to_numpy()
-        )
+    for path in each_path():
+        got = topk_exhaustive(index, q, 10).toPandas()
+        assert got["doc_id"].tolist() == expect["doc_id"].tolist(), path
+        assert got["rank"].tolist() == expect["rank"].tolist(), path
+        if len(expect):
+            np.testing.assert_array_equal(  # BIT-identical, not approx
+                got["score"].to_numpy(), expect["score"].to_numpy(), path
+            )
 
 
 @pytest.mark.parametrize("q", REFERENCE_QUERIES[:4] + REFERENCE_QUERIES[6:8])
-def test_bmw_matches_exhaustive(index, oracle, q):
+def test_bmw_matches_exhaustive(index, oracle, q, each_path):
     expect = oracle.topk(q, 10)
-    got = topk_bmw(index, q, 10).toPandas()
-    assert got["doc_id"].tolist() == expect["doc_id"].tolist()
-    if len(expect):
-        np.testing.assert_array_equal(got["score"].to_numpy(), expect["score"].to_numpy())
+    for path in each_path():
+        got = topk_bmw(index, q, 10).toPandas()
+        assert got["doc_id"].tolist() == expect["doc_id"].tolist(), path
+        if len(expect):
+            np.testing.assert_array_equal(
+                got["score"].to_numpy(), expect["score"].to_numpy(), path)
 
 
 def test_bmw_skips_block_decodes(spark, tmp_path):

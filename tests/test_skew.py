@@ -70,7 +70,7 @@ def test_checkpoint_skew_ratio_bounded(spark, skew_index):
     assert cp["postings_emitted"].max() / cp["postings_emitted"].mean() < 1.5
 
 
-def test_hot_term_query_rank_identity(spark, skew_index):
+def test_hot_term_query_rank_identity(spark, skew_index, each_path):
     d, pdf = skew_index
     idx = IndexStore(spark, d)
     docs = (
@@ -82,9 +82,12 @@ def test_hot_term_query_rank_identity(spark, skew_index):
     oracle = OracleIndex(docs)
     for q in ["omnipresent", "omnipresent mega", "mega alpha"]:
         expect = oracle.topk(q, 10)
-        got = topk_exhaustive(idx, q, 10).toPandas()
-        assert got["doc_id"].tolist() == expect["doc_id"].tolist(), q
-        if len(expect):
-            np.testing.assert_array_equal(
-                got["score"].to_numpy(), expect["score"].to_numpy()
-            )
+        for path in each_path():
+            got = topk_exhaustive(idx, q, 10).toPandas()
+            assert got["doc_id"].tolist() == expect["doc_id"].tolist(), \
+                (q, path)
+            if len(expect):
+                np.testing.assert_array_equal(
+                    got["score"].to_numpy(), expect["score"].to_numpy(),
+                    (q, path)
+                )

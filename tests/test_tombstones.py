@@ -19,7 +19,7 @@ def _build(spark, tmp_path, n=800, buckets=4):
     return d
 
 
-def test_delete_excludes_doc_then_purge_drops_it(spark, tmp_path):
+def test_delete_excludes_doc_then_purge_drops_it(spark, tmp_path, each_path):
     from anisearch_model_spark.index.compact import compact_index
     from anisearch_model_spark.index.tombstones import delete_docs
     from anisearch_model_spark.query.engine import (
@@ -33,16 +33,19 @@ def test_delete_excludes_doc_then_purge_drops_it(spark, tmp_path):
 
     delete_docs(spark, d, [victim])
     # same IndexStore instance: the tombstone mtime check reloads
-    for fn in (topk_exhaustive, topk_bmw):
-        after = fn(idx, q, 10).toPandas()
-        assert victim not in set(after["doc_id"])
-        # survivors keep their as-built scores (stats untouched until
-        # purge) — the old ranks 2..10 shift up by one
-        want = before[before["doc_id"] != victim].head(9)
-        assert after.head(9)["doc_id"].tolist() == want["doc_id"].tolist()
-        np.testing.assert_array_equal(
-            after.head(9)["score"].to_numpy(), want["score"].to_numpy())
-        assert len(after) == 10  # a fresh doc fills the freed slot
+    for path in each_path():
+        for fn in (topk_exhaustive, topk_bmw):
+            after = fn(idx, q, 10).toPandas()
+            assert victim not in set(after["doc_id"]), path
+            # survivors keep their as-built scores (stats untouched until
+            # purge) — the old ranks 2..10 shift up by one
+            want = before[before["doc_id"] != victim].head(9)
+            assert after.head(9)["doc_id"].tolist() == \
+                want["doc_id"].tolist(), path
+            np.testing.assert_array_equal(
+                after.head(9)["score"].to_numpy(), want["score"].to_numpy(),
+                path)
+            assert len(after) == 10, path  # a fresh doc fills the freed slot
 
     # ---- physical purge via compaction ----
     n_docs_before = idx.stats["n_docs"]
