@@ -170,15 +170,17 @@ def write_stats(index_dir: str, n_docs: int, n_convs: int,
                 field_col: str | None) -> dict:
     """Write stats.json (atomic replace) from exact integer totals and
     return it.  ``field_docs``/``field_tokens``: field value → doc count
-    / token count; a field gets an entry when it has docs.  The one
-    stats writer — the full re-derive (``finalize_metadata``) and the
-    append commit produce the same file from the same totals."""
+    / token count; a field gets an entry when it has docs.  A null or
+    empty field value gets none: the build and both append paths store
+    its blocks under Hive's default partition, which reads back as null.
+    The one stats writer — the full re-derive (``finalize_metadata``)
+    and the append commit produce the same file from the same totals."""
     fields = {
         str(f): {
             "n_docs": int(nd),
             "avgdl": (float(field_tokens.get(f, 0)) / nd) if nd else 0.0,
         }
-        for f, nd in field_docs.items() if f is not None
+        for f, nd in field_docs.items() if f not in (None, "")
     }
     stats = {
         "n_docs": int(n_docs),

@@ -19,8 +19,10 @@ Local or cluster.  A request whose terms' summed dictionary df is at
 most ``LOCAL_MAX_POSTINGS`` (500k, the measured crossover of the two
 paths rounded down) reads its blocks on the driver
 (``IndexStore.local_blocks``), runs the bucket kernels there and
-returns ``spark.createDataFrame`` of the pandas result — its
-``collect`` runs 0 Spark jobs.  The driver then holds at most that many
+returns the pandas result as a ``LocalFrame``: a DataFrame whose
+``collect`` and ``schema`` answer on the driver (0 Spark jobs, 0 py4j
+commands) and whose JVM side is built only when another DataFrame
+operation needs it.  The driver then holds at most that many
 postings' blocks (its peak RSS grew by 6-27 MB near the bound).  Over
 the bound the same kernels run in ``applyInPandas`` per bucket and the
 merge is ``ORDER BY score DESC, doc_id ASC LIMIT k``
@@ -49,6 +51,9 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
@@ -75,21 +80,67 @@ BMW_COLS = BLOCK_COLS + ("last_doc_id", "max_tf", "min_dl")
 
 
 @functools.lru_cache(maxsize=64)
-def _struct(schema: str) -> StructType:
-    return StructType.fromDDL(schema)
+def _struct(schema: "str | StructType") -> StructType:
+    return schema if isinstance(schema, StructType) else \
+        StructType.fromDDL(schema)
+
+
+class LocalFrame(ClassicDataFrame):
+    """A driver-built result: a DataFrame to every caller, whose JVM side
+    is built only when an operation needs one.
+
+    ``collect()`` and ``schema`` answer from the pandas frame.  The rows
+    go through Arrow with the struct's types (the conversion Spark
+    Connect's ``collect`` uses), column by position as
+    ``createDataFrame`` assigns them, so values and Python types equal
+    those of a JVM ``collect``.  The first read of ``_jdf`` — by any
+    other operation (``filter``, ``join``, ``count``, ``toPandas``, …) —
+    builds the JVM frame with ``spark.createDataFrame`` and caches it."""
+
+    def __new__(cls, *args, **kwargs):
+        # pyspark.sql.DataFrame.__new__ would construct the classic class
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, pdf: pd.DataFrame,
+                 struct: StructType):
+        # every attribute the classic __init__ sets, except _jdf
+        self._session = spark
+        self._sc = spark.sparkContext
+        self.is_cached = False
+        self._support_repr_html = False
+        self.schema = struct  # fills the classic cached_property
+        self._pdf = pdf
+
+    @functools.cached_property
+    def _jdf(self):
+        spark, pdf, struct = self._session, self._pdf, self.schema
+        if len(pdf):
+            return spark.createDataFrame(pdf, struct)._jdf
+        # a 0-row pandas frame would still run a Spark job on collect
+        return spark.createDataFrame(
+            pd.DataFrame({n: [None] for n in struct.fieldNames()}),
+            struct).limit(0)._jdf
+
+    def collect(self) -> list:
+        if not len(self._pdf):
+            return []
+        cols = [pa.Array.from_pandas(self._pdf.iloc[:, i], safe=False,
+                                     type=to_arrow_type(f.dataType))
+                for i, f in enumerate(self.schema.fields)]
+        return ArrowTableToRowsConversion.convert(
+            pa.Table.from_arrays(cols, names=self.schema.fieldNames()),
+            self.schema)
 
 
 def local_frame(spark: SparkSession, pdf: "pd.DataFrame | None",
-                schema: str) -> DataFrame:
-    """A driver-built result as a DataFrame whose ``collect`` runs no
-    Spark job.  A 0-row pandas frame (or ``None``) would still run one,
-    so an empty result is a one-row all-null frame under ``limit(0)``."""
-    struct = _struct(schema)  # parsed once, not per request
-    if pdf is not None and len(pdf):
-        return spark.createDataFrame(pdf, struct)
-    return spark.createDataFrame(
-        pd.DataFrame({n: [None] for n in struct.fieldNames()}),
-        struct).limit(0)
+                schema: "str | StructType") -> DataFrame:
+    """A driver-built result (``None`` when empty) as a ``LocalFrame``:
+    its ``collect`` sends no JVM command and runs no Spark job.  The
+    schema is a DDL string (parsed once per process) or a struct."""
+    struct = _struct(schema)
+    if pdf is None:
+        pdf = pd.DataFrame({n: [] for n in struct.fieldNames()})
+    return LocalFrame(spark, pdf, struct)
 
 
 def rank_top(scored: DataFrame, k: int) -> DataFrame:
@@ -977,18 +1028,17 @@ def probe_doc_map(index: IndexStore, top: DataFrame, meta_cols: list[str],
     path, pruned scan otherwise)."""
     rows = top.collect()
     spark = index.spark
-    top_local = spark.createDataFrame(rows, top.schema) if rows else \
-        spark.createDataFrame([], top.schema)
+    top_local = local_frame(spark, pd.DataFrame(rows, columns=top.columns),
+                            top.schema)
     ids = [int(r["doc_id"]) for r in rows]
-    sel_schema = index.doc_map.select(*meta_cols).schema
     if meta_filter is None and "bucket" not in meta_cols and \
             len(ids) <= _LOCAL_FETCH_MAX_IDS and \
             len(index.buckets_for(ids)) <= _LOCAL_FETCH_MAX_BUCKETS:
         pdf = (fetch_doc_rows(index, ids, meta_cols) if ids
                else pd.DataFrame({c: [] for c in meta_cols}))
         if pdf is not None:
-            meta = spark.createDataFrame(pdf[list(meta_cols)],
-                                         schema=sel_schema)
+            meta = local_frame(spark, pdf[list(meta_cols)],
+                               index.doc_map.select(*meta_cols).schema)
             return top_local, meta
     return top_local, _doc_map_scan(index, ids, meta_cols, meta_filter)
 

@@ -4,8 +4,10 @@ its blocks with pyarrow and runs the bucket kernels on the driver.  The
 answers must be bit-identical to the cluster path's — on an unscoped and
 a field-qualified index with odd field values, with tombstones, boosts,
 an ``allow`` filter and pages past the first — and such a request must
-run no Spark job.  A failed driver-side read (blocks, dictionary or
-metadata) must give the cluster answer plus one counted fallback."""
+run no Spark job.  Its result is an ``engine.LocalFrame``: a served
+request sends no py4j command at all, and the frame's local ``collect``
+equals a JVM ``collect``.  A failed driver-side read (blocks, dictionary
+or metadata) must give the cluster answer plus one counted fallback."""
 
 import io
 import json
@@ -146,29 +148,132 @@ def test_local_path_respects_tombstones(spark, unscoped):
     assert idx.path_counts["local"] == 3
 
 
-def test_served_requests_run_no_spark_job(spark, unscoped, tmp_path):
+_SERVED = [json.dumps(r) for r in (
+    {"query": "hero battle", "k": 5},
+    {"query": "hero battle", "k": 5, "page": 2},
+    {"query": "hero battle", "k": 5, "phrase": True},
+    {"query": "+hero -dragon battle", "k": 5, "boolean": True},
+    {"query": "zzzunseenword", "k": 5},
+    {"query": "zzzunseenword other", "k": 5, "phrase": True},
+    {"query": "+zzzunseenword hero", "k": 5, "boolean": True},
+)]
+
+
+def test_served_requests_run_no_spark_job(spark, unscoped, tmp_path,
+                                          monkeypatch):
     """plain, phrase and boolean requests through ``serve_loop`` (query
-    log on), pages past the first and absent terms: 0 Spark jobs."""
+    log on), pages past the first and absent terms: 0 Spark jobs, 0
+    py4j commands and 0 ``createDataFrame`` calls.  py4j's own thread
+    may release JVM objects that earlier work dropped meanwhile; only
+    the serving thread's commands count."""
+    import threading
+
     from anisearch_model_spark import cli
 
     d = str(tmp_path / "idx")
     shutil.copytree(unscoped, d)
-    lines = [json.dumps(r) for r in (
-        {"query": "hero battle", "k": 5},
-        {"query": "hero battle", "k": 5, "page": 2},
-        {"query": "hero battle", "k": 5, "phrase": True},
-        {"query": "+hero -dragon battle", "k": 5, "boolean": True},
-        {"query": "zzzunseenword", "k": 5},
-        {"query": "zzzunseenword other", "k": 5, "phrase": True},
-        {"query": "+zzzunseenword hero", "k": 5, "boolean": True},
-    )]
     out = io.StringIO()
-    cli.serve_loop(spark, d, lines[:1], io.StringIO(), log=True)  # warm-up
-    jobs, n = _jobs(spark, lambda: cli.serve_loop(spark, d, lines, out,
-                                                  log=True))
-    assert n == len(lines) and jobs == 0
+    cli.serve_loop(spark, d, _SERVED[:1], io.StringIO(), log=True)  # warm-up
+    client = spark.sparkContext._gateway._gateway_client
+    commands, frames = [], []
+    send, create = client.send_command, type(spark).createDataFrame
+
+    def serve():
+        with monkeypatch.context() as mp:
+            mp.setattr(client, "send_command", lambda c, *a, **kw: (
+                commands.append((threading.current_thread(), c)),
+                send(c, *a, **kw))[1])
+            mp.setattr(type(spark), "createDataFrame", lambda *a, **kw: (
+                frames.append(a), create(*a, **kw))[1])
+            return cli.serve_loop(spark, d, _SERVED, out, log=True)
+
+    jobs, n = _jobs(spark, serve)
+    assert n == len(_SERVED) and jobs == 0
+    main = threading.current_thread()
+    assert [c for t, c in commands if t is main] == [] and frames == []
     resp = [json.loads(x) for x in out.getvalue().splitlines()]
     assert [len(r["results"]) for r in resp] == [5, 5, 5, 5, 0, 0, 0]
+
+
+def test_served_results_equal_on_both_paths(spark, unscoped, each_path):
+    """Over the bound the same requests score on the cluster: the
+    served results are unchanged."""
+    from anisearch_model_spark import cli
+
+    got = {}
+    for path in each_path():
+        out = io.StringIO()
+        cli.serve_loop(spark, unscoped, _SERVED, out, log=False)
+        got[path] = [json.loads(x)["results"]
+                     for x in out.getvalue().splitlines()]
+    assert got["local"] == got["cluster"]
+    assert [len(r) for r in got["local"]] == [5, 5, 5, 5, 0, 0, 0]
+
+
+def _results(idx):
+    """(name, frame) pairs: plain, phrase and boolean results with k
+    over the match count, a page past the first and an empty result."""
+    return [
+        ("plain", search(idx, "hero battle", k=8)),
+        ("plain_all", search(idx, "hero battle", k=5000)),
+        ("plain_page3", search(idx, "hero battle", k=4, page=3)),
+        ("plain_none", search(idx, "zzzunseenword", k=5)),
+        ("ranked_only", search(idx, "hero", k=6, with_metadata=False)),
+        ("phrase_all", phrase_search(idx, "hero battle", k=5000)),
+        ("phrase_page2", phrase_search(idx, "hero battle", k=3, page=2)),
+        ("phrase_none", phrase_search(idx, "zzzunseen word", k=5)),
+        ("boolean_all", boolean_search(idx, "+hero battle -dragon", k=5000)),
+        ("boolean_page2", boolean_search(idx, "+hero -dragon", k=3, page=2)),
+        ("boolean_none", boolean_search(idx, "+zzzunseenword hero", k=5)),
+    ]
+
+
+def _typed(rows):
+    return [[(v, type(v)) for v in r] for r in rows]
+
+
+def test_local_collect_equals_jvm_collect(spark, unscoped):
+    """A driver-scored result's ``collect`` answers from its pandas
+    frame; ``select("*")`` materializes the JVM frame and collects that.
+    Values, field names and the type of every value agree."""
+    idx = IndexStore(spark, unscoped)
+    n_all = 0
+    for name, df in _results(idx):
+        assert isinstance(df, engine.LocalFrame), name
+        local, jvm = df.collect(), df.select("*").collect()
+        assert _typed(local) == _typed(jvm), name
+        assert [r.asDict() for r in local] == [r.asDict() for r in jvm], name
+        assert df.schema == df.select("*").schema, name
+        n_all += name.endswith("_all") and 0 < len(local) < 5000
+    assert n_all == 3
+
+
+def test_local_frame_operations_equal_jvm_frame(spark, unscoped):
+    """Operations that need a JVM plan build it on first use and answer
+    as a ``createDataFrame`` of the same pandas frame does."""
+    from pyspark.sql import functions as F
+
+    idx = IndexStore(spark, unscoped)
+    others = spark.range(0, 4000).withColumnRenamed("id", "doc_id").filter(
+        "doc_id % 2 = 0")
+    ops = {
+        "filter": lambda f: f.filter(F.col("rank") > 2).collect(),
+        "orderBy": lambda f: f.orderBy(F.desc("doc_id")).collect(),
+        "join": lambda f: f.join(others, "doc_id").orderBy("rank").collect(),
+        "count": lambda f: f.count(),
+        "columns": lambda f: f.columns,
+        "toPandas": lambda f: f.toPandas(),
+    }
+    results = dict(_results(idx))
+    for name in ("plain", "plain_none", "phrase_page2", "boolean_all"):
+        pdf, struct = results[name]._pdf, results[name].schema
+        ref = spark.createDataFrame(pdf, struct)
+        for op, fn in ops.items():
+            got, want = fn(engine.local_frame(spark, pdf, struct)), fn(ref)
+            if op == "toPandas":
+                pd.testing.assert_frame_equal(got, want, check_exact=True)
+            else:
+                assert got == want, (name, op)
 
 
 def test_absent_term_runs_no_spark_job(spark, unscoped):
