@@ -80,9 +80,8 @@ BMW_COLS = BLOCK_COLS + ("last_doc_id", "max_tf", "min_dl")
 
 
 @functools.lru_cache(maxsize=64)
-def _struct(schema: "str | StructType") -> StructType:
-    return schema if isinstance(schema, StructType) else \
-        StructType.fromDDL(schema)
+def _struct(schema: str) -> StructType:
+    return StructType.fromDDL(schema)
 
 
 class LocalFrame(ClassicDataFrame):
@@ -116,6 +115,10 @@ class LocalFrame(ClassicDataFrame):
         spark, pdf, struct = self._session, self._pdf, self.schema
         if len(pdf):
             return spark.createDataFrame(pdf, struct)._jdf
+        if not all(f.nullable for f in struct.fields):
+            # a struct from a JVM plan (a candidate frame's) may refuse
+            # the null row below
+            return spark.createDataFrame([], struct)._jdf
         # a 0-row pandas frame would still run a Spark job on collect
         return spark.createDataFrame(
             pd.DataFrame({n: [None] for n in struct.fieldNames()}),
@@ -137,7 +140,7 @@ def local_frame(spark: SparkSession, pdf: "pd.DataFrame | None",
     """A driver-built result (``None`` when empty) as a ``LocalFrame``:
     its ``collect`` sends no JVM command and runs no Spark job.  The
     schema is a DDL string (parsed once per process) or a struct."""
-    struct = _struct(schema)
+    struct = schema if isinstance(schema, StructType) else _struct(schema)
     if pdf is None:
         pdf = pd.DataFrame({n: [] for n in struct.fieldNames()})
     return LocalFrame(spark, pdf, struct)

@@ -276,6 +276,34 @@ def test_local_frame_operations_equal_jvm_frame(spark, unscoped):
                 assert got == want, (name, op)
 
 
+def test_empty_frame_keeps_non_nullable_struct(spark):
+    """An empty result under a struct with a non-nullable field (a JVM
+    plan's, as ``probe_doc_map`` passes) builds a JVM frame of that
+    struct and answers as ``createDataFrame([], struct)`` does."""
+    from pyspark.sql.types import (
+        DoubleType, LongType, StringType, StructField, StructType)
+
+    struct = StructType([StructField("field", StringType(), False),
+                         StructField("doc_id", LongType()),
+                         StructField("score", DoubleType())])
+    df, ref = engine.local_frame(spark, None, struct), \
+        spark.createDataFrame([], struct)
+    assert df.collect() == [] and df.count() == 0
+    assert df.select("*").schema == ref.schema == struct
+    assert df.join(ref, "doc_id").collect() == []
+
+
+def test_empty_multi_field_search(spark, odd, each_path):
+    """A multi-field search with no match returns no rows on both
+    paths; its candidate frame has a non-nullable ``field`` column."""
+    from anisearch_model_spark.query.multifield import search_fields
+
+    for path in each_path():
+        got = search_fields(IndexStore(spark, odd), "zzzunseenword",
+                            ["user", "a b"], k=5).collect()
+        assert got == [], path
+
+
 def test_absent_term_runs_no_spark_job(spark, unscoped):
     idx = IndexStore(spark, unscoped)
     for req in (lambda: search(idx, "zzzunseenword", k=5).collect(),

@@ -3,17 +3,19 @@ working tree.
 
 Usage (from anywhere inside the repository):
     python3 tools/ab_bench.py --base HEAD --pairs 10 \\
-        --workloads serve_zipf ingest_live [--seeds 1,2] [--seconds 12] \\
-        [--out ab.jsonl]
+        --workloads serve_zipf ingest_live [--seeds 1,2] [--out ab.jsonl]
 
 The base ref is checked out into a temporary ``git worktree``, removed
 again on exit.  Each pair runs ``enginebench/run.py --trace 0`` once in
-each tree, one after the other; pair i uses seed ``seeds[i % len(seeds)]``
-and runs the base first on even pairs, the working tree first on odd
-ones, so a host that slows down mid-run penalises both sides alike.  For
-every end-to-end metric of the working tree's BENCHMARK.json it prints
-the two medians, the parent's interquartile range, the change/parent
-ratio of the medians and how many pairs the change was better in.  A
+each tree, one after the other, for the ``run_seconds`` of the working
+tree's BENCHMARK.json.  Pair i uses seed ``seeds[i % len(seeds)]``; the
+side that runs first alternates within each seed (the base first on the
+first round of seeds, the working tree first on the next, ...), so every
+seed runs in both orders and a host that slows down mid-run penalises
+both sides alike.  For every end-to-end metric of BENCHMARK.json it
+prints the two medians, the parent's interquartile range, the
+change/parent ratio of the medians and how many pairs the change was
+better in, then each side's median and total of failed operations.  A
 run that exits non-zero or prints no result line counts as a failed
 pair and is reported, not retried.
 """
@@ -64,6 +66,12 @@ def summarize(pairs: list[dict], metrics: list[dict]) -> None:
         print(f"  {name:28s} parent {ma:10.4g} (IQR {q[2] - q[0]:.3g})  "
               f"change {mb:10.4g}  ratio {ratio:6.3f}  "
               f"better {better}/{len(ok)}")
+    for side in ("parent", "change"):
+        failed = [p[side]["failed"] for p in ok]
+        attempted = sum(p[side]["attempted"] for p in ok)
+        print(f"  {side} failed operations: median "
+              f"{statistics.median(failed):g}, total {sum(failed)} "
+              f"of {attempted} attempted")
 
 
 def main() -> int:
@@ -74,12 +82,12 @@ def main() -> int:
                     default=["serve_zipf", "ingest_live"])
     ap.add_argument("--seeds", default="1,2",
                     help="comma-separated seeds, cycled over the pairs")
-    ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--out", help="append every pair as a JSON line here")
     args = ap.parse_args()
     seeds = [int(s) for s in args.seeds.split(",")]
     with open(os.path.join(REPO, "BENCHMARK.json"), encoding="utf-8") as f:
-        metrics = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
 
     tmp = tempfile.mkdtemp(prefix="ab_bench-")
     base = os.path.join(tmp, "base")
@@ -91,9 +99,12 @@ def main() -> int:
             for i in range(args.pairs):
                 seed = seeds[i % len(seeds)]
                 order = [("parent", base), ("change", REPO)]
-                pair = {"workload": workload, "pair": i, "seed": seed}
-                for side, tree in order if i % 2 == 0 else order[::-1]:
-                    pair[side] = run_bench(tree, workload, seed, args.seconds)
+                if (i // len(seeds)) % 2:
+                    order.reverse()
+                pair = {"workload": workload, "pair": i, "seed": seed,
+                        "first": order[0][0]}
+                for side, tree in order:
+                    pair[side] = run_bench(tree, workload, seed, seconds)
                 pairs.append(pair)
                 print(f"{workload} pair {i} seed {seed}: "
                       f"{json.dumps({k: pair[k] for k in ('parent', 'change')})}",
